@@ -2284,20 +2284,37 @@ def dedup_incremental(
     Plan: ONE shuffle of the (small) new batch on its content hash
     for the keep-first window, then an anti join on the hash.  At
     100 TB-of-history scale the index side dominates: against a
-    bucketed index the anti join shuffles only the day's batch;
-    unbucketed, both sides exchange once on the uniform hash key.
-    The historical TEXT is never read either way.
+    bucketed index the batch is hashed straight into the index's
+    bucket count, so that one exchange serves both the window and the
+    anti join at any shuffle-partition setting and the index side
+    never shuffles; unbucketed, both sides exchange once on the
+    uniform hash key.  The historical TEXT is never read either way.
     """
+    index = seen.select(hash_col)
     hashed = with_content_hash(new_docs, text_col, out=hash_col)
+    n_buckets = _bucket_count(index, hash_col)
+    if n_buckets is not None:
+        hashed = hashed.repartition(n_buckets, hash_col)
     w = Window.partitionBy(hash_col).orderBy(F.col(id_col).asc())
     batch_first = (
         hashed.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    return batch_first.join(
-        seen.select(hash_col).distinct(), hash_col, "left_anti"
-    )
+    return batch_first.join(index.distinct(), hash_col, "left_anti")
+
+
+def _bucket_count(df: DataFrame, col: str) -> int | None:
+    """Bucket count of ``df`` when its planned scan is already hash
+    partitioned on ``col`` alone (a table bucketed on it), else None.
+    Planning only; no job runs."""
+    part = df._jdf.queryExecution().sparkPlan().outputPartitioning()
+    if part.getClass().getSimpleName() != "HashPartitioning":
+        return None
+    keys = part.expressions()
+    if keys.length() != 1 or keys.apply(0).toString().split("#")[0] != col:
+        return None
+    return part.numPartitions()
 
 
 def updated_index(

@@ -12,13 +12,16 @@ from pyspark.sql import SparkSession
 def get_spark(app_name: str = "gdelt_extractor_spark") -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    Local-mode knobs come from env: ``SPARK_GRAFT_CPUS`` (default 32).
+    Local-mode knobs come from env: ``SPARK_GRAFT_CPUS`` (default: the
+    cores this process may run on) and ``SPARK_GRAFT_DRIVER_MEM``
+    (default: half of physical memory, at most 16g).
     Cluster-portable settings: AQE on (runtime skew/coalesce), UTC
     session timezone (oracle comparability), Arrow for any Pandas-UDF
     edge, shuffle partitions sized to cores rather than the 200
     default.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -41,11 +44,12 @@ def get_spark(app_name: str = "gdelt_extractor_spark") -> SparkSession:
         # worse (concurrent GC steals task CPU on a saturated
         # local[32]).  16g vs 48g full-suite totals measured equal
         # (77.7s vs 77.8s) once operators stopped persisting
-        # full-corpus array frames, so 16g is the default: same
-        # throughput, less memory, faster small queries.  -Xmx is a
-        # cap, not a reservation; on a real cluster executor memory
-        # is sized separately anyway.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # full-corpus array frames, so 16g is the most the default
+        # asks for: same throughput, less memory, faster small
+        # queries.  On a smaller host the default is half its memory.
+        # -Xmx is a cap, not a reservation; on a real cluster executor
+        # memory is sized separately anyway.
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(16, phys_gb // 2))}g"))
         .config("spark.ui.enabled", "false")
         # Stage-progress bars write \r frames to stdout; the bench
         # driver parses bench.py's final JSON line from a bounded

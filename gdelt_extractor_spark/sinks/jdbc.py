@@ -16,6 +16,7 @@ from __future__ import annotations
 import time
 from typing import Any
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -64,5 +65,6 @@ def write_jdbc(
 
 def lastrun_df(spark: SparkSession) -> DataFrame:
     """One-row bookkeeping table (reference v2_lastrun/v1_lastrun:
-    extractor.py:429-430)."""
-    return spark.createDataFrame([(float(time.time()),)], "runtime double")
+    extractor.py:429-430).  Built from a pandas frame: with Arrow on
+    the plan is a LocalRelation and no Python worker runs."""
+    return spark.createDataFrame(pd.DataFrame({"runtime": [time.time()]}), "runtime double")

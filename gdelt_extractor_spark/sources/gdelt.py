@@ -499,12 +499,13 @@ def read_gdelt_zip(
     """Read zipped GDELT TSVs, decompressing executor-side.
 
     ``binaryFile`` scans the zips (each file one row); mapInPandas
-    unzips in memory and emits string columns which are then cast to
-    the typed schema.  Unlike the reference's driver temp-dir flow,
-    this parallelizes across however many zip files the glob matches.
+    only unzips, decodes and emits the non-blank lines as one string
+    column.  Fields are split in the JVM: a row with too few fields
+    gets NULL for the missing ones, extra fields are dropped, and
+    empty fields become NULL before the cast to the typed schema.
+    Unlike the reference's driver temp-dir flow, this parallelizes
+    across however many zip files the glob matches.
     """
-    names = [f.name for f in schema.fields]
-    str_schema = T.StructType([T.StructField(n, T.StringType(), True) for n in names])
 
     def unzip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -512,32 +513,22 @@ def read_gdelt_zip(
                 with zipfile.ZipFile(io.BytesIO(content)) as zf:
                     for member in zf.namelist():
                         text = zf.read(member).decode("utf-8", errors="replace")
-                        rows = [
-                            line.split("\t")
-                            for line in text.split("\n")
-                            if line.strip()
-                        ]
-                        rows = [
-                            r[: len(names)] + [None] * max(0, len(names) - len(r))
-                            for r in rows
-                        ]
-                        yield pd.DataFrame(rows, columns=names)
+                        lines = [line for line in text.split("\n") if line.strip()]
+                        yield pd.DataFrame({"line": pd.Series(lines, dtype=object)})
 
-    raw = (
+    return (
         spark.read.format("binaryFile")
         .load(path)
         .select("content")
-        .mapInPandas(unzip, str_schema)
+        .mapInPandas(unzip, "line string")
+        .select(F.split("line", "\t", -1).alias("_f"))
+        .select(  # empty TSV fields → NULL, as the csv reader's nullValue=""
+            *[
+                F.nullif(F.get("_f", i), F.lit("")).cast(f.dataType).alias(f.name)
+                for i, f in enumerate(schema.fields)
+            ]
+        )
     )
-    # empty TSV fields → NULL (matching the csv reader's nullValue="")
-    casts = [
-        F.when(F.col(f.name) == "", None)
-        .otherwise(F.col(f.name))
-        .cast(f.dataType)
-        .alias(f.name)
-        for f in schema.fields
-    ]
-    return raw.select(*casts)
 
 
 def process_gdelt_events(df: DataFrame) -> DataFrame:

@@ -13,7 +13,6 @@ SF001 = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     s = get_spark("gdelt-extractor-tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -8,12 +8,26 @@ import zipfile
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from gdelt_extractor_spark.operators import curation as C
+from gdelt_extractor_spark.operators.geo import geo_project
 from gdelt_extractor_spark.operators.temporal import asof_join
-from gdelt_extractor_spark.pipelines.batch import run_v1_batch, run_v2_batch
+from gdelt_extractor_spark.pipelines.batch import GEOM_KEEP, run_v1_batch, run_v2_batch
+from gdelt_extractor_spark.sinks.jdbc import lastrun_df
+from gdelt_extractor_spark.sources.gdelt import (
+    V2_EVENTS_SCHEMA,
+    process_gdelt_events,
+    read_gdelt_zip,
+)
 from gdelt_extractor_spark.sources.tables import load_table
 from tests.test_sources_gdelt import _v2_row
+
+
+def _with_actor1_geo(row: str, lat: str, lon: str) -> str:
+    cells = row.split("\t")
+    cells[40], cells[41] = lat, lon  # Actor1Geo_Lat, Actor1Geo_Long
+    return "\t".join(cells)
 
 
 @pytest.fixture()
@@ -22,9 +36,11 @@ def v2_zip(tmp_path):
     tsv.write_text(
         "\n".join(
             [
-                _v2_row(1, "http://example.com/a"),
-                _v2_row(2, "http://example.com/a"),
-                _v2_row(3, "http://example.com/b", "19"),
+                _with_actor1_geo(_v2_row(1, "http://example.com/a"), "38.9", "-77.03"),
+                _with_actor1_geo(_v2_row(2, "http://example.com/a"), "51.5", "-0.12"),
+                _with_actor1_geo(_v2_row(3, "http://example.com/b", "19"), "48.85", "2.35"),
+                _with_actor1_geo(_v2_row(4, "http://example.com/c"), "95.0", "10.0"),
+                _v2_row(5, "http://example.com/d"),
             ]
         )
     )
@@ -33,6 +49,19 @@ def v2_zip(tmp_path):
         zf.write(tsv, arcname=tsv.name)
     os.remove(tsv)
     return str(z)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _assert_reads_only(df, table_dir: str) -> None:
+    """``df`` scans the written events table alone: no zip scan, no
+    unzip stage, every input file under ``table_dir``."""
+    plan = df._jdf.queryExecution().toString()  # every plan phase
+    assert "binaryfile" not in plan.lower(), plan
+    files = df.inputFiles()
+    assert files and all(f"{table_dir}/" in f for f in files), files
 
 
 def test_run_v2_batch(spark, v2_zip, tmp_path):
@@ -45,26 +74,54 @@ def test_run_v2_batch(spark, v2_zip, tmp_path):
     tables = run_v2_batch(spark, v2_zip, out, fetcher=fake_fetcher)
     assert set(tables) == {"v2_exports", "v2_articles", "v2_geom", "v2_lastrun"}
     exports = spark.read.parquet(f"{out}/v2_exports")
-    assert exports.count() == 2  # URL dedup
+    assert exports.count() == 4  # URL dedup
     assert "globaleventid" in exports.columns
-    geom = spark.read.parquet(f"{out}/v2_geom").collect()
-    assert geom == []  # fixture rows have no actor1 coords → filtered
+    # geometry: the keep-first row's coordinates, lat 95 filtered out
+    geom = spark.read.parquet(f"{out}/v2_geom")
+    want = geo_project(
+        process_gdelt_events(read_gdelt_zip(spark, v2_zip)),
+        "actor1geo_lat",
+        "actor1geo_long",
+        *GEOM_KEEP,
+    )
+    assert geom.schema == want.schema
+    assert sorted(geom.collect()) == sorted(want.collect())
+    assert sorted(r.globaleventid for r in geom.collect()) == [1, 3]
     arts = {r.doc_id: r.title for r in spark.read.parquet(f"{out}/v2_articles").collect()}
     assert arts[1] == "t:http://example.com/a"
     assert spark.read.parquet(f"{out}/v2_lastrun").count() == 1
 
+    # single pass: the derived tables read the written events table
+    _assert_reads_only(tables["v2_geom"], f"{out}/v2_exports")
+    assert "MapInPandas" not in _plan(tables["v2_geom"])
+    _assert_reads_only(tables["v2_articles"], f"{out}/v2_exports")
+    # the fetch itself is the one mapInPandas stage; the unzip is not re-run
+    assert _plan(tables["v2_articles"]).count("MapInPandas") == 1
+    assert sorted(tables["v2_geom"].collect()) == sorted(want.collect())
+
+
+def test_lastrun_df_is_local(spark):
+    df = lastrun_df(spark)
+    assert df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
+    assert df.schema == T.StructType([T.StructField("runtime", T.DoubleType(), True)])
+
 
 def test_run_v1_batch(spark, tmp_path):
     # v1 = 58 cols; reuse the v2 row minus the three ADM2 fields
-    row = _v2_row(7, "http://example.com/x").split("\t")
-    for idx in sorted((40, 48, 57), reverse=True):  # ADM2 positions in v2
+    row = _with_actor1_geo(_v2_row(7, "http://example.com/x"), "38.9", "-77.03").split("\t")
+    adm2 = [i for i, f in enumerate(V2_EVENTS_SCHEMA.fields) if f.name.endswith("ADM2Code")]
+    for idx in sorted(adm2, reverse=True):
         del row[idx]
     assert len(row) == 58
     tsv = tmp_path / "20240101.export.CSV"
     tsv.write_text("\t".join(row))
-    tables = run_v1_batch(spark, str(tsv), str(tmp_path / "wh1"))
-    assert spark.read.parquet(str(tmp_path / "wh1/v1")).count() == 1
+    out = str(tmp_path / "wh1")
+    tables = run_v1_batch(spark, str(tsv), out)
+    assert spark.read.parquet(f"{out}/v1").count() == 1
     assert set(tables) == {"v1", "v1_geom", "v1_lastrun"}
+    assert [r.globaleventid for r in spark.read.parquet(f"{out}/v1_geom").collect()] == [7]
+    _assert_reads_only(tables["v1_geom"], f"{out}/v1")
+    assert "MapInPandas" not in _plan(tables["v1_geom"])
 
 
 def test_asof_join_semantics(spark):

@@ -92,6 +92,73 @@ def test_read_zip_roundtrip(spark, v2_tsv, tmp_path):
     assert sorted(df.collect()) == sorted(plain.collect())
 
 
+def _twin_read_zip(path: str, n_fields: int) -> list[tuple]:
+    """Pure-Python reference for read_gdelt_zip's line handling:
+    decode with replacement, split on \\n, drop blank lines, split
+    on tabs, pad with NULL / truncate to ``n_fields``, "" -> NULL."""
+    rows = []
+    with zipfile.ZipFile(path) as zf:
+        for member in zf.namelist():
+            text = zf.read(member).decode("utf-8", errors="replace")
+            for line in text.split("\n"):
+                if not line.strip():
+                    continue
+                r = line.split("\t")
+                r = r[:n_fields] + [None] * max(0, n_fields - len(r))
+                rows.append(tuple(None if v == "" else v for v in r))
+    return rows
+
+
+def test_read_zip_matches_python_twin(spark, tmp_path):
+    """Ragged rows, blank/whitespace/tab-only lines, CRLF, invalid
+    UTF-8, an empty member and several members per zip: the reader
+    (fields split in the JVM) matches the Python twin field for
+    field, as strings and after the typed cast."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    full = _v2_row(1, "http://example.com/full")
+    short = "\t".join(_v2_row(2, "http://example.com/short").split("\t")[:60])
+    long_ = _v2_row(3, "http://example.com/long") + "\tEXTRA"
+    very_short = "4\t20240101"
+    members = {
+        "a.export.CSV": "\n".join(
+            [full, "", short, "   ", long_, "\t\t\t", very_short, " \t "]
+        ).encode(),
+        "b.export.CSV": "\r\n".join(
+            [_v2_row(5, "http://example.com/crlf"), "", _v2_row(6, "http://example.com/c2")]
+        ).encode() + b"\r\n",
+        "c.export.CSV": _v2_row(7, "http://example.com/bad").encode().replace(
+            b"GOVERNMENT", b"GOV\xff\xfeX"
+        ),
+        "d.export.CSV": b"",
+    }
+    zpath = tmp_path / "ragged.export.CSV.zip"
+    with zipfile.ZipFile(zpath, "w") as zf:
+        for name, data in members.items():
+            zf.writestr(name, data)
+
+    want = _twin_read_zip(str(zpath), N_V2)
+    assert len(want) == 7
+    str_schema = T.StructType(
+        [T.StructField(f.name, T.StringType()) for f in G.V2_EVENTS_SCHEMA.fields]
+    )
+    got = G.read_gdelt_zip(spark, str(zpath), str_schema).collect()
+    assert sorted(map(tuple, got), key=repr) == sorted(want, key=repr)
+
+    typed = G.read_gdelt_zip(spark, str(zpath))
+    twin_typed = spark.createDataFrame(want, str_schema).select(
+        *[F.col(f.name).cast(f.dataType) for f in G.V2_EVENTS_SCHEMA.fields]
+    )
+    assert typed.schema == twin_typed.schema == G.read_gdelt_v2(spark, str(zpath)).schema
+    assert sorted(typed.collect(), key=repr) == sorted(twin_typed.collect(), key=repr)
+    by_id = {r.GLOBALEVENTID: r for r in typed.collect()}
+    assert by_id[2].SOURCEURL is None and by_id[3].SOURCEURL == "http://example.com/long"
+    assert by_id[4].SQLDATE == 20240101 and by_id[4].DATEADDED is None
+    assert by_id[5].SOURCEURL == "http://example.com/crlf\r"
+    assert by_id[7].Actor1Name == "GOV\ufffd\ufffdX"
+
+
 def test_parse_lastupdate():
     text = (
         "132906 a1b2 http://data.gdeltproject.org/gdeltv2/20240101083000.export.CSV.zip\n"
