@@ -49,248 +49,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from gdelt_extractor_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entry_mod  # noqa: E402
 
-# Headline set: ALL queries() entries, so every operator's regression
-# is visible round-over-round (VERDICT r1: the exact pair-join
-# baselines and LSH ANN are benched too, not just their scale paths).
-HEADLINE = [
-    "semantic_decontam",
-    "schema_drift",
-    "actor_communities",
-    "bpe_subwords",
-    "unigram_subwords",
-    "retrieval_eval",
-    "incremental_stats",
-    "equidepth_histogram",
-    "cluster_split",
-    "curriculum_mixture",
-    "strip_markup",
-    "ann_pq_topk",
-    "mixture_weights",
-    "vocab_coverage",
-    "cdc_apply",
-    "bm25_search",
-    "corpus_diff",
-    "k_anonymity",
-    "length_buckets",
-    "q1_pricing_summary",
-    "q3_top_unshipped",
-    "q5_region_volume",
-    "topk_per_group",
-    "events_hourly",
-    "sessionize",
-    "pivot_event_values",
-    "anti_join_inactive",
-    "dedup_first_by_key",
-    "enrich_articles",
-    "keyword_freq",
-    "lookup_rollup",
-    "lookup_country_rollup",
-    "gkg_theme_cooccurrence",
-    "quad_class_rollup",
-    "goldstein_daily",
-    "mention_stats",
-    "gkg_theme_daily",
-    "gkg_persons",
-    "gkg_locations",
-    "gkg_gcam_stats",
-    "person_comentions",
-    "person_influence",
-    "byte_stats",
-    "hapax_stats",
-    "prefix_clusters",
-    "actor_dyads",
-    "actor_pagerank",
-    "gdelt_v1_daily",
-    "gdelt_v2_daily",
-    "gdelt_mentions_daily",
-    "gdelt_clean",
-    "jsonl_corpus_stats",
-    "geo_project",
-    "geo_grid_join",
-    "scd2_customers",
-    "profile_orders",
-    "event_transitions",
-    "event_trends",
-    "session_paths",
-    "bpe_pairs",
-    "corpus_report",
-    "hashed_embeddings",
-    "contrastive_triplets",
-    "dedup_exact",
-    "dedup_incremental",
-    "dedup_apply",
-    "dedup_pipeline",
-    "curation_pipeline",
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "winnow_dup_pairs",
-    "hybrid_search",
-    "dedup_eval",
-    "mmr_rerank",
-    "prf_search",
-    "dedup_minhash_lsh",
-    "dedup_minhash_lsh_portable",
-    "dedup_simhash",
-    "dedup_simhash_portable",
-    "dedup_embedding",
-    "dedup_semantic",
-    "dup_clusters",
-    "cluster_stats",
-    "dup_spans",
-    "span_dup_stats",
-    "cut_spans",
-    "heavy_hitters",
-    "weighted_sample",
-    "pii_scan",
-    "pack_sequences",
-    "doc_chunks",
-    "url_filter",
-    "c4_line_filter",
-    "gkg_quotes",
-    "gkg_amounts",
-    "gkg_image_dups",
-    "lang_nb_id",
-    "gkg_count_events",
-    "gkg_translations",
-    "key_skew",
-    "source_similarity",
-    "embedding_projection",
-    "seasonal_daily",
-    "doc_length_ci",
-    "pack_bins",
-    "source_top_terms",
-    "text_repair",
-    "record_linkage",
-    "related_actors",
-    "score_calibration",
-    "ks_drift",
-    "budget_selection",
-    "blocklist_screen",
-    "join_size",
-    "cluster_quality",
-    "balanced_corpus",
-    "golden_customers",
-    "mix_sources",
-    "shard_manifest",
-    "ann_topk",
-    "ann_lsh_topk",
-    "lang_id",
-    "quality_score",
-    "gopher_rules",
-    "token_stats",
-    "fingerprint",
-    "rollup_daily",
-    "value_quantiles",
-    "value_histogram",
-    "approx_quantiles",
-    "asof_last_click",
-    "decontaminate",
-    "sample_split",
-    "corpus_stats",
-    "q17_small_qty_revenue",
-    "q2_min_cost_supplier",
-    "q7_nation_trade",
-    "q10_returned_items",
-    "q13_order_counts",
-    "q18_large_orders",
-    "q19_disjunctive_revenue",
-    "q21_last_shipper",
-    "q22_idle_balance",
-    "q6_forecast_revenue",
-    "q9_product_profit",
-    "q11_important_stock",
-    "q12_priority_by_class",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_count",
-    "q20_excess_stock",
-    "event_spikes",
-    "events_gap_fill",
-    "clip_outliers",
-    "robust_scale",
-    "biggest_moves",
-    "event_funnel",
-    "user_retention",
-    "q8_market_share",
-    "window_running",
-    "range_count_clicks_after_error",
-    "user_set_ops",
-    "approx_distinct_users",
-    "ann_ivf_topk",
-    "cluster_embeddings",
-    "quantize_embeddings",
-    "source_quality_filter",
-    "cluster_prune",
-    "dedup_incremental_minhash",
-    "dedup_incremental_minhash_portable",  # r10 md5 twin (hash-gated)
-    "dedup_audio",
-    "fuzzy_join",
-    "props_json_extract",
-    "stratified_sample",
-    "user_top_event",
-    "cube_volume",
-    "q4_priority_exists",
-    "order_price_ranks",
-    "repetition_stats",
-    "ngram_repetition",
-    "source_overlap",
-    "vocab_divergence",
-    "compression_stats",
-    "lm_score",
-    "remove_boilerplate",
-    "dedup_lines",
-    "lang_confusion",
-    "tfidf_top_terms",
-    "top_bigrams",
-    "bloom_filter_join",
-    "canonical_urls",
-    "expectations_audit",
-    "zipf_fit",
-    "unicode_normalize",
-    "lm_block_spans",
-    "chat_audit",
-    "interval_overlaps",
-    "preference_pairs",
-    "asof_next_click",
-    "pmi_collocations",
-    "dsir_weights",
-    "luhn_scan",
-    "dedup_editdist",
-    "events_gap_interpolate",
-    "embedding_align",
-    "nb_classifier",
-    "quality_band",
-    "rater_agreement",
-    "rouge_overlap",
-    "psi_drift",
-    "kwic_concordance",
-    "contamination_links",
-    "decayed_engagement",
-    "text_hygiene",
-    "trade_triangles",
-    "basket_rules",
-    "mutual_info",
-    "readability_scores",
-    "channel_attribution",
-    "pca_embeddings",
-    "sketch_rollup",
-    "auc_ranking",
-    "l_diversity",
-    "chi_square",
-    "actor_cores",
-    "quantile_norm",
-    "target_encoding",
-    "benford_values",
-    "user_survival",
-    "engagement_gini",
-    "daily_cusum",
-    "daily_acf",
-    "nearest_capital",
-    "release_audit",
-    "pr_points",
-]
-
-
 # The 58-query set BENCH_r04 timed — "subtotal_r4set" sums these so
 # rounds stay comparable as the suite grows.
 R4_HEADLINE = [
@@ -422,12 +180,13 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
     subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "")
+    # Headline set: every queries() entry, so every operator's
+    # regression is visible round-over-round (VERDICT r1: the exact
+    # pair-join baselines and LSH ANN are benched too, not just their
+    # scale paths).
+    headline = list(queries)
     if subset:
-        headline = [n for n in HEADLINE if n in set(subset.split(","))]
-    else:
-        headline = HEADLINE
-        missing = sorted(set(queries) - set(HEADLINE))
-        assert not missing, f"queries() entries missing from bench HEADLINE: {missing}"
+        headline = [n for n in headline if n in set(subset.split(","))]
     n_reps = N_REPS if len(headline) <= REPS_DOWNSHIFT_AT else 3
 
     # One broken query must not sink the whole bench (r3 lost ALL perf

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ._finish import collect_if_small
 from .dedup import shingle_hashes_from_tokens
 
 
@@ -28,8 +29,6 @@ def decontaminate(
     text_col: str = "text",
     n: int = 3,
     max_overlap: float = 0.1,
-    strategy: str = "auto",
-    broadcast_limit: int = 100_000,
 ) -> DataFrame:
     """Benchmark decontamination: per-document fraction of n-gram
     shingles that appear anywhere in the benchmark corpus, plus a
@@ -37,29 +36,23 @@ def decontaminate(
     contamination filter (GPT-3 Appendix C style n-gram overlap);
     shingles are xxhash64'd so all set work is on fixed-width longs.
 
-    strategy='auto' (default): ONE probe job on the SMALL side
-    collects the distinct benchmark shingle set, truncated at
-    ``broadcast_limit + 1`` so the driver transfer is bounded
-    (≤ ~800 KB of longs) regardless of benchmark size.  If the set
-    fits, it is re-injected as a one-row literal frame — the main
-    query then runs the broadcast_set plan WITHOUT recomputing the
-    benchmark shingles, so auto costs only one extra job-scheduling
-    round trip over a hard-coded broadcast_set.  If it does not fit,
-    fall to shuffle_join.  Callers no longer have to know the
-    broadcast limit.
+    The route follows the size of the distinct benchmark shingle set,
+    probed once on the SMALL side by ``_finish.collect_if_small``:
 
-    strategy='broadcast_set': the distinct benchmark shingle-hash
-    set is gathered into ONE array row and broadcast; overlap is
-    ``size(array_intersect(...))`` per doc — zero shuffle, no
-    explode, one scan of the corpus.  Right for real eval suites
-    (≤ ~10^5 distinct shingles; measured 14× faster than the join
-    plan at that size).
+    - set admitted (≤ ``DRIVER_FINISH_ROWS`` hashes, ≤ ~800 KB of
+      longs): the collected set is re-injected as ONE array row and
+      broadcast; overlap is ``size(array_intersect(...))`` per doc —
+      zero shuffle, no explode, one scan of the corpus, and the
+      benchmark shingles are not recomputed.  Right for real eval
+      suites (measured 14× faster than the join plan at ~10^5
+      distinct shingles).
+    - set too big for a per-row array: explode doc shingles and
+      left-join the (still broadcast) benchmark shingle rows, then
+      re-aggregate per doc — the join build side is a proper hash
+      relation, not rebuilt per row, at the cost of a doc-side
+      explode + per-doc re-agg.
 
-    strategy='shuffle_join': explode doc shingles and left-join the
-    (still broadcast) benchmark shingle rows, then re-aggregate per
-    doc.  Scales to benchmark sets too big for a per-row array
-    (the join build side is a proper hash relation, not rebuilt per
-    row) at the cost of a doc-side explode + per-doc re-agg.
+    Both routes return identical values and schema.
     """
     doc_sh = _shingle_hash_frame(docs, id_col, text_col, n)
     bench_distinct = (
@@ -67,29 +60,17 @@ def decontaminate(
         .select(F.explode("sh").alias("h"))
         .distinct()
     )
-    bench_arr = None
-    if strategy == "auto":
-        probe = (
-            bench_distinct.limit(broadcast_limit + 1)
-            .agg(F.collect_list("h").alias("_bench"))
-            .first()["_bench"]
+    pdf = collect_if_small(bench_distinct, ["h"])
+    if pdf is not None:
+        bench_arr = docs.sparkSession.createDataFrame(
+            [(pdf["h"].tolist(),)], "_bench array<bigint>"
         )
-        if len(probe) <= broadcast_limit:
-            strategy = "broadcast_set"
-            bench_arr = docs.sparkSession.createDataFrame(
-                [(probe,)], "_bench array<bigint>"
-            )
-        else:
-            strategy = "shuffle_join"
-    if strategy == "broadcast_set":
-        if bench_arr is None:
-            bench_arr = bench_distinct.agg(F.collect_list("h").alias("_bench"))
         counted = doc_sh.crossJoin(F.broadcast(bench_arr)).select(
             "doc_id",
             F.size("sh").alias("n_shingles"),
             F.size(F.array_intersect("sh", "_bench")).alias("n_overlap"),
         )
-    elif strategy == "shuffle_join":
+    else:
         exploded = doc_sh.select(
             "doc_id", F.size("sh").alias("n_shingles"), F.explode("sh").alias("h")
         )
@@ -100,8 +81,6 @@ def decontaminate(
             .groupBy("doc_id", "n_shingles")
             .agg(F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_overlap"))
         )
-    else:
-        raise ValueError(f"unknown strategy: {strategy!r}")
     return counted.select(
         "doc_id",
         F.col("n_shingles").cast("long").alias("n_shingles"),

@@ -32,8 +32,10 @@ import os
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..functions.text import normalize_text, tokens
+from ._finish import collect_if_small, none_means_large
 
 
 def dedup_keep_first(df: DataFrame, key: str, order: str) -> DataFrame:
@@ -1603,21 +1605,22 @@ def dedup_semantic(
     return pairs
 
 
-def _driver_union_find(sym_edges: DataFrame) -> DataFrame:
-    """Finish a (contracted) component graph driver-side: one bounded
-    Arrow collect (``toPandas`` on two long columns — columnar
-    buffers, no per-row Row objects), classic union-find with path
-    compression and min-root union, back out as a (node, label)
-    mapping frame.  Deterministic: the merged root is always the min
-    of the two roots, so the final root is the minimum node of the
-    contracted subgraph regardless of edge order.
+def _driver_union_find(sym_edges: DataFrame, pdf: pd.DataFrame) -> DataFrame:
+    """Finish a (contracted) component graph driver-side: classic
+    union-find with path compression and min-root union over the
+    collected symmetrized edges ``pdf``, back out as a (node, label)
+    mapping frame typed like ``sym_edges``' node columns.
+    Deterministic: the merged root is always the min of the two
+    roots, so the final root is the minimum node of the contracted
+    subgraph regardless of edge order — on the integral and string
+    domains ``collect_if_small`` admits, Python's ``min`` is
+    Catalyst's.
 
     Measured driver memory at the 100k-edge default cap (tracemalloc,
     symmetrized = 200k rows): 3.2 MB for the Arrow/pandas frame plus
     21.4 MB peak for the union-find dict — the dict, not the collect,
     is the driver cost, which is why the cap default is 100k and not
     the r4 1M (whose dict scales to ~10× that)."""
-    pdf = sym_edges.toPandas()
     parent: dict = {}
 
     def find(x):
@@ -1628,14 +1631,24 @@ def _driver_union_find(sym_edges: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for u, v in zip(pdf["u"].to_numpy(), pdf["v"].to_numpy()):
-        ra, rb = find(int(u)), find(int(v))
+    for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
+        ra, rb = find(u), find(v)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     out = pd.DataFrame(
         sorted((n, find(n)) for n in parent), columns=["node", "label"]
     )
-    return sym_edges.sparkSession.createDataFrame(out, "node long, label long")
+    return sym_edges.sparkSession.createDataFrame(out, _mapping_schema(sym_edges, "label"))
+
+
+def _mapping_schema(sym_edges: DataFrame, label: str) -> StructType:
+    """(node, <label>) typed like the symmetrized edges' node column:
+    ``node`` keeps its nullability, the label (a ``min`` aggregate on
+    the distributed route) is nullable."""
+    u = sym_edges.schema["u"]
+    return StructType(
+        [StructField("node", u.dataType, u.nullable), StructField(label, u.dataType, True)]
+    )
 
 
 def connected_components(
@@ -1643,7 +1656,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    driver_finish_edges: int = 100_000,
 ) -> DataFrame:
     """Collapse near-dup PAIRS into duplicate CLUSTERS: returns
     (node, cluster_id) where cluster_id is the minimum node id in the
@@ -1693,16 +1705,17 @@ def connected_components(
     pathological non-shrink into a loud error instead of a
     silently-partial clustering.
 
-    ``driver_finish_edges``: once the (geometrically shrinking)
-    contracted edge set fits this cap, the remaining rounds collapse
-    into ONE bounded Arrow collect + driver union-find — the same
-    bounded-driver-work pattern as the IVF quantizer fit.  Each saved
-    distributed round is ~3 tiny-data Spark jobs of pure scheduling
-    overhead; at 100 TB the first rounds still run distributed and
-    only the contracted tail ever reaches the driver (3.2 MB of Arrow
-    buffers + 21.4 MB of union-find dict at the 100k default — see
-    ``_driver_union_find`` for the measurement).  Set 0 to force the
-    fully distributed path.
+    Bounded driver finish: once ``_finish.collect_if_small`` admits
+    the (geometrically shrinking) symmetrized edge set — at most
+    ``DRIVER_FINISH_ROWS`` rows of integral or binary-collated string
+    ids — the remaining rounds collapse into a driver union-find over
+    the rows that probe already collected.  Each saved distributed round is ~3
+    tiny-data Spark jobs of pure scheduling overhead; at 100 TB the
+    first rounds still run distributed and only the contracted tail
+    ever reaches the driver (3.2 MB of Arrow buffers + 21.4 MB of
+    union-find dict at the 100k cap — see ``_driver_union_find`` for
+    the measurement).  Either route returns the input's id type and
+    the same schema, nullability included.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # checkpoint the symmetrized edge list ONCE: its lineage contains
@@ -1719,13 +1732,18 @@ def connected_components(
     # job-submission overhead in local mode).
     steps: list[DataFrame] = []
     converged = False
+    # the id types never change between rounds: when the probe's None
+    # already proves the edge set non-empty, a distributed round costs
+    # the one probe job, with no separate emptiness job
+    probe_decides = none_means_large(ecur, ["u", "v"])
     for _ in range(max_iter):
-        n_edges = ecur.count()
-        if n_edges == 0:
+        pdf = collect_if_small(ecur, ["u", "v"])
+        if pdf is not None:
+            if len(pdf):
+                steps.append(_driver_union_find(ecur, pdf))
             converged = True
             break
-        if n_edges <= driver_finish_edges:
-            steps.append(_driver_union_find(ecur))
+        if not probe_decides and ecur.isEmpty():
             converged = True
             break
         # representative = closed-neighborhood minimum under the
@@ -1748,16 +1766,14 @@ def connected_components(
         )
         steps.append(m.select(F.col("u").alias("node"), F.col("m").alias("label")))
         ecur = contracted.localCheckpoint(eager=True)
-        # emptiness is re-checked by the count at the top of the loop
+        # emptiness is re-checked at the top of the loop
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds; "
             "raise max_iter (rounds needed ≈ log2 of the largest component)"
         )
     if not steps:  # no edges at all: every node is its own cluster
-        return edges.sparkSession.createDataFrame(
-            [], "node long, cluster_id long"
-        )
+        return edges.sparkSession.createDataFrame([], _mapping_schema(ecur, "cluster_id"))
     mapping = steps[0]
     for step in steps[1:]:
         # left join: nodes whose super-node already collapsed out of

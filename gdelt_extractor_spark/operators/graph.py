@@ -16,13 +16,14 @@ Out-degree normalization is computed once before the loop.  Per-round
 connected_components; the per-round driver traffic is ONE scalar (the
 L1 convergence delta, read off the already-checkpointed result) — the
 dangling mass folds into the update job as a broadcast 1-row
-aggregate.  Below ``driver_finish_max_edges`` (default 100k, the
-``connected_components`` Arrow-finish bound) the iteration instead
-runs vectorized on the driver: the GDELT callers rank CONTRACTED
+aggregate.  Small edge lists instead finish on the driver
+(``_finish.collect_if_small``: at most ``DRIVER_FINISH_ROWS`` edges
+with integral or binary-collated string ids): the GDELT callers rank CONTRACTED
 graphs (country dyads, person co-mentions) whose corpus-sized work is
 the upstream distributed rollup, and a sub-kilobyte rank frame pays
 more per round in task scheduling than the whole computation costs in
-numpy.  The float operator's iterative arithmetic is
+numpy.  Both routes return the same schema, nullability included.
+The float operator's iterative arithmetic is
 partition-order-sensitive in the last bits, so it is property-tested
 (mass conservation, known-graph ranks, dangling handling,
 driver-vs-distributed equality) rather than oracle-gated; its exact
@@ -34,8 +35,12 @@ family to the value-hash gate.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+from ._finish import collect_if_small
 
 
 def pagerank(
@@ -47,7 +52,6 @@ def pagerank(
     max_iter: int = 30,
     tol: float = 1e-6,
     reset: DataFrame | None = None,
-    driver_finish_max_edges: int = 100_000,
 ) -> DataFrame:
     """Weighted PageRank by power iteration over an edge frame.
 
@@ -69,22 +73,17 @@ def pagerank(
     flag — joined once before the loop, zero per-round cost, and the
     r7 one-heavy-job-per-round fold is unchanged.
 
-    Bounded driver finish (r11, VERDICT r10 #5 — the
-    ``connected_components`` Arrow-finish discipline,
-    operators/dedup.py:1547): when the edge frame fits
-    ``driver_finish_max_edges`` (one LIMIT cap+1 job decides), the
-    power iteration runs vectorized on the driver instead of paying
-    ~4 scheduler stages per round on a sub-kilobyte frame.  This is
-    the RIGHT 100 TB shape for the dyad/co-mention callers: the
-    corpus-sized work is the upstream distributed rollup, and the
-    CONTRACTED graph it emits (countries × countries, people seen
-    together) is orders below the cap by construction — measured
-    9.9s → ~2s on related_actors, whose 8-node graph was paying
-    0.6-0.9s of pure task-scheduling overhead per round.  Above the
-    cap (a genuinely large graph: web pages, users) the distributed
-    loop below runs unchanged; ``driver_finish_max_edges=0`` forces
-    it.  At the 100k default the collected edge list is a few MB —
-    the same bound as the CC finish.
+    Bounded driver finish: when ``_finish.collect_if_small`` admits
+    the (string-keyed) edge list, the power iteration runs vectorized
+    on the driver instead of paying ~4 scheduler stages per round on
+    a sub-kilobyte frame.  This is the RIGHT 100 TB shape for the
+    dyad/co-mention callers: the corpus-sized work is the upstream
+    distributed rollup, and the CONTRACTED graph it emits (countries
+    × countries, people seen together) is orders below the cap by
+    construction — measured 9.9s → ~2s on related_actors, whose
+    8-node graph was paying 0.6-0.9s of pure task-scheduling overhead
+    per round.  A genuinely large graph (web pages, users) runs the
+    distributed loop below.
     """
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
     e = edges.select(
@@ -93,12 +92,12 @@ def pagerank(
         w.alias("w"),
     ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull() & (F.col("w") > 0))
 
-    if driver_finish_max_edges > 0:
-        head = e.limit(driver_finish_max_edges + 1).collect()
-        if len(head) <= driver_finish_max_edges:
-            return _pagerank_driver(
-                edges.sparkSession, head, damping, max_iter, tol, reset
-            )
+    pdf = collect_if_small(e, ["src", "dst"])
+    if pdf is not None:
+        node_null = e.schema["src"].nullable or e.schema["dst"].nullable
+        return _pagerank_driver(
+            edges.sparkSession, pdf, node_null, damping, max_iter, tol, reset
+        )
 
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -107,8 +106,8 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
+    if n == 0:  # rounded like the non-empty result, so rank stays nullable
+        return nodes.withColumn("rank", F.round(F.lit(0.0), 8))
 
     out_w = e.groupBy("src").agg(F.sum("w").alias("_out"))
     # transition probabilities, fixed for the whole loop
@@ -211,29 +210,39 @@ def pagerank(
 
 def _pagerank_driver(
     spark,
-    rows: list,
+    pdf,
+    node_null: bool,
     damping: float,
     max_iter: int,
     tol: float,
     reset: DataFrame | None,
 ) -> DataFrame:
     """Vectorized power iteration over a collected (src, dst, w) edge
-    list — the below-cap finish of ``pagerank``.  Same update rule,
+    frame — the driver finish of ``pagerank``.  Same update rule,
     same dangling/reset/convergence semantics, same 8-decimal HALF_UP
-    rounding; the float summation order differs from the distributed
-    partial aggregation in the last bits, which is why the PageRank
-    family is rows-only for the oracle gate (equality within 1e-8 is
-    pinned by tests/test_graph.py)."""
+    rounding and the same output schema; the float summation order
+    differs from the distributed partial aggregation in the last
+    bits, which is why the PageRank family is rows-only for the
+    oracle gate (equality within 1e-8 is pinned by
+    tests/test_graph.py)."""
     import numpy as np
 
-    if not rows:
-        return spark.createDataFrame([], "node string, rank double")
-    nodes = sorted({r.src for r in rows} | {r.dst for r in rows})
-    idx = {v: i for i, v in enumerate(nodes)}
+    schema = StructType(
+        [
+            StructField("node", StringType(), node_null),
+            StructField("rank", DoubleType(), True),
+        ]
+    )
+    m = len(pdf)
+    if not m:
+        return spark.createDataFrame(pd.DataFrame({"node": [], "rank": []}), schema)
+    nodes, inv = np.unique(
+        np.concatenate([pdf["src"].to_numpy(object), pdf["dst"].to_numpy(object)]),
+        return_inverse=True,
+    )
     n = len(nodes)
-    src_i = np.array([idx[r.src] for r in rows], dtype=np.int64)
-    dst_i = np.array([idx[r.dst] for r in rows], dtype=np.int64)
-    ew = np.array([r.w for r in rows], dtype=np.float64)
+    src_i, dst_i = inv[:m], inv[m:]
+    ew = pdf["w"].to_numpy(np.float64)
     out = np.zeros(n)
     np.add.at(out, src_i, ew)
     has_out = out > 0.0
@@ -253,6 +262,7 @@ def _pagerank_driver(
             .join(F.broadcast(nodes_df), "node")
             .collect()
         )
+        idx = {v: i for i, v in enumerate(nodes)}
         rv = np.zeros(n)
         for row in r:
             rv[idx[row.node]] += row._w
@@ -276,10 +286,7 @@ def _pagerank_driver(
     # HALF_UP to 8 decimals — Spark F.round semantics, not numpy's
     # half-even (ranks are non-negative, so no sign term needed)
     rounded = np.floor(ranks * 1e8 + 0.5) / 1e8
-    return spark.createDataFrame(
-        [(nodes[i], float(rounded[i])) for i in range(n)],
-        "node string, rank double",
-    )
+    return spark.createDataFrame(pd.DataFrame({"node": nodes, "rank": rounded}), schema)
 
 
 def pagerank_micro(
@@ -293,7 +300,6 @@ def pagerank_micro(
     tol_units: int = 10**6,
     reset: DataFrame | None = None,
     scale: int = 10**12,
-    max_edges: int = 100_000,
 ) -> DataFrame:
     """EXACT fixed-point PageRank — the oracle-replayable sibling of
     ``pagerank`` (r12, VERDICT r11 #2): every arithmetic step runs in
@@ -327,9 +333,9 @@ def pagerank_micro(
 
     Contract: edge weights must be positive integers (counts — the
     dyad/co-mention callers' shape; the weight column is cast to
-    BIGINT), and the edge frame must fit ``max_edges`` (loud error
-    otherwise): this variant always runs the ``pagerank`` bounded
-    DRIVER finish, because its callers rank CONTRACTED graphs whose
+    BIGINT), and ``_finish.collect_if_small`` must admit the edge
+    list (loud error otherwise): this variant always runs on the
+    driver, because its callers rank CONTRACTED graphs whose
     corpus-scale work is the upstream distributed rollup.  A
     genuinely large graph belongs on ``pagerank``'s distributed
     float loop, where a hash gate is impossible anyway (float
@@ -343,21 +349,24 @@ def pagerank_micro(
         F.col(dst).cast("string").alias("dst"),
         w.alias("w"),
     ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull() & (F.col("w") > 0))
-    rows = e.limit(max_edges + 1).collect()
-    if len(rows) > max_edges:
+    pdf = collect_if_small(e, ["src", "dst"])
+    if pdf is None:
         raise ValueError(
-            f"pagerank_micro: edge frame exceeds max_edges={max_edges}; "
-            "use pagerank() (distributed float loop) for large graphs"
+            "pagerank_micro: edge frame exceeds the driver-finish cap "
+            "(_finish.DRIVER_FINISH_ROWS); use pagerank() (distributed "
+            "float loop) for large graphs"
         )
     spark = edges.sparkSession
-    if not rows:
+    if pdf.empty:
         return spark.createDataFrame([], "node string, rank_micro bigint")
-    nodes = sorted({r.src for r in rows} | {r.dst for r in rows})
+    # tolist(): Python ints, so every intermediate below is exact
+    srcs, dsts, ws = pdf["src"].tolist(), pdf["dst"].tolist(), pdf["w"].tolist()
+    nodes = sorted(set(srcs) | set(dsts))
     idx = {v: i for i, v in enumerate(nodes)}
     n = len(nodes)
     outw = [0] * n
-    for r in rows:
-        outw[idx[r.src]] += r.w
+    for node, wt in zip(srcs, ws):
+        outw[idx[node]] += wt
     if reset is None:
         rv = [scale // n] * n
     else:
@@ -384,9 +393,8 @@ def pagerank_micro(
             )
         rv = [(scale * x) // tw for x in sw]
     num, den = damping_num, damping_den
-    src_i = [idx[r.src] for r in rows]
-    dst_i = [idx[r.dst] for r in rows]
-    ws = [r.w for r in rows]
+    src_i = [idx[v] for v in srcs]
+    dst_i = [idx[v] for v in dsts]
     ranks = rv[:]
     for _ in range(max_iter):
         dang = sum(ranks[i] for i in range(n) if outw[i] == 0)
@@ -511,7 +519,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 10,
-    driver_finish_max_edges: int = 100_000,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     2007): every node repeatedly adopts the most frequent label among
@@ -542,36 +549,29 @@ def label_propagation(
     checkpoint; the changed count is a trivial scan) — one heavy job
     plus one scan per round, the same fold pagerank got in r7.
 
-    Bounded driver finish (r13 — the ``pagerank``/
-    ``connected_components`` discipline): when the edge frame fits
-    ``driver_finish_max_edges`` (one LIMIT cap+1 job decides), the
-    synchronous rounds run on the driver instead of paying two jobs
-    of scheduler latency per round on a sub-kilobyte frame.  Unlike
-    pagerank's float power iteration, every LPA update is INTEGER
-    counts + an order comparison on the label type, so the driver
-    path is EXACTLY equal to the distributed loop (property-pinned
-    by tests/test_graph.py), and hash-gated callers keep their
-    oracle gates.  The GDELT caller (``actor_communities``) ranks a
-    CONTRACTED country×country dyad graph, orders below the cap by
-    construction; above the cap the distributed loop runs unchanged
-    (``driver_finish_max_edges=0`` forces it).
+    Bounded driver finish: when ``_finish.collect_if_small`` admits
+    the edge list (small, and src/dst of one integral or
+    binary-collated string type), the synchronous rounds run on the driver instead of paying
+    two jobs of scheduler latency per round on a sub-kilobyte frame.
+    Unlike pagerank's float power iteration, every LPA update is
+    INTEGER counts + an order comparison on the label type, so on
+    those domains the driver path is EXACTLY equal to the distributed
+    loop, schema included (property-pinned by tests/test_graph.py),
+    and hash-gated callers keep their oracle gates.  The GDELT caller
+    (``actor_communities``) ranks a CONTRACTED country×country dyad
+    graph, orders below the cap by construction.  Other id types
+    (floats: NaN ordering; mixed src/dst types: the distributed
+    loop's unionByName coercion) always run the distributed loop.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
         F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v"))
     )
 
-    if (
-        driver_finish_max_edges > 0
-        # the driver finish unions u- and v-values into one label
-        # domain; mixed src/dst types route to the distributed loop,
-        # whose unionByName coercion defines the semantics there
-        and e.schema["u"].dataType == e.schema["v"].dataType
-    ):
-        head = e.limit(driver_finish_max_edges + 1).collect()
-        if len(head) <= driver_finish_max_edges:
-            return _label_propagation_driver(
-                edges.sparkSession, head, max_iter, e.schema["u"].dataType
-            )
+    pdf = collect_if_small(e, ["u", "v"])
+    if pdf is not None:
+        u, v = e.schema["u"], e.schema["v"]
+        node = StructField("node", u.dataType, u.nullable or v.nullable)
+        return _label_propagation_driver(edges.sparkSession, pdf, max_iter, node)
 
     undirected = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -623,30 +623,21 @@ def label_propagation(
     return labels.select("node", F.col("label").alias("community"))
 
 
-def _label_propagation_driver(spark, rows: list, max_iter: int, node_type) -> DataFrame:
+def _label_propagation_driver(spark, pdf, max_iter: int, node: StructField) -> DataFrame:
     """Exact driver-side finish of ``label_propagation`` over a
-    collected (u, v) edge list — same symmetrize/self-vote edge
+    collected (u, v) edge frame — same symmetrize/self-vote edge
     semantics, same synchronous (count desc, label asc) argmax, same
     early-stop.  Every update is integer counting plus an order
     comparison on the label values (Python's tuple ``min`` ==
-    Catalyst's (n desc, label asc) row_number ordering for the int
-    and string label domains — UTF-8 binary order is code-point
-    order), so the result is EXACTLY the distributed loop's —
-    property-pinned driver-vs-distributed in tests/test_graph.py."""
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("node", node_type, True),
-            StructField("community", node_type, True),
-        ]
-    )
-    if not rows:
-        return spark.createDataFrame([], schema)
+    Catalyst's (n desc, label asc) row_number ordering on the
+    integral and binary-collated string domains ``collect_if_small``
+    admits), so the
+    result is EXACTLY the distributed loop's, and ``node`` (the
+    distributed loop's node field) gives both columns its schema."""
+    schema = StructType([node, StructField("community", node.dataType, node.nullable)])
     # sym = distinct(undirected ∪ self-loops), as adjacency sets
     adj: dict = {}
-    for r in rows:
-        u, v = r.u, r.v
+    for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
         adj.setdefault(u, set()).add(v)
         adj.setdefault(v, set()).add(u)
     for n in adj:
@@ -667,7 +658,9 @@ def _label_propagation_driver(spark, rows: list, max_iter: int, node_type) -> Da
         labels = new
         if changed == 0:
             break
-    return spark.createDataFrame(sorted(labels.items()), schema)
+    return spark.createDataFrame(
+        pd.DataFrame(sorted(labels.items()), columns=["node", "community"]), schema
+    )
 
 
 def k_core(

@@ -26,3 +26,33 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_dir_mid():
     return SF001
+
+
+@pytest.fixture
+def driver_cap(monkeypatch):
+    """Set the bounded driver-finish cap (``operators._finish``) for
+    one test: ``driver_cap(-1)`` sends every operator down its
+    distributed route, a small cap sends only frames above it."""
+    from gdelt_extractor_spark.operators import _finish
+
+    return lambda rows: monkeypatch.setattr(_finish, "DRIVER_FINISH_ROWS", rows)
+
+
+@pytest.fixture
+def spy(monkeypatch):
+    """``calls = spy(module, "fn")`` wraps ``module.fn`` for one test;
+    each call appends to ``calls``, so a test observes which route
+    ran instead of inferring it from equal outputs."""
+
+    def install(module, name):
+        calls = []
+        real = getattr(module, name)
+
+        def wrapper(*args, **kwargs):
+            calls.append(1)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, wrapper)
+        return calls
+
+    return install

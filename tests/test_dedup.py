@@ -286,7 +286,7 @@ def test_connected_components_converges_under_max_iter(spark):
     assert all(r.cluster_id == 0 for r in cc) and len(cc) == 6
 
 
-def test_connected_components_monotone_chain_converges(spark):
+def test_connected_components_monotone_chain_converges(spark, driver_cap):
     """ADVICE r4: value-order contraction removes ~1 node per round
     on a monotone-id path, so a 600-node chain would blow through
     max_iter=25.  Hash-priority contraction shrinks it geometrically:
@@ -296,7 +296,8 @@ def test_connected_components_monotone_chain_converges(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "id_a long, id_b long"
     )
-    cc = D.connected_components(edges, driver_finish_edges=0).collect()
+    driver_cap(-1)
+    cc = D.connected_components(edges).collect()
     assert {r.cluster_id for r in cc} == {0}
     assert len(cc) == n + 1
 
@@ -365,26 +366,106 @@ def test_keep_canonical_applies_clusters(spark):
     assert kept == [0, 1, 2, 4]
 
 
-def test_connected_components_distributed_matches_driver_finish(spark):
-    """driver_finish_edges=0 forces the fully distributed contraction
-    loop; results must be identical to the default hybrid path."""
+def test_connected_components_distributed_matches_driver_finish(
+    spark, driver_cap, spy
+):
+    """A cap of -1 forces the fully distributed contraction loop;
+    results must be identical to the default driver finish, and each
+    run must take the route it is meant to."""
     import random
 
+    calls = spy(D, "_driver_union_find")
     rng = random.Random(7)
     nodes = list(range(400))
     edges = [(a, rng.choice(nodes)) for a in nodes for _ in range(2)]
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     hybrid = sorted(map(tuple, D.connected_components(df).collect()))
-    dist = sorted(
-        map(tuple, D.connected_components(df, driver_finish_edges=0).collect())
-    )
+    assert len(calls) == 1
+    driver_cap(-1)
+    dist = sorted(map(tuple, D.connected_components(df).collect()))
+    assert len(calls) == 1
     assert hybrid == dist and hybrid
 
 
 def test_connected_components_empty_edges(spark):
     df = spark.createDataFrame([], "id_a long, id_b long")
     assert D.connected_components(df).count() == 0
+
+
+@pytest.mark.parametrize(
+    "pairs", [[("01", "1")], [("01", "x"), ("1", "y")]], ids=["01-1", "01-x-1-y"]
+)
+def test_connected_components_string_ids(spark, driver_cap, spy, pairs):
+    """String ids stay strings on the driver finish: "01" and "1" are
+    different nodes (formerly int()-parsed into one node, or a crash
+    on a non-numeric id), and the result equals the distributed
+    loop's, values and types."""
+    calls = spy(D, "_driver_union_find")
+    df = spark.createDataFrame(pairs, "id_a string, id_b string")
+    drv = D.connected_components(df)
+    drv_rows = sorted(map(tuple, drv.collect()))
+    assert len(calls) == 1
+    driver_cap(-1)
+    dist = D.connected_components(df)
+    assert drv_rows == sorted(map(tuple, dist.collect()))
+    assert len(calls) == 1
+    assert drv.schema == dist.schema
+    assert drv.schema.simpleString() == "struct<node:string,cluster_id:string>"
+    nodes = {n for p in pairs for n in p}
+    assert {n for n, _ in drv_rows} == nodes
+
+
+def test_connected_components_schema_identity(spark, driver_cap, spy):
+    """Both routes return the same schema, nullability included: on
+    non-null ``spark.range`` edges ``node`` stays non-null, and empty
+    input keeps the input's id type (formerly always bigint)."""
+    calls = spy(D, "_driver_union_find")
+    frames = [
+        spark.range(n).select(
+            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+        )
+        for n in (0, 5)
+    ] + [
+        spark.createDataFrame([], "id_a string, id_b string"),
+        spark.createDataFrame([(1, 2)], "id_a int, id_b int"),
+    ]
+    drv = [D.connected_components(e).schema for e in frames]
+    assert len(calls) == 2  # the empty frames need no union-find
+    driver_cap(-1)
+    assert [D.connected_components(e).schema for e in frames] == drv
+    assert len(calls) == 2
+    assert [f.nullable for f in drv[1]] == [False, True]
+    assert [f.dataType.simpleString() for f in drv[2]] == ["string", "string"]
+    assert [f.dataType.simpleString() for f in drv[3]] == ["int", "int"]
+
+
+def test_connected_components_round_pays_one_probe(spark, driver_cap, spy):
+    """On admitted (integral) ids the size probe's None already proves
+    the edge set non-empty, so a distributed round runs no separate
+    emptiness job; only the negative test cap, where the probe proves
+    nothing, falls back to ``isEmpty``."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "id_a long, id_b long"
+    )
+    empties = spy(type(edges), "isEmpty")
+    driver_cap(3)
+    assert {r.cluster_id for r in D.connected_components(edges).collect()} == {0}
+    assert empties == []
+    driver_cap(-1)
+    assert {r.cluster_id for r in D.connected_components(edges).collect()} == {0}
+    assert empties
+
+
+def test_connected_components_collated_ids_route_distributed(spark, spy):
+    """Collated strings compare unlike Python's ``str`` (UTF8_LCASE
+    makes "A" == "a"), so the driver finish must not take them."""
+    calls = spy(D, "_driver_union_find")
+    df = spark.createDataFrame([("A", "b"), ("a", "c")], "id_a string, id_b string")
+    df = df.select(*(F.collate(c, "UTF8_LCASE").alias(c) for c in df.columns))
+    out = D.connected_components(df)
+    assert out.count() > 0 and calls == []
+    assert out.schema["node"].dataType == df.schema["id_a"].dataType
 
 
 def test_duplicate_spans_exact_semantics(spark):

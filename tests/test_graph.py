@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from gdelt_extractor_spark.operators import graph as G
 from gdelt_extractor_spark.operators.graph import pagerank
 
 
@@ -50,19 +51,24 @@ def test_weighted_edges_shift_rank(spark):
     assert abs(sum(out.values()) - 1.0) < 1e-6
 
 
-def test_empty_graph(spark):
+def test_empty_graph(spark, driver_cap):
     e = _edges(spark, [], "src string, dst string")
-    assert pagerank(e).count() == 0
-    # both paths agree on empty
-    assert pagerank(e, driver_finish_max_edges=0).count() == 0
+    drv = pagerank(e)
+    assert drv.count() == 0
+    # both paths agree on empty, schema included
+    driver_cap(-1)
+    dist = pagerank(e)
+    assert dist.count() == 0
+    assert drv.schema == dist.schema
 
 
-def test_driver_finish_equals_distributed(spark):
+def test_driver_finish_equals_distributed(spark, driver_cap, spy):
     """The below-cap vectorized driver finish (r11) must match the
     distributed power iteration to within summation-order float noise
     on a graph exercising weights, dangling nodes and a personalized
-    reset — and the cap must actually route: driver_finish_max_edges=0
-    forces the distributed loop, a cap below the edge count too."""
+    reset — and the cap must actually route: a cap of -1 forces the
+    distributed loop, a cap below the edge count too."""
+    calls = spy(G, "_pagerank_driver")
     rows = [
         ("a", "b", 9.0), ("a", "c", 1.0), ("b", "a", 1.0),
         ("c", "d", 2.0), ("d", "a", 1.0), ("a", "e", 3.0),
@@ -70,33 +76,29 @@ def test_driver_finish_equals_distributed(spark):
     ]
     e = _edges(spark, rows, "src string, dst string, w double")
     seeds = spark.createDataFrame([("a", 1.0)], "node string, w double")
-    for kw in (
+    kws = (
         {},
         {"weight": "w"},
         {"weight": "w", "reset": seeds, "damping": 0.5, "tol": 1e-4},
-    ):
-        fast = {r.node: r.rank for r in pagerank(e, **kw).collect()}
-        slow = {
-            r.node: r.rank
-            for r in pagerank(e, driver_finish_max_edges=0, **kw).collect()
-        }
-        assert fast.keys() == slow.keys(), kw
-        for node in fast:
-            assert abs(fast[node] - slow[node]) < 1e-7, (kw, node)
+    )
+    fast = [{r.node: r.rank for r in pagerank(e, **kw).collect()} for kw in kws]
+    assert len(calls) == 3
+    driver_cap(-1)
+    slow = [{r.node: r.rank for r in pagerank(e, **kw).collect()} for kw in kws]
+    assert len(calls) == 3
+    for kw, f, s in zip(kws, fast, slow):
+        assert f.keys() == s.keys(), kw
+        for node in f:
+            assert abs(f[node] - s[node]) < 1e-7, (kw, node)
     # a cap smaller than the edge count routes to the distributed loop
-    # (same results again, proving the LIMIT cap+1 probe is correct)
-    mid = {
-        r.node: r.rank
-        for r in pagerank(e, weight="w", driver_finish_max_edges=3).collect()
-    }
-    full = {
-        r.node: r.rank
-        for r in pagerank(e, weight="w", driver_finish_max_edges=0).collect()
-    }
-    assert mid == full
+    # (same results again, proving the size probe is correct)
+    driver_cap(3)
+    mid = {r.node: r.rank for r in pagerank(e, weight="w").collect()}
+    assert len(calls) == 3
+    assert mid == slow[1]
 
 
-def test_duplicate_reset_seeds_sum_on_both_paths(spark):
+def test_duplicate_reset_seeds_sum_on_both_paths(spark, driver_cap):
     """Duplicate seed rows sum into one teleport entry on BOTH the
     driver finish and the distributed loop (r11 review: the
     distributed join used to duplicate the node's rank rows and
@@ -107,18 +109,15 @@ def test_duplicate_reset_seeds_sum_on_both_paths(spark):
         [("a", 0.5), ("a", 0.5)], "node string, w double"
     )
     single = spark.createDataFrame([("a", 1.0)], "node string, w double")
-    for cap in (100_000, 0):
+    for cap in (100_000, -1):
+        driver_cap(cap)
         got_dup = {
             r.node: r.rank
-            for r in pagerank(
-                e, weight="w", reset=dup, driver_finish_max_edges=cap
-            ).collect()
+            for r in pagerank(e, weight="w", reset=dup).collect()
         }
         got_one = {
             r.node: r.rank
-            for r in pagerank(
-                e, weight="w", reset=single, driver_finish_max_edges=cap
-            ).collect()
+            for r in pagerank(e, weight="w", reset=single).collect()
         }
         assert len(got_dup) == 3, cap  # one row per node, no dups
         for n in got_one:
@@ -188,8 +187,9 @@ class TestGraphDriverFinishEquality:
     EXACTLY the distributed loop (unlike pagerank's float finish,
     every LPA update is integer counts + an order comparison, so
     equality is exact, not within-tolerance) — and the cap must
-    actually route: driver_finish_max_edges=0 forces the distributed
-    loop, a small cap (< |E|) falls through to it.  (k_core has NO
+    actually route: a cap of -1 forces the distributed loop, a small
+    cap (< |E|) falls through to it; every test observes the route
+    by counting driver-finish calls.  (k_core has NO
     driver finish — both probe shapes A/B'd slower than its ~2-round
     loop; the negative twin is recorded in OPTIMIZATION_r13.md.)"""
 
@@ -206,54 +206,98 @@ class TestGraphDriverFinishEquality:
         ]
         return [c1 + c2 + [(4, 11)], chain, dense]
 
-    def test_label_propagation_driver_equals_distributed(self, spark):
-        from gdelt_extractor_spark.operators.graph import label_propagation
+    @staticmethod
+    def _lpa(e):
+        return {r.node: r.community for r in G.label_propagation(e).collect()}
 
-        for pairs in self._graphs():
-            e = spark.createDataFrame(pairs, "src long, dst long")
-            drv = {r.node: r.community
-                   for r in label_propagation(e).collect()}
-            dist = {r.node: r.community
-                    for r in label_propagation(
-                        e, driver_finish_max_edges=0).collect()}
-            assert drv == dist
+    def test_label_propagation_driver_equals_distributed(self, spark, driver_cap, spy):
+        calls = spy(G, "_label_propagation_driver")
+        frames = [
+            spark.createDataFrame(pairs, "src long, dst long")
+            for pairs in self._graphs()
+        ]
+        drv = [self._lpa(e) for e in frames]
+        assert len(calls) == len(frames)
+        driver_cap(-1)
+        assert drv == [self._lpa(e) for e in frames]
+        assert len(calls) == len(frames)
 
-    def test_label_propagation_driver_equals_distributed_strings(self, spark):
-        from gdelt_extractor_spark.operators.graph import label_propagation
-
+    def test_label_propagation_driver_equals_distributed_strings(
+        self, spark, driver_cap, spy
+    ):
+        calls = spy(G, "_label_propagation_driver")
         e = spark.createDataFrame(
             [("US", "CN"), ("CN", "RU"), ("FR", "DE"), ("DE", "FR")],
             "src string, dst string",
         )
-        drv = {r.node: r.community for r in label_propagation(e).collect()}
-        dist = {r.node: r.community
-                for r in label_propagation(
-                    e, driver_finish_max_edges=0).collect()}
-        assert drv == dist
+        drv = self._lpa(e)
+        assert len(calls) == 1
+        driver_cap(-1)
+        assert drv == self._lpa(e)
+        assert len(calls) == 1
 
-    def test_small_cap_falls_through_to_distributed(self, spark):
-        from gdelt_extractor_spark.operators.graph import label_propagation
-
+    def test_small_cap_falls_through_to_distributed(self, spark, driver_cap, spy):
+        calls = spy(G, "_label_propagation_driver")
         pairs = [(i, i + 1) for i in range(10)]
         e = spark.createDataFrame(pairs, "src long, dst long")
-        lp = {r.node: r.community
-              for r in label_propagation(
-                  e, driver_finish_max_edges=3).collect()}
-        assert lp == {r.node: r.community
-                      for r in label_propagation(e).collect()}
+        drv = self._lpa(e)
+        driver_cap(3)
+        assert self._lpa(e) == drv
+        assert len(calls) == 1  # the default run only
 
-    def test_mixed_node_types_route_distributed(self, spark):
+    def test_mixed_node_types_route_distributed(self, spark, driver_cap, spy):
         # src int / dst string: the driver finish must decline and the
         # distributed loop's unionByName coercion define the result
-        from gdelt_extractor_spark.operators.graph import label_propagation
-
+        calls = spy(G, "_label_propagation_driver")
         e = spark.createDataFrame(
             [(1, "2"), (2, "3")], "src int, dst string"
         )
-        out = {r.node: r.community for r in label_propagation(e).collect()}
-        assert out == {r.node: r.community
-                       for r in label_propagation(
-                           e, driver_finish_max_edges=0).collect()}
+        out = self._lpa(e)
+        assert calls == []
+        driver_cap(-1)
+        assert out == self._lpa(e)
+
+    def test_double_ids_route_distributed(self, spark, spy):
+        # floats are outside the driver finish's exactness domain (NaN
+        # orders greatest in Catalyst, unordered in Python)
+        calls = spy(G, "_label_propagation_driver")
+        e = spark.createDataFrame(
+            [(1.0, 2.0), (2.0, 3.0), (float("nan"), 1.0)], "src double, dst double"
+        )
+        out = self._lpa(e)
+        assert calls == []
+        # Catalyst orders NaN above every number, so 1.0 wins every tie
+        assert len(out) == 4 and set(out.values()) == {1.0}
+
+
+def test_driver_and_distributed_schemas_match(spark, driver_cap, spy):
+    """Both routes of pagerank and label_propagation return the same
+    schema, nullability included — on non-null ``spark.range`` edges
+    (the distributed loops keep the ids non-null), nullable ids, and
+    empty input."""
+    from pyspark.sql import functions as F
+
+    pr_calls = spy(G, "_pagerank_driver")
+    lp_calls = spy(G, "_label_propagation_driver")
+    frames = [
+        spark.range(n).select(
+            F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+        )
+        for n in (0, 5)
+    ] + [spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")]
+
+    def schemas():
+        return [
+            (G.pagerank(e).schema, G.label_propagation(e).schema) for e in frames
+        ]
+
+    drv = schemas()
+    assert len(pr_calls) == len(lp_calls) == len(frames)
+    driver_cap(-1)
+    assert schemas() == drv
+    assert len(pr_calls) == len(lp_calls) == len(frames)
+    assert [f.nullable for f in drv[1][0]] == [False, True]
+    assert [f.nullable for f in drv[1][1]] == [False, False]
 
 
 class TestTriangleCount:
@@ -392,7 +436,7 @@ class TestScalarFoldJobCounts:
             spark.conf.set("spark.sql.adaptive.enabled", saved)
         return len(after - before)
 
-    def test_label_propagation_jobs_per_round(self, spark):
+    def test_label_propagation_jobs_per_round(self, spark, driver_cap):
         from gdelt_extractor_spark.operators.graph import label_propagation
 
         # path graph a-b-c-d-e: labels still moving at round 3
@@ -400,17 +444,16 @@ class TestScalarFoldJobCounts:
             [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")],
             "src string, dst string",
         )
+        driver_cap(-1)
         n = self._jobs_during(
-            spark,
-            lambda: label_propagation(
-                e, max_iter=3, driver_finish_max_edges=0
-            ).collect(),
+            spark, lambda: label_propagation(e, max_iter=3).collect()
         )
-        # setup (sym + labels checkpoints) = 2, 3 rounds × (1 update
-        # checkpoint + 1 changed-count scan) = 6, final collect = 1.
-        # The pre-fold shape ran 3 rounds × 3 = 12 + 3 (the old⋈new
-        # join job per round).
-        assert n <= 9, f"label_propagation ran {n} jobs (fold shape = 9)"
+        # driver-finish size probe = 1 (the distributed route pays it
+        # at any cap), setup (sym + labels checkpoints) = 2, 3 rounds ×
+        # (1 update checkpoint + 1 changed-count scan) = 6, final
+        # collect = 1.  The pre-fold shape ran 3 rounds × 3 = 12 + 3
+        # (the old⋈new join job per round).
+        assert n <= 10, f"label_propagation ran {n} jobs (fold shape = 10)"
 
     def test_k_core_jobs_per_round(self, spark):
         from gdelt_extractor_spark.operators.graph import k_core
@@ -479,7 +522,7 @@ def test_no_forced_broadcast_of_node_sized_frames():
     allowed are the genuinely small ones: the seed reset vector
     (``rv``, seed-set-sized), the 1-row dangling-mass aggregate
     (``dang``), and the driver-finish path's ``nodes_df`` (bounded by
-    driver_finish_max_edges — it only exists when the whole edge list
+    the driver-finish cap — it only exists when the whole edge list
     already fit on the driver).  Source pin, not a plan pin: every
     iterative op checkpoints its pre-loop frames, so the hint is
     invisible in any returned DataFrame's plan."""
@@ -554,14 +597,15 @@ class TestPagerankMicro:
         # unreachable component gets exactly zero in the exact path
         assert mi["x"] == 0.0 and mi["y"] == 0.0
 
-    def test_cap_guard_raises(self, spark):
+    def test_cap_guard_raises(self, spark, driver_cap):
         from gdelt_extractor_spark.operators.graph import pagerank_micro
 
         e = spark.createDataFrame(
             [("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string"
         )
-        with pytest.raises(ValueError, match="max_edges"):
-            pagerank_micro(e, max_edges=2)
+        driver_cap(2)
+        with pytest.raises(ValueError, match="exceeds the driver-finish cap"):
+            pagerank_micro(e)
 
     def test_empty_graph_micro(self, spark):
         from gdelt_extractor_spark.operators.graph import pagerank_micro

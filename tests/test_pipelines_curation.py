@@ -172,23 +172,27 @@ def test_decontaminate_self_overlap(spark, sf_dir):
     assert all(r.n_overlap == 0 and r.keep for r in out2)
 
 
-def test_decontaminate_strategies_agree(spark, sf_dir):
-    """auto / broadcast_set / shuffle_join must be value-identical;
-    auto must take the shuffle_join path when the benchmark exceeds
-    the broadcast limit (forced here with broadcast_limit=1)."""
+def test_decontaminate_strategies_agree(spark, sf_dir, driver_cap):
+    """The broadcast-set route (benchmark shingle set within the
+    driver-finish cap) and the shuffle-join route (set above it,
+    forced here with a cap of 1) must be value- and schema-identical;
+    each run's plan shows the route it took."""
     docs = load_table(spark, sf_dir, "documents")
     corpus, bench = docs.filter("doc_id >= 5"), docs.filter("doc_id < 5")
 
-    def run(**kw):
-        return {
+    def run():
+        out = C.decontaminate(corpus, bench)
+        rows = {
             r.doc_id: (r.n_shingles, r.n_overlap, r.overlap_frac, r.keep)
-            for r in C.decontaminate(corpus, bench, **kw).collect()
+            for r in out.collect()
         }
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        return rows, out.schema, "array_intersect" in plan
 
-    auto = run()
-    assert auto == run(strategy="broadcast_set")
-    assert auto == run(strategy="shuffle_join")
-    assert auto == run(strategy="auto", broadcast_limit=1)  # forced join path
+    rows, schema, broadcast_set = run()
+    assert broadcast_set and rows
+    driver_cap(1)
+    assert run() == (rows, schema, False)
 
 
 def test_compact_parquet_crash_recovery(spark, tmp_path):

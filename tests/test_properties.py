@@ -348,7 +348,7 @@ EDGES = st.lists(
 
 @given(EDGES)
 @PROP
-def test_connected_components_matches_union_find(spark, pairs):
+def test_connected_components_matches_union_find(spark, driver_cap, pairs):
     """Distributed star contraction (driver finish disabled, so the
     hash-priority contraction rounds do ALL the work) must label every
     node with its component's minimum id, for arbitrary random graphs
@@ -356,11 +356,9 @@ def test_connected_components_matches_union_find(spark, pairs):
     draws."""
     from gdelt_extractor_spark.operators.dedup import connected_components
 
+    driver_cap(-1)
     df = spark.createDataFrame(pairs, "id_a long, id_b long").dropDuplicates()
-    got = {
-        r.node: r.cluster_id
-        for r in connected_components(df, driver_finish_edges=0).collect()
-    }
+    got = {r.node: r.cluster_id for r in connected_components(df).collect()}
 
     parent: dict[int, int] = {}
 
