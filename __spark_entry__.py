@@ -8,10 +8,7 @@ SUM(CAST(x AS DECIMAL(25,6))) then back to double — order-independent
 decimal addition makes results bit-identical across engines and
 partitionings (see gdelt_extractor_spark/plans/queries.py docstring).
 
-Entries without an oracle (rows-only gate), 9 after the r12 PageRank
-graduation: dedup_minhash_lsh, dedup_simhash,
-dedup_incremental_minhash (xxhash64 perf anchors — not
-DuckDB-replayable; each has a hash-gated md5 portable twin),
+Entries without an oracle (rows-only gate), 6:
 approx_distinct_users, approx_quantiles (engine-seeded sketches;
 property-tested against exact baselines), compression_stats (zlib
 DEFLATE is not SQL-expressible), dedup_audio (FFT is not
@@ -20,7 +17,9 @@ DataSketches HLL; mergeability property-tested), text_repair
 (CP1252 byte-table round-trip; pinned fixtures).  The PageRank
 family (actor_pagerank / related_actors / person_influence)
 graduated to value-hash gates in r12 via the exact integer
-fixed-point ``pagerank_micro`` + recursive-CTE oracle replay.
+fixed-point ``pagerank_micro`` + recursive-CTE oracle replay;
+dedup_minhash_lsh, dedup_simhash and dedup_incremental_minhash run
+the md5 hash family their oracles replay.
 """
 
 from __future__ import annotations
@@ -443,7 +442,7 @@ def _source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     every source pair from m=32-slot md5 signatures — which feeds are
     near-copies, answered before any doc-level dedup runs.  Fully
     oracle-gated: md5-derived hashes make the whole estimator
-    engine-portable (unlike the xxhash64 doc-level signatures)."""
+    engine-portable."""
     from gdelt_extractor_spark.operators.similarity import source_similarity
 
     return source_similarity(_docs(spark, sf_dir, width=0), k=5, m=32)
@@ -1224,55 +1223,25 @@ def _dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs — the PRODUCTION xxhash64 path
-    (rows-only; recall-vs-exact and determinism unit-tested).  Its
-    algorithm twin ``dedup_minhash_lsh_portable`` is value-hash
-    gated: same S-curve and exact-Jaccard verification over portable
-    md5 hashing, fully replayed by the DuckDB oracle — the fast path
-    anchors perf, the twin anchors correctness (r9)."""
+    """MinHash+LSH near-dup pairs (hash-gated): one salted md5 per
+    shingle occurrence (48-bit h0), per-slot minima under the
+    derived universal permutations, band buckets as md5 of the
+    comma-joined slot minima, exact-Jaccard verification on the
+    candidate pairs — the DuckDB oracle replays every step
+    value-for-value (32 hashes × 8 bands).  At sf0.001 it and the
+    exact-Jaccard baseline emit the same 28 pairs."""
     docs = _docs(spark, sf_dir, width=0)
     return D.dedup_minhash_lsh(docs, "text", "doc_id", threshold=0.6)
 
 
-def _dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH, engine-portable twin (r9, hash-gated): one salted
-    md5 per shingle occurrence (48-bit h0), per-slot minima under the
-    derived universal permutations, band buckets as md5 of the
-    comma-joined slot minima, exact-Jaccard verification on the
-    candidate pairs — the DuckDB oracle replays every step
-    value-for-value (same S-curve: 32 hashes × 8 bands).  At sf0.001
-    both variants and the exact-Jaccard baseline all emit the same 28
-    pairs; exists so the MinHash+LSH ALGORITHM is value-hash verified
-    while ``dedup_minhash_lsh`` keeps the ~2.5× cheaper xxhash64
-    fingerprints."""
-    docs = _docs(spark, sf_dir, width=0)
-    return D.dedup_minhash_lsh(
-        docs, "text", "doc_id", threshold=0.6, hash_fn="md5"
-    )
-
-
 def _dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs — the PRODUCTION xxhash64 + Arrow-UDF
-    path (rows-only; bit-vote/hamming contracts unit-tested).  Its
-    algorithm twin ``dedup_simhash_portable`` is value-hash gated:
-    same SimHash semantics over portable md5 token hashes, fully
-    replayed by the DuckDB oracle — the fast path anchors perf, the
-    twin anchors correctness (r9)."""
+    """SimHash near-dup pairs (hash-gated): one salted md5 per token,
+    64 bit-votes, the strictly-positive bit rule, pigeonhole chunk
+    candidates and xor-popcount hamming.  The DuckDB oracle replays
+    every step over the fingerprint's 16-hex-char form (same votes,
+    same bit rule; 4-char chunks ↔ the 16-bit long chunks)."""
     docs = _docs(spark, sf_dir, width=8)
     return D.dedup_simhash(docs, "text", "doc_id", max_hamming=3)
-
-
-def _dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup, engine-portable twin (r9, hash-gated): one
-    salted md5 per token, 64 bit-votes as codegen aggregates, the
-    fingerprint re-assembled as a 16-hex-char STRING, pigeonhole
-    candidates on 4-char chunks, hamming as the digit-wise xor
-    popcount — the DuckDB oracle replays every step (same votes,
-    same strictly-positive bit rule, same chunk join).  Exists so the
-    SimHash ALGORITHM is value-hash verified while ``dedup_simhash``
-    keeps the fast xxhash64 fingerprint (~4× cheaper at sf0.1)."""
-    docs = _docs(spark, sf_dir, width=8)
-    return D.dedup_simhash(docs, "text", "doc_id", max_hamming=3, hash_fn="md5")
 
 
 def _dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1315,11 +1284,15 @@ def _dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     appended — shingle overlap stays high, so they MUST drop while
     the genuinely new docs survive).  Banding (16 bands × 2 rows)
     matches the 0.5 threshold via the (1/b)^(1/r) S-curve midpoint.
-    Rows-only gate (xxhash64 MinHash — the production fast path);
-    the ALGORITHM is value-hash gated via its r10 twin
-    ``dedup_incremental_minhash_portable`` (same construction, md5
-    hashing, full DuckDB replay).  Semantics stay unit-tested
-    including replay convergence in tests/test_dedup.py."""
+    Hash-gated: signatures and band buckets come from the repo's md5
+    idiom (48-bit salted shingle hashes, universal-family
+    permutations, md5 band buckets), so the DuckDB oracle replays
+    signatures, the batch self-join drop, the index join drop, and
+    the survivor list value-for-value.  The drop logic is plain
+    (non-recursive) join algebra — matching ANY lower-id batch doc
+    or ANY indexed doc drops you even if the matched doc is itself
+    dropped — so no recursive CTE is needed.  Replay convergence is
+    unit-tested in tests/test_dedup.py."""
     docs = _docs(spark, sf_dir, width=0).select("doc_id", "text", "source")
     hist = docs.filter(F.col("doc_id") < 250)
     idx = D.minhash_band_index(hist, bands=16)
@@ -1336,52 +1309,16 @@ def _dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dedup_incremental_minhash_portable(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Engine-portable twin of dedup_incremental_minhash (r10,
-    hash-gated): the SAME history/batch construction as the xxhash64
-    perf anchor, but signatures and band buckets come from the
-    repo's md5 idiom (48-bit salted shingle hashes, universal-family
-    permutations, md5 band buckets), so the DuckDB oracle replays
-    signatures, the batch self-join drop, the index join drop, and
-    the survivor list value-for-value.  The drop logic is plain
-    (non-recursive) join algebra — matching ANY lower-id batch doc
-    or ANY indexed doc drops you even if the matched doc is itself
-    dropped — so no recursive CTE is needed."""
-    docs = _docs(spark, sf_dir, width=0).select("doc_id", "text", "source")
-    hist = docs.filter(F.col("doc_id") < 250)
-    idx = D.minhash_band_index(hist, bands=16, hash_fn="md5")
-    mutated = hist.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz yy xx")).alias("text"),
-        "source",
-    )
-    batch = docs.filter(F.col("doc_id") >= 250).unionByName(mutated)
-    return (
-        D.dedup_incremental_minhash(
-            batch, idx, bands=16, threshold=0.5, hash_fn="md5"
-        )
-        .select("doc_id", "source")
-        .orderBy("doc_id")
-    )
-
-
 def _hashed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-hashed model-free text embeddings (the bridge from
     the text corpus into the embedding machinery), hash-gated since
-    r9: ``hash_fn="md5"`` uses the repo-wide portable md5-bucket
-    idiom so the DuckDB oracle replicates the FULL embedding —
-    bucket, ±1 sign, L2 normalization — value-for-value; the frame
-    is exploded to (doc_id, bucket, v_micro) with micro-unit half-up
-    values so no doubles reach the driver hash.  The xxhash64 fast
-    path keeps its determinism/chain unit tests."""
+    r9: the repo-wide portable md5-bucket idiom lets the DuckDB
+    oracle replicate the FULL embedding — bucket, ±1 sign, L2
+    normalization — value-for-value; the frame is exploded to
+    (doc_id, bucket, v_micro) with micro-unit half-up values so no
+    doubles reach the driver hash."""
     emb = TS.hashed_embedding(
-        _docs(spark, sf_dir, width=0),
-        "doc_id",
-        "text",
-        hash_fn="md5",
-        layout="long",
+        _docs(spark, sf_dir, width=0), "doc_id", "text", layout="long"
     )
     return emb.select(
         "doc_id",
@@ -1436,7 +1373,7 @@ def _contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-membership semantics and partition independence are
     additionally tested in tests/test_clustering.py."""
     emb = _emb(spark, sf_dir, width=0)
-    return CL.contrastive_triplets(emb, k=8, n_iter=2, hash_fn="md5")
+    return CL.contrastive_triplets(emb, k=8, n_iter=2)
 
 
 def _quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3452,8 +3389,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cluster_prune": _cluster_prune,
         "contrastive_triplets": _contrastive_triplets,
         "pack_bins": _pack_bins,
-        "dedup_minhash_lsh_portable": _dedup_minhash_lsh_portable,  # new r9, hash-gated twin
-        "dedup_simhash_portable": _dedup_simhash_portable,  # new r9, hash-gated twin
+        "dedup_minhash_lsh": _dedup_minhash_lsh,  # md5 family, hash-gated
+        "dedup_simhash": _dedup_simhash,  # md5 family, hash-gated
         "pca_embeddings": _pca_embeddings,  # graduated to hash gate r9
         "actor_cores": _actor_cores,  # graduated to hash gate r9
         "actor_communities": _actor_communities,  # graduated to hash gate r9
@@ -3670,18 +3607,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "person_influence": _person_influence,
         "actor_pagerank": _actor_pagerank,
         "related_actors": _related_actors,
+        "dedup_incremental_minhash": _dedup_incremental_minhash,  # md5 family, hash-gated
         # --- rows-only (driver records no_oracle; property-tested
         # against exact baselines locally) ---
-        "dedup_incremental_minhash": _dedup_incremental_minhash,
         "compression_stats": _compression_stats,
         "sketch_rollup": _sketch_rollup,
         "approx_quantiles": Q.approx_value_quantiles,
         "approx_distinct_users": Q.approx_distinct_users,
         "text_repair": _text_repair,
-        "dedup_simhash": _dedup_simhash,
-        "dedup_minhash_lsh": _dedup_minhash_lsh,
         "dedup_audio": _dedup_audio,  # r9
-        "dedup_incremental_minhash_portable": _dedup_incremental_minhash_portable,  # new r10, hash-gated twin
     }
     head = [k for k in _R11_HEAD if k in reg]
     out = {k: reg[k] for k in head}
@@ -5989,11 +5923,11 @@ def oracle_sql() -> dict[str, str]:
             JOIN sz sb ON i.id_b = sb.doc_id
             WHERE {_jacc} >= 0.6
         """,
-        # full replay of the md5-portable MinHash+LSH (operators/
-        # dedup.py _dedup_minhash_lsh_md5): salted 48-bit shingle h0,
+        # full replay of MinHash+LSH (operators/dedup.py
+        # dedup_minhash_lsh): salted 48-bit shingle h0,
         # universal-permutation slot minima, md5 band buckets, exact
         # Jaccard on candidates — same constants via _srcsim_perms
-        "dedup_minhash_lsh_portable": f"""
+        "dedup_minhash_lsh": f"""
             WITH b AS (
               SELECT doc_id AS id, {_toks("coalesce(text, '')")} AS toks,
                 len({_toks("coalesce(text, '')")}) AS n
@@ -6043,7 +5977,7 @@ def oracle_sql() -> dict[str, str]:
         # index, both by the slot-equality Jaccard estimate (k/32,
         # exact in binary).  Ids are disjoint across sides, so side
         # membership is an id-range predicate.
-        "dedup_incremental_minhash_portable": f"""
+        "dedup_incremental_minhash": f"""
             WITH hist AS (
               SELECT doc_id, text, source FROM documents
               WHERE doc_id < 250),
@@ -6217,12 +6151,11 @@ def oracle_sql() -> dict[str, str]:
               ON a.fp = b2.fp AND a.id < b2.id
             GROUP BY 1, 2 HAVING COUNT(*) >= 2
         """,
-        # full replay of the md5-portable SimHash (operators/dedup.py
-        # simhash_md5 + hamming_pairs_hex): per-token salted md5, 64
-        # bit votes, strictly-positive bit rule, hex-string
-        # fingerprint, 4-char pigeonhole chunks, digit-wise xor
-        # popcount hamming
-        "dedup_simhash_portable": f"""
+        # full replay of SimHash (operators/dedup.py simhash +
+        # hamming_pairs) over the fingerprint's hex form: per-token
+        # salted md5, 64 bit votes, strictly-positive bit rule,
+        # 4-char pigeonhole chunks, digit-wise xor popcount hamming
+        "dedup_simhash": f"""
             WITH b AS (
               SELECT doc_id AS id, {_toks("coalesce(text, '')")} AS toks
               FROM documents),

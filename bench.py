@@ -150,16 +150,6 @@ def reset_gc_cycle(spark) -> None:
 REPS_DOWNSHIFT_AT = 260
 N_REPS = 5
 
-# Standing A/B adjudication pairs (VERDICT r11 #1): entries whose
-# RELATIVE cost is a documented claim (a perf anchor vs its
-# engine-portable twin).  Each record run times the pair back-to-back
-# A,B,A,B,... in the fresh isolation session after untimed warmups of
-# both, so the comparison shares JVM state and host load like-for-like
-# — cross-phase comparisons of the two (the r11 "inversion") proved to
-# be pure host variance (r12 A/B: anchor 4.49s vs portable 4.98s
-# medians, anchor faster in every post-JIT aligned rep).
-AB_PAIRS = [("dedup_incremental_minhash", "dedup_incremental_minhash_portable")]
-
 # every query whose interleaved median exceeds this gets a
 # fresh-session isolated median in BENCH_FULL (VERDICT r10 #1: the
 # isolated number is the one to read for cross-round regression
@@ -301,7 +291,7 @@ def main() -> None:
         # 5-rep suite, where long-lived-JVM state (block-manager /
         # checkpoint / broadcast bookkeeping) inflated checkpoint-heavy
         # queries to WORSE than their interleaved medians
-        # (dedup_incremental_minhash_portable 31.8s "isolated" vs 6.9s
+        # (dedup_incremental_minhash, md5 form, 31.8s "isolated" vs 6.9s
         # interleaved vs 4.6s in a fresh session) — the exact opposite
         # of the field's documented fresh-state contract.  A JVM
         # restart costs ~15s once and makes "isolated" mean isolated.
@@ -385,42 +375,6 @@ def main() -> None:
             if iso_ts:
                 isolated[name] = round(statistics.median(iso_ts), 3)
 
-    # Standing A/B pairs (AB_PAIRS docstring): alternating same-session
-    # reps in the fresh isolation session — the only protocol under
-    # which "anchor vs twin" cost claims are adjudicable on this host
-    # (fresh-session medians taken minutes apart moved 2-3x on
-    # identical code, r11).
-    ab: dict[str, dict] = {}
-    if not subset and timings:
-        for a_name, b_name in AB_PAIRS:
-            if a_name in errors or b_name in errors:
-                continue
-            reset_gc_cycle(spark)
-            try:
-                for nm in (a_name, b_name):  # untimed warmups, both sides
-                    materialize(queries[nm](spark, "/root/testdata/sf0.001"))
-                    release(spark, gc_every)
-                    materialize(queries[nm](spark, sf_dir))
-                    release(spark, gc_every)
-                ab_ts: dict[str, list[float]] = {a_name: [], b_name: []}
-                for _ in range(5):
-                    for nm in (a_name, b_name):
-                        t0 = time.perf_counter()
-                        materialize(queries[nm](spark, sf_dir))
-                        ab_ts[nm].append(round(time.perf_counter() - t0, 3))
-                        release(spark, gc_every)
-                ab[f"{a_name}__vs__{b_name}"] = {
-                    "times": ab_ts,
-                    "median": {
-                        nm: round(statistics.median(ts), 3)
-                        for nm, ts in ab_ts.items()
-                    },
-                }
-            except Exception as exc:  # noqa: BLE001 — A/B is evidence, not a gate
-                ab[f"{a_name}__vs__{b_name}"] = {
-                    "err": f"{type(exc).__name__}: {exc}"[:200]
-                }
-
     # r4-comparable subtotal: the 58-query set BENCH_r04 timed, so the
     # headline "value" growing with the suite doesn't read as a
     # regression round-over-round.
@@ -454,10 +408,6 @@ def main() -> None:
         # 8 isolated queries): compare to canary_median before trusting
         # isolated medians for cross-round calls
         "canary_isolated_sec": canary_iso_s,
-        # alternating same-session A/B medians for the standing
-        # adjudication pairs (AB_PAIRS) — read THESE, never two
-        # separate fresh-session medians, for anchor-vs-twin claims
-        "ab": ab,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     # canary-normalized cross-round ratios (VERDICT r10 #1): raw
@@ -504,7 +454,7 @@ def main() -> None:
             json.dump(full, fh, indent=1)
     except OSError:
         pass  # read-only checkout: the stdout line still carries the summary
-    compact = {k: v for k, v in full.items() if k not in ("runs", "isolated", "ab")}
+    compact = {k: v for k, v in full.items() if k not in ("runs", "isolated")}
     budget = 1800  # chars; driver tail observed ~2048
     # error strings are capped hard in the compact line (full text
     # lives in BENCH_FULL.json): uncapped they alone could overflow

@@ -312,7 +312,6 @@ def contrastive_triplets(
     salt: str = "triplets-v1",
     tol: float = 1e-6,
     persist: bool = True,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Deterministic contrastive-training triplets mined from the
     embedding clusters: each anchor pairs with a POSITIVE from its
@@ -320,7 +319,7 @@ def contrastive_triplets(
     cluster — the self-supervised (anchor, pos, neg) mining step,
     with no randomness to replay.
 
-    Positives come from a salted-hash ring inside each cluster (lead
+    Positives come from a salted-md5 ring inside each cluster (lead
     over the hash order, wrapping to the first member — every
     non-singleton cluster member gets exactly one positive);
     negatives are each cluster's min-id representative joined from a
@@ -328,20 +327,13 @@ def contrastive_triplets(
     window shuffle on top of the k-means tagging pass; singleton
     clusters drop (no in-cluster positive exists), and an anchor
     whose next cluster happens to be empty drops with it (pick a
-    smaller k if clusters run empty).
-
-    ``hash_fn``: ``"xxhash64"`` (default) or ``"md5"`` — the
-    engine-portable ring order (the md5 hex string compares as the
-    hash; same discipline as hashed_embedding), which lets the
-    DuckDB oracle replay the full mining given pinned centroids.
+    smaller k if clusters run empty).  The ring order is engine
+    portable (the md5 hex string compares as the hash; same
+    discipline as hashed_embedding), which lets the DuckDB oracle
+    replay the full mining given pinned centroids.
     """
     from pyspark.sql import Window
 
-    if hash_fn not in ("xxhash64", "md5"):
-        raise ValueError(
-            f"contrastive_triplets: unknown hash_fn {hash_fn!r} "
-            "(expected 'xxhash64' or 'md5')"
-        )
     tagged = (
         kmeans_cluster(
             vectors,
@@ -361,12 +353,7 @@ def contrastive_triplets(
         # Same-session A/B inside the family run: see kmeans_fit note.
         .localCheckpoint(eager=True)
     )
-    if hash_fn == "md5":
-        order = F.md5(
-            F.concat(F.lit(salt + ":"), F.col("anchor_id").cast("string"))
-        )
-    else:
-        order = F.xxhash64(F.col("anchor_id").cast("string"), F.lit(salt))
+    order = F.md5(F.concat(F.lit(salt + ":"), F.col("anchor_id").cast("string")))
     w = Window.partitionBy("cluster").orderBy(order.asc(), F.col("anchor_id").asc())
     ring = tagged.withColumn(
         "positive_id",

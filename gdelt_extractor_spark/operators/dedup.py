@@ -18,8 +18,8 @@ Scale posture (100 TB):
   in via ``max_shingle_df=None`` only on bounded corpora); at 100 TB
   use ``dedup_minhash_lsh`` whose candidate set is bounded by LSH
   bands.
-- ``dedup_minhash_lsh``: signatures computed per-row JVM-side (no
-  shuffle), candidates from a (band_id, band_hash) equi-join, then
+- ``dedup_minhash_lsh``: signatures from one map-side-combined
+  groupBy(id), candidates from a (band, bucket) equi-join, then
   exact-Jaccard verification only on candidates.
 - ``dedup_embedding`` uses a blocking key (``label``) so the pair
   join is per-block, mirroring production blocked-dedup.
@@ -94,12 +94,11 @@ def shingles(text_col: str, n: int = 3) -> Column:
     return shingles_from_tokens(tokens(text_col), n)
 
 
-def shingle_hashes_from_tokens(toks: Column, n: int = 3, distinct: bool = True) -> Column:
-    """64-bit shingle hashes (array<bigint>): multi-arg xxhash64 over
-    the n tokens directly.  This is the scale path for MinHash:
-    equality of hashes stands in for equality of shingles (collision
-    prob ~2^-64), and downstream set ops work on fixed-width longs
-    instead of strings.
+def shingle_hashes_from_tokens(toks: Column, n: int = 3) -> Column:
+    """Distinct 64-bit shingle hashes (array<bigint>): multi-arg xxhash64 over
+    the n tokens directly.  Equality of hashes stands in for equality
+    of shingles (collision prob ~2^-64), and downstream set ops work
+    on fixed-width longs instead of strings.
 
     Hashing the tokens as separate xxhash64 arguments skips the
     per-shingle slice-array + concat-string allocations of the
@@ -108,19 +107,13 @@ def shingle_hashes_from_tokens(toks: Column, n: int = 3, distinct: bool = True) 
     the array end (docs shorter than ``n``) come back NULL from
     ``F.get`` and multi-arg xxhash64 skips NULL arguments — the same
     semantics as the old form, where ``slice`` truncated and
-    ``concat_ws`` joined what was left.
-
-    ``distinct=False`` skips the O(len²) array_distinct (measured 4×
-    of the whole shingle pipeline) — safe whenever downstream is
-    multiset-insensitive: min() for MinHash signatures,
-    array_intersect/array_union (which dedupe internally) for
-    Jaccard verification."""
+    ``concat_ws`` joined what was left."""
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
     grams = F.transform(
         idx,
         lambda i: F.xxhash64(*[F.get(toks, (i + k).cast("int")) for k in range(n)]),
     )
-    return F.array_distinct(grams) if distinct else grams
+    return F.array_distinct(grams)
 
 
 def shingle_hash_rows(
@@ -137,8 +130,8 @@ def shingle_hash_rows(
     evaluated by the interpreted expression walker — measured 7× on
     the shingle build (1.06s vs 0.15s for 500 docs, one thread) —
     so the array form is only worth it when the consumer genuinely
-    needs the per-doc ARRAY (MinHash signature min, verification
-    array_intersect); every rows-shaped consumer belongs here."""
+    needs the per-doc ARRAY (verification array_intersect); every
+    rows-shaped consumer belongs here."""
     toks = tokens(F.col(text_col))
     staged = df.select(
         *keep_cols, toks.alias("_toks"), F.size(toks).alias("_n")
@@ -359,58 +352,14 @@ def dedup_ngram_jaccard(
     return verified
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int = 32, n: int = 3
-) -> DataFrame:
-    """(id, sig array<bigint>) MinHash signatures.
-
-    Each of the ``num_hashes`` permutations is xxhash64(shingle_hash,
-    seed); the signature element is the min over the doc's shingle
-    multiset (min is duplicate-insensitive, so multiset == set).
-
-    Built explode-first: shingle rows from the codegen explode form
-    (``shingle_hash_rows``), then ONE partial-aggregated groupBy(id)
-    with ``num_hashes`` codegen min-aggregates, re-assembled into the
-    signature array.  The former per-row form (num_hashes ×
-    ``transform``/``array_min`` per document) ran every permutation
-    on Spark's interpreted expression walker — the explode form is
-    the same hash math in whole-stage codegen, measured 2× at sf0.1
-    (1.33s → 0.69s, byte-identical signatures).  The shuffle this
-    buys is ~1 combined row per (doc, partition) of 32 longs —
-    map-side mins collapse each document's shingles before the wire,
-    so at 100 TB the exchange is output-sized, not corpus-sized.
-    NULL/empty texts emit the one partial-window shingle both forms
-    always produced (multi-arg xxhash64 NULL-skip), so every input
-    row keeps a signature — a transient per-row tag rides through
-    the aggregation so duplicate-id inputs do NOT merge into one
-    chimera signature (the per-row contract of the old form), and is
-    dropped from the output.
-    """
-    rows = shingle_hash_rows(
-        df.select(
-            F.col(id_col).alias("id"),
-            F.monotonically_increasing_id().alias("_row"),
-            text_col,
-        ),
-        text_col,
-        n,
-        ["id", "_row"],
-    )
-    aggs = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"_s{i}")
-        for i in range(num_hashes)
-    ]
-    return (
-        rows.groupBy("id", "_row")
-        .agg(*aggs)
-        .select(
-            "id",
-            F.array(*[F.col(f"_s{i}") for i in range(num_hashes)]).alias("sig"),
-        )
-    )
+# Salt of the MinHash family's shingle hashes and permutations.  One
+# constant, not a per-call option: an index and a batch hashed under
+# different salts would silently never match.  The DuckDB oracles
+# embed this value.
+MINHASH_SALT = "mhlsh-v1"
 
 
-def _md5_perm_consts(m: int, salt: str) -> list[tuple[int, int]]:
+def _md5_perm_consts(m: int) -> list[tuple[int, int]]:
     """Per-slot universal-family permutation constants (a_i odd in
     [1, 2^14), b_i in [0, 2^48)) derived from md5(salt:perm:i) — the
     same derived-not-random discipline as ``source_similarity``
@@ -419,9 +368,46 @@ def _md5_perm_consts(m: int, salt: str) -> list[tuple[int, int]]:
 
     out = []
     for i in range(m):
-        d = hashlib.md5(f"{salt}:perm:{i}".encode()).hexdigest()
+        d = hashlib.md5(f"{MINHASH_SALT}:perm:{i}".encode()).hexdigest()
         out.append(((int(d[:4], 16) % (1 << 14)) | 1, int(d[4:16], 16)))
     return out
+
+
+def _slot_minima(num_hashes: int) -> list[Column]:
+    """The ``num_hashes`` MinHash slot aggregates over 48-bit ``h0``
+    shingle-hash rows: slot i is min((h0·a_i + b_i) mod 2^48) under
+    the ``_md5_perm_consts`` permutations, aliased ``_s{i}``.  Min is
+    duplicate-insensitive, so multiset rows give set signatures."""
+    mod = 1 << 48
+    return [
+        F.min((F.col("h0") * F.lit(a) + F.lit(b)) % F.lit(mod)).alias(f"_s{i}")
+        for i, (a, b) in enumerate(_md5_perm_consts(num_hashes))
+    ]
+
+
+def _sig_array(num_hashes: int) -> Column:
+    """The ``_slot_minima`` columns assembled into ``sig``."""
+    return F.array(*[F.col(f"_s{i}") for i in range(num_hashes)]).alias("sig")
+
+
+def minhash_signatures(
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int = 32, n: int = 3
+) -> DataFrame:
+    """(id, sig array<bigint>) MinHash signatures, one per distinct
+    id: one salted md5 per shingle occurrence truncated to 48 bits
+    (``_md5_shingle_rows``), then ONE partial-aggregated groupBy(id)
+    with ``num_hashes`` codegen min-aggregates (``_slot_minima``) —
+    map-side mins collapse each document's shingles before the wire,
+    so at 100 TB the exchange is output-sized, not corpus-sized.
+    Every value is DuckDB-replayable.  Rows sharing an id pool their
+    shingles into one signature; docs shorter than ``n`` tokens get
+    none (no full window exists)."""
+    return (
+        _md5_shingle_rows(df, text_col, id_col, n)
+        .groupBy("id")
+        .agg(*_slot_minima(num_hashes))
+        .select("id", _sig_array(num_hashes))
+    )
 
 
 def dedup_minhash_lsh(
@@ -432,181 +418,46 @@ def dedup_minhash_lsh(
     bands: int = 8,
     n: int = 3,
     threshold: float = 0.6,
-    cache_shingles: bool = True,
-    hash_fn: str = "xxhash64",
-    salt: str = "mhlsh-v1",
 ) -> DataFrame:
     """MinHash+LSH near-dup: band signatures, bucket-join candidates,
     verify candidates with exact Jaccard, emit pairs ≥ threshold.
 
     With r = num_hashes/bands rows per band, P(candidate) =
-    1-(1-s^r)^bands — the standard S-curve.  The only shuffles are
-    the (band, hash) candidate join and the verification join, both
-    equi-joins on uniform hash keys.
-
-    The (id, shingle-hashes) frame feeds three plan branches
-    (signatures + both sides of the verification join);
-    ``cache_shingles`` persists it so tokenize+shingle runs once per
-    row instead of three times — the standard signature-cache step of
-    production MinHash pipelines (MEMORY_AND_DISK, so at 100 TB it
-    spills rather than OOMs; pass False to trade CPU for memory).
-    The cache is released before returning: the (small) verified-pair
-    result is materialized via eager ``localCheckpoint`` — cutting
-    its lineage from the cache — and the shingle frame unpersisted,
-    so repeated calls in a long-lived session do not accumulate
-    cached blocks (checkpoint blocks themselves are context-cleaned
-    once the caller drops the result).
-
-    ``hash_fn``: ``"xxhash64"`` (default — fastest, JVM-native) or
-    ``"md5"``, the engine-portable variant (r9): ONE salted md5 per
-    distinct shingle truncated to 48 bits, per-slot minima under the
-    derived universal permutations of ``_md5_perm_consts``, band
-    buckets as md5 of the comma-joined slot minima, and exact-Jaccard
-    verification over the distinct 48-bit shingle-hash sets — every
-    step DuckDB-replicable, so the registry entry is value-hash
-    oracle-gated instead of rows-only.  The md5 variant uses shingle
-    SET semantics and drops docs shorter than ``n`` tokens (no full
-    window exists); the xxhash64 path keeps its historical
-    multiset/partial-window contract.
-    """
-    if hash_fn not in ("xxhash64", "md5"):
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    if hash_fn == "md5":
-        return _dedup_minhash_lsh_md5(
-            df, text_col, id_col, num_hashes, bands, n, threshold, salt
-        )
-    r = num_hashes // bands
-    base = (
-        df.select(F.col(id_col).alias("id"), tokens(text_col).alias("_toks"))
-        .select(
-            "id",
-            # multiset-safe consumers only (min / intersect / union)
-            shingle_hashes_from_tokens(F.col("_toks"), n, distinct=False).alias("shh"),
-        )
-    )
-    if cache_shingles:
-        base = base.persist()
-
-    def perm(seed: int):
-        return lambda h: F.xxhash64(h, F.lit(seed))
-
-    sig = base.select(
-        "id",
-        "shh",
-        F.array(
-            *[F.array_min(F.transform("shh", perm(i))) for i in range(num_hashes)]
-        ).alias("sig"),
-    )
-    band_rows = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(*[F.col("sig")[b * r + j] for j in range(r)]).alias(
-                            "bucket"
-                        ),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-
-    a = band_rows.alias("a")
-    b_ = band_rows.alias("b")
-    candidates = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-
-    sh = base
-    verified = (
-        candidates.join(
-            sh.select(F.col("id").alias("id_a"), F.col("shh").alias("sh_a")), "id_a"
-        )
-        .join(
-            sh.select(F.col("id").alias("id_b"), F.col("shh").alias("sh_b")), "id_b"
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    if cache_shingles:
-        # materialize the (bounded: pairs ≥ threshold) result eagerly
-        # so the big shingle cache can be dropped deterministically
-        verified = verified.localCheckpoint(eager=True)
-        base.unpersist()
-    return verified
-
-
-def _dedup_minhash_lsh_md5(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    n: int,
-    threshold: float,
-    salt: str,
-) -> DataFrame:
-    """Engine-portable MinHash+LSH (see ``dedup_minhash_lsh``
-    ``hash_fn="md5"``).  Same plan skeleton at scale: the corpus-sized
-    work is one shingle scan + one partial-aggregated groupBy(id)
-    with ``num_hashes`` codegen min-aggregates; the band join and the
+    1-(1-s^r)^bands — the standard S-curve.  The corpus-sized work is
+    one shingle scan + one partial-aggregated groupBy(id) with
+    ``num_hashes`` codegen min-aggregates; the band join and the
     verification joins run on hash-uniform keys over frames bounded
-    by the signature table and the candidate set respectively."""
-    mod = 1 << 48
-    consts = _md5_perm_consts(num_hashes, salt)
+    by the signature table and the candidate set respectively.
 
-    # (id, 48-bit salted shingle hash) MULTISET rows — one md5 per
-    # shingle occurrence (the shared _md5_shingle_rows idiom), NO
-    # distinct: min-aggregates are duplicate-insensitive and the
-    # set-semantics consumers below use countDistinct, so skipping
-    # the distinct saves a full shuffle of the shingle frame
-    # (measured 4.6s → ~2s cold at sf0.1).  The eager checkpoint
-    # feeds signatures AND both verify sides (A/B'd vs persist():
-    # one write barrier beats re-reading the cache through the
-    # countDistinct expand, 2.7s vs 3.7s at sf0.1).  A collect_list
-    # + numpy signature kernel (the simhash_md5 r12 move) was A/B'd
-    # FLAT here (3.09s vs 3.00s, 9 reps) and rejected: the
-    # min-aggregates partial-aggregate to 33 longs per doc map-side,
-    # while collect_list ships every shingle occurrence into the
-    # exchange — strictly more shuffle bytes at scale for no local
-    # gain.
-    sh0 = _md5_shingle_rows(df, text_col, id_col, n, salt).localCheckpoint(
-        eager=True
-    )
+    Every step is DuckDB-replicable (the registry entry is value-hash
+    oracle-gated): ONE salted md5 per shingle occurrence truncated to
+    48 bits, per-slot minima under the derived universal permutations
+    of ``_md5_perm_consts``, band buckets as md5 of the comma-joined
+    slot minima (``_expand_bands``), and exact-Jaccard verification
+    over the distinct 48-bit shingle-hash sets.  Shingle SET
+    semantics; docs shorter than ``n`` tokens drop (no full window
+    exists).
+    """
+    # (id, 48-bit salted shingle hash) MULTISET rows — NO distinct:
+    # min-aggregates are duplicate-insensitive and the set-semantics
+    # consumers below use countDistinct, so skipping the distinct
+    # saves a full shuffle of the shingle frame (measured 4.6s → ~2s
+    # cold at sf0.1).  The eager checkpoint feeds signatures AND both
+    # verify sides (A/B'd vs persist(): one write barrier beats
+    # re-reading the cache through the countDistinct expand, 2.7s vs
+    # 3.7s at sf0.1).  A collect_list + numpy signature kernel (the
+    # simhash r12 move) was A/B'd FLAT here (3.09s vs 3.00s, 9 reps)
+    # and rejected: the min-aggregates partial-aggregate to 33 longs
+    # per doc map-side, while collect_list ships every shingle
+    # occurrence into the exchange — strictly more shuffle bytes at
+    # scale for no local gain.
+    sh0 = _md5_shingle_rows(df, text_col, id_col, n).localCheckpoint(eager=True)
     # one shuffle: slot minima + the distinct-shingle count together
     sig = sh0.groupBy("id").agg(
-        F.countDistinct("h0").alias("n_sh"),
-        *[
-            F.min((F.col("h0") * F.lit(a) + F.lit(b)) % F.lit(mod)).alias(f"_s{i}")
-            for i, (a, b) in enumerate(consts)
-        ]
+        F.countDistinct("h0").alias("n_sh"), *_slot_minima(num_hashes)
     )
     band_rows = _expand_bands(
-        sig.select(
-            "id",
-            F.array(*[F.col(f"_s{i}") for i in range(num_hashes)]).alias("sig"),
-        ),
-        num_hashes,
-        bands,
-        hash_fn="md5",
+        sig.select("id", _sig_array(num_hashes)), num_hashes, bands
     )
     a, b_ = band_rows.alias("a"), band_rows.alias("b")
     candidates = (
@@ -694,16 +545,16 @@ def _md5_shingle_rows(
     text_col: str,
     id_col: str,
     n: int,
-    salt: str,
     keep_len: bool = False,
     partial_tail: bool = False,
 ) -> DataFrame:
     """(id[, _n], h0) — one row per n-token shingle OCCURRENCE, hashed
-    with the repo's engine-portable idiom: ONE salted md5 per shingle
-    truncated to 48 bits.  The single definition every md5 dedup path
-    shares (minhash signatures, incremental index, dedup_eval), so a
-    change to the salt/truncation can never diverge the Spark paths
-    from each other or the DuckDB oracle.
+    with the repo's engine-portable idiom: ONE md5 per shingle salted
+    with ``MINHASH_SALT`` and truncated to 48 bits.  The single
+    definition the MinHash family shares (signatures, LSH, the
+    incremental index, dedup_eval), so a change to the
+    salt/truncation can never diverge the Spark paths from each other
+    or the DuckDB oracle.
 
     ``partial_tail=True`` keeps docs shorter than ``n`` tokens with
     their one partial-window shingle (``dedup_ngram_jaccard``'s
@@ -721,7 +572,7 @@ def _md5_shingle_rows(
         F.substring(
             F.md5(
                 F.concat(
-                    F.lit(salt + ":"),
+                    F.lit(MINHASH_SALT + ":"),
                     F.concat_ws(
                         " ", F.slice("_t", (F.col("pos") + 1).cast("int"), n)
                     ),
@@ -748,7 +599,6 @@ def dedup_eval(
     num_hashes: int = 32,
     bands: int = 8,
     max_shingle_df: int | None = 100,
-    salt: str = "mhlsh-v1",
 ) -> DataFrame:
     """End-to-end dedup-quality audit: pair precision/recall/F1 of
     md5-portable MinHash+LSH against the exact-Jaccard baseline at
@@ -765,13 +615,13 @@ def dedup_eval(
     window semantics), checkpointed once:
 
     - PRED candidates come from the full-window subset (docs ≥ n
-      tokens — the md5-MinHash contract) through the exact
-      ``_dedup_minhash_lsh_md5`` plan: slot minima + band buckets →
+      tokens — the MinHash contract) through the exact
+      ``dedup_minhash_lsh`` plan: slot minima + band buckets →
       bucket-join pairs.
     - TRUTH candidates run ``dedup_ngram_jaccard``'s capped logic on
       the SAME rows: hot/cold window count, lossless upper-bound
       prune — set algebra is hash-agnostic, so the pair set and
-      jaccard values are identical to the xxhash64 baseline (modulo
+      jaccard values are identical to ``dedup_ngram_jaccard`` (modulo
       48-bit collisions, which the DuckDB oracle shares bit-for-bit
       on the pred side and which are ~1e-4-improbable on the
       string-replay truth side at tested scales; the divergence is
@@ -788,18 +638,15 @@ def dedup_eval(
     Degenerate-input note (documented divergence from the naive
     composition): a NULL text and an empty text both hash their one
     partial window to md5(salt + ":"), so the truth side pairs them —
-    the xxhash64 baseline's multi-arg NULL-skip distinguishes the two.
+    ``dedup_ngram_jaccard``'s multi-arg NULL-skip distinguishes the two.
     The DuckDB oracle coalesces NULL text to '' and agrees with THIS
     operator; the composition-equivalence unit test uses a
     non-NULL-text corpus.
 
     Returns ONE row (n_pred, n_true, n_hit, precision, recall, f1)
     — ``dedup_pair_eval`` of the two pair frames."""
-    mod = 1 << 48
-    consts = _md5_perm_consts(num_hashes, salt)
-
     sh_all = _md5_shingle_rows(
-        df, text_col, id_col, n, salt, keep_len=True, partial_tail=True
+        df, text_col, id_col, n, keep_len=True, partial_tail=True
     )
     # ONE corpus-scale materialization: the distinct SET frame (as
     # flagged, with the window count, in the capped path).  Every
@@ -845,23 +692,15 @@ def dedup_eval(
         F.count(F.lit(1)).alias("sz"),
         F.sum(hot_flag).alias("h"),
         F.min("_n").alias("_n"),
-        *[
-            F.min((F.col("h0") * F.lit(a) + F.lit(b)) % F.lit(mod)).alias(f"_s{i}")
-            for i, (a, b) in enumerate(consts)
-        ],
+        *_slot_minima(num_hashes),
     ).localCheckpoint(eager=True)
 
-    # --- pred candidates: md5 MinHash+LSH, the _dedup_minhash_lsh_md5
-    # plan from its signature onward (full windows only: docs >= n
-    # tokens)
+    # --- pred candidates: MinHash+LSH, the dedup_minhash_lsh plan
+    # from its signature onward (full windows only: docs >= n tokens)
     band_rows = _expand_bands(
-        stats.filter(F.col("_n") >= n).select(
-            "id",
-            F.array(*[F.col(f"_s{i}") for i in range(num_hashes)]).alias("sig"),
-        ),
+        stats.filter(F.col("_n") >= n).select("id", _sig_array(num_hashes)),
         num_hashes,
         bands,
-        hash_fn="md5",
     )
     ba, bb_ = band_rows.alias("a"), band_rows.alias("b")
     candidates = (
@@ -1094,9 +933,9 @@ def _simhash_fp_udf():
 
     Bit j of the fingerprint is the sign of sum over tokens of
     (+1 if token-hash bit j else -1).  Token hashing stays JVM-side
-    (xxhash64); only the 64-way bit vote runs here, as one vectorized
-    numpy kernel per Arrow batch — benchmarked ~3× faster than 64
-    Catalyst ``aggregate`` folds over the same array.
+    (md5, nibble-packed); only the 64-way bit vote runs here, as one
+    vectorized numpy kernel per Arrow batch — benchmarked ~3× faster
+    than 64 Catalyst ``aggregate`` folds over the same array.
     """
     import numpy as np
 
@@ -1117,33 +956,27 @@ def _simhash_fp_udf():
     return fp
 
 
-def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, simhash bigint): 64-bit SimHash over token xxhash64s."""
-    toks = df.select(
-        F.col(id_col).alias("id"), tokens(text_col).alias("_toks")
-    ).select("id", F.transform("_toks", lambda t: F.xxhash64(t)).alias("th"))
-    return toks.select("id", _simhash_fp_udf()("th").alias("simhash"))
-
-
-_HEXCHARS = "0123456789abcdef"
-
-
-def simhash_md5(
+def simhash(
     df: DataFrame,
     text_col: str,
     id_col: str,
     salt: str = "simhash-v1",
-    out: str = "hex",
 ) -> DataFrame:
-    """(id, simhash 16-hex-char string): the engine-portable SimHash
-    (r9).  Per token ONE salted md5; each of the digest's 16 leading
-    hex digits contributes 4 fingerprint bits, votes are summed in 64
-    codegen aggregates over the token rows (multiset semantics, like
-    the xxhash64 path), bit i is set iff its vote is strictly
-    positive, and the fingerprint is re-assembled as a hex STRING so
-    every step — including the bit math — replays in DuckDB.  NULL
-    text is coalesced to '' (one empty-string token), matching the
-    oracle's ``coalesce(text, '')``."""
+    """(id, simhash bigint): the engine-portable 64-bit SimHash.  Per
+    token ONE salted md5; each of the digest's 16 leading hex digits
+    contributes 4 fingerprint bits (bit i = digit(i//4) >> (i%4) & 1,
+    so nibble j lands at bits 4j..4j+3), votes are summed over the
+    token multiset, and bit i is set iff its vote is strictly
+    positive.  The DuckDB oracle replays the same votes as a
+    16-hex-char string.  NULL text is coalesced to '' (one
+    empty-string token), matching the oracle's ``coalesce(text, '')``.
+
+    r12 (guide §4.2): md5 + nibble packing stay JVM-side codegen and
+    the 64-way bit vote runs in the numpy pandas-UDF kernel.  Votes
+    are integer sums (order-free, exact), so the fingerprint is
+    bit-identical to 64 codegen sum aggregates — which were the
+    measured cost center (~0.6s of the 0.8s fingerprint phase at
+    sf0.1; the md5 itself is ~0.2s)."""
     tok = df.select(
         F.col(id_col).alias("id"),
         F.explode(tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("t"),
@@ -1151,146 +984,17 @@ def simhash_md5(
     h = tok.select(
         "id", F.md5(F.concat(F.lit(salt + ":"), F.col("t"))).alias("h")
     )
-    if out == "long":
-        # r12 (guide §4.2): pack each token's 16 md5 hex digits into
-        # ONE int64 with the same bit convention as the vote indices
-        # (bit i = digit(i//4) >> (i%4) & 1 — nibble j lands at bits
-        # 4j..4j+3), then run the 64-way bit vote in the SAME numpy
-        # pandas-UDF kernel the xxhash64 path uses.  Votes are
-        # integer sums (order-free, exact), so the fingerprint is
-        # bit-identical to the former 64 codegen sum aggregates —
-        # which were the measured cost center (~0.6s of the 0.8s
-        # fingerprint phase at sf0.1; the md5 itself is ~0.2s) —
-        # while md5 + nibble packing stay JVM-side codegen.
-        packed = F.lit(0).cast("long")
-        for j in range(16):
-            packed = packed.bitwiseOR(
-                F.shiftleft(
-                    F.conv(F.substring("h", j + 1, 1), 16, 10).cast("long"),
-                    4 * j,
-                )
-            )
-        arr = (
-            h.select("id", packed.alias("_th"))
-            .groupBy("id")
-            .agg(F.collect_list("_th").alias("th"))
-        )
-        return arr.select("id", _simhash_fp_udf()("th").alias("simhash"))
-    digs = h.select(
-        "id",
-        *[
-            F.conv(F.substring("h", j + 1, 1), 16, 10).cast("int").alias(f"d{j}")
-            for j in range(16)
-        ],
-    )
-    votes = digs.groupBy("id").agg(
-        *[
-            F.sum(
-                F.shiftright(F.col(f"d{i // 4}"), i % 4).bitwiseAND(F.lit(1)) * 2
-                - 1
-            ).alias(f"v{i}")
-            for i in range(64)
-        ]
-    )
-
-    def digit(j: int) -> Column:
-        d = F.lit(0)
-        for b in range(4):
-            d = d + F.when(F.col(f"v{4 * j + b}") > 0, F.lit(1 << b)).otherwise(
-                F.lit(0)
-            )
-        return d
-
-    return votes.select(
-        "id",
-        F.concat(
-            *[F.lit(_HEXCHARS).substr(digit(j) + 1, F.lit(1)) for j in range(16)]
-        ).alias("simhash"),
-    )
-
-
-def hamming_pairs_hex(
-    fp: DataFrame,
-    id_col: str,
-    hash_col: str,
-    max_hamming: int = 3,
-    n_chunks: int = 4,
-) -> DataFrame:
-    """``hamming_pairs`` for hex-STRING fingerprints (16 chars = 64
-    bits): pigeonhole candidates from an equi-join on (chunk index,
-    chunk substring), hamming as the digit-wise xor popcount — all
-    string/integer expressions, fully engine-portable.  The same
-    localCheckpoint discipline as ``hamming_pairs``: the fingerprint
-    frame is tiny next to the corpus scan that produced it.
-
-    Chunk boundaries distribute the 16 hex chars WITHOUT overrun
-    (ADVICE r9: the old ceil-width layout put chunk 4 of a 5-chunk
-    split at char 17 — an empty substring for every row, collapsing
-    that chunk's equi-join to all-pairs): ``divmod`` spreads the
-    remainder across the leading chunks, so every chunk is non-empty
-    and the pigeonhole bound holds for any ``max_hamming ≤ 15``.
-    A ≤ max_hamming BIT difference touches at most max_hamming hex
-    CHARS, so with ≥ max_hamming+1 char-chunks one chunk matches
-    exactly."""
-    n_chunks = max(n_chunks, max_hamming + 1)
-    if n_chunks > 16:
-        raise ValueError(
-            "hamming_pairs_hex: pigeonhole on 16 hex chars supports "
-            f"max_hamming <= 15 / n_chunks <= 16 (got n_chunks={n_chunks})"
-        )
-    base, rem = divmod(16, n_chunks)
-    starts, pos = [], 0
-    for c in range(n_chunks):
-        wdt = base + (1 if c < rem else 0)
-        starts.append((pos, wdt))
-        pos += wdt
-
-    fp = fp.select(
-        F.col(id_col).alias("id"), F.col(hash_col).alias("fp")
-    ).localCheckpoint(eager=True)
-    chunks = fp.select(
-        "id",
-        "fp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("c"),
-                        F.substring("fp", start + 1, wdt).alias("v"),
-                    )
-                    for c, (start, wdt) in enumerate(starts)
-                ]
-            )
-        ).alias("ch"),
-    ).select("id", "fp", "ch.c", "ch.v")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.c") == F.col("b.c"))
-            & (F.col("a.v") == F.col("b.v"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.fp").alias("fp_a"),
-            F.col("b.fp").alias("fp_b"),
-        )
-        .distinct()
-    )
-
-    def dig(col: str, j: int) -> Column:
-        return F.conv(F.substring(col, j + 1, 1), 16, 10).cast("int")
-
-    ham = F.lit(0)
+    packed = F.lit(0).cast("long")
     for j in range(16):
-        ham = ham + F.bit_count(dig("fp_a", j).bitwiseXOR(dig("fp_b", j)))
-    return (
-        cand.withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+        packed = packed.bitwiseOR(
+            F.shiftleft(F.conv(F.substring("h", j + 1, 1), 16, 10).cast("long"), 4 * j)
+        )
+    arr = (
+        h.select("id", packed.alias("_th"))
+        .groupBy("id")
+        .agg(F.collect_list("_th").alias("th"))
     )
+    return arr.select("id", _simhash_fp_udf()("th").alias("simhash"))
 
 
 def hamming_pairs(
@@ -1419,25 +1123,13 @@ def dedup_simhash(
     text_col: str,
     id_col: str,
     max_hamming: int = 3,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """SimHash near-dup pairs with hamming distance ≤ max_hamming
-    (candidate generation via the pigeonhole chunk equi-join —
-    see ``hamming_pairs``).  ``hash_fn="md5"`` switches to the
-    engine-portable hex-string fingerprint (``simhash_md5`` +
-    ``hamming_pairs_hex``) whose DuckDB twin replays every step —
-    value-hash oracle-gated since r9."""
-    if hash_fn not in ("xxhash64", "md5"):
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    if hash_fn == "md5":
-        # long-packed md5 fingerprints ride the SAME fast bigint
-        # pigeonhole as the xxhash64 path (bit i ↔ hex digit i//4 of
-        # the oracle's hex replay — identical pair set, measured ~4×
-        # cheaper than string-chunk candidates under suite pressure)
-        fp = simhash_md5(df, text_col, id_col, out="long")
-        return hamming_pairs(fp, "id", "simhash", max_hamming)
-    fp = simhash(df, text_col, id_col)
-    return hamming_pairs(fp, "id", "simhash", max_hamming)
+    """SimHash near-dup pairs with hamming distance ≤ max_hamming:
+    ``simhash`` fingerprints, candidates via the pigeonhole chunk
+    equi-join of ``hamming_pairs``.  Value-hash oracle-gated: the
+    DuckDB twin replays the fingerprint as a hex string, bit i ↔ hex
+    digit i//4, so the pair set is identical."""
+    return hamming_pairs(simhash(df, text_col, id_col), "id", "simhash", max_hamming)
 
 
 def keep_canonical(
@@ -2343,62 +2035,23 @@ def updated_index(
     return seen.select(hash_col).unionByName(survivors.select(hash_col))
 
 
-def _md5_slot_minima(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    n: int,
-    salt: str,
-) -> DataFrame:
-    """(id, sig array<long>) — engine-portable md5 MinHash
-    signatures: the per-slot minima of ``_dedup_minhash_lsh_md5``
-    (one salted md5 per shingle occurrence truncated to 48 bits,
-    universal-family permutations from ``_md5_perm_consts``)
-    assembled into a signature array.  Docs shorter than ``n``
-    tokens drop (no full window — the md5-path contract)."""
-    mod = 1 << 48
-    consts = _md5_perm_consts(num_hashes, salt)
-    sh0 = _md5_shingle_rows(df, text_col, id_col, n, salt)
-    return (
-        sh0.groupBy("id")
-        .agg(
-            *[
-                F.min((F.col("h0") * F.lit(a) + F.lit(b)) % F.lit(mod)).alias(
-                    f"_s{i}"
-                )
-                for i, (a, b) in enumerate(consts)
-            ]
-        )
-        .select(
-            "id",
-            F.array(*[F.col(f"_s{i}") for i in range(num_hashes)]).alias("sig"),
-        )
-    )
-
-
-def _expand_bands(
-    sig_df: DataFrame, num_hashes: int, bands: int, hash_fn: str = "xxhash64"
-) -> DataFrame:
-    """(id, sig) → (id, sig, band, bucket) LSH band rows — the same
-    band/bucket derivation as ``dedup_minhash_lsh`` (bucket =
-    xxhash64 over the band's r signature elements; ``hash_fn="md5"``
-    = md5 of the comma-joined slot values, the engine-portable form
-    DuckDB replays), factored so the batch side and the persistent
-    index compute buckets identically."""
+def _expand_bands(sig_df: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(id, sig) → (id, sig, band, bucket) LSH band rows: bucket = md5
+    of the band's r comma-joined slot values (the engine-portable form
+    DuckDB replays), factored so the batch side, the persistent index
+    and the pairwise LSH compute buckets identically.  NULL signatures
+    (docs shorter than a shingle) emit no band rows — they would all
+    share one md5 bucket per band."""
     r = num_hashes // bands
 
     def bucket(b: int) -> Column:
-        if hash_fn == "md5":
-            return F.md5(
-                F.concat_ws(
-                    ",",
-                    *[F.col("sig")[b * r + j].cast("string") for j in range(r)],
-                )
+        return F.md5(
+            F.concat_ws(
+                ",", *[F.col("sig")[b * r + j].cast("string") for j in range(r)]
             )
-        return F.xxhash64(*[F.col("sig")[b * r + j] for j in range(r)])
+        )
 
-    return sig_df.select(
+    return sig_df.filter(F.col("sig").isNotNull()).select(
         "id",
         "sig",
         F.explode(
@@ -2419,36 +2072,18 @@ def minhash_band_index(
     num_hashes: int = 32,
     bands: int = 8,
     n: int = 3,
-    hash_fn: str = "xxhash64",
-    salt: str = "mhlsh-v1",
 ) -> DataFrame:
     """Persistent LSH index rows for a corpus: (id, sig, band,
     bucket) — what ``dedup_incremental_minhash`` joins tomorrow's
     batch against.  Write it bucketed on (band, bucket)
     (``sinks.files.write_bucketed``) so the daily candidate join
     shuffles only the day's batch; the signature column rides along
-    so candidate verification needs no second index.
-
-    ``hash_fn="md5"`` builds the engine-portable index (r10):
-    48-bit salted-md5 shingle hashes, ``_md5_perm_consts``
-    permutations, md5 band buckets — every value a DuckDB oracle
-    regenerates.  The xxhash64 default stays the production fast
-    path: the r12 standing A/B (bench.py AB_PAIRS — alternating
-    same-session reps, the only protocol that survives this host's
-    2-3× cross-session variance) measures the full incremental query
-    ~10% faster end-to-end (4.49s vs 4.98s medians, anchor faster in
-    every post-JIT aligned rep); the gap is modest because join +
-    scheduler fixed costs dominate the query, but at 100 TB the
-    fingerprint scan is the corpus-sized term and xxhash64 avoids
-    both the md5 digest and the string→bigint conv per shingle."""
-    if hash_fn not in ("xxhash64", "md5"):
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    sig = (
-        _md5_slot_minima(df, text_col, id_col, num_hashes, n, salt)
-        if hash_fn == "md5"
-        else minhash_signatures(df, text_col, id_col, num_hashes, n)
+    so candidate verification needs no second index.  Every value
+    (``minhash_signatures``, md5 band buckets) is one a DuckDB oracle
+    regenerates."""
+    return _expand_bands(
+        minhash_signatures(df, text_col, id_col, num_hashes, n), num_hashes, bands
     )
-    return _expand_bands(sig, num_hashes, bands, hash_fn)
 
 
 def _est_jaccard(a, b, num_hashes: int):
@@ -2479,8 +2114,6 @@ def dedup_incremental_minhash(
     bands: int = 8,
     n: int = 3,
     threshold: float = 0.6,
-    hash_fn: str = "xxhash64",
-    salt: str = "mhlsh-v1",
 ) -> DataFrame:
     """Incremental NEAR-dup dedup — ``dedup_incremental``'s exact
     anti join generalized to MinHash: today's batch dedups against
@@ -2493,16 +2126,16 @@ def dedup_incremental_minhash(
     Semantics are greedy keep-first (a batch doc matching ANY
     lower-id batch doc, or ANY indexed doc, is dropped — matching a
     doc that is itself dropped still drops you: conservative, never
-    re-admits a near-dup).  Returns the surviving new rows; extend
-    the index afterwards with ``updated_band_index``.
+    re-admits a near-dup).  Returns the surviving new rows with the
+    ``sig`` they were verified with (NULL for docs shorter than
+    ``n`` tokens: they have no signature, never match and always
+    survive); extend the index afterwards with ``updated_band_index``.
 
-    ``hash_fn="md5"`` (r10) is the engine-portable twin: signatures
-    from ``_md5_slot_minima``, md5 band buckets — with an md5 index,
-    the whole batch (drop decisions included) is DuckDB-replayable,
-    so the registry entry graduates from rows-only to a value-hash
-    gate.  The estimate is a fraction k/num_hashes (exact in binary
-    for power-of-two num_hashes), so the ≥ threshold comparison is
-    engine-exact.  The xxhash64 default stays the production path.
+    The whole batch (drop decisions included) is DuckDB-replayable
+    (``minhash_signatures``, md5 band buckets), so the registry entry
+    is value-hash gated.  The estimate is a fraction k/num_hashes
+    (exact in binary for power-of-two num_hashes), so the
+    ≥ threshold comparison is engine-exact.
 
     Plan: batch band rows materialize once (eager localCheckpoint —
     they feed both sides of the self-join and the index join); the
@@ -2510,13 +2143,7 @@ def dedup_incremental_minhash(
     the index stored bucketed on (band, bucket), only the day's
     batch shuffles.  Verification runs on the bounded candidate set.
     """
-    if hash_fn not in ("xxhash64", "md5"):
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    sig_new = (
-        _md5_slot_minima(new_docs, text_col, id_col, num_hashes, n, salt)
-        if hash_fn == "md5"
-        else minhash_signatures(new_docs, text_col, id_col, num_hashes, n)
-    )
+    sig_new = minhash_signatures(new_docs, text_col, id_col, num_hashes, n)
     # r13 slim bands (guide §2.3 "shuffle keys and metadata instead of
     # payloads", §8's decide-with-small-rows rule; the r12 carried
     # lead): the batch's band rows no longer carry the num_hashes-long
@@ -2535,7 +2162,7 @@ def dedup_incremental_minhash(
     # the internal estimate now runs once per DISTINCT candidate pair
     # instead of once per colliding band row — the same pairs pass.
     sig_new = sig_new.localCheckpoint(eager=True)
-    nb = _expand_bands(sig_new, num_hashes, bands, hash_fn).select(
+    nb = _expand_bands(sig_new, num_hashes, bands).select(
         "id", "band", "bucket"
     )
 
@@ -2578,29 +2205,34 @@ def dedup_incremental_minhash(
         .select("id")
     )
     drops = internal_drop.unionByName(hist_drop).distinct()
-    return new_docs.join(
-        drops.withColumnRenamed("id", id_col), id_col, "left_anti"
+    # every dropped id has a signature, so flagging drops on the
+    # (small) signature frame lets ONE join of the batch both drop
+    # them and hand the survivors the sig they were verified with;
+    # sig-less docs find no row and survive with sig NULL
+    flagged = sig_new.join(drops.withColumn("_drop", F.lit(True)), "id", "left")
+    return (
+        new_docs.join(flagged.withColumnRenamed("id", id_col), id_col, "left")
+        .filter(F.col("_drop").isNull())
+        .drop("_drop")
     )
 
 
 def updated_band_index(
     index: DataFrame,
     survivors: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 32,
     bands: int = 8,
-    n: int = 3,
-    hash_fn: str = "xxhash64",
-    salt: str = "mhlsh-v1",
 ) -> DataFrame:
     """The band index after a ``dedup_incremental_minhash`` batch:
-    old index ∪ the survivors' band rows (survivors are near-dup
-    disjoint from the index by construction — UNION ALL, no distinct
-    shuffle; write back bucketed on (band, bucket))."""
+    old index ∪ the survivors' band rows, expanded from the ``sig``
+    column the survivors carry (no text is re-tokenized; sig-less
+    survivors add no rows).  Survivors are near-dup disjoint from the
+    index by construction — UNION ALL, no distinct shuffle; write
+    back bucketed on (band, bucket)."""
     return index.unionByName(
-        minhash_band_index(
-            survivors, text_col, id_col, num_hashes, bands, n, hash_fn, salt
+        _expand_bands(
+            survivors.select(F.col(id_col).alias("id"), "sig"), num_hashes, bands
         )
     )
 

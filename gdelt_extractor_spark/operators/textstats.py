@@ -848,25 +848,19 @@ def bpe_pair_counts(
     )
 
 
-def _feature_hash_counts(
-    toks: DataFrame, dim: int, seed: str, hash_fn: str
-) -> DataFrame:
+def _feature_hash_counts(toks: DataFrame, dim: int, seed: str) -> DataFrame:
     """(id, t) non-empty token rows → (id, b, c) signed bucket
     counts — the Weinberger hashing-trick core shared by
     ``hashed_embedding`` and ``hybrid_search``'s dense tower (r11:
-    one definition of the md5/xxhash bucket+sign idiom)."""
-    if hash_fn == "md5":
-        hx = F.md5(F.concat(F.lit(seed + ":"), F.col("t")))
-        h = F.conv(F.substring(hx, 1, 12), 16, 10).cast("long")
-        sign_even = (
-            F.pmod(F.conv(F.substring(hx, 13, 1), 16, 10).cast("long"), F.lit(2))
-            == 0
-        )
-    else:
-        h = F.xxhash64(F.col("t"), F.lit(seed))
-        sign_even = (
-            F.pmod(F.xxhash64(F.col("t"), F.lit(seed + ":sign")), F.lit(2)) == 0
-        )
+    one definition of the bucket+sign idiom).  Bucket from the first
+    12 hex digits of md5(seed:token), sign from the parity of hex
+    digit 13 — the repo-wide md5-bucket idiom DuckDB reproduces
+    verbatim."""
+    hx = F.md5(F.concat(F.lit(seed + ":"), F.col("t")))
+    h = F.conv(F.substring(hx, 1, 12), 16, 10).cast("long")
+    sign_even = (
+        F.pmod(F.conv(F.substring(hx, 13, 1), 16, 10).cast("long"), F.lit(2)) == 0
+    )
     bucketed = toks.select(
         "id",
         F.pmod(h, F.lit(dim)).cast("int").alias("b"),
@@ -881,7 +875,6 @@ def hashed_embedding(
     text_col: str,
     dim: int = 64,
     seed: str = "hash-emb-v1",
-    hash_fn: str = "xxhash64",
     layout: str = "dense",
 ) -> DataFrame:
     """Feature-hashed document embeddings (Weinberger et al. 2009):
@@ -897,15 +890,10 @@ def hashed_embedding(
     densifies to array<double> and normalizes.  No UDF anywhere;
     signs cancel hash collisions in expectation (the standard
     trick).  Output: (id, embedding array<double>, unit L2 norm;
-    all-zero docs yield the zero vector).
-
-    ``hash_fn``: ``"xxhash64"`` (default — the fastest JVM hash) or
-    ``"md5"`` — the engine-portable variant (bucket from the first
-    12 hex digits of md5(seed:token), sign from the parity of hex
-    digit 13; the repo-wide md5-bucket idiom DuckDB reproduces
-    verbatim), which is what lets the oracle twin replicate the full
-    embedding value-for-value.  Same plan shape either way; md5
-    costs one extra hash-width per token at scan time.
+    all-zero docs yield the zero vector).  Token hashing is the
+    engine-portable md5 idiom of ``_feature_hash_counts``, which is
+    what lets the oracle twin replicate the full embedding
+    value-for-value.
 
     ``layout``: ``"dense"`` (default — one row per doc with the
     array<double> column, the shape the ANN machinery consumes) or
@@ -916,11 +904,6 @@ def hashed_embedding(
     re-evaluates the (interpreted) densify/normalize lambdas once
     per OUTPUT row — measured 9.3s vs 1.5s at sf0.1.
     """
-    if hash_fn not in ("xxhash64", "md5"):
-        raise ValueError(
-            f"hashed_embedding: unknown hash_fn {hash_fn!r} "
-            "(expected 'xxhash64' or 'md5')"
-        )
     if layout not in ("dense", "long"):
         raise ValueError(
             f"hashed_embedding: unknown layout {layout!r} "
@@ -929,7 +912,7 @@ def hashed_embedding(
     toks = df.select(
         F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("t")
     ).filter(F.col("t") != "")
-    counts = _feature_hash_counts(toks, dim, seed, hash_fn)
+    counts = _feature_hash_counts(toks, dim, seed)
     if layout == "long":
         # the bucket aggregate feeds BOTH the (id, bucket) grid join
         # and the nrm_l rollup — two static evaluations of the
@@ -1181,7 +1164,6 @@ def hybrid_search(
         ),
         dim=64,
         seed="hash-emb-v1",
-        hash_fn="md5",
     )
     # unit-L2 normalization per hashed_embedding's long-layout
     # contract (value = c / sqrt(Σc²), zero-norm → 0.0): keep this

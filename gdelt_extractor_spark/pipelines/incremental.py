@@ -27,7 +27,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
-from ..operators.dedup import dedup_incremental
+from ..operators.dedup import (
+    _expand_bands,
+    dedup_incremental,
+    dedup_incremental_minhash,
+)
 from ..sinks.files import upsert_partitions
 from ..streaming.updates import run_foreach_batch
 
@@ -139,18 +143,17 @@ def _seen_band_index(
     column-pruned scan + a codegen band explode — historical text is
     never re-tokenized, and the one-table/no-second-ledger property
     of the exact pipeline carries over: the near-dup index cannot
-    drift from the corpus because it IS the corpus."""
-    from ..operators.dedup import _expand_bands
-
+    drift from the corpus because it IS the corpus.  The first
+    batch's empty index goes through the same band expansion, so its
+    schema is the real one by construction."""
     try:
         corpus = spark.read.parquet(corpus_dir)
-    except AnalysisException:  # first batch
-        return spark.createDataFrame(
-            [], "id long, sig array<bigint>, band int, bucket bigint"
+    except AnalysisException:  # first batch: corpus does not exist yet
+        prior = spark.createDataFrame([], "id long, sig array<bigint>")
+    else:
+        prior = corpus.filter(F.col("batch_id") < before_batch).select(
+            F.col(id_col).alias("id"), "sig"
         )
-    prior = corpus.filter(F.col("batch_id") < before_batch).select(
-        F.col(id_col).alias("id"), "sig"
-    )
     return _expand_bands(prior, num_hashes, bands)
 
 
@@ -167,8 +170,10 @@ def ingest_batch_near_dup(
 ) -> None:
     """One epoch of NEAR-dup incremental ingestion: the exact
     pipeline's shape with ``dedup_incremental_minhash`` in place of
-    the hash anti join.  Survivors land with their signature column
-    via the same idempotent batch_id partition overwrite, so replays
+    the hash anti join.  Survivors land with the signature column the
+    operator verified them with (built once per batch; NULL for docs
+    too short to shingle, which never enter the band index) via the
+    same idempotent batch_id partition overwrite, so replays
     converge bytewise exactly as in the exact pipeline (the replayed
     epoch's own partial partition is pruned out of its index).
 
@@ -176,8 +181,6 @@ def ingest_batch_near_dup(
     S-curve midpoint at (1/16)^(1/2) = 0.25 — comfortably below the
     0.5 verification threshold, so candidate recall is not the
     bottleneck."""
-    from ..operators.dedup import dedup_incremental_minhash, minhash_signatures
-
     spark = batch.sparkSession
     idx = _seen_band_index(
         spark, corpus_dir, batch_id, id_col, num_hashes, bands
@@ -185,13 +188,8 @@ def ingest_batch_near_dup(
     survivors = dedup_incremental_minhash(
         batch, idx, text_col, id_col, num_hashes, bands, threshold=threshold
     )
-    sigs = minhash_signatures(
-        survivors, text_col, id_col, num_hashes
-    ).withColumnRenamed("id", id_col)
     upsert_partitions(
-        survivors.join(sigs, id_col).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        ),
+        survivors.withColumn("batch_id", F.lit(int(batch_id))),
         corpus_dir,
         ["batch_id"],
     )

@@ -86,15 +86,11 @@ def test_minhash_lsh_md5_matches_exact_and_is_deterministic(docs):
     }
     m1 = {
         (r.id_a, r.id_b): r.jaccard
-        for r in D.dedup_minhash_lsh(
-            docs, "text", "doc_id", threshold=0.6, hash_fn="md5"
-        ).collect()
+        for r in D.dedup_minhash_lsh(docs, "text", "doc_id", threshold=0.6).collect()
     }
     m2 = {
         (r.id_a, r.id_b): r.jaccard
-        for r in D.dedup_minhash_lsh(
-            docs, "text", "doc_id", threshold=0.6, hash_fn="md5"
-        ).collect()
+        for r in D.dedup_minhash_lsh(docs, "text", "doc_id", threshold=0.6).collect()
     }
     assert m1 == m2
     # verification is exact jaccard → surviving pairs carry the exact
@@ -104,30 +100,38 @@ def test_minhash_lsh_md5_matches_exact_and_is_deterministic(docs):
     assert (0, 1) in m1
 
 
-def test_minhash_lsh_rejects_unknown_hash_fn(docs):
-    with pytest.raises(ValueError, match="hash_fn"):
-        D.dedup_minhash_lsh(docs, "text", "doc_id", hash_fn="MD5")
+def _ham64(a: int, b: int) -> int:
+    """Hamming distance of two signed 64-bit fingerprints."""
+    return bin((a ^ b) & (1 << 64) - 1).count("1")
 
 
 def test_simhash_md5_properties(docs, spark):
-    fp = {r.id: r.simhash for r in D.simhash_md5(docs, "text", "doc_id").collect()}
-    assert all(len(v) == 16 and set(v) <= set("0123456789abcdef") for v in fp.values())
+    """The long fingerprint packs md5 nibble j of each token into bits
+    4j..4j+3: recompute one doc's votes in Python and compare."""
+    import hashlib
+
+    from gdelt_extractor_spark.functions.text import tokens
+
+    fp = {r.id: r.simhash for r in D.simhash(docs, "text", "doc_id").collect()}
     assert fp[0] == fp[1]  # normalization-identical docs
+    toks = docs.filter("doc_id = 3").select(tokens("text").alias("t")).first().t
+    votes = [0] * 64
+    for t in toks:
+        hx = hashlib.md5(f"simhash-v1:{t}".encode()).hexdigest()
+        for i in range(64):
+            votes[i] += 1 if (int(hx[i // 4], 16) >> (i % 4)) & 1 else -1
+    want = sum(1 << i for i in range(64) if votes[i] > 0)
+    assert fp[3] & (1 << 64) - 1 == want
 
-    def ham(a, b):
-        return sum(bin(int(x, 16) ^ int(y, 16)).count("1") for x, y in zip(a, b))
-
-    assert ham(fp[0], fp[2]) < ham(fp[0], fp[3])  # near-dup closer
+    assert _ham64(fp[0], fp[2]) < _ham64(fp[0], fp[3])  # near-dup closer
 
     pairs = {
         (r.id_a, r.id_b): r.hamming
-        for r in D.dedup_simhash(
-            docs, "text", "doc_id", max_hamming=10, hash_fn="md5"
-        ).collect()
+        for r in D.dedup_simhash(docs, "text", "doc_id", max_hamming=10).collect()
     }
     assert pairs.get((0, 1)) == 0
     # pair hamming must equal the fingerprint-level recomputation
-    assert all(ham(fp[a], fp[b]) == h for (a, b), h in pairs.items())
+    assert all(_ham64(fp[a], fp[b]) == h for (a, b), h in pairs.items())
 
 
 def test_simhash_md5_null_text_is_empty_token(spark):
@@ -135,14 +139,9 @@ def test_simhash_md5_null_text_is_empty_token(spark):
         [(1, None), (2, ""), (3, "alpha beta gamma")],
         "doc_id long, text string",
     )
-    fp = {r.id: r.simhash for r in D.simhash_md5(df, "text", "doc_id").collect()}
+    fp = {r.id: r.simhash for r in D.simhash(df, "text", "doc_id").collect()}
     assert fp[1] == fp[2]  # NULL coalesces to '' — oracle contract
     assert fp[3] != fp[1]
-
-
-def test_dedup_simhash_rejects_unknown_hash_fn(docs):
-    with pytest.raises(ValueError, match="hash_fn"):
-        D.dedup_simhash(docs, "text", "doc_id", hash_fn="sha1")
 
 
 def test_dedup_pair_eval_counts(spark):
@@ -215,8 +214,8 @@ def test_winnow_deterministic_and_partition_independent(docs):
 def test_simhash_properties(docs, spark):
     fp = {r.id: r.simhash for r in D.simhash(docs, "text", "doc_id").collect()}
     assert fp[0] == fp[1]       # normalization-identical docs
-    ham02 = bin(fp[0] ^ fp[2]).count("1")
-    ham03 = bin(fp[0] ^ fp[3]).count("1")
+    ham02 = _ham64(fp[0], fp[2])
+    ham03 = _ham64(fp[0], fp[3])
     assert ham02 < ham03        # near-dup closer than unrelated
 
     pairs = {
@@ -758,24 +757,6 @@ def test_span_ops_hashed_default_matches_exact_strings(spark):
         assert hashed == strings, fn.__name__
 
 
-def test_minhash_signatures_per_row_contract(spark):
-    """Duplicate-id input rows keep one signature EACH (no merged
-    chimera signature), and each equals the signature the same text
-    gets under a unique id."""
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (1, "epsilon zeta eta theta"),
-         (2, "alpha beta gamma delta")],
-        "doc_id long, text string",
-    )
-    out = D.minhash_signatures(df, "text", "doc_id").collect()
-    assert len(out) == 3
-    sigs_1 = sorted(tuple(r.sig) for r in out if r.id == 1)
-    sig_2 = [tuple(r.sig) for r in out if r.id == 2]
-    # id=2 shares text with one of id=1's rows → signature matches it
-    assert sig_2[0] in sigs_1
-    assert sigs_1[0] != sigs_1[1]
-
-
 def test_dedup_semantic_string_ids(spark):
     """The GEMM rewrite must stay id-type generic: string ids pass
     through the applyInPandas schema and pair canonicalization."""
@@ -788,42 +769,6 @@ def test_dedup_semantic_string_ids(spark):
     out = {(r.id_a, r.id_b): r.cosine
            for r in D.dedup_semantic(emb, threshold=0.95, m=1).collect()}
     assert set(out) == {("docA", "docB")}
-
-
-def test_hamming_pairs_hex_no_chunk_overrun():
-    """ADVICE r9: max_hamming >= 4 used to produce an out-of-range
-    trailing chunk (empty substring — an all-pairs equi-join key).
-    The balanced layout must keep every chunk inside the 16 chars."""
-    # replicate the boundary computation for a spread of settings
-    for max_h in range(0, 16):
-        n_chunks = max(4, max_h + 1)
-        base, rem = divmod(16, n_chunks)
-        pos = 0
-        for c in range(n_chunks):
-            wdt = base + (1 if c < rem else 0)
-            assert wdt >= 1, (max_h, c)
-            assert pos + wdt <= 16, (max_h, c)
-            pos += wdt
-        assert pos == 16, max_h
-
-
-def test_hamming_pairs_hex_max_hamming_4(spark):
-    """Regression (ADVICE r9): at max_hamming=4 (5 chunks) the hex
-    pigeonhole must still find every pair within distance, and the
-    chunk keys must never be empty strings."""
-    fps = [
-        (1, "0000000000000000"),
-        (2, "000000000000000f"),  # 4 bits from id 1
-        (3, "00000000000000ff"),  # 8 bits from id 1, 4 from id 2
-        (4, "8000000000000001"),  # 2 bits from id 1
-        (5, "ffffffffffffffff"),  # far from everything
-    ]
-    df = spark.createDataFrame(fps, "id long, fp string")
-    got = {
-        (r.id_a, r.id_b): r.hamming
-        for r in D.hamming_pairs_hex(df, "id", "fp", max_hamming=4).collect()
-    }
-    assert got == {(1, 2): 4, (2, 3): 4, (1, 4): 2, (2, 4): 4}
 
 
 def test_hamming_pairs_long_wide_max_hamming(spark):
@@ -849,8 +794,7 @@ def test_dedup_eval_shared_pass_matches_composition(spark, docs):
     of dedup_minhash_lsh(md5) vs dedup_ngram_jaccard through
     dedup_pair_eval (r10: one tokenize/shingle pass, same values)."""
     composed = D.dedup_pair_eval(
-        D.dedup_minhash_lsh(docs, "text", "doc_id", threshold=0.6,
-                            hash_fn="md5"),
+        D.dedup_minhash_lsh(docs, "text", "doc_id", threshold=0.6),
         D.dedup_ngram_jaccard(docs, "text", "doc_id", n=3, threshold=0.6,
                               max_shingle_df=100),
     ).collect()[0]
@@ -902,11 +846,11 @@ def test_dedup_eval_48bit_collision_divergence(spark):
 
 
 def test_dedup_incremental_minhash_md5_portable(spark, docs):
-    """The md5-portable incremental path (r10 hash-gated twin): an
-    indexed near-dup arriving in the batch drops, genuinely new docs
-    survive, results are deterministic, and bad hash_fn raises."""
+    """The md5-portable incremental path: an indexed near-dup
+    arriving in the batch drops, genuinely new docs survive, and
+    results are deterministic."""
     hist = docs.filter(F.col("doc_id") <= 2)
-    idx = D.minhash_band_index(hist, bands=16, hash_fn="md5")
+    idx = D.minhash_band_index(hist, bands=16)
     batch = spark.createDataFrame(
         [
             # near-dup of history doc 0 (tail appended) → must drop
@@ -921,43 +865,36 @@ def test_dedup_incremental_minhash_md5_portable(spark, docs):
     out1 = sorted(
         r.doc_id
         for r in D.dedup_incremental_minhash(
-            batch, idx, bands=16, threshold=0.5, hash_fn="md5"
+            batch, idx, bands=16, threshold=0.5
         ).collect()
     )
     out2 = sorted(
         r.doc_id
         for r in D.dedup_incremental_minhash(
-            batch, idx, bands=16, threshold=0.5, hash_fn="md5"
+            batch, idx, bands=16, threshold=0.5
         ).collect()
     )
     assert out1 == out2 == [12]
-    with pytest.raises(ValueError, match="hash_fn"):
-        D.dedup_incremental_minhash(batch, idx, hash_fn="sha256")
-    with pytest.raises(ValueError, match="hash_fn"):
-        D.minhash_band_index(hist, hash_fn="sha256")
 
 
 def test_updated_band_index_md5_roundtrip(spark, docs):
-    """updated_band_index with hash_fn='md5' extends the index so the
-    same survivor re-submitted tomorrow is dropped."""
+    """updated_band_index extends the index from the survivors' own
+    sig column so the same survivor re-submitted tomorrow is
+    dropped."""
     hist = docs.filter(F.col("doc_id") <= 2)
-    idx = D.minhash_band_index(hist, bands=16, hash_fn="md5")
+    idx = D.minhash_band_index(hist, bands=16)
     batch = spark.createDataFrame(
         [(20, "completely different tokens about streaming watermark state eviction policies")],
         "doc_id long, text string",
     )
-    surv = D.dedup_incremental_minhash(
-        batch, idx, bands=16, threshold=0.5, hash_fn="md5"
-    )
+    surv = D.dedup_incremental_minhash(batch, idx, bands=16, threshold=0.5)
     assert [r.doc_id for r in surv.collect()] == [20]
-    idx2 = D.updated_band_index(idx, surv, bands=16, hash_fn="md5")
+    idx2 = D.updated_band_index(idx, surv, bands=16)
     resubmit = spark.createDataFrame(
         [(30, "completely different tokens about streaming watermark state eviction policies")],
         "doc_id long, text string",
     )
-    again = D.dedup_incremental_minhash(
-        resubmit, idx2, bands=16, threshold=0.5, hash_fn="md5"
-    )
+    again = D.dedup_incremental_minhash(resubmit, idx2, bands=16, threshold=0.5)
     assert again.count() == 0
 
 

@@ -355,6 +355,75 @@ def test_incremental_near_dedup_stream_two_ticks_and_replay(spark, tmp_path):
     assert after == before
 
 
+_NEAR_BASE = (
+    "the quick brown fox jumps over the lazy dog while the cat "
+    "sleeps on the warm windowsill in the afternoon sun today"
+)
+
+
+def test_near_dup_short_docs_land_once_without_signature(spark, tmp_path):
+    """A doc shorter than one shingle has no MinHash signature: it
+    lands exactly once with ``sig`` NULL, never enters the band index
+    (so it cannot put every sig-less doc into one shared bucket), and
+    two identical short docs both survive."""
+    from gdelt_extractor_spark.pipelines.incremental import (
+        _seen_band_index,
+        ingest_batch_near_dup,
+    )
+
+    corpus_dir = str(tmp_path / "corpus")
+    batch = spark.createDataFrame(
+        [(1, _NEAR_BASE, "s1"),
+         (2, _NEAR_BASE.replace("warm", "cold"), "s1"),  # near dup of 1
+         (3, "tiny doc", "s2"),
+         (4, "tiny doc", "s2")],
+        "doc_id long, text string, source string",
+    )
+    ingest_batch_near_dup(batch, 0, corpus_dir)
+    rows = spark.read.parquet(corpus_dir).collect()
+    assert sorted(r.doc_id for r in rows) == [1, 3, 4]
+    sig = {r.doc_id: r.sig for r in rows}
+    assert sig[3] is None and sig[4] is None
+    assert sig[1] is not None and len(sig[1]) == 32
+    idx = _seen_band_index(spark, corpus_dir, 1, "doc_id", 32, 16)
+    assert {r.id for r in idx.select("id").distinct().collect()} == {1}
+
+
+def test_near_dup_first_batch_index_has_the_real_schema(spark, tmp_path):
+    """The first batch's empty band index (no corpus yet) has exactly
+    the schema the index read back from a landed corpus has."""
+    from gdelt_extractor_spark.pipelines.incremental import (
+        _seen_band_index,
+        ingest_batch_near_dup,
+    )
+
+    corpus_dir = str(tmp_path / "corpus")
+    empty = _seen_band_index(spark, corpus_dir, 0, "doc_id", 32, 16)
+    assert empty.count() == 0
+    batch = spark.createDataFrame(
+        [(1, _NEAR_BASE, "s1")], "doc_id long, text string, source string"
+    )
+    ingest_batch_near_dup(batch, 0, corpus_dir)
+    real = _seen_band_index(spark, corpus_dir, 1, "doc_id", 32, 16)
+    assert real.count() == 16
+    assert empty.schema == real.schema
+
+
+def test_near_dup_batch_builds_signatures_once(spark, tmp_path, spy):
+    """The survivors land with the signatures the operator verified
+    them with: one signature build per micro-batch."""
+    from gdelt_extractor_spark.operators import dedup
+    from gdelt_extractor_spark.pipelines.incremental import ingest_batch_near_dup
+
+    calls = spy(dedup, "minhash_signatures")
+    batch = spark.createDataFrame(
+        [(1, _NEAR_BASE, "s1"), (2, "fresh words about something else", "s2")],
+        "doc_id long, text string, source string",
+    )
+    ingest_batch_near_dup(batch, 0, str(tmp_path / "corpus"))
+    assert len(calls) == 1
+
+
 def test_incremental_stream_metrics_survive_restart(spark, tmp_path):
     """The per-epoch dedup-rate audit stream: each tick lands a
     (batch_id, n_seen, n_survived, n_dropped) row via the same

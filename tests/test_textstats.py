@@ -294,8 +294,8 @@ class TestHashedEmbedding:
         assert any(v != 0.0 for v in got[1])
 
     def test_md5_mode_matches_pure_python(self, spark):
-        """The portable hash_fn='md5' variant (the oracle-replicable
-        one) must equal a pure-Python replica of bucket/sign/norm —
+        """The md5 feature hash (the oracle-replicable one) must
+        equal a pure-Python replica of bucket/sign/norm —
         the same replica the DuckDB twin implements in SQL."""
         import hashlib
         import math
@@ -305,8 +305,7 @@ class TestHashedEmbedding:
         rows = [(1, "alpha beta beta gamma"), (2, "alpha alpha delta")]
         df = spark.createDataFrame(rows, "doc_id long, text string")
         got = {r.doc_id: list(r.embedding)
-               for r in hashed_embedding(df, "doc_id", "text",
-                                         hash_fn="md5").collect()}
+               for r in hashed_embedding(df, "doc_id", "text").collect()}
         for doc_id, text in rows:
             c = [0.0] * 64
             for t in text.split():
@@ -328,7 +327,7 @@ class TestHashedEmbedding:
 
         rows = [(1, "alpha beta beta gamma"), (2, ""), (3, "alpha delta")]
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        dense = hashed_embedding(df, "doc_id", "text", hash_fn="md5")
+        dense = hashed_embedding(df, "doc_id", "text")
         via_dense = {
             (r.doc_id, r.bucket): r.v
             for r in dense.select(
@@ -337,21 +336,10 @@ class TestHashedEmbedding:
         }
         long = {
             (r.doc_id, r.bucket): r.value
-            for r in hashed_embedding(
-                df, "doc_id", "text", hash_fn="md5", layout="long"
-            ).collect()
+            for r in hashed_embedding(df, "doc_id", "text", layout="long").collect()
         }
         assert long == via_dense
         assert len(long) == 3 * 64
-
-    def test_unknown_hash_fn_raises(self, spark):
-        import pytest
-
-        from gdelt_extractor_spark.operators.textstats import hashed_embedding
-
-        df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-        with pytest.raises(ValueError, match="unknown hash_fn"):
-            hashed_embedding(df, "doc_id", "text", hash_fn="sha1")
 
     def test_chains_into_ann(self, spark):
         """The bridge works: hashed text embeddings flow straight
@@ -469,9 +457,7 @@ class TestHybridSearch:
             )
             want = {
                 r.bucket: r.value
-                for r in hashed_embedding(
-                    qdf, "qid", "qtext", hash_fn="md5", layout="long"
-                ).collect()
+                for r in hashed_embedding(qdf, "qid", "qtext", layout="long").collect()
                 if r.value != 0.0
             }
             norm = re.sub(r"\s+", " ", qtext.lower()).strip()
