@@ -1875,7 +1875,7 @@ def _ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-table multiprobe LSH ANN.  Hash-gated since r9: the
-    hyperplanes are a fixed RandomState(42) draw the oracle
+    hyperplanes are a fixed RandomState(LSH_SEED) draw the oracle
     regenerates as literals, so buckets, the hamming-1 probe set,
     the candidate join, and the exact cosine rerank all replay in
     DuckDB.  Recall vs brute force stays tested in
@@ -3691,19 +3691,13 @@ def _dsum(expr: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(25,6))) AS DOUBLE)"
 
 
-def _srcsim_perms(m: int, salt: str = "srcsim-v1") -> str:
-    """(slot, a, b) VALUES rows for the source_similarity oracle —
-    the same md5-derived universal-family constants the operator
-    uses (operators/similarity.py source_similarity)."""
-    import hashlib
-
-    rows = []
-    for i in range(m):
-        d = hashlib.md5(f"{salt}:perm:{i}".encode()).hexdigest()
-        a = (int(d[:4], 16) % (1 << 14)) | 1
-        b = int(d[4:16], 16)
-        rows.append(f"({i}, {a}, {b})")
-    return ", ".join(rows)
+def _perm_values(salt: str, m: int) -> str:
+    """(slot, a, b) VALUES rows of the md5-derived universal-family
+    permutation constants the MinHash and source_similarity
+    operators use (``dedup._md5_perm_consts``)."""
+    return ", ".join(
+        f"({i}, {a}, {b})" for i, (a, b) in enumerate(D._md5_perm_consts(salt, m))
+    )
 
 
 def _duck_tsv(filename: str, schema) -> str:
@@ -3850,19 +3844,12 @@ def _pq_pin_values() -> str:
     return ",\n              ".join(rows)
 
 
-def _lsh_plane_values(
-    dim: int = 64, n_planes: int = 8, n_tables: int = 6, seed: int = 42
-) -> str:
+def _lsh_plane_values(dim: int = 64, n_planes: int = 8, n_tables: int = 6) -> str:
     """VALUES rows ``(t, p, plane DOUBLE[])`` regenerating the random
-    hyperplanes of ``similarity.lsh_multitable_udf`` /
-    ``lsh_query_probes_udf`` (same RandomState(seed) draw, column p of
-    table t) — repr round-trip doubles, so the DuckDB oracle computes
-    the bit-same projections and bucket ids."""
-    import numpy as np
-
-    planes = np.random.RandomState(seed).standard_normal(
-        (n_tables, dim, n_planes)
-    )
+    hyperplanes of ``similarity.ann_lsh`` (``similarity._lsh_planes``,
+    column p of table t) — repr round-trip doubles, so the DuckDB
+    oracle computes the bit-same projections and bucket ids."""
+    planes = S._lsh_planes(dim, n_planes, n_tables)
     rows = []
     for t in range(n_tables):
         for p in range(n_planes):
@@ -4162,6 +4149,9 @@ def oracle_sql() -> dict[str, str]:
     from gdelt_extractor_spark.operators._kmeans_pins import (
         FINGERPRINT_SQL as _FP_SQL,
     )
+    from gdelt_extractor_spark.operators.decomposition import RPROJ_SALT
+    from gdelt_extractor_spark.operators.packing import PACK_SALT
+    from gdelt_extractor_spark.sinks.files import SHARD_SALT
 
     _pca_m, _pca_c = _pca_pin_values()
     toks_text = _toks("text")
@@ -4963,14 +4953,14 @@ def oracle_sql() -> dict[str, str]:
             WITH base AS (
               SELECT doc_id, (source = 'src0') AS is_target,
                 CASE WHEN CAST(('0x' || substring(
-                    md5('nbclf-v1:' || CAST(doc_id AS VARCHAR)), 1, 4))
+                    md5('{C.NBCLF_SALT}:' || CAST(doc_id AS VARCHAR)), 1, 4))
                     AS BIGINT) % 100 < 80
                   THEN 'train' ELSE 'val' END AS split,
                 {toks_text} AS toks
               FROM documents),
             tr AS (
               SELECT doc_id, is_target, split,
-                CAST(('0x' || substring(md5('nbclf-v1:' || term), 1, 8))
+                CAST(('0x' || substring(md5('{C.NBCLF_SALT}:' || term), 1, 8))
                   AS BIGINT) % 64 AS bucket
               FROM (
                 SELECT doc_id, is_target, split, unnest(toks) AS term
@@ -5039,7 +5029,7 @@ def oracle_sql() -> dict[str, str]:
         "dsir_weights": f"""
             WITH tr AS (
               SELECT doc_id, source,
-                CAST(('0x' || substring(md5('dsir-v1:' || term), 1, 8))
+                CAST(('0x' || substring(md5('{C.DSIR_SALT}:' || term), 1, 8))
                   AS BIGINT) % 64 AS bucket
               FROM (
                 SELECT doc_id, source, unnest({toks_text}) AS term
@@ -5735,9 +5725,9 @@ def oracle_sql() -> dict[str, str]:
               FROM documents),
             hb AS (
               SELECT doc_id,
-                CAST(CAST(('0x' || substring(md5('hash-emb-v1:' || t),
+                CAST(CAST(('0x' || substring(md5('{TS.HASH_EMB_SALT}:' || t),
                   1, 12)) AS BIGINT) % 64 AS INT) AS b,
-                CASE WHEN CAST(('0x' || substring(md5('hash-emb-v1:'
+                CASE WHEN CAST(('0x' || substring(md5('{TS.HASH_EMB_SALT}:'
                   || t), 13, 1)) AS BIGINT) % 2 = 0
                   THEN -1.0 ELSE 1.0 END AS s
               FROM tk WHERE t <> ''),
@@ -5751,9 +5741,9 @@ def oracle_sql() -> dict[str, str]:
               SELECT unnest({_toks("'spark hash join window'")}) AS t),
             qhb AS (
               SELECT
-                CAST(CAST(('0x' || substring(md5('hash-emb-v1:' || t),
+                CAST(CAST(('0x' || substring(md5('{TS.HASH_EMB_SALT}:' || t),
                   1, 12)) AS BIGINT) % 64 AS INT) AS b,
-                CASE WHEN CAST(('0x' || substring(md5('hash-emb-v1:'
+                CASE WHEN CAST(('0x' || substring(md5('{TS.HASH_EMB_SALT}:'
                   || t), 13, 1)) AS BIGINT) % 2 = 0
                   THEN -1.0 ELSE 1.0 END AS s
               FROM qt WHERE t <> ''),
@@ -5926,7 +5916,7 @@ def oracle_sql() -> dict[str, str]:
         # full replay of MinHash+LSH (operators/dedup.py
         # dedup_minhash_lsh): salted 48-bit shingle h0,
         # universal-permutation slot minima, md5 band buckets, exact
-        # Jaccard on candidates — same constants via _srcsim_perms
+        # Jaccard on candidates — same constants via _perm_values
         "dedup_minhash_lsh": f"""
             WITH b AS (
               SELECT doc_id AS id, {_toks("coalesce(text, '')")} AS toks,
@@ -5934,12 +5924,12 @@ def oracle_sql() -> dict[str, str]:
               FROM documents),
             sh AS (
               SELECT id,
-                CAST(('0x' || substring(md5('mhlsh-v1:'
+                CAST(('0x' || substring(md5('{D.MINHASH_SALT}:'
                   || array_to_string(toks[i:i+2], ' ')), 1, 12))
                   AS BIGINT) AS h0
               FROM b, unnest(range(1, n - 1)) AS u(i)
               WHERE n >= 3),
-            p AS (SELECT * FROM (VALUES {_srcsim_perms(32, 'mhlsh-v1')})
+            p AS (SELECT * FROM (VALUES {_perm_values(D.MINHASH_SALT, 32)})
                   AS t(slot, a, bb)),
             sig AS (
               SELECT id, p.slot,
@@ -5998,12 +5988,12 @@ def oracle_sql() -> dict[str, str]:
               FROM allv),
             sh AS (
               SELECT id,
-                CAST(('0x' || substring(md5('mhlsh-v1:'
+                CAST(('0x' || substring(md5('{D.MINHASH_SALT}:'
                   || array_to_string(toks[i:i+2], ' ')), 1, 12))
                   AS BIGINT) AS h0
               FROM b, unnest(range(1, n - 1)) AS u(i)
               WHERE n >= 3),
-            p AS (SELECT * FROM (VALUES {_srcsim_perms(32, 'mhlsh-v1')})
+            p AS (SELECT * FROM (VALUES {_perm_values(D.MINHASH_SALT, 32)})
                   AS t(slot, a, bb)),
             sig AS (
               SELECT id, p.slot,
@@ -6057,12 +6047,12 @@ def oracle_sql() -> dict[str, str]:
               FROM documents),
             msh AS (
               SELECT id,
-                CAST(('0x' || substring(md5('mhlsh-v1:'
+                CAST(('0x' || substring(md5('{D.MINHASH_SALT}:'
                   || array_to_string(toks[i:i+2], ' ')), 1, 12))
                   AS BIGINT) AS h0
               FROM mb, unnest(range(1, n - 1)) AS u(i)
               WHERE n >= 3),
-            mp AS (SELECT * FROM (VALUES {_srcsim_perms(32, 'mhlsh-v1')})
+            mp AS (SELECT * FROM (VALUES {_perm_values(D.MINHASH_SALT, 32)})
                   AS t(slot, a, bb)),
             msig AS (
               SELECT id, mp.slot,
@@ -6127,7 +6117,7 @@ def oracle_sql() -> dict[str, str]:
               FROM documents),
             g AS (
               SELECT id, i AS pos,
-                CAST(('0x' || substring(md5('winnow-v1:'
+                CAST(('0x' || substring(md5('{D.WINNOW_SALT}:'
                   || array_to_string(toks[i+1:i+5], ' ')), 1, 12))
                   AS BIGINT) AS h
               FROM b, unnest(range(0, n - 4)) AS u(i)
@@ -6160,7 +6150,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT doc_id AS id, {_toks("coalesce(text, '')")} AS toks
               FROM documents),
             tok AS (SELECT id, unnest(toks) AS t FROM b),
-            h AS (SELECT id, md5('simhash-v1:' || t) AS h FROM tok),
+            h AS (SELECT id, md5('{D.SIMHASH_SALT}:' || t) AS h FROM tok),
             dig AS (
               SELECT id, j, CAST(('0x' || substring(h, j + 1, 1))
                 AS INTEGER) AS d
@@ -6613,10 +6603,10 @@ def oracle_sql() -> dict[str, str]:
               WHERE n >= 5),
             h0 AS (
               SELECT source,
-                CAST(('0x' || substring(md5('srcsim-v1:' || shingle), 1, 12))
+                CAST(('0x' || substring(md5('{S.SRCSIM_SALT}:' || shingle), 1, 12))
                   AS BIGINT) AS h0
               FROM sh),
-            p AS (SELECT * FROM (VALUES {_srcsim_perms(32)})
+            p AS (SELECT * FROM (VALUES {_perm_values(S.SRCSIM_SALT, 32)})
                   AS t(slot, a, bb)),
             h AS (
               SELECT source, p.slot,
@@ -6632,7 +6622,7 @@ def oracle_sql() -> dict[str, str]:
               ON a.slot = b2.slot AND a.source < b2.source
             GROUP BY 1, 2
         """,
-        "embedding_projection": """
+        "embedding_projection": f"""
             WITH v AS (
               SELECT vec_id,
                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv,
@@ -6643,7 +6633,7 @@ def oracle_sql() -> dict[str, str]:
               FROM v, unnest(range(1, d + 1)) AS u(i)),
             s AS (
               SELECT e.vec_id, j.dim, e.x,
-                CASE WHEN CAST(('0x' || substring(md5('rproj-v1:'
+                CASE WHEN CAST(('0x' || substring(md5('{RPROJ_SALT}:'
                     || CAST(e.i AS VARCHAR) || ':'
                     || CAST(j.dim AS VARCHAR)), 1, 1)) AS BIGINT) % 2 = 0
                   THEN 1.0 ELSE -1.0 END AS sgn
@@ -6740,9 +6730,9 @@ def oracle_sql() -> dict[str, str]:
               FROM documents),
             hb AS (
               SELECT doc_id,
-                CAST(CAST(('0x' || substring(md5('hash-emb-v1:' || t),
+                CAST(CAST(('0x' || substring(md5('{TS.HASH_EMB_SALT}:' || t),
                   1, 12)) AS BIGINT) % 64 AS INT) AS b,
-                CASE WHEN CAST(('0x' || substring(md5('hash-emb-v1:'
+                CASE WHEN CAST(('0x' || substring(md5('{TS.HASH_EMB_SALT}:'
                   || t), 13, 1)) AS BIGINT) % 2 = 0
                   THEN -1.0 ELSE 1.0 END AS s
               FROM tk WHERE t <> ''),
@@ -6781,7 +6771,7 @@ def oracle_sql() -> dict[str, str]:
                   PARTITION BY doc_id % 8
                   ORDER BY CAST(len({_toks("coalesce(text, '')")})
                       AS BIGINT) DESC,
-                    md5('pack-v1:' || CAST(doc_id AS VARCHAR)) ASC,
+                    md5('{PACK_SALT}:' || CAST(doc_id AS VARCHAR)) ASC,
                     doc_id ASC) AS i
               FROM documents),
             state AS (
@@ -6916,7 +6906,7 @@ def oracle_sql() -> dict[str, str]:
             WITH {_kmeans_assign_ctes("triplets2")},
             t AS (
               SELECT vec_id AS anchor_id, j AS cluster,
-                md5('triplets-v1:' || CAST(vec_id AS VARCHAR)) AS ok
+                md5('{CL.TRIPLETS_SALT}:' || CAST(vec_id AS VARCHAR)) AS ok
               FROM win WHERE rn = 1),
             ring AS (
               SELECT anchor_id, cluster,
@@ -7356,7 +7346,7 @@ def oracle_sql() -> dict[str, str]:
             WITH s AS (
               SELECT doc_id,
                 CAST(doc_id % 8 AS INT) AS shard,
-                md5('pack-v1:' || CAST(doc_id AS VARCHAR)) AS ok,
+                md5('{PACK_SALT}:' || CAST(doc_id AS VARCHAR)) AS ok,
                 CAST(len({toks_text}) AS BIGINT) AS n_tokens
               FROM documents),
             c AS (
@@ -7480,7 +7470,7 @@ def oracle_sql() -> dict[str, str]:
             WITH s AS (
               SELECT doc_id,
                 CAST(doc_id % 8 AS INT) AS shard,
-                md5('pack-v1:' || CAST(doc_id AS VARCHAR)) AS ok,
+                md5('{PACK_SALT}:' || CAST(doc_id AS VARCHAR)) AS ok,
                 CAST(len({toks_text}) AS BIGINT) AS n_tokens
               FROM documents),
             c AS (
@@ -7758,7 +7748,7 @@ def oracle_sql() -> dict[str, str]:
               round(adist, 6) AS approx_dist
             FROM ranked WHERE rank <= 5
         """,
-        # r9 graduation: the LSH planes are a fixed RandomState(42)
+        # r9 graduation: the LSH planes are a fixed RandomState(LSH_SEED)
         # draw — regenerated as literals — so the oracle computes the
         # bit-same projections, sign buckets, hamming-1 multiprobe
         # set, candidate join, and exact cosine rerank
@@ -7945,7 +7935,7 @@ def oracle_sql() -> dict[str, str]:
             base AS (
               SELECT doc_id, lang AS lang_true,
                 CASE WHEN CAST(('0x' || substring(
-                    md5('langnb-v1:' || CAST(doc_id AS VARCHAR)), 1, 4))
+                    md5('{TS.LANGNB_SALT}:' || CAST(doc_id AS VARCHAR)), 1, 4))
                     AS BIGINT) % 100 < 80
                   THEN 'train' ELSE 'val' END AS split,
                 trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
@@ -7957,7 +7947,7 @@ def oracle_sql() -> dict[str, str]:
             g AS (
               SELECT doc_id, lang_true, split,
                 CAST(('0x' || substring(
-                  md5('langnb-v1:' || substr(norm, i, 3)), 1, 8))
+                  md5('{TS.LANGNB_SALT}:' || substr(norm, i, 3)), 1, 8))
                   AS BIGINT) % 4096 AS bucket
               FROM base2, unnest(range(1, t + 1)) AS u(i)),
             c AS (
@@ -8643,7 +8633,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "shard_manifest": f"""
             WITH s AS (
-              SELECT CAST(CAST(('0x' || substring(md5('shards-v1:'
+              SELECT CAST(CAST(('0x' || substring(md5('{SHARD_SALT}:'
                   || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
                   % 16 AS INTEGER) AS shard,
                 len(string_split({_NORM.format(c='text')}, ' ')) AS nt,

@@ -1,6 +1,8 @@
 """Operator namespace — every operator is a DataFrame→DataFrame
 function; import from here for the public API."""
 
+from types import ModuleType as _ModuleType
+
 from .curation import (
     balance_classes,
     blocklist_filter,
@@ -48,6 +50,7 @@ from .affinity import association_rules
 from .decomposition import pca, pca_fit, pca_project, random_projection
 from .graph import k_core, label_propagation, pagerank, triangle_count
 from .keywords import keyword_freq
+from .linkage import golden_record, linkage_score
 from .packing import pack_bins_bfd, chunk_documents, pack_sequences
 from .pii import k_anonymity, l_diversity, luhn_valid, redact_pii, scan_pii
 from .features import quantile_normalize, target_encode
@@ -119,38 +122,9 @@ from .textstats import (
     vocab_divergence,
 )
 
-__all__ = [
-    "ann_bruteforce", "ann_ivf", "ann_lsh", "approx_topk", "asof_join",
-    "bpe_pair_counts",
-    "attach_fake_media", "audio_features", "byte_stats", "corpus_stats",
-    "c4_line_filter", "hapax_stats", "prefix_clusters",
-    "decontaminate", "dedup_containment", "dedup_embedding", "dedup_exact",
-    "dedup_keep_first", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "dedup_simhash", "enrich_articles", "enrich_articles_fetch",
-    "fill_gaps", "fingerprint", "frame_sample", "geo_project",
-    "hashed_embedding", "image_features", "image_phash",
-    "connected_components", "contrastive_triplets", "corpus_report",
-    "cut_duplicate_spans",
-    "dedup_semantic", "grid_join",
-    "duplicate_spans", "keep_canonical", "span_dup_fraction",
-    "cluster_prune", "ivf_fit_centroids", "keyword_freq", "kmeans_cluster",
-    "kmeans_fit",
-    "lang_id", "lang_id_ngram",
-    "minhash_signatures", "mix_sources", "pack_sequences",
-    "chunk_documents", "dedup_lines_global", "normalize_url", "pagerank",
-    "profile_table",
-    "url_filter",
-    "quality_score", "quantize_embeddings", "range_join", "redact_pii",
-    "source_similarity", "key_skew_profile", "random_projection",
-    "bootstrap_ci", "pack_bins_bfd", "seasonal_decompose", "class_tfidf",
-    "linkage_score", "golden_record", "calibration_table", "ks_test", "budget_select",
-    "blocklist_filter", "join_cardinality", "cluster_profile",
-    "balance_classes",
-    "resize_images", "salted_agg", "salted_join", "sample_split", "scd2_apply",
-    "scan_pii", "simhash", "stratified_sample", "token_stats",
-    "dedup_videos", "video_fingerprint",
-    "weighted_sample", "dedup_incremental", "updated_index",
-    "dedup_incremental_minhash", "minhash_band_index", "updated_band_index",
-    "fuzzy_join", "ngram_repetition", "source_overlap", "source_quality_filter",
-    "vocab_divergence",
-]
+# Derived, not hand-kept: every public name imported above.
+__all__ = sorted(
+    name
+    for name, value in globals().items()
+    if not name.startswith("_") and not isinstance(value, _ModuleType)
+)

@@ -19,10 +19,9 @@ Scale shape (per round, the classic map-side-combine k-means):
    k × (dim+1) longs to form the next centroid matrix.
 
 The corpus is scanned once per round and NEVER shuffled; driver
-state is k×dim doubles.  Callers at test scale get the projected
-vector frame persisted across rounds (``persist=True``); at 100 TB
-pass ``persist=False`` and let the scan repeat — Lloyd's per-round
-scan is the textbook cost and the parquet read is the cheap part.
+state is k×dim doubles.  The projected vector frame is persisted
+across rounds (``DataFrame.persist`` spills to local disk when it
+outgrows executor memory).
 
 Determinism (partition-INDEPENDENT, same discipline as the decimal
 sums in plans/queries.py): per-element contributions quantize to
@@ -96,7 +95,6 @@ def kmeans_fit(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     tol: float = 1e-6,
-    persist: bool = True,
 ) -> np.ndarray:
     """Full-corpus Lloyd: returns the (k, dim) centroid matrix.
 
@@ -107,9 +105,7 @@ def kmeans_fit(
     previous centroid; the loop stops early once the max per-element
     centroid shift drops below ``tol``.
     """
-    v = vectors.select(_as_double(vec_col).alias("v"))
-    if persist:
-        v = v.persist()
+    v = vectors.select(_as_double(vec_col).alias("v")).persist()
     try:
         cents = _greedy_init(vectors, k, id_col, vec_col)
         dim = cents.shape[1]
@@ -182,8 +178,7 @@ def kmeans_fit(
                 break
         return cents
     finally:
-        if persist:
-            v.unpersist()
+        v.unpersist()
 
 
 def kmeans_cluster(
@@ -193,7 +188,6 @@ def kmeans_cluster(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     tol: float = 1e-6,
-    persist: bool = True,
 ) -> DataFrame:
     """Fit on the full corpus, then tag every vector with its
     cluster: (id, cluster).  The tagging pass is one scan with the
@@ -207,7 +201,6 @@ def kmeans_cluster(
         id_col=id_col,
         vec_col=vec_col,
         tol=tol,
-        persist=persist,
     )
     assign = _ivf_assign_udf(cents)
     return vectors.select(
@@ -251,7 +244,6 @@ def cluster_prune(
     vec_col: str = "embedding",
     drop: str = "prototypes",
     tol: float = 1e-6,
-    persist: bool = True,
 ) -> DataFrame:
     """Diversity pruning over embedding clusters — the D4 /
     SSL-prototypes recipe (Tirumala et al. 2023; Sorscher et al.
@@ -279,7 +271,6 @@ def cluster_prune(
         id_col=id_col,
         vec_col=vec_col,
         tol=tol,
-        persist=persist,
     )
     ad = _assign_dist_udf(cents)
     tagged = (
@@ -303,15 +294,18 @@ def cluster_prune(
     )
 
 
+# Salt of contrastive_triplets' in-cluster ring order; the DuckDB
+# oracle interpolates this value.
+TRIPLETS_SALT = "triplets-v1"
+
+
 def contrastive_triplets(
     vectors: DataFrame,
     k: int = 8,
     n_iter: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    salt: str = "triplets-v1",
     tol: float = 1e-6,
-    persist: bool = True,
 ) -> DataFrame:
     """Deterministic contrastive-training triplets mined from the
     embedding clusters: each anchor pairs with a POSITIVE from its
@@ -342,7 +336,6 @@ def contrastive_triplets(
             id_col=id_col,
             vec_col=vec_col,
             tol=tol,
-            persist=persist,
         )
         .select(F.col(id_col).alias("anchor_id"), "cluster")
         # r12: the tagging scan (full corpus through the assignment
@@ -353,7 +346,9 @@ def contrastive_triplets(
         # Same-session A/B inside the family run: see kmeans_fit note.
         .localCheckpoint(eager=True)
     )
-    order = F.md5(F.concat(F.lit(salt + ":"), F.col("anchor_id").cast("string")))
+    order = F.md5(
+        F.concat(F.lit(TRIPLETS_SALT + ":"), F.col("anchor_id").cast("string"))
+    )
     w = Window.partitionBy("cluster").orderBy(order.asc(), F.col("anchor_id").asc())
     ring = tagged.withColumn(
         "positive_id",

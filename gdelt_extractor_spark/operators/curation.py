@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
@@ -976,6 +976,26 @@ def preference_pairs(
     )
 
 
+# Salts of the hashed unigram buckets md5(salt:term) of
+# ``dsir_importance`` and ``nb_domain_classifier`` (the latter also
+# salts its train/val split); the DuckDB oracles interpolate them.
+DSIR_SALT = "dsir-v1"
+NBCLF_SALT = "nbclf-v1"
+
+
+def _term_bucket(salt: str, n_buckets: int) -> Column:
+    """Bucket of the ``term`` column: the first 8 hex digits of
+    md5(salt:term) mod ``n_buckets``."""
+    return F.pmod(
+        F.conv(
+            F.substring(F.md5(F.concat(F.lit(salt + ":"), F.col("term"))), 1, 8),
+            16,
+            10,
+        ).cast("long"),
+        F.lit(n_buckets),
+    )
+
+
 def dsir_importance(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -983,7 +1003,6 @@ def dsir_importance(
     source_col: str = "source",
     target: str = "src0",
     n_buckets: int = 64,
-    salt: str = "dsir-v1",
 ) -> DataFrame:
     """Data Selection with Importance Resampling (DSIR, Xie et al.
     2023) scores: hashed unigram bag-of-words features, an add-one
@@ -1017,16 +1036,7 @@ def dsir_importance(
         F.explode(tokens(text_col)).alias("term"),
     ).withColumn(
         "bucket",
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(salt + ":"), F.col("term"))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(n_buckets),
-        ),
+        _term_bucket(DSIR_SALT, n_buckets),
     )
     g = (
         term_rows.groupBy(id_col, "bucket")
@@ -1090,7 +1100,6 @@ def nb_domain_classifier(
     target: str = "src0",
     n_buckets: int = 64,
     train_pct: int = 80,
-    salt: str = "nbclf-v1",
 ) -> DataFrame:
     """Hashed Naive Bayes "looks like the reference domain"
     classifier — the GPT-3 / CCNet quality-classifier recipe as one
@@ -1131,7 +1140,7 @@ def nb_domain_classifier(
             F.substring(
                 F.md5(
                     F.concat(
-                        F.lit(salt + ":"), F.col(id_col).cast("string")
+                        F.lit(NBCLF_SALT + ":"), F.col(id_col).cast("string")
                     )
                 ),
                 1,
@@ -1157,16 +1166,7 @@ def nb_domain_classifier(
         F.explode("_t").alias("term"),
     ).withColumn(
         "bucket",
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(salt + ":"), F.col("term"))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(n_buckets),
-        ),
+        _term_bucket(NBCLF_SALT, n_buckets),
     )
     train_terms = term_rows.filter(F.col("split") == "train")
     counts = train_terms.groupBy("bucket").agg(

@@ -224,12 +224,16 @@ def pca(
     )
 
 
+# Salt of random_projection's sign matrix md5(RPROJ_SALT:i:j); the
+# DuckDB oracle interpolates this value.
+RPROJ_SALT = "rproj-v1"
+
+
 def random_projection(
     emb: DataFrame,
     k: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    salt: str = "rproj-v1",
 ) -> DataFrame:
     """Johnson-Lindenstrauss sparse sign projection: reduce a d-dim
     embedding to k dims with a FIXED ±1 matrix, out_j = Σ_i v_i·s_ij /
@@ -237,7 +241,7 @@ def random_projection(
     ±1 variant preserves pairwise distances in expectation like the
     Gaussian one at a fraction of the cost).  The model-free, no-fit
     companion to ``pca_fit``: the projection matrix derives from
-    md5(salt:i:j) parity, so it is identical on every engine, every
+    md5(RPROJ_SALT:i:j) parity, so it is identical on every engine, every
     run, and every executor — no broadcast of fitted state, nothing to
     persist, and the whole operator is value-level oracle-checkable
     (DuckDB regenerates the same matrix from the same md5s).
@@ -268,7 +272,7 @@ def random_projection(
                 s = np.empty((d, k), dtype=np.float64)
                 for i in range(d):
                     for j in range(k):
-                        h = hashlib.md5(f"{salt}:{i}:{j}".encode()).hexdigest()
+                        h = hashlib.md5(f"{RPROJ_SALT}:{i}:{j}".encode()).hexdigest()
                         s[i, j] = 1.0 if int(h[:1], 16) % 2 == 0 else -1.0
                 smat[d] = s
             return smat[d]

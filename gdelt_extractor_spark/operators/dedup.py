@@ -70,30 +70,6 @@ def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles from a MATERIALIZED token-array
-    column (array<string>).
-
-    ``toks`` must be a real column reference, not an inline
-    ``split(...)`` expression: Catalyst does not common-subexpression-
-    eliminate inside lambda bodies, so an inline expression would
-    re-tokenize the document once per element access (~10× slowdown,
-    measured).
-    """
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", F.slice(toks, (i + 1).cast("int"), n)),
-    )
-    return F.array_distinct(grams)
-
-
-def shingles(text_col: str, n: int = 3) -> Column:
-    """Back-compat convenience: shingles of a text column.  Prefer
-    materializing tokens first (see shingles_from_tokens)."""
-    return shingles_from_tokens(tokens(text_col), n)
-
-
 def shingle_hashes_from_tokens(toks: Column, n: int = 3) -> Column:
     """Distinct 64-bit shingle hashes (array<bigint>): multi-arg xxhash64 over
     the n tokens directly.  Equality of hashes stands in for equality
@@ -352,23 +328,25 @@ def dedup_ngram_jaccard(
     return verified
 
 
-# Salt of the MinHash family's shingle hashes and permutations.  One
-# constant, not a per-call option: an index and a batch hashed under
-# different salts would silently never match.  The DuckDB oracles
-# embed this value.
+# Salts of the md5 hash spaces below.  One constant each, not a
+# per-call option: an index and a batch hashed under different salts
+# would silently never match, and a new value re-lays out every stored
+# fingerprint.  The DuckDB oracles interpolate these values.
 MINHASH_SALT = "mhlsh-v1"
+WINNOW_SALT = "winnow-v1"
+SIMHASH_SALT = "simhash-v1"
 
 
-def _md5_perm_consts(m: int) -> list[tuple[int, int]]:
+def _md5_perm_consts(salt: str, m: int) -> list[tuple[int, int]]:
     """Per-slot universal-family permutation constants (a_i odd in
-    [1, 2^14), b_i in [0, 2^48)) derived from md5(salt:perm:i) — the
-    same derived-not-random discipline as ``source_similarity``
-    (operators/similarity.py), so a DuckDB oracle regenerates them."""
+    [1, 2^14), b_i in [0, 2^48)) derived from md5(salt:perm:i) —
+    derived, not random, so a DuckDB oracle regenerates them.  Shared
+    by MinHash (``MINHASH_SALT``) and ``similarity.source_similarity``."""
     import hashlib
 
     out = []
     for i in range(m):
-        d = hashlib.md5(f"{MINHASH_SALT}:perm:{i}".encode()).hexdigest()
+        d = hashlib.md5(f"{salt}:perm:{i}".encode()).hexdigest()
         out.append(((int(d[:4], 16) % (1 << 14)) | 1, int(d[4:16], 16)))
     return out
 
@@ -381,7 +359,7 @@ def _slot_minima(num_hashes: int) -> list[Column]:
     mod = 1 << 48
     return [
         F.min((F.col("h0") * F.lit(a) + F.lit(b)) % F.lit(mod)).alias(f"_s{i}")
-        for i, (a, b) in enumerate(_md5_perm_consts(num_hashes))
+        for i, (a, b) in enumerate(_md5_perm_consts(MINHASH_SALT, num_hashes))
     ]
 
 
@@ -637,7 +615,7 @@ def dedup_eval(
 
     Degenerate-input note (documented divergence from the naive
     composition): a NULL text and an empty text both hash their one
-    partial window to md5(salt + ":"), so the truth side pairs them —
+    partial window to md5(MINHASH_SALT + ":"), so the truth side pairs them —
     ``dedup_ngram_jaccard``'s multi-arg NULL-skip distinguishes the two.
     The DuckDB oracle coalesces NULL text to '' and agrees with THIS
     operator; the composition-equivalence unit test uses a
@@ -814,7 +792,6 @@ def winnow_fingerprints(
     id_col: str,
     k: int = 5,
     w: int = 4,
-    salt: str = "winnow-v1",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken
     2003, "Winnowing: local algorithms for document fingerprinting" —
@@ -853,7 +830,7 @@ def winnow_fingerprints(
         F.substring(
             F.md5(
                 F.concat(
-                    F.lit(salt + ":"),
+                    F.lit(WINNOW_SALT + ":"),
                     F.concat_ws(" ", F.slice("_t", F.col("pos") + 1, k)),
                 )
             ),
@@ -889,7 +866,6 @@ def winnow_dup_pairs(
     w: int = 4,
     min_shared: int = 2,
     max_fp_df: int | None = 100,
-    salt: str = "winnow-v1",
 ) -> DataFrame:
     """Document pairs sharing ≥ ``min_shared`` winnowing fingerprints
     (id_a < id_b, n_shared) — the corpus-level near-copy report over
@@ -905,9 +881,9 @@ def winnow_dup_pairs(
     # subtree.  The sampled index is tiny next to the corpus, so
     # materializing it once is the cheaper side of the trade at any
     # scale (same discipline as triangle_count's canon/deg split).
-    fps = winnow_fingerprints(
-        df, text_col, id_col, k=k, w=w, salt=salt
-    ).localCheckpoint(eager=True)
+    fps = winnow_fingerprints(df, text_col, id_col, k=k, w=w).localCheckpoint(
+        eager=True
+    )
     if max_fp_df is not None:
         hot = (
             fps.groupBy("fp")
@@ -960,7 +936,6 @@ def simhash(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    salt: str = "simhash-v1",
 ) -> DataFrame:
     """(id, simhash bigint): the engine-portable 64-bit SimHash.  Per
     token ONE salted md5; each of the digest's 16 leading hex digits
@@ -982,7 +957,7 @@ def simhash(
         F.explode(tokens(F.coalesce(F.col(text_col), F.lit("")))).alias("t"),
     )
     h = tok.select(
-        "id", F.md5(F.concat(F.lit(salt + ":"), F.col("t"))).alias("h")
+        "id", F.md5(F.concat(F.lit(SIMHASH_SALT + ":"), F.col("t"))).alias("h")
     )
     packed = F.lit(0).cast("long")
     for j in range(16):

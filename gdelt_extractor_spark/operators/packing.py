@@ -22,13 +22,48 @@ from pyspark.sql.types import NumericType
 from ..functions.text import tokens
 
 
+# Salt of the packing order key md5(PACK_SALT:id).  One constant, not a
+# per-call option: ``lm_block_spans`` is the block map of
+# ``pack_sequences``' layout and only agrees with it under the same
+# order.  The DuckDB oracles interpolate this value.
+PACK_SALT = "pack-v1"
+
+
+def _placement_base(
+    df: DataFrame, id_col: str, text_col: str, n_shards: int
+) -> DataFrame:
+    """(doc_id, shard, _ok, n_tokens): the per-document inputs every
+    packing layout shares.  Shard = id mod n_shards for integral ids,
+    else the first 8 hex digits of the order key mod n_shards; ``_ok``
+    = md5(PACK_SALT:id), the within-shard order."""
+    order_key = F.md5(
+        F.concat(F.lit(PACK_SALT + ":"), F.col(id_col).cast("string"))
+    )
+    if isinstance(df.schema[id_col].dataType, NumericType):
+        shard = F.pmod(F.col(id_col), F.lit(n_shards))
+    else:
+        shard = F.pmod(
+            F.conv(F.substring(order_key, 1, 8), 16, 10).cast("long"),
+            F.lit(n_shards),
+        )
+    return df.select(
+        F.col(id_col).alias("doc_id"),
+        shard.cast("int").alias("shard"),
+        order_key.alias("_ok"),
+        # NULL text counts as empty, not size(NULL) = -1 — a negative
+        # n_tokens corrupts running sums / bin capacities (ADVICE r8)
+        F.size(tokens(F.coalesce(F.col(text_col), F.lit(""))))
+        .cast("long")
+        .alias("n_tokens"),
+    )
+
+
 def pack_sequences(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     budget: int = 2048,
     n_shards: int = 8,
-    order_salt: str = "pack-v1",
 ) -> DataFrame:
     """Per-document placement in the concat-then-chunk layout:
     (doc_id, shard, n_tokens, seq_id, seq_offset), where ``seq_id``
@@ -41,31 +76,12 @@ def pack_sequences(
     the DuckDB oracle reproduces verbatim); non-numeric ids hash into
     shards through the md5 order key (first 8 hex digits mod
     n_shards), so string document ids pack without an analysis error.
-    Order = (md5(salt:id), id) — partition-independent, reproducible,
+    Order = (md5(PACK_SALT:id), id) — partition-independent, reproducible,
     and portable to the DuckDB oracle.  Tokens are the repo-wide
     whitespace tokenizer (``functions/text.py``), so budgets line up
     with ``token_stats``.
     """
-    order_key = F.md5(
-        F.concat(F.lit(order_salt + ":"), F.col(id_col).cast("string"))
-    )
-    if isinstance(df.schema[id_col].dataType, NumericType):
-        shard = F.pmod(F.col(id_col), F.lit(n_shards))
-    else:
-        shard = F.pmod(
-            F.conv(F.substring(order_key, 1, 8), 16, 10).cast("long"),
-            F.lit(n_shards),
-        )
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        shard.cast("int").alias("shard"),
-        order_key.alias("_ok"),
-        # NULL text counts as empty, not size(NULL) = -1 — a negative
-        # n_tokens corrupts running sums / bin capacities (ADVICE r8)
-        F.size(tokens(F.coalesce(F.col(text_col), F.lit(""))))
-        .cast("long")
-        .alias("n_tokens"),
-    )
+    base = _placement_base(df, id_col, text_col, n_shards)
     w = Window.partitionBy("shard").orderBy(F.col("_ok").asc(), F.col("doc_id").asc())
     start = F.sum("n_tokens").over(w) - F.col("n_tokens")
     return base.select(
@@ -203,7 +219,6 @@ def lm_block_spans(
     text_col: str = "text",
     budget: int = 2048,
     n_shards: int = 8,
-    order_salt: str = "pack-v1",
 ) -> DataFrame:
     """The block→document materialization map for concat-then-chunk
     packing: one row per (block, contributing document span), i.e.
@@ -227,26 +242,7 @@ def lm_block_spans(
     doc occupies >= 1 slot, same as pack_sequences).  All codegen:
     sequence() explode + greatest/least span clipping.
     """
-    order_key = F.md5(
-        F.concat(F.lit(order_salt + ":"), F.col(id_col).cast("string"))
-    )
-    if isinstance(df.schema[id_col].dataType, NumericType):
-        shard = F.pmod(F.col(id_col), F.lit(n_shards))
-    else:
-        shard = F.pmod(
-            F.conv(F.substring(order_key, 1, 8), 16, 10).cast("long"),
-            F.lit(n_shards),
-        )
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        shard.cast("int").alias("shard"),
-        order_key.alias("_ok"),
-        # NULL text counts as empty, not size(NULL) = -1 — a negative
-        # n_tokens corrupts running sums / bin capacities (ADVICE r8)
-        F.size(tokens(F.coalesce(F.col(text_col), F.lit(""))))
-        .cast("long")
-        .alias("n_tokens"),
-    )
+    base = _placement_base(df, id_col, text_col, n_shards)
     w = Window.partitionBy("shard").orderBy(
         F.col("_ok").asc(), F.col("doc_id").asc()
     )
@@ -286,7 +282,6 @@ def pack_bins_bfd(
     text_col: str = "text",
     budget: int = 2048,
     n_shards: int = 8,
-    order_salt: str = "pack-v1",
 ) -> DataFrame:
     """Best-fit-decreasing bin packing — the PADDED-BATCH layout
     (every document whole in exactly one ``budget``-token bin, unused
@@ -302,7 +297,7 @@ def pack_bins_bfd(
     truncated by the materializing writer — never silently dropped).
 
     Determinism: documents are considered in (n_tokens DESC,
-    md5(salt:id), id) order and placed into the OPEN BIN WITH THE
+    md5(PACK_SALT:id), id) order and placed into the OPEN BIN WITH THE
     SMALLEST SUFFICIENT REMAINING CAPACITY (ties → lowest bin_id), so
     the assignment is a pure function of the (shard, length) multiset
     — partition-independent and reproducible (property-tested against
@@ -321,26 +316,7 @@ def pack_bins_bfd(
     equality) are property-tested."""
     import pandas as pd
 
-    order_key = F.md5(
-        F.concat(F.lit(order_salt + ":"), F.col(id_col).cast("string"))
-    )
-    if isinstance(df.schema[id_col].dataType, NumericType):
-        shard = F.pmod(F.col(id_col), F.lit(n_shards))
-    else:
-        shard = F.pmod(
-            F.conv(F.substring(order_key, 1, 8), 16, 10).cast("long"),
-            F.lit(n_shards),
-        )
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        shard.cast("int").alias("shard"),
-        order_key.alias("_ok"),
-        # NULL text counts as empty, not size(NULL) = -1 — a negative
-        # n_tokens corrupts running sums / bin capacities (ADVICE r8)
-        F.size(tokens(F.coalesce(F.col(text_col), F.lit(""))))
-        .cast("long")
-        .alias("n_tokens"),
-    )
+    base = _placement_base(df, id_col, text_col, n_shards)
     id_dt = df.schema[id_col].dataType.simpleString()
 
     def _bfd(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -8,7 +8,7 @@
   when |Q| is small.
 - ``ann_lsh``: random-hyperplane LSH. Vectors get a sign-bit bucket
   from seeded pseudo-random hyperplanes (deterministic: numpy
-  RandomState(seed), Arrow-batched pandas UDF); queries probe their
+  RandomState(LSH_SEED), Arrow-batched pandas UDF); queries probe their
   bucket only, turning the scan into an equi-join on bucket id.
 """
 
@@ -341,36 +341,31 @@ def mmr_rerank(
     )
 
 
-def lsh_bucket_udf(dim: int, n_planes: int = 12, seed: int = 42):
-    """Pandas UDF: array<double|float> vector → int bucket (sign bits
-    of projections onto seeded random hyperplanes).
-
-    RandomState(seed) is bit-reproducible across machines, so bucket
-    assignment is deterministic cluster-wide; the planes matrix is
-    captured in the closure and shipped once per executor.
-    """
-    planes = np.random.RandomState(seed).standard_normal((dim, n_planes))
-
-    @F.pandas_udf("long")
-    def bucket(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy())  # (batch, dim)
-        bits = (m @ planes) > 0  # (batch, n_planes)
-        weights = 1 << np.arange(n_planes, dtype=np.int64)
-        return pd.Series(bits @ weights)
-
-    return bucket
+# Seed of the random-hyperplane LSH planes.  One constant, not a
+# per-call option: vectors and queries must be bucketed by the same
+# planes, and the DuckDB oracle regenerates them from this value.
+LSH_SEED = 42
 
 
-def lsh_multitable_udf(dim: int, n_planes: int, n_tables: int, seed: int = 42):
+def _lsh_planes(dim: int, n_planes: int, n_tables: int) -> np.ndarray:
+    """The (n_tables, dim, n_planes) hyperplanes: one
+    RandomState(LSH_SEED) draw, bit-reproducible across machines, so
+    bucket assignment is deterministic cluster-wide."""
+    return np.random.RandomState(LSH_SEED).standard_normal(
+        (n_tables, dim, n_planes)
+    )
+
+
+def lsh_multitable_udf(dim: int, n_planes: int, n_tables: int):
     """Pandas UDF: vector → array of one bucket id per hash table.
 
     Multi-table LSH is the standard recall lever: a true neighbor is
     a candidate if it collides in ANY of the ``n_tables``
-    independently-seeded plane sets — P(miss) = (1-p^k)^L instead of
-    1-p^k.  All tables are evaluated in one Arrow batch pass.
+    independent plane sets — P(miss) = (1-p^k)^L instead of
+    1-p^k.  All tables are evaluated in one Arrow batch pass; the
+    planes matrix rides the closure, shipped once per executor.
     """
-    rs = np.random.RandomState(seed)
-    planes = rs.standard_normal((n_tables, dim, n_planes))  # (L, d, k)
+    planes = _lsh_planes(dim, n_planes, n_tables)  # (L, d, k)
     weights = 1 << np.arange(n_planes, dtype=np.int64)
 
     @F.pandas_udf("array<long>")
@@ -521,9 +516,7 @@ def ann_ivf(
     )
 
 
-def lsh_query_probes_udf(
-    dim: int, n_planes: int, n_tables: int, seed: int = 42, multiprobe: int = 0
-):
+def lsh_query_probes_udf(dim: int, n_planes: int, n_tables: int, multiprobe: int = 0):
     """Pandas UDF: query vector → per-table probe bucket lists
     (array<array<long>>).
 
@@ -533,8 +526,7 @@ def lsh_query_probes_udf(
     near-miss neighbors usually differ in exactly the plane whose
     projection was closest to zero, so probing adjacent buckets
     recovers them without more tables (Lv et al., VLDB'07)."""
-    rs = np.random.RandomState(seed)
-    planes = rs.standard_normal((n_tables, dim, n_planes))
+    planes = _lsh_planes(dim, n_planes, n_tables)
     weights = 1 << np.arange(n_planes, dtype=np.int64)
 
     @F.pandas_udf("array<array<long>>")
@@ -563,7 +555,6 @@ def ann_lsh(
     dim: int = 64,
     n_planes: int = 8,
     n_tables: int = 6,
-    seed: int = 42,
     multiprobe: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -578,8 +569,8 @@ def ann_lsh(
     buckets, distinct candidate pairs, rerank.  No full scan per
     query, no cartesian product; recall tuned by (n_planes,
     n_tables, multiprobe) and tested against ann_bruteforce."""
-    buckets = lsh_multitable_udf(dim, n_planes, n_tables, seed)
-    probes = lsh_query_probes_udf(dim, n_planes, n_tables, seed, multiprobe)
+    buckets = lsh_multitable_udf(dim, n_planes, n_tables)
+    probes = lsh_query_probes_udf(dim, n_planes, n_tables, multiprobe)
     v = (
         vectors.select(F.col(id_col).alias("nbr_id"), _as_double(vec_col).alias("v"))
         .withColumn("bks", buckets("v"))
@@ -1472,13 +1463,17 @@ def _align_ivf(
     return _margin_from_scored(scored, k, margin_threshold, broadcast_avg=False)
 
 
+# Salt of source_similarity's shingle hashes and permutations; the
+# DuckDB oracle interpolates this value.
+SRCSIM_SALT = "srcsim-v1"
+
+
 def source_similarity(
     docs: DataFrame,
     text_col: str = "text",
     source_col: str = "source",
     k: int = 5,
     m: int = 32,
-    salt: str = "srcsim-v1",
 ) -> DataFrame:
     """Corpus-level similarity triage: estimated shingle-set Jaccard
     between every pair of SOURCES via per-source MinHash signatures —
@@ -1495,12 +1490,12 @@ def source_similarity(
     ``h0``), and slot ``i``'s value is the universal-family
     permutation ``(h0·a_i + b_i) mod 2^48`` with per-slot odd
     multipliers ``a_i ∈ [1, 2^14)`` and offsets ``b_i ∈ [0, 2^48)``
-    both derived from md5(salt:perm:i) — so the m-fold expansion is
-    pure integer codegen, not m cryptographic hashes (A/B at sf0.1:
-    2.5s → see BENCH_FULL), products stay ≤ 62 bits (no signed-64
-    overflow), and every step remains engine-portable / DuckDB-
-    replicable — this operator is value-level oracle-gated, not
-    rows-only.
+    both derived from md5(SRCSIM_SALT:perm:i) — so the m-fold
+    expansion is pure integer codegen, not m cryptographic hashes
+    (A/B at sf0.1: 2.5s → see BENCH_FULL), products stay ≤ 62 bits
+    (no signed-64 overflow), and every step remains engine-portable /
+    DuckDB-replicable — this operator is value-level oracle-gated,
+    not rows-only.
 
     Scale shape: per-source distinct shingles (one md5 each) → ONE
     explode by the m slots with integer-only per-slot math → ONE
@@ -1509,9 +1504,8 @@ def source_similarity(
     comparison joins signatures on the slot key and aggregates per
     pair, O(|sources|²·m) on a tiny frame.  At 100 TB the only
     corpus-sized work is the shingle scan."""
-    import hashlib
-
     from ..functions.text import tokens
+    from .dedup import _md5_perm_consts
 
     base = (
         docs.select(F.col(source_col).alias("source"), tokens(text_col).alias("_t"))
@@ -1536,7 +1530,7 @@ def source_similarity(
         "source",
         F.conv(
             F.substring(
-                F.md5(F.concat(F.lit(salt + ":"), F.col("shingle"))), 1, 12
+                F.md5(F.concat(F.lit(SRCSIM_SALT + ":"), F.col("shingle"))), 1, 12
             ),
             16,
             10,
@@ -1544,15 +1538,6 @@ def source_similarity(
         .cast("long")
         .alias("_h0"),
     )
-    # per-slot permutation constants, derived (not random) so the
-    # DuckDB oracle regenerates them; odd a_i for a proper universal
-    # multiply family
-    def _perm(i: int) -> tuple[int, int]:
-        d = hashlib.md5(f"{salt}:perm:{i}".encode()).hexdigest()
-        a = (int(d[:4], 16) % (1 << 14)) | 1
-        b = int(d[4:16], 16)
-        return a, b
-
     mask = (1 << 48) - 1
     # the m slot minima are m wide aggregate expressions over the
     # distinct-shingle stream, not a posexplode ×m followed by a
@@ -1565,7 +1550,7 @@ def source_similarity(
         F.min(
             (F.col("_h0") * F.lit(a) + F.lit(b)) % F.lit(mask + 1)
         ).alias(f"_m{i}")
-        for i, (a, b) in ((i, _perm(i)) for i in range(m))
+        for i, (a, b) in enumerate(_md5_perm_consts(SRCSIM_SALT, m))
     ]
     sig = (
         h0.groupBy("source")

@@ -65,6 +65,11 @@ def lang_id(
     return base.select("doc_id", pred.alias("lang_pred"), *keep_cols)
 
 
+# Salt of lang_id_ngram's train/val split and n-gram buckets; the
+# DuckDB oracle interpolates this value.
+LANGNB_SALT = "langnb-v1"
+
+
 def lang_id_ngram(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -73,7 +78,6 @@ def lang_id_ngram(
     n: int = 3,
     n_buckets: int = 4096,
     train_pct: int = 80,
-    salt: str = "langnb-v1",
 ) -> DataFrame:
     """Trained language ID: multiclass Naive Bayes over hashed char
     n-grams — the fastText/langid.py recipe re-expressed as one
@@ -115,7 +119,9 @@ def lang_id_ngram(
     split_bucket = (
         F.conv(
             F.substring(
-                F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))),
+                F.md5(
+                    F.concat(F.lit(LANGNB_SALT + ":"), F.col(id_col).cast("string"))
+                ),
                 1,
                 4,
             ),
@@ -149,7 +155,7 @@ def lang_id_ngram(
                 F.substring(
                     F.md5(
                         F.concat(
-                            F.lit(salt + ":"),
+                            F.lit(LANGNB_SALT + ":"),
                             F.substring("_norm", F.col("_pos"), n),
                         )
                     ),
@@ -422,8 +428,7 @@ def top_bigrams(df: DataFrame, text_col: str, k: int = 20) -> DataFrame:
 
 def fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Document fingerprints: md5 of the normalized text (exact-dup
-    key) plus a 64-bit xxhash64 (cheap join/bucket key).  The
-    rolling-hash shingle variant lives in dedup.shingles/minhash."""
+    key) plus a 64-bit xxhash64 (cheap join/bucket key)."""
     norm = normalize_text(text_col)
     return df.select(
         F.col(id_col).alias("doc_id"),
@@ -848,15 +853,21 @@ def bpe_pair_counts(
     )
 
 
-def _feature_hash_counts(toks: DataFrame, dim: int, seed: str) -> DataFrame:
+# Salt of the feature-hashing space md5(HASH_EMB_SALT:token) shared by
+# ``hashed_embedding`` and ``hybrid_search``'s dense tower (whose query
+# side hashes on the driver); the DuckDB oracles interpolate this value.
+HASH_EMB_SALT = "hash-emb-v1"
+
+
+def _feature_hash_counts(toks: DataFrame, dim: int) -> DataFrame:
     """(id, t) non-empty token rows → (id, b, c) signed bucket
     counts — the Weinberger hashing-trick core shared by
     ``hashed_embedding`` and ``hybrid_search``'s dense tower (r11:
     one definition of the bucket+sign idiom).  Bucket from the first
-    12 hex digits of md5(seed:token), sign from the parity of hex
-    digit 13 — the repo-wide md5-bucket idiom DuckDB reproduces
+    12 hex digits of md5(HASH_EMB_SALT:token), sign from the parity of
+    hex digit 13 — the repo-wide md5-bucket idiom DuckDB reproduces
     verbatim."""
-    hx = F.md5(F.concat(F.lit(seed + ":"), F.col("t")))
+    hx = F.md5(F.concat(F.lit(HASH_EMB_SALT + ":"), F.col("t")))
     h = F.conv(F.substring(hx, 1, 12), 16, 10).cast("long")
     sign_even = (
         F.pmod(F.conv(F.substring(hx, 13, 1), 16, 10).cast("long"), F.lit(2)) == 0
@@ -874,7 +885,6 @@ def hashed_embedding(
     id_col: str,
     text_col: str,
     dim: int = 64,
-    seed: str = "hash-emb-v1",
     layout: str = "dense",
 ) -> DataFrame:
     """Feature-hashed document embeddings (Weinberger et al. 2009):
@@ -912,7 +922,7 @@ def hashed_embedding(
     toks = df.select(
         F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("t")
     ).filter(F.col("t") != "")
-    counts = _feature_hash_counts(toks, dim, seed)
+    counts = _feature_hash_counts(toks, dim)
     if layout == "long":
         # the bucket aggregate feeds BOTH the (id, bucket) grid join
         # and the nrm_l rollup — two static evaluations of the
@@ -1163,7 +1173,6 @@ def hybrid_search(
             F.col("_id").alias("id"), F.col("_t").alias("t")
         ),
         dim=64,
-        seed="hash-emb-v1",
     )
     # unit-L2 normalization per hashed_embedding's long-layout
     # contract (value = c / sqrt(Σc²), zero-norm → 0.0): keep this
@@ -1209,7 +1218,7 @@ def hybrid_search(
     for _t in _qnorm.split(" "):
         if _t == "":
             continue
-        _hx = _hl.md5(f"hash-emb-v1:{_t}".encode()).hexdigest()
+        _hx = _hl.md5(f"{HASH_EMB_SALT}:{_t}".encode()).hexdigest()
         _b = int(_hx[:12], 16) % 64
         _s = -1.0 if int(_hx[12], 16) % 2 == 0 else 1.0
         _cnt[_b] = _cnt.get(_b, 0.0) + _s

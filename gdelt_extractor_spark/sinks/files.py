@@ -276,17 +276,23 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def shard_assignment(id_col: str, n_shards: int, salt: str = "shards-v1") -> F.Column:
+# Salt of the training-shard layout.  One constant, not a per-call
+# option: the manifest, the parquet shards and the jsonl/webdataset
+# exports must agree on every row's shard, and a new value re-lays out
+# data already on disk.  The DuckDB oracle interpolates this value.
+SHARD_SALT = "shards-v1"
+
+
+def shard_assignment(id_col: str, n_shards: int) -> F.Column:
     """Deterministic shard id for a row: first 8 hex digits of
-    md5(salt:id) mod ``n_shards``.  Content-stable (identical across
-    runs, engines, partitionings — unlike round-robin repartition),
-    uniform by construction, and salt-versioned so a new salt
-    redraws the layout.  Pure expression — usable in queries
-    (manifests) and writes alike."""
+    md5(SHARD_SALT:id) mod ``n_shards``.  Content-stable (identical
+    across runs, engines, partitionings — unlike round-robin
+    repartition) and uniform by construction.  Pure expression —
+    usable in queries (manifests) and writes alike."""
     return (
         F.conv(
             F.substring(
-                F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))),
+                F.md5(F.concat(F.lit(SHARD_SALT + ":"), F.col(id_col).cast("string"))),
                 1,
                 8,
             ),
@@ -302,7 +308,6 @@ def shard_manifest(
     id_col: str = "doc_id",
     text_col: str | None = "text",
     n_shards: int = 16,
-    salt: str = "shards-v1",
 ) -> DataFrame:
     """Per-shard accounting for a training export: (shard, n_docs,
     n_tokens, n_chars) under the deterministic ``shard_assignment``.
@@ -313,7 +318,7 @@ def shard_manifest(
     from ..functions.text import tokens
 
     out = df.select(
-        shard_assignment(id_col, n_shards, salt).alias("shard"),
+        shard_assignment(id_col, n_shards).alias("shard"),
         *( [F.size(tokens(text_col)).alias("_nt"), F.length(text_col).alias("_nc")]
            if text_col else [] ),
     )
@@ -331,12 +336,11 @@ def write_training_shards(
     path: str,
     id_col: str = "doc_id",
     n_shards: int = 16,
-    salt: str = "shards-v1",
     mode: str = "overwrite",
 ) -> None:
     """Deterministic sharded export — the last step of a curation
     pipeline: rows land in shard=<k>/ directories keyed by
-    ``shard_assignment``, so a re-run (same salt) reproduces the
+    ``shard_assignment``, so a re-run reproduces the
     exact same layout and per-shard consumers (one training worker
     per shard) see a stable assignment.
 
@@ -345,7 +349,7 @@ def write_training_shards(
     ``partitionBy`` routes rows to their directory without a second
     exchange.  At 100 TB pick n_shards ≈ total_size /
     desired_file_size and the write stays a single wide stage."""
-    out = df.withColumn("shard", shard_assignment(id_col, n_shards, salt))
+    out = df.withColumn("shard", shard_assignment(id_col, n_shards))
     (
         out.repartition(n_shards, F.col("shard"))
         .write.mode(mode)

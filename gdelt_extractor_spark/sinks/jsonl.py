@@ -5,7 +5,8 @@ layout dataset hubs and tokenizer pipelines consume.
 Differs from ``df.write.json`` on exactly the guarantees a training
 handoff needs and Spark's committer does not give:
 - FIXED shard count and content-stable row routing (md5 shard
-  assignment, salt-redrawable) — not one file per task of whatever
+  assignment, the same as ``files.write_training_shards``) — not one
+  file per task of whatever
   parallelism the job ran at;
 - byte-deterministic output (within-shard id sort, JVM ``to_json``
   with a fixed struct field order, gzip mtime pinned to 0) — two
@@ -62,7 +63,6 @@ def write_jsonl_shards(
     id_col: str = "doc_id",
     columns: list[str] | None = None,
     n_shards: int = 8,
-    salt: str = "shards-v1",
     compress: bool = True,
 ) -> list[dict]:
     """Export ``df`` as ``n_shards`` JSONL shards under ``path``.
@@ -85,7 +85,7 @@ def write_jsonl_shards(
             F.col(id_col).alias("jl_id"),
             F.to_json(F.struct(*cols)).alias("jl_line"),
         )
-        .withColumn("jl_shard", shard_assignment("jl_id", n_shards, salt))
+        .withColumn("jl_shard", shard_assignment("jl_id", n_shards))
         .repartition(n_shards, F.col("jl_shard"))
         .sortWithinPartitions("jl_id")
     )

@@ -5,8 +5,8 @@ sharing a basename, read sequentially by one dataloader worker per
 shard.
 
 Scale shape: ONE shuffle — rows hash-route to their content-stable
-shard (``files.shard_assignment``: md5-derived, salt-redrawable)
-and sort by id within the partition, then each task STREAMS its
+shard (``files.shard_assignment``: md5-derived, the training-shard
+layout) and sort by id within the partition, then each task STREAMS its
 shard's tar straight to executor-local disk inside the Arrow pass
 (constant memory per task: one open tar file, one batch of rows).
 The driver never sees payload bytes; it collects only the
@@ -61,7 +61,6 @@ def write_webdataset(
     id_col: str = "doc_id",
     members: dict[str, str] | None = None,
     n_shards: int = 8,
-    salt: str = "shards-v1",
 ) -> list[dict]:
     """Export ``df`` as WebDataset tar shards.
 
@@ -88,7 +87,7 @@ def write_webdataset(
     ]
     routed = (
         df.select(*cols)
-        .withColumn("wds_shard", shard_assignment("wds_id", n_shards, salt))
+        .withColumn("wds_shard", shard_assignment("wds_id", n_shards))
         .repartition(n_shards, F.col("wds_shard"))
         .sortWithinPartitions("wds_id")
     )

@@ -1,25 +1,13 @@
-"""Streaming per-key anomaly scoring on the Spark 4 transformWithState
-API — the live sibling of the batch ``event_spikes`` z-score query.
+"""Streaming per-key anomaly scoring (``applyInPandasWithState``) —
+the live sibling of the batch ``event_spikes`` z-score query.
 
 Each key maintains an exponentially weighted mean/variance
-(ValueState) and scores every event BEFORE folding it in:
+(GroupState) and scores every event BEFORE folding it in:
 ``z = (x - mean) / sqrt(var)``; ``is_anomaly`` fires after a warmup
 count once |z| exceeds the threshold.  EWMA decay bounds the state to
 three doubles per key no matter how long the stream runs, and a
 per-key event-time timer clears state for keys idle past the TTL —
 O(active keys) forever, the same posture as ``streaming_sessionize``.
-
-Two implementations of the same semantics:
-
-- ``streaming_anomaly`` — ``applyInPandasWithState`` (the API the
-  rest of streaming/ uses); fully exercised by the test suite.
-- ``streaming_anomaly_tws`` — the Spark 4 ``transformWithState``
-  form (typed ValueState + first-class timers).  ENV-GATED: the TWS
-  Python runner imports ``google.protobuf``, which this container
-  does not ship, so the code path raises a clear error here and runs
-  only where protobuf is installed (``_HAS_PROTOBUF`` guard).  The
-  state logic is shared (``_ewma_step``), so the gated wrapper adds
-  only API plumbing.
 """
 
 from __future__ import annotations
@@ -30,13 +18,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-try:  # TWS needs google.protobuf in the Python runner (not shipped here)
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-
-    _HAS_PROTOBUF = True
-except ImportError:
-    _HAS_PROTOBUF = False
 
 OUT_SCHEMA = (
     "user_id long, event_time timestamp, value double, "
@@ -129,80 +110,5 @@ def streaming_anomaly(
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def streaming_anomaly_tws(
-    events: DataFrame,
-    alpha: float = 0.1,
-    z_thresh: float = 3.0,
-    warmup: int = 5,
-    watermark: str = "30 minutes",
-    idle_timeout_ms: int = 3_600_000,
-    time_col: str = "event_time",
-) -> DataFrame:
-    """Same semantics on the Spark 4 ``transformWithState`` API
-    (typed ValueState + timers).  ENV-GATED: raises unless
-    google.protobuf is importable (the TWS Python runner requires
-    it); logic is shared with ``streaming_anomaly`` via
-    ``_ewma_step``."""
-    if not _HAS_PROTOBUF:
-        raise NotImplementedError(
-            "transformWithState needs google.protobuf in the Python "
-            "runtime; use streaming_anomaly (applyInPandasWithState) here"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _EwmaAnomaly(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState("ewma", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            st = self._state.get() if self._state.exists() else (0.0, 0.0, 0)
-            batch = pd.concat(list(rows), ignore_index=True)
-            if not len(batch):
-                return
-            batch = batch.sort_values("event_time")
-            out_z, out_flag, st = _ewma_step(
-                batch, st, alpha, z_thresh, warmup
-            )
-            self._state.update(st)
-            last_ms = int(batch["event_time"].max().value // 1_000_000)
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(last_ms + idle_timeout_ms)
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(batch),
-                    "event_time": batch["event_time"].to_list(),
-                    "value": batch["value"].astype(float).to_list(),
-                    "z": out_z,
-                    "is_anomaly": out_flag,
-                }
-            )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            self._state.clear()
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    if time_col != "event_time":
-        events = events.withColumnRenamed(time_col, "event_time")
-    return (
-        events.withWatermark("event_time", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_EwmaAnomaly(),
-            outputStructType=OUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
         )
     )

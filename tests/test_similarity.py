@@ -128,15 +128,15 @@ def test_ivf_centroids_deterministic(spark, sf_dir):
 
 def test_lsh_bucket_determinism(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").limit(50)
-    b = S.lsh_bucket_udf(dim=64, n_planes=8, seed=7)
+    b = S.lsh_multitable_udf(dim=64, n_planes=8, n_tables=3)
     v = emb.select(
         "vec_id",
         S._as_double("embedding").alias("v"),
-    ).withColumn("bkt", b("v"))
-    r1 = {r.vec_id: r.bkt for r in v.collect()}
-    r2 = {r.vec_id: r.bkt for r in v.collect()}
+    ).withColumn("bkts", b("v"))
+    r1 = {r.vec_id: tuple(r.bkts) for r in v.collect()}
+    r2 = {r.vec_id: tuple(r.bkts) for r in v.repartition(7).collect()}
     assert r1 == r2
-    assert all(0 <= x < 256 for x in r1.values())
+    assert all(len(t) == 3 and all(0 <= x < 256 for x in t) for t in r1.values())
 
 
 def test_fuzzy_join_semantics(spark):

@@ -234,16 +234,3 @@ def test_streaming_anomaly_transform_with_state(spark, tmp_path):
     # state persisted across batches: batch-2 stable values score small
     z2 = {str(r.event_time): r.z for r in rows}
     assert abs(z2["2024-01-01 10:01:00"]) < 4.0
-
-
-def test_streaming_anomaly_tws_env_gate(spark):
-    """The transformWithState variant must either run (protobuf
-    present) or refuse with a clear error — never crash mid-query."""
-    from gdelt_extractor_spark.streaming import anomaly as A
-
-    if not A._HAS_PROTOBUF:
-        import pytest as _pytest
-
-        df = spark.readStream.format("rate").load()
-        with _pytest.raises(NotImplementedError, match="protobuf"):
-            A.streaming_anomaly_tws(df)
