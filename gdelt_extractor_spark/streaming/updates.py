@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.gdelt import V2_EVENTS_SCHEMA
+from ..sources.gdelt import TSV_OPTIONS, V2_EVENTS_SCHEMA
 
 
 def stream_gdelt_dir(
@@ -33,8 +33,7 @@ def stream_gdelt_dir(
     """File-source stream of GDELT TSV drops."""
     return (
         spark.readStream.format("csv")
-        .option("sep", "\t")
-        .option("header", "false")
+        .options(**TSV_OPTIONS)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .schema(schema)
         .load(landing_dir)

@@ -1,3 +1,5 @@
+import contextlib
+import gc
 import os
 import sys
 
@@ -56,3 +58,33 @@ def spy(monkeypatch):
         return calls
 
     return install
+
+
+@pytest.fixture
+def round_trips(spark):
+    """``with round_trips() as calls: ...`` counts the commands the
+    Python driver sends the JVM over the Py4J gateway inside the
+    block (``len(calls)`` after).  Python's cyclic GC is collected
+    before and paused during the block, so a count does not depend on
+    when earlier garbage frees its JVM references."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    @contextlib.contextmanager
+    def count():
+        calls = []
+        real = client.send_command
+
+        def wrapper(*args, **kwargs):
+            calls.append(1)
+            return real(*args, **kwargs)
+
+        gc.collect()
+        gc.disable()
+        client.send_command = wrapper
+        try:
+            yield calls
+        finally:
+            del client.send_command  # the class's method again
+            gc.enable()
+
+    return count
