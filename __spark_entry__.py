@@ -1162,19 +1162,19 @@ def _dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-value n-gram Jaccard pairs with the hot-shingle guard on
-    (max_shingle_df=100): shingles shared by >100 docs are excluded
-    from candidate generation (killing the O(k²) hot-key join rows),
-    and surviving pairs are verified against FULL shingle sets so
-    every reported jaccard is exact.  The oracle mirrors the cap.
+    """Exact-value n-gram Jaccard pairs from the prefix-filtered
+    set-similarity join with the hot-shingle guard on
+    (max_shingle_df=100): shingles shared by >100 docs join nothing
+    (killing the O(k²) hot-key join rows), and candidates are
+    verified against FULL shingle sets so every reported jaccard is
+    exact.  A pair is missed only when every shingle it shares is
+    hot; the oracle mirrors that with its cold-candidate CTE.
 
-    Plain scan (width=None): the r3 restructure moved the per-doc
-    stats onto the cold rows and checkpoints them before the
-    self-join; measured at sf0.1 the plain scan is a stable 4.2-4.3s
-    while the width=0 repartitioned lineage is 12-17s with high
-    variance (repartition × persist × localCheckpoint interplay).
-    At real scale the scan has many splits and the repartition is a
-    no-op anyway (see ``parallelized``)."""
+    Plain scan (width=None): measured at sf0.1 (r3) the plain scan
+    was a stable 4.2-4.3s while the width=0 repartitioned lineage
+    was 12-17s with high variance (repartition × localCheckpoint
+    interplay).  At real scale the scan has many splits and the
+    repartition is a no-op anyway (see ``parallelized``)."""
     docs = _docs(spark, sf_dir)
     return D.dedup_ngram_jaccard(
         docs, "text", "doc_id", n=3, threshold=0.6, max_shingle_df=100
@@ -1187,11 +1187,11 @@ def _dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same 0.6 threshold, hot-shingle-capped candidates) — the
     recall-knob report every production dedup publishes.  Both
     rankers and the metric arithmetic are engine-portable, so the
-    audit itself is value-hash oracle-gated.  r10: the composed
-    ``dedup_eval`` operator shares ONE tokenize→shingle→md5 pass
-    between both pipelines (identical output values; the old
-    composition tokenized the corpus twice and re-tokenized
-    candidate texts in the truth verify)."""
+    audit itself is value-hash oracle-gated.  The ``dedup_eval``
+    operator shares ONE tokenize→shingle→md5 pass and one per-doc
+    aggregate between both sides: the truth candidates come from
+    ``dedup_ngram_jaccard``'s prefix-filtered join, and one array-
+    intersection verify scores the union of both candidate sets."""
     docs = _docs(spark, sf_dir, width=0)
     return D.dedup_eval(docs, "text", "doc_id", n=3, threshold=0.6)
 
@@ -1212,10 +1212,12 @@ def _winnow_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric shingle containment |A∩B|/min(|A|,|B|) ≥ 0.8 —
     catches short-doc-quoted-in-long-doc pairs Jaccard misses.
-    Hot-shingle-capped with the lossless containment upper-bound
-    prune (values identical to the uncapped baseline); the oracle
-    takes candidates from the shared cold-shingle CTE chain and
-    verifies the same least-size division on full shingle sets."""
+    Hot-shingle-capped, through the same set-similarity join as
+    ``dedup_ngram_jaccard`` with only the smaller doc cut to its
+    prefix (exact values; a pair is missed only when every shingle
+    it shares is hot); the oracle takes candidates from the shared
+    cold-shingle CTE chain and verifies the same least-size division
+    on full shingle sets."""
     return D.dedup_containment(
         _docs(spark, sf_dir, width=0), "text", "doc_id",
         threshold=0.8, max_shingle_df=100,
@@ -1531,7 +1533,8 @@ def _curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full near-dup pipeline as ONE oracle-gated unit: exact
-    n-gram Jaccard pairs (threshold 0.6, hot-shingle cap 100) →
+    n-gram Jaccard pairs (threshold 0.6, hot-shingle cap 100, the
+    prefix-filtered set-similarity join) →
     connected components (transitive closure to clusters) →
     keep_canonical (anti join drops every non-minimum cluster
     member).  Composes dedup.py's three stages end-to-end — the

@@ -11,13 +11,17 @@ Scale posture (100 TB):
   dedup key / content hash; hash keys are uniform by construction so
   no skew.  Aggregation is partial (map-side combine) before the
   shuffle.
-- ``dedup_ngram_jaccard`` is the exact baseline: its shuffle key is
-  the shingle, and the pair-join is restricted to docs sharing a
-  shingle — never a cartesian product.  The hot-shingle DF cap is ON
-  by default (uncapped is O(k²) per shingle shared by k docs — opt
-  in via ``max_shingle_df=None`` only on bounded corpora); at 100 TB
-  use ``dedup_minhash_lsh`` whose candidate set is bounded by LSH
-  bands.
+- ``dedup_ngram_jaccard`` / ``dedup_containment`` (and
+  ``dedup_eval``'s truth side) are one exact set-similarity join:
+  docs meet only through a shared shingle in a doc's PREFIX — its
+  rarest shingles under one global (doc frequency, hash) order
+  (Vernica, Carey, Li 2010) — never a cartesian product; a
+  positional bound prunes candidates, and the verify intersects the
+  two docs' sorted shingle arrays, one row per candidate.  The
+  hot-shingle cap (``max_shingle_df``, on by default) keeps shingles
+  in more docs than the cap out of the join, so a pair is missed
+  only when every shingle it shares is hot; at 100 TB use
+  ``dedup_minhash_lsh`` whose candidate set is bounded by LSH bands.
 - ``dedup_minhash_lsh``: signatures from one map-side-combined
   groupBy(id), candidates from a (band, bucket) equi-join, then
   exact-Jaccard verification only on candidates.
@@ -140,6 +144,154 @@ def _shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFram
     ).distinct()
 
 
+def _set_docs(rows: DataFrame, key: str, *extra: Column) -> DataFrame:
+    """(id, _sk[, extra...]) — one row per doc, checkpointed: the
+    query's one corpus-scale materialization.
+
+    ``rows`` holds one row per DISTINCT (id, ``key``).  ``_sk`` is the
+    doc's key set as (nd, k) structs sorted ascending, where nd is the
+    key's document frequency (a window count over the key partition).
+    nd is a function of k, so (nd, k) is one GLOBAL total order,
+    rarest first — the token order of the prefix filter — and
+    ``size(_sk)`` is the set size.  ``extra`` aggregates ride the same
+    groupBy(id) (``dedup_eval``'s token count and slot minima).
+
+    Memory bound: the checkpoint holds every distinct key of every
+    doc, hot keys included (the verify counts full intersections), so
+    an everywhere-hot shingle keeps O(n_docs) entries resident.
+    localCheckpoint stores MEMORY_AND_DISK, so overflow spills to
+    executor-local disk instead of OOM; pinned by
+    tests/test_dedup.py::test_hot_shingle_checkpoint_bound."""
+    sk = F.sort_array(F.collect_list(F.struct("nd", F.col(key).alias("k"))))
+    return (
+        rows.withColumn("nd", F.count(F.lit(1)).over(Window.partitionBy(key)))
+        .groupBy("id")
+        .agg(sk.alias("_sk"), *extra)
+        .localCheckpoint(eager=True)
+    )
+
+
+def _set_candidates(
+    docs: DataFrame, threshold: float, cap: int | None, containment: bool = False
+) -> DataFrame:
+    """(id_a < id_b) candidate pairs of the set-similarity join over
+    ``_set_docs`` — a superset of the pairs whose Jaccard (or, with
+    ``containment``, |A∩B|/min(|A|,|B|)) reaches ``threshold`` and
+    that share at least one shingle with nd ≤ ``cap``.
+
+    Prefix filter: with t = threshold − 1e-6, a doc of size s keeps
+    its first p = s − ⌈t·s⌉ + 1 keys in the global order.  A pair
+    with overlap ≥ t·s shares its rarest common key w inside that
+    prefix (everything it shares sits at or after w, so w's position
+    is ≤ s − overlap).  Jaccard needs overlap ≥ t·max(|A|,|B|), so
+    prefix meets prefix, under the length filter
+    min(|A|,|B|) ≥ t·max(|A|,|B|).  Containment only bounds the
+    overlap by the smaller doc, so the smaller doc's prefix (the
+    lower id on equal sizes) probes ALL of the other doc's keys.
+
+    Cap: keys with nd > cap join nothing.  They sort after every
+    cold key, so w is cold whenever any shared key is: a pair is
+    missed exactly when every key it shares is hot.  ``cap=None``
+    filters nothing.
+
+    Positional bound: per pair, c matched keys, the last at positions
+    i_a, i_b.  Every shared key before it matched, and any after it
+    lies past i_a in A and past i_b in B, so
+    |A∩B| ≤ ub = c + min(|A| − i_a, |B| − i_b) − 1; pairs whose ub
+    scores below t are dropped.
+
+    The 1e-6 slack keeps every filter lossless under the verify's
+    round(value, 6) ≥ threshold acceptance: a pair with true value
+    ≥ threshold − 5e-7 rounds up into the output."""
+    t = threshold - 1e-6
+    rows = docs.select(
+        "id", F.size("_sk").alias("sz"), F.posexplode("_sk").alias("pos", "e")
+    ).select("id", "sz", "pos", "e.nd", "e.k")
+    rows = rows.filter(F.coalesce(F.col("nd") <= F.lit(cap), F.lit(True)))
+    prefix = rows.filter(F.col("pos") <= F.col("sz") - F.ceil(F.col("sz") * t))
+    a, b = prefix.alias("a"), (rows if containment else prefix).alias("b")
+    sz_a, sz_b = F.col("a.sz"), F.col("b.sz")
+    if containment:
+        on = (sz_a < sz_b) | ((sz_a == sz_b) & (F.col("a.id") < F.col("b.id")))
+    else:
+        on = (F.col("a.id") < F.col("b.id")) & (
+            F.least(sz_a, sz_b) >= F.lit(t) * F.greatest(sz_a, sz_b)
+        )
+    pairs = (
+        a.join(b, (F.col("a.k") == F.col("b.k")) & on)
+        .groupBy(
+            F.col("a.id").alias("_ia"),
+            F.col("b.id").alias("_ib"),
+            sz_a.alias("sz_a"),
+            sz_b.alias("sz_b"),
+        )
+        .agg(
+            F.count(F.lit(1)).alias("c"),
+            F.max("a.pos").alias("i_a"),
+            F.max("b.pos").alias("i_b"),
+        )
+    )
+    ub = F.col("c") + F.least(
+        F.col("sz_a") - F.col("i_a"), F.col("sz_b") - F.col("i_b")
+    ) - 1
+    # containment's probe side a is the smaller doc
+    den = F.col("sz_a") if containment else F.col("sz_a") + F.col("sz_b") - ub
+    return pairs.filter(ub / den >= t).select(
+        F.least("_ia", "_ib").alias("id_a"), F.greatest("_ia", "_ib").alias("id_b")
+    )
+
+
+def _verify_pairs(
+    cand: DataFrame, docs: DataFrame, threshold: float, containment: bool = False
+) -> DataFrame:
+    """``cand`` (id_a, id_b, ...) with the exact ``jaccard`` (or
+    ``containment``) of each pair's full key sets, rounded to 6
+    places, kept where it reaches ``threshold``.  The intersection is
+    ``size(array_intersect)`` of the two docs' ``_sk`` key arrays:
+    one row per candidate, never a per-key re-join."""
+
+    def keys(side: str) -> DataFrame:
+        return docs.select(
+            F.col("id").alias(f"id_{side}"), F.col("_sk.k").alias(f"_k{side}")
+        )
+
+    inter = F.size(F.array_intersect("_ka", "_kb"))
+    sa, sb = F.size("_ka"), F.size("_kb")
+    name = "containment" if containment else "jaccard"
+    val = inter / (F.least(sa, sb) if containment else sa + sb - inter)
+    return (
+        cand.join(keys("a"), "id_a")
+        .join(keys("b"), "id_b")
+        .withColumn(name, F.round(val, 6))
+        .filter(F.col(name) >= threshold)
+        .drop("_ka", "_kb")
+    )
+
+
+def _set_similarity_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    threshold: float,
+    cap: int | None,
+    containment: bool,
+) -> DataFrame:
+    """The shared body of the two public shingle-pair operators."""
+    docs = _set_docs(_shingle_rows(df, text_col, id_col, n), "shingle")
+    name = "containment" if containment else "jaccard"
+    return (
+        _verify_pairs(
+            _set_candidates(docs, threshold, cap, containment),
+            docs,
+            threshold,
+            containment,
+        )
+        .select("id_a", "id_b", name)
+        .localCheckpoint(eager=True)  # bounded result; lets the index go
+    )
+
+
 def dedup_ngram_jaccard(
     df: DataFrame,
     text_col: str,
@@ -150,182 +302,29 @@ def dedup_ngram_jaccard(
 ) -> DataFrame:
     """Pairs (id_a < id_b) whose n-gram shingle-set Jaccard ≥ threshold.
 
-    Exact (no approximation): the join key is the shared shingle, so
-    only documents with ≥1 common shingle ever meet.
+    Exact values: candidates come from the prefix-filtered
+    set-similarity join (``_set_candidates``: each doc's rarest
+    shingles under one global order, the length filter and a
+    positional upper bound), and every candidate is verified against
+    the two FULL shingle sets (``_verify_pairs``).  All filters carry
+    a 1e-6 slack, so none drops a pair whose Jaccard rounds up to
+    ``threshold``.
 
     ``max_shingle_df`` is the hot-shingle guard for scale: a shingle
-    occurring in k documents contributes O(k²) rows to the self-join,
-    and common phrases ("all rights reserved") make some k huge on a
-    web corpus.  With the cap set, shingles whose document frequency
-    exceeds it are excluded from CANDIDATE GENERATION only; surviving
-    pairs are verified against their FULL shingle sets, so every
-    reported jaccard value is still exact.  A true pair is missed
-    only if ALL of its shared shingles are hot — at threshold ≥ 0.5 a
-    near-dup pair shares most of its shingles, so any cap ≫ the
-    near-dup cluster size preserves the result (property-tested in
-    tests/test_properties.py).  The cap is the DEFAULT (a hot
-    shingle on an uncapped web corpus makes the self-join quadratic
-    — a scale-killer an API default must not hand out);
-    ``max_shingle_df=None`` opts into the uncapped exact baseline
-    for oracle/audit work on bounded corpora.
+    in k documents would contribute O(k²) join rows, and common
+    phrases ("all rights reserved") make some k huge on a web corpus.
+    Shingles whose document frequency exceeds the cap join nothing,
+    so a true pair is missed only when ALL the shingles it shares are
+    hot — at threshold ≥ 0.5 a near-dup pair shares most of its
+    shingles, so any cap ≫ the near-dup cluster size preserves the
+    result (property-tested against a pure-Python reference in
+    tests/test_properties.py).  The cap is the DEFAULT;
+    ``max_shingle_df=None`` runs the same join with no frequency
+    filter, for oracle/audit work on bounded corpora.
     """
-    if max_shingle_df is None:
-        rows = _shingle_rows(df, text_col, id_col, n).persist()
-        sizes = rows.groupBy("id").agg(F.count(F.lit(1)).alias("set_size"))
-        a, b = rows.alias("a"), rows.alias("b")
-        inter = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-            .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        # sizes is doc-count-sized: no broadcast hint (AQE promotes it
-        # at runtime when small; forcing it would OOM at corpus scale)
-        sa = sizes.select(F.col("id").alias("id_a"), F.col("set_size").alias("size_a"))
-        sb = sizes.select(F.col("id").alias("id_b"), F.col("set_size").alias("size_b"))
-        jac = F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common"))
-        out = (
-            inter.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn("jaccard", F.round(jac, 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-            .localCheckpoint(eager=True)  # bounded result; lets the cache go
-        )
-        rows.unpersist()
-        return out
-
-    # capped path: hot shingles NEVER enter a self-join — their
-    # O(k²) pair rows are never formed anywhere.  Candidates come
-    # from the cold self-join; verification counts the PRUNED
-    # candidate pairs' full distinct intersections against the
-    # checkpointed (id, shingle) index (r12 — no corpus text
-    # re-read).  A true pair is missed only if ALL its shared
-    # shingles are hot.
-    rows = shingle_hash_rows(
-        df.select(F.col(id_col).alias("id"), text_col), text_col, n, ["id"]
-    ).distinct()
-    # ONE shingle-keyed pass classifies hot vs cold: a window count
-    # over partitionBy(shingle) replaces the r2 groupBy(shingle) +
-    # left_anti join (which re-exchanged the full row set a second
-    # time), and leaves `cold` already partitioned by shingle — the
-    # exact layout the self-join needs, so Spark reuses the exchange
-    # for both join branches.
-    w_sh = Window.partitionBy("shingle")
-    # ONE corpus materialization for the whole query (r12, the
-    # dedup_eval discipline): the distinct (id, shingle, nd) index is
-    # checkpointed, and stats / cold / the VERIFY all read it — the
-    # former shape checkpointed only the cold+stats rows and then
-    # re-scanned the corpus text twice in _attach_pair_texts,
-    # re-tokenizing every matched pair's text to rebuild shingle sets
-    # the index already holds.  |A∪B| = sz_a + sz_b − |A∩B| over
-    # distinct sets, so the (id, shingle) equi-join count gives the
-    # identical jaccard.
-    #
-    # Memory bound (r12 ADVICE): the checkpoint holds the FULL
-    # distinct (id, shingle, nd) index INCLUDING hot-shingle rows —
-    # worst case O(Σ distinct shingles per doc), so a pathological
-    # mega-hot shingle (present in every doc) keeps O(n_docs) rows
-    # resident per such shingle.  Hot rows can't be filtered before
-    # materialization (the VERIFY counts full distinct intersections,
-    # hot shingles included — dropping them would change reported
-    # jaccard values); localCheckpoint stores MEMORY_AND_DISK, so
-    # overflow spills to executor-local disk instead of OOM, and the
-    # blocks release with the query (bench release()/ContextCleaner).
-    # Bounded-footprint behavior under an everywhere-hot shingle is
-    # pinned by tests/test_dedup.py::test_hot_shingle_checkpoint_bound.
-    flagged = rows.withColumn(
-        "nd", F.count(F.lit(1)).over(w_sh)
-    ).localCheckpoint(eager=True)
-    # per-doc stats in ONE id-keyed pass: distinct-set size sz AND
-    # hot-shingle count h (the prune bound needs both; r2 derived h
-    # as sz - cold_sz from two separate groupBys)
-    stats = flagged.groupBy("id").agg(
-        F.count(F.lit(1)).alias("sz"),
-        F.sum((F.col("nd") > max_shingle_df).cast("int")).alias("h"),
+    return _set_similarity_pairs(
+        df, text_col, id_col, n, threshold, max_shingle_df, containment=False
     )
-    # sizes ride ON the cold rows (one row-level join — AQE
-    # broadcasts the doc-count-sized stats frame; at corpus scale it
-    # degrades to a single SMJ of the ROW frame, still far cheaper
-    # than re-shuffling the much larger PAIR frame) so the pair
-    # groupBy below carries them as grouping keys for free — the r2
-    # version paid four sort-merge re-exchanges of the 1.13M-pair
-    # frame to attach the same four numbers afterwards.  Both
-    # self-join branches re-derive cold from the flagged CHECKPOINT
-    # (filter + stats join over in-memory blocks — the corpus-scale
-    # lineage beneath the checkpoint runs once).
-    cold = (
-        flagged.filter(F.col("nd") <= max_shingle_df)
-        .select("id", "shingle")
-        .join(stats, "id")
-    )
-    a, b = cold.alias("a"), cold.alias("b")
-    # pair dedup doubles as the COLD-INTERSECTION counter: the
-    # groupBy((id_a,id_b)) shuffle is the exact same exchange a
-    # ``.distinct()`` would pay, but the count comes back for free
-    # and powers a lossless candidate prune (below)
-    #
-    # length filter (Arasu 2006 / prefix-filter family): J(A,B) ≤
-    # min(|A|,|B|)/max(|A|,|B|), so a pair whose FULL distinct sizes
-    # differ by more than the threshold ratio can never verify — the
-    # predicate rides the self-join itself (sz is already on every
-    # cold row), killing those pairs' rows BEFORE the pair-count
-    # shuffle.  The 1e-6 slack keeps it lossless under the verify's
-    # round(jac, 6) ≥ τ acceptance (a pair with true J ≥ τ - 5e-7 can
-    # round up into the output; min/max ≥ J > τ - 1e-6 keeps it).
-    _lf = F.least(F.col("a.sz"), F.col("b.sz")) >= F.lit(
-        threshold - 1e-6
-    ) * F.greatest(F.col("a.sz"), F.col("b.sz"))
-    cand = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id"))
-            & _lf,
-        )
-        .groupBy(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sz").alias("sz_a"),
-            F.col("b.sz").alias("sz_b"),
-            F.col("a.h").alias("h_a"),
-            F.col("b.h").alias("h_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("nc"))
-    )
-    # lossless upper-bound prune before the index verify join.
-    # With per-doc distinct sizes sz and hot-shingle counts h:
-    #   n_common_full ≤ nc + min(h_a, h_b)          (hot overlap bound)
-    #   jaccard = ncf / (sz_a + sz_b - ncf)  — increasing in ncf —
-    #   so ub = (nc+min(h)) / (sz_a+sz_b-(nc+min(h))) ≥ true jaccard.
-    # Random pairs share few cold shingles → ub ≪ τ → the verify join
-    # collapses to ~the true near-dup set (measured at sf0.1 before
-    # the length filter: 1,130,536 candidates → 256 verify pairs =
-    # the exact output set).
-    ubc = F.col("nc") + F.least(F.col("h_a"), F.col("h_b"))
-    cand = cand.filter(
-        ubc / (F.col("sz_a") + F.col("sz_b") - ubc) >= threshold
-    )
-    verified = (
-        cand.select("id_a", "id_b", "sz_a", "sz_b")
-        .join(flagged.select(F.col("id").alias("id_a"), "shingle"), "id_a")
-        .join(
-            flagged.select(F.col("id").alias("id_b"), "shingle"),
-            ["id_b", "shingle"],
-        )
-        .groupBy("id_a", "id_b", "sz_a", "sz_b")
-        .agg(F.count(F.lit(1)).alias("ncf"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("ncf") / (F.col("sz_a") + F.col("sz_b") - F.col("ncf")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-        .localCheckpoint(eager=True)  # bounded result
-    )
-    return verified
 
 
 # Salts of the md5 hash spaces below.  One constant each, not a
@@ -590,28 +589,29 @@ def dedup_eval(
     The shared frame is (id, n_tokens, 48-bit salted-md5 shingle
     hash) with the partial-window tail (docs shorter than ``n``
     keep their one partial shingle — ``dedup_ngram_jaccard``'s
-    window semantics), checkpointed once:
+    window semantics), aggregated ONCE per doc (``_set_docs``: the
+    sorted key array, the token count and the slot minima) and
+    checkpointed:
 
     - PRED candidates come from the full-window subset (docs ≥ n
       tokens — the MinHash contract) through the exact
       ``dedup_minhash_lsh`` plan: slot minima + band buckets →
       bucket-join pairs.
-    - TRUTH candidates run ``dedup_ngram_jaccard``'s capped logic on
-      the SAME rows: hot/cold window count, lossless upper-bound
-      prune — set algebra is hash-agnostic, so the pair set and
+    - TRUTH candidates come from ``dedup_ngram_jaccard``'s join
+      (``_set_candidates``: prefix filter, length filter, positional
+      bound, the same ``max_shingle_df`` cap and 1e-6 slack) on the
+      SAME docs — set algebra is hash-agnostic, so the pair set and
       jaccard values are identical to ``dedup_ngram_jaccard`` (modulo
       48-bit collisions, which the DuckDB oracle shares bit-for-bit
       on the pred side and which are ~1e-4-improbable on the
       string-replay truth side at tested scales; the divergence is
       pinned with a REAL birthday-searched collision in
       tests/test_dedup.py::test_dedup_eval_48bit_collision_divergence).
-    - ONE unified verify pass (r11, VERDICT r10 #3): pred candidates
-      contain only full-window docs, whose shp rows ARE their rows
-      rows, so both sides' exact Jaccard is the same count over the
-      same distinct-h0 sets — the tagged union of both candidate
-      frames is verified in a single (id, h0) equi-join pass and
-      split by tag after scoring (was: two independent 2-join
-      corpus-scale verifies).
+    - ONE verify pass (``_verify_pairs``) over the tagged union of
+      both candidate frames, split by tag after scoring: pred
+      candidates contain only full-window docs, whose distinct-h0
+      sets are their truth sets, so both sides' exact Jaccard is the
+      same array intersection.
 
     Degenerate-input note (documented divergence from the naive
     composition): a NULL text and an empty text both hash their one
@@ -626,57 +626,22 @@ def dedup_eval(
     sh_all = _md5_shingle_rows(
         df, text_col, id_col, n, keep_len=True, partial_tail=True
     )
-    # ONE corpus-scale materialization: the distinct SET frame (as
-    # flagged, with the window count, in the capped path).  Every
-    # consumer below is set-semantic (min aggregates are duplicate-
-    # insensitive; both verifies count distinct matches; the truth
-    # logic is defined on sets), so deduping once up front turns four
-    # countDistinct/distinct passes into plain counts and feeds six
-    # consumers from one checkpoint.
-    rows = sh_all.select("id", "_n", "h0").distinct()
-    if max_shingle_df is None:
-        # only the uncapped path materializes rows itself; the capped
-        # path's flagged (below) is the same frame + the window count
-        # and is checkpointed, so every consumer reads flagged and a
-        # separate rows barrier would pay a second back-to-back
-        # corpus-frame write for nothing (r12: 9/9 pairwise faster
-        # without it, 3.71s → 3.33s median).
-        rows = rows.localCheckpoint(eager=True)
-
-    # --- per-doc sufficient statistics in ONE corpus aggregate (r11,
-    # VERDICT r10 #3): set size / hot-shingle count / token length /
-    # the 32 permutation slot minima all come from a single
-    # groupBy(id) over the (window-flagged) rows — formerly the pred
-    # signature and the truth stats each shuffled the corpus by id
-    # separately.  Checkpointed: one row per doc, consumed by the
-    # band build, the truth prune and the unified verify's size
-    # joins.  Short docs (_n < n) compute minima they never use (the
-    # band build filters them) — 32 integer ops per row, cheaper than
-    # a second aggregate pass.
-    if max_shingle_df is not None:
-        w_sh = Window.partitionBy("h0")
-        # Memory bound (r12 ADVICE): full (id, _n, h0, nd) index incl.
-        # hot rows — see the dedup_ngram_jaccard flagged comment for
-        # the worst case and the MEMORY_AND_DISK spill rationale;
-        # behavior pinned by test_hot_shingle_checkpoint_bound.
-        flagged = rows.withColumn(
-            "nd", F.count(F.lit(1)).over(w_sh)
-        ).localCheckpoint(eager=True)
-        hot_flag = (F.col("nd") > max_shingle_df).cast("int")
-    else:
-        flagged = rows.withColumn("nd", F.lit(0))
-        hot_flag = F.lit(0)
-    stats = flagged.groupBy("id").agg(
-        F.count(F.lit(1)).alias("sz"),
-        F.sum(hot_flag).alias("h"),
+    # ONE per-doc aggregate over the distinct set rows: the sorted
+    # key array (truth candidates and the verify), the token length
+    # and the 32 slot minima (pred signatures).  Short docs (_n < n)
+    # compute minima they never use (the band build filters them) —
+    # 32 integer ops per row, cheaper than a second aggregate pass.
+    docs = _set_docs(
+        sh_all.select("id", "_n", "h0").distinct(),
+        "h0",
         F.min("_n").alias("_n"),
         *_slot_minima(num_hashes),
-    ).localCheckpoint(eager=True)
+    )
 
     # --- pred candidates: MinHash+LSH, the dedup_minhash_lsh plan
     # from its signature onward (full windows only: docs >= n tokens)
     band_rows = _expand_bands(
-        stats.filter(F.col("_n") >= n).select("id", _sig_array(num_hashes)),
+        docs.filter(F.col("_n") >= n).select("id", _sig_array(num_hashes)),
         num_hashes,
         bands,
     )
@@ -692,94 +657,22 @@ def dedup_eval(
         .distinct()
         .select("id_a", "id_b", F.lit(1).alias("_p"), F.lit(0).alias("_t"))
     )
-
-    # --- truth candidates: dedup_ngram_jaccard's capped-candidate
-    # logic on the same distinct rows; the self-join emits slim
-    # (id_a, id_b) pairs and the per-doc sizes/hot-counts join back
-    # from the stats checkpoint (doc-sized, AQE broadcasts it)
-    if max_shingle_df is not None:
-        cold = flagged.filter(F.col("nd") <= max_shingle_df).select("id", "h0")
-    else:
-        cold = rows.select("id", "h0")
-    # NOT length-filtered (r12 negative, recorded): riding sz onto
-    # these cold rows for the join-time min/max ratio prune costs a
-    # NEW row-level join against stats (in dedup_ngram_jaccard the
-    # ride is free — its cold rows join stats anyway), and the A/B
-    # was flat-to-negative at sf0.1 (3/9, 5/9 pairwise over two
-    # 9-rep sessions); the ub-prune below already implies the ratio
-    # bound at pair level.
-    ca, cb = cold.alias("a"), cold.alias("b")
-    cand_t = (
-        ca.join(
-            cb,
-            (F.col("a.h0") == F.col("b.h0")) & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("nc"))
-        .join(
-            stats.select(
-                F.col("id").alias("id_a"),
-                F.col("sz").alias("sz_a"),
-                F.col("h").alias("h_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            stats.select(
-                F.col("id").alias("id_b"),
-                F.col("sz").alias("sz_b"),
-                F.col("h").alias("h_b"),
-            ),
-            "id_b",
-        )
-    )
-    ubc = F.col("nc") + F.least(F.col("h_a"), F.col("h_b"))
-    cand_t = (
-        cand_t.filter(ubc / (F.col("sz_a") + F.col("sz_b") - ubc) >= threshold)
-        .select("id_a", "id_b", F.lit(0).alias("_p"), F.lit(1).alias("_t"))
+    # --- truth candidates: dedup_ngram_jaccard's join on the same docs
+    cand_t = _set_candidates(docs, threshold, max_shingle_df).select(
+        "id_a", "id_b", F.lit(0).alias("_p"), F.lit(1).alias("_t")
     )
 
-    # --- ONE unified verify pass (r11, VERDICT r10 #3: pred and
-    # truth each ran their own 2-join corpus-scale verify).  Pred
-    # candidates contain only full-window docs (sig is built from
-    # shp), and a full-window doc's shp rows ARE its rows rows, so
-    # both sides' exact Jaccard is the same count over the same
-    # distinct-h0 sets — verify the tagged pair union once, split by
-    # tag after scoring.  Pair frames are bounded (band buckets /
-    # capped h0 blocks), so the union groupBy is a small shuffle.
+    # --- ONE verify pass over the tagged union, split by tag after
+    # scoring.  Pred candidates contain only full-window docs, whose
+    # distinct-h0 sets are their truth sets, so both sides' exact
+    # Jaccard is the same intersection.
     allc = (
         candidates.unionByName(cand_t)
         .groupBy("id_a", "id_b")
         .agg(F.max("_p").alias("_p"), F.max("_t").alias("_t"))
     )
-    st = stats.select("id", "sz", "_n")
-    scored = (
-        allc.join(flagged.select(F.col("id").alias("id_a"), "h0"), "id_a")
-        .join(flagged.select(F.col("id").alias("id_b"), "h0"), ["id_b", "h0"])
-        .groupBy("id_a", "id_b", "_p", "_t")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-        .join(
-            st.select(
-                F.col("id").alias("id_a"), F.col("sz").alias("sz_a")
-            ),
-            "id_a",
-        )
-        .join(
-            st.select(
-                F.col("id").alias("id_b"), F.col("sz").alias("sz_b")
-            ),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .localCheckpoint(eager=True)  # consumed by both tag splits
+    scored = _verify_pairs(allc, docs, threshold).localCheckpoint(
+        eager=True  # consumed by both tag splits
     )
     pred = scored.filter(F.col("_p") == 1).select("id_a", "id_b")
     truth = scored.filter(F.col("_t") == 1).select("id_a", "id_b")
@@ -1766,112 +1659,17 @@ def dedup_containment(
     containment distinction).  The standard catch for quote-
     inclusion / page-wrapping duplication.
 
-    Same join discipline and the same two modes as the Jaccard
-    operator: the cap is the DEFAULT (same quadratic-hot-shingle
-    rationale); ``max_shingle_df=None`` opts into the uncapped exact
-    baseline (candidates from every shared shingle — measured 14 s
-    at sf0.1, the all-shared-pairs aggregate the prune exists to
-    avoid).  With the cap, hot shingles never enter the self-join and candidates
-    are pruned by the lossless upper bound
-    ub = (nc + min(h_a, h_b)) / min(sz_a, sz_b) ≥ true containment
-    (containment is increasing in the full intersection) before the
-    index verify — identical reported values, 4.3× faster at
-    sf0.1 (14.1 s → 3.3 s; the min-size denominator makes the bound
-    less selective than Jaccard's, so more candidates survive to
-    verify than in the jaccard twin).  A true pair is missed only if
-    ALL its shared shingles are hot.
+    Same join, verify and cap contract as the Jaccard operator
+    (``_set_candidates``): containment bounds the overlap only by the
+    smaller doc, so only that doc is cut to its prefix, and it probes
+    every cold shingle of the other; the positional bound divides by
+    the smaller size.  Values are exact, every filter carries the
+    1e-6 slack, and a true pair is missed only when ALL the shingles
+    it shares are hot.  ``max_shingle_df=None`` filters nothing.
     """
-    if max_shingle_df is not None:
-        rows = shingle_hash_rows(
-            df.select(F.col(id_col).alias("id"), text_col), text_col, n, ["id"]
-        ).distinct()
-        w_sh = Window.partitionBy("shingle")
-        # ONE corpus materialization for the whole query (r12, the
-        # dedup_eval discipline): the distinct (id, shingle, nd)
-        # index is checkpointed, and stats / cold / the VERIFY all
-        # read it — the former shape checkpointed only the cold+stats
-        # rows and then re-scanned the corpus text twice in
-        # _attach_pair_texts, re-tokenizing every matched pair's text
-        # to rebuild shingle sets the index already holds.
-        # array_intersect over raw arrays counts DISTINCT common
-        # shingles, exactly what the (id, shingle) equi-join counts —
-        # identical containment values.
-        # Memory bound (r12 ADVICE): full (id, shingle, nd) index
-        # incl. hot rows — see the dedup_ngram_jaccard flagged
-        # comment for the worst case and the MEMORY_AND_DISK spill
-        # rationale; pinned by test_hot_shingle_checkpoint_bound.
-        flagged = rows.withColumn(
-            "nd", F.count(F.lit(1)).over(w_sh)
-        ).localCheckpoint(eager=True)
-        stats = flagged.groupBy("id").agg(
-            F.count(F.lit(1)).alias("sz"),
-            F.sum((F.col("nd") > max_shingle_df).cast("int")).alias("h"),
-        )
-        cold = (
-            flagged.filter(F.col("nd") <= max_shingle_df)
-            .select("id", "shingle")
-            .join(stats, "id")
-        )
-        a, b = cold.alias("a"), cold.alias("b")
-        cand = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-            .groupBy(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a.sz").alias("sz_a"),
-                F.col("b.sz").alias("sz_b"),
-                F.col("a.h").alias("h_a"),
-                F.col("b.h").alias("h_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("nc"))
-        )
-        ubc = F.col("nc") + F.least(F.col("h_a"), F.col("h_b"))
-        cand = cand.filter(
-            ubc / F.least(F.col("sz_a"), F.col("sz_b")) >= threshold
-        ).select("id_a", "id_b", "sz_a", "sz_b")
-        verified = (
-            cand.join(
-                flagged.select(F.col("id").alias("id_a"), "shingle"), "id_a"
-            )
-            .join(
-                flagged.select(F.col("id").alias("id_b"), "shingle"),
-                ["id_b", "shingle"],
-            )
-            .groupBy("id_a", "id_b", "sz_a", "sz_b")
-            .agg(F.count(F.lit(1)).alias("ncf"))
-            .withColumn(
-                "containment",
-                F.round(
-                    F.col("ncf") / F.least(F.col("sz_a"), F.col("sz_b")), 6
-                ),
-            )
-            .filter(F.col("containment") >= threshold)
-            .select("id_a", "id_b", "containment")
-            .localCheckpoint(eager=True)
-        )
-        return verified
-
-    rows = _shingle_rows(df, text_col, id_col, n).persist()
-    sizes = rows.groupBy("id").agg(F.count(F.lit(1)).alias("set_size"))
-    a, b = rows.alias("a"), rows.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    return _set_similarity_pairs(
+        df, text_col, id_col, n, threshold, max_shingle_df, containment=True
     )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("set_size").alias("size_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("set_size").alias("size_b"))
-    cont = F.col("n_common") / F.least(F.col("size_a"), F.col("size_b"))
-    out = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("containment", F.round(cont, 6))
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "containment")
-        .localCheckpoint(eager=True)
-    )
-    rows.unpersist()
-    return out
 
 
 def cut_duplicate_spans(

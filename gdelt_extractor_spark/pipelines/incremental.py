@@ -23,6 +23,8 @@ the anti join never reshuffles history).
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
@@ -36,41 +38,57 @@ from ..sinks.files import upsert_partitions
 from ..streaming.updates import run_foreach_batch
 
 
-def _seen_hashes(
-    spark: SparkSession, corpus_dir: str, before_batch: int
+def _committed(
+    spark: SparkSession,
+    corpus_dir: str,
+    before_batch: int,
+    cols: list,
+    empty_schema: str,
 ) -> DataFrame:
-    """Content hashes already committed by EARLIER epochs (empty
-    frame on the very first batch).  The ``batch_id <`` predicate is
-    partition pruning — a replayed epoch's own partial output is
-    invisible to its recomputation."""
+    """``cols`` of everything committed by EARLIER epochs — an empty
+    ``empty_schema`` frame on the very first batch, before the corpus
+    exists.  The ``batch_id <`` predicate is partition pruning: a
+    replayed epoch's own partial output is invisible to its
+    recomputation."""
     try:
         corpus = spark.read.parquet(corpus_dir)
     except AnalysisException:  # first batch: corpus does not exist yet
-        return spark.createDataFrame([], "content_hash string")
-    return corpus.filter(F.col("batch_id") < before_batch).select("content_hash")
+        return spark.createDataFrame([], empty_schema)
+    return corpus.filter(F.col("batch_id") < before_batch).select(*cols)
 
 
-def _record_metrics(
-    spark: SparkSession,
-    metrics_dir: str,
-    corpus_dir: str,
+def _land(
+    batch: DataFrame,
+    survivors: DataFrame,
     batch_id: int,
-    n_seen: int,
+    corpus_dir: str,
+    metrics_dir: str | None,
 ) -> None:
-    """Per-epoch dedup-rate audit row: (batch_id, n_seen, n_survived,
-    n_dropped), derived from the LANDED partition (not the in-flight
-    frame) so the metric can never disagree with the corpus, and
-    landed via the same idempotent batch_id partition overwrite — a
-    replayed epoch overwrites its own metrics row, so the audit
-    stream inherits the pipeline's exactly-once story instead of
-    needing its own."""
+    """Land one epoch's survivors by idempotent ``batch_id`` partition
+    overwrite.  With ``metrics_dir``, a per-epoch dedup-rate audit row
+    (batch_id, n_seen, n_survived, n_dropped) follows, derived from
+    the LANDED partition (not the in-flight frame) so the metric can
+    never disagree with the corpus, and landed by the same partition
+    overwrite — a replayed epoch overwrites its own metrics row, so
+    the audit stream inherits the pipeline's exactly-once story.
+    ``n_seen`` costs one extra source scan; the file-source batch is
+    replayable, so no cache is needed."""
+    upsert_partitions(
+        survivors.withColumn("batch_id", F.lit(int(batch_id))),
+        corpus_dir,
+        ["batch_id"],
+    )
+    if metrics_dir is None:
+        return
+    spark = batch.sparkSession
+    n_seen = batch.count()
     n_survived = (
         spark.read.parquet(corpus_dir)
         .filter(F.col("batch_id") == int(batch_id))
         .count()
     )
     row = spark.createDataFrame(
-        [(int(batch_id), int(n_seen), int(n_survived), int(n_seen) - n_survived)],
+        [(int(batch_id), n_seen, n_survived, n_seen - n_survived)],
         "batch_id long, n_seen long, n_survived long, n_dropped long",
     )
     upsert_partitions(row, metrics_dir, ["batch_id"])
@@ -85,22 +103,33 @@ def ingest_batch(
     metrics_dir: str | None = None,
 ) -> None:
     """One epoch: batch-internal keep-first + anti join against the
-    committed hash index, then an idempotent partition overwrite.
-    With ``metrics_dir`` set, a (batch_id, n_seen, n_survived,
-    n_dropped) audit row lands after the corpus write (one extra
-    source scan for the count — the file-source batch is replayable,
-    so no cache is needed)."""
-    spark = batch.sparkSession
-    survivors = dedup_incremental(
-        batch, _seen_hashes(spark, corpus_dir, batch_id), text_col, id_col
+    committed hash index, then ``_land`` (idempotent partition
+    overwrite, plus the audit row with ``metrics_dir`` set)."""
+    seen = _committed(
+        batch.sparkSession, corpus_dir, batch_id, ["content_hash"],
+        "content_hash string",
     )
-    upsert_partitions(
-        survivors.withColumn("batch_id", F.lit(int(batch_id))),
-        corpus_dir,
-        ["batch_id"],
+    survivors = dedup_incremental(batch, seen, text_col, id_col)
+    _land(batch, survivors, batch_id, corpus_dir, metrics_dir)
+
+
+def _run_stream(
+    spark: SparkSession,
+    landing_dir: str,
+    checkpoint_dir: str,
+    schema: str,
+    max_files_per_trigger: int,
+    ingest: Callable[[DataFrame, int], None],
+) -> None:
+    """Drive a JSONL file-source stream over ``landing_dir`` through
+    ``ingest(batch, epoch)`` until the directory is drained."""
+    stream = (
+        spark.readStream.format("json")
+        .schema(schema)
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .load(landing_dir)
     )
-    if metrics_dir is not None:
-        _record_metrics(spark, metrics_dir, corpus_dir, batch_id, batch.count())
+    run_foreach_batch(stream, ingest, checkpoint_dir)
 
 
 def run_incremental_dedup_stream(
@@ -115,16 +144,9 @@ def run_incremental_dedup_stream(
     """Drive the stream until the landing dir is drained (test mode;
     production drops ``processAllAvailable`` for a continuous
     trigger).  JSONL drops → per-epoch ``ingest_batch``."""
-    stream = (
-        spark.readStream.format("json")
-        .schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .load(landing_dir)
-    )
-    run_foreach_batch(
-        stream,
+    _run_stream(
+        spark, landing_dir, checkpoint_dir, schema, max_files_per_trigger,
         lambda b, i: ingest_batch(b, i, corpus_dir, metrics_dir=metrics_dir),
-        checkpoint_dir,
     )
 
 
@@ -146,14 +168,10 @@ def _seen_band_index(
     drift from the corpus because it IS the corpus.  The first
     batch's empty index goes through the same band expansion, so its
     schema is the real one by construction."""
-    try:
-        corpus = spark.read.parquet(corpus_dir)
-    except AnalysisException:  # first batch: corpus does not exist yet
-        prior = spark.createDataFrame([], "id long, sig array<bigint>")
-    else:
-        prior = corpus.filter(F.col("batch_id") < before_batch).select(
-            F.col(id_col).alias("id"), "sig"
-        )
+    prior = _committed(
+        spark, corpus_dir, before_batch, [F.col(id_col).alias("id"), "sig"],
+        "id long, sig array<bigint>",
+    )
     return _expand_bands(prior, num_hashes, bands)
 
 
@@ -181,20 +199,13 @@ def ingest_batch_near_dup(
     S-curve midpoint at (1/16)^(1/2) = 0.25 — comfortably below the
     0.5 verification threshold, so candidate recall is not the
     bottleneck."""
-    spark = batch.sparkSession
     idx = _seen_band_index(
-        spark, corpus_dir, batch_id, id_col, num_hashes, bands
+        batch.sparkSession, corpus_dir, batch_id, id_col, num_hashes, bands
     )
     survivors = dedup_incremental_minhash(
         batch, idx, text_col, id_col, num_hashes, bands, threshold=threshold
     )
-    upsert_partitions(
-        survivors.withColumn("batch_id", F.lit(int(batch_id))),
-        corpus_dir,
-        ["batch_id"],
-    )
-    if metrics_dir is not None:
-        _record_metrics(spark, metrics_dir, corpus_dir, batch_id, batch.count())
+    _land(batch, survivors, batch_id, corpus_dir, metrics_dir)
 
 
 def run_incremental_near_dedup_stream(
@@ -208,14 +219,7 @@ def run_incremental_near_dedup_stream(
 ) -> None:
     """Near-dup twin of ``run_incremental_dedup_stream``: JSONL
     drops → per-epoch ``ingest_batch_near_dup``."""
-    stream = (
-        spark.readStream.format("json")
-        .schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .load(landing_dir)
-    )
-    run_foreach_batch(
-        stream,
+    _run_stream(
+        spark, landing_dir, checkpoint_dir, schema, max_files_per_trigger,
         lambda b, i: ingest_batch_near_dup(b, i, corpus_dir, metrics_dir=metrics_dir),
-        checkpoint_dir,
     )

@@ -2,6 +2,7 @@ import contextlib
 import gc
 import os
 import sys
+import threading
 
 import pytest
 
@@ -65,17 +66,21 @@ def round_trips(spark):
     """``with round_trips() as calls: ...`` counts the commands the
     Python driver sends the JVM over the Py4J gateway inside the
     block (``len(calls)`` after).  Python's cyclic GC is collected
-    before and paused during the block, so a count does not depend on
-    when earlier garbage frees its JVM references."""
+    before and paused during the block, and only the block's own
+    thread is counted: Py4J's finalizer thread sends the deletes of
+    freed JVM references whenever it gets to them, so a count does
+    not depend on when earlier garbage frees its JVM references."""
     client = spark.sparkContext._gateway._gateway_client
 
     @contextlib.contextmanager
     def count():
         calls = []
         real = client.send_command
+        owner = threading.get_ident()
 
         def wrapper(*args, **kwargs):
-            calls.append(1)
+            if threading.get_ident() == owner:
+                calls.append(1)
             return real(*args, **kwargs)
 
         gc.collect()

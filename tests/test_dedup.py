@@ -944,3 +944,28 @@ def test_hot_shingle_checkpoint_bound(spark):
     assert all(r.getStorageLevel().useDisk() for r in jrdds)
     for rdd in jrdds:
         rdd.unpersist()
+
+
+def test_shingle_pairs_keep_rounding_edge_pairs(spark):
+    """A pair whose exact value is 2/3 rounds to 0.666667, so at
+    threshold 0.666667 it belongs in the output.  Every candidate
+    filter of the three shingle-pair operators must carry the same
+    1e-6 slack as the round(value, 6) ≥ threshold acceptance, capped
+    or not."""
+    t = 0.666667
+    schema = "doc_id long, text string"
+    jdf = spark.createDataFrame([(1, "p q"), (2, "p q r")], schema)
+    cdf = spark.createDataFrame([(1, "p q r"), (2, "p q s t")], schema)
+    for cap in (100, None):
+        jac = D.dedup_ngram_jaccard(
+            jdf, "text", "doc_id", n=1, threshold=t, max_shingle_df=cap
+        )
+        assert [tuple(r) for r in jac.collect()] == [(1, 2, t)], cap
+        cont = D.dedup_containment(
+            cdf, "text", "doc_id", n=1, threshold=t, max_shingle_df=cap
+        )
+        assert [tuple(r) for r in cont.collect()] == [(1, 2, t)], cap
+        ev = D.dedup_eval(
+            jdf, "text", "doc_id", n=1, threshold=t, max_shingle_df=cap
+        ).collect()[0]
+        assert (ev.n_pred, ev.n_true, ev.n_hit, ev.precision) == (1, 1, 1, 1.0), cap

@@ -7,6 +7,10 @@ every example is already a many-row test.
 
 from __future__ import annotations
 
+import itertools
+import re
+from collections import Counter
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -99,7 +103,10 @@ def test_token_stats_bounds(spark, texts):
         assert r.n_subwords >= r.n_tokens or r.n_tokens == 0 or r.n_subwords >= 0
 
 
-from gdelt_extractor_spark.operators.dedup import dedup_ngram_jaccard  # noqa: E402
+from gdelt_extractor_spark.operators.dedup import (  # noqa: E402
+    dedup_containment,
+    dedup_ngram_jaccard,
+)
 
 # repeated phrases across docs → real hot shingles; suffixes keep
 # some docs near-dup and others not
@@ -111,36 +118,56 @@ HOT_DOCS = st.lists(
 )
 
 
+def _reference_pairs(texts, n, threshold, cap, containment):
+    """Pure-Python exact shingle-pair search: lowercase, collapse
+    whitespace, trim, split on spaces, distinct n-token windows (a
+    doc shorter than n keeps its one partial window).  A pair is
+    reported when round(value, 6) ≥ threshold and it shares at least
+    one shingle in at most ``cap`` docs (``cap=None``: any)."""
+    sets = []
+    for t in texts:
+        toks = re.sub(r"[ \t\n\x0b\f\r]+", " ", t.lower()).strip(" ").split(" ")
+        sets.append({tuple(toks[i:i + n]) for i in range(max(len(toks) - n, 0) + 1)})
+    nd = Counter(x for s in sets for x in s)
+    out = {}
+    for a, b in itertools.combinations(range(len(sets)), 2):
+        shared = sets[a] & sets[b]
+        if not any(cap is None or nd[x] <= cap for x in shared):
+            continue
+        den = min(len(sets[a]), len(sets[b])) if containment else len(sets[a] | sets[b])
+        v = round(len(shared) / den, 6)
+        if v >= threshold:
+            out[(a, b)] = v
+    return out
+
+
+def _check_cap_property(spark, parts, op, col, containment):
+    """Uncapped, the operator returns EXACTLY the reference pairs and
+    values.  With cap 2, a shingle shared by three or more docs is
+    hot, and the operator returns exactly the reference pairs minus
+    those whose shared shingles are all hot."""
+    texts = [f"{p} {s}" for p, s in parts]
+    df = _df(spark, texts)
+    for cap in (None, 2):
+        got = {
+            (r.id_a, r.id_b): r[col]
+            for r in op(
+                df, "text", "doc_id", threshold=0.6, max_shingle_df=cap
+            ).collect()
+        }
+        assert got == _reference_pairs(texts, 3, 0.6, cap, containment), cap
+
+
 @given(HOT_DOCS)
 @PROP
 def test_ngram_jaccard_cap_preserves_pairs(spark, parts):
-    """With cap ≥ n_docs (doc frequency can never exceed it) the
-    capped plan must return EXACTLY the uncapped exact baseline —
-    same pairs, same jaccard values; with any cap, reported pairs
-    must be a subset of the exact pairs with identical values."""
-    texts = [f"{p} {s}" for p, s in parts]
-    df = _df(spark, texts)
-    exact = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in dedup_ngram_jaccard(
-            df, "text", "doc_id", threshold=0.6, max_shingle_df=None
-        ).collect()
-    }
-    capped_big = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in dedup_ngram_jaccard(
-            df, "text", "doc_id", threshold=0.6, max_shingle_df=len(texts)
-        ).collect()
-    }
-    assert capped_big == exact
-    capped_small = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in dedup_ngram_jaccard(
-            df, "text", "doc_id", threshold=0.6, max_shingle_df=1
-        ).collect()
-    }
-    assert set(capped_small) <= set(exact)
-    assert all(exact[k] == v for k, v in capped_small.items())
+    _check_cap_property(spark, parts, dedup_ngram_jaccard, "jaccard", False)
+
+
+@given(HOT_DOCS)
+@PROP
+def test_containment_cap_preserves_pairs(spark, parts):
+    _check_cap_property(spark, parts, dedup_containment, "containment", True)
 
 
 # ---------------------------------------------------- temporal ops
