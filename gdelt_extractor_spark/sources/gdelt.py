@@ -14,6 +14,9 @@ Parity targets:
   decompressed executor-side from a ``binaryFile`` scan via
   Arrow-batched ``mapInPandas``, so a 1000-file backfill fans out
   across the cluster with no driver bottleneck.
+- one line parser (``_parse``) for plain TSV, zips and the stream: a
+  row with the wrong field count, or a non-empty field that does not
+  parse as its type, is quarantined (``read_gdelt_rejects``).
 - ``process_gdelt_events`` — reference/extractor/extractor.py:247-274
   (dedup keep-first on SOURCEURL, lowercase column names).
 
@@ -166,36 +169,28 @@ assert len(MENTIONS_SCHEMA) == 16
 assert len(GKG_SCHEMA) == 27
 
 
-# Spark CSV reader options for GDELT TSV, shared by the batch readers
-# and ``streaming.updates.stream_gdelt_dir``.  GDELT TSV has no
-# quoting: with Spark's default ``"`` quote, ``a\t"b c\td`` reads as
-# ('a', 'b c\td', NULL) — a tab swallowed and the columns shifted —
-# where ``quote=""`` reads ('a', '"b c', 'd') as ``read_gdelt_zip`` does.
-TSV_OPTIONS = {"sep": "\t", "header": "false", "mode": "PERMISSIVE", "quote": ""}
-
-
-def _read_tsv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    return spark.read.options(**TSV_OPTIONS).schema(schema).csv(path)
+def _read_text(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    return _clean(_parse(spark.read.text(path).toDF("line"), schema))
 
 
 def read_gdelt_v2(spark: SparkSession, path: str) -> DataFrame:
     """GDELT 2.0 export TSV(s) with the 61-column typed schema."""
-    return _read_tsv(spark, path, V2_EVENTS_SCHEMA)
+    return _read_text(spark, path, V2_EVENTS_SCHEMA)
 
 
 def read_gdelt_v1(spark: SparkSession, path: str) -> DataFrame:
     """GDELT 1.0 daily events TSV(s), 58-column typed schema."""
-    return _read_tsv(spark, path, V1_EVENTS_SCHEMA)
+    return _read_text(spark, path, V1_EVENTS_SCHEMA)
 
 
 def read_gdelt_mentions(spark: SparkSession, path: str) -> DataFrame:
     """GDELT 2.0 mentions TSV(s), 16-column typed schema."""
-    return _read_tsv(spark, path, MENTIONS_SCHEMA)
+    return _read_text(spark, path, MENTIONS_SCHEMA)
 
 
 def read_gdelt_gkg(spark: SparkSession, path: str) -> DataFrame:
     """GDELT 2.0 GKG TSV(s), 27-column typed schema."""
-    return _read_tsv(spark, path, GKG_SCHEMA)
+    return _read_text(spark, path, GKG_SCHEMA)
 
 
 def _theme_array(col: str = "Themes", distinct: bool = False):
@@ -276,7 +271,7 @@ def gkg_v2_names(gkg: DataFrame, col: str = "V2Persons") -> DataFrame:
     return staged.select(
         "GKGRECORDID",
         F.substring_index("blk", ",", 1).alias("name"),
-        F.substring_index("blk", ",", -1).cast("int").alias("char_offset"),
+        F.substring_index("blk", ",", -1).try_cast("int").alias("char_offset"),
     )
 
 
@@ -285,22 +280,22 @@ def gkg_v2_locations(gkg: DataFrame) -> DataFrame:
     adm1_code, lat, lon, feature_id, char_offset) rows from the
     8-'#'-field V2Locations blocks (V2.1 codebook: type 1=country,
     2=US state, 3=US city, 4=world city, 5=world state).  One explode
-    + one codegen split projection; malformed short blocks yield NULL
-    fields via F.get past-end semantics rather than errors."""
+    + one codegen split projection; short blocks and non-numeric
+    sub-fields read NULL (F.get past the end, try_cast), not errors."""
     staged = gkg.select(
         "GKGRECORDID", F.explode(_gkg_blocks("V2Locations")).alias("blk")
     )
     p = F.split("blk", "#")
     return staged.select(
         "GKGRECORDID",
-        F.get(p, 0).cast("int").alias("loc_type"),
+        F.get(p, 0).try_cast("int").alias("loc_type"),
         F.get(p, 1).alias("full_name"),
         F.get(p, 2).alias("country_code"),
         F.get(p, 3).alias("adm1_code"),
-        F.get(p, 4).cast("double").alias("lat"),
-        F.get(p, 5).cast("double").alias("lon"),
+        F.get(p, 4).try_cast("double").alias("lat"),
+        F.get(p, 5).try_cast("double").alias("lon"),
         F.get(p, 6).alias("feature_id"),
-        F.get(p, 7).cast("int").alias("char_offset"),
+        F.get(p, 7).try_cast("int").alias("char_offset"),
     )
 
 
@@ -314,7 +309,7 @@ def gkg_gcam(gkg: DataFrame) -> DataFrame:
     return staged.select(
         "GKGRECORDID",
         F.substring_index("blk", ":", 1).alias("dim"),
-        F.substring_index("blk", ":", -1).cast("double").alias("value"),
+        F.substring_index("blk", ":", -1).try_cast("double").alias("value"),
     )
 
 
@@ -332,8 +327,8 @@ def gkg_quotations(gkg: DataFrame) -> DataFrame:
     p = F.split("blk", "#")
     return staged.select(
         "GKGRECORDID",
-        F.get(p, 0).cast("int").alias("char_offset"),
-        F.get(p, 1).cast("int").alias("length"),
+        F.get(p, 0).try_cast("int").alias("char_offset"),
+        F.get(p, 1).try_cast("int").alias("length"),
         F.get(p, 2).alias("verb"),
         F.regexp_extract("blk", r"^[^#]*#[^#]*#[^#]*#(.*)$", 1).alias("quote"),
     )
@@ -349,9 +344,9 @@ def gkg_amounts(gkg: DataFrame) -> DataFrame:
     )
     return staged.select(
         "GKGRECORDID",
-        F.substring_index("blk", ",", 1).cast("double").alias("amount"),
+        F.substring_index("blk", ",", 1).try_cast("double").alias("amount"),
         F.regexp_extract("blk", r"^[^,]*,(.*),[^,]*$", 1).alias("object"),
-        F.substring_index("blk", ",", -1).cast("int").alias("char_offset"),
+        F.substring_index("blk", ",", -1).try_cast("int").alias("char_offset"),
     )
 
 
@@ -387,25 +382,25 @@ def gkg_counts(gkg: DataFrame, col: str = "V2Counts") -> DataFrame:
     V2Counts appending '#offset') — the numeric event-magnitude
     signal (KILL/ARREST/PROTEST counts with a geocode) the reference
     downloads but never parses (reference/extractor/extractor.py:
-    288-312).  One explode + codegen split projection; short/malformed
-    blocks yield NULL fields via F.get past-end semantics."""
+    288-312).  One explode + codegen split projection; short blocks
+    and non-numeric sub-fields read NULL (F.get past the end, try_cast)."""
     staged = gkg.select("GKGRECORDID", F.explode(_gkg_blocks(col)).alias("blk"))
     p = F.split("blk", "#")
     cols = [
         F.col("GKGRECORDID"),
         F.get(p, 0).alias("count_type"),
-        F.get(p, 1).cast("long").alias("count"),
+        F.get(p, 1).try_cast("long").alias("count"),
         F.get(p, 2).alias("object_type"),
-        F.get(p, 3).cast("int").alias("loc_type"),
+        F.get(p, 3).try_cast("int").alias("loc_type"),
         F.get(p, 4).alias("loc_name"),
         F.get(p, 5).alias("country_code"),
         F.get(p, 6).alias("adm1_code"),
-        F.get(p, 7).cast("double").alias("lat"),
-        F.get(p, 8).cast("double").alias("lon"),
+        F.get(p, 7).try_cast("double").alias("lat"),
+        F.get(p, 8).try_cast("double").alias("lon"),
         F.get(p, 9).alias("feature_id"),
     ]
     if col == "V2Counts":
-        cols.append(F.get(p, 10).cast("int").alias("char_offset"))
+        cols.append(F.get(p, 10).try_cast("int").alias("char_offset"))
     return staged.select(*cols)
 
 
@@ -497,26 +492,62 @@ def parse_v1_index(html: str, base_url: str = "http://data.gdeltproject.org/even
     return f"{base_url.rstrip('/')}/{hrefs[3]}"
 
 
-# Line ends as the CSV reader splits them: CRLF, a lone CR, LF.
+# Line ends as Spark's text reader splits them: CRLF, a lone CR, LF.
 _LINE_END = re.compile(r"\r\n|\r|\n")
 
 
 @lru_cache(maxsize=16)
 def _field_exprs(schema: T.StructType) -> tuple[str, ...]:
-    """One SQL expression per field of ``schema`` over the split array
-    ``_f``: field ``i``, empty → NULL (the CSV reader's nullValue=""),
-    cast to the field's type, named as the field.  Plain strings, so
-    the cache holds no JVM object."""
-    return tuple(
-        f"CAST(nullif(get(_f, {i}), '') AS {f.dataType.simpleString()}) "
-        f"AS `{f.name.replace('`', '``')}`"
+    """The one GDELT parse as SQL strings over the line and its split
+    array ``_f``: field ``i`` is ``try_cast(nullif(get(_f, i), ''))``
+    to the field's type, named as the field; ``_reject`` is
+    'field_count' when the row has not exactly one field per column,
+    else 'bad_value:<Field>' for the first non-empty field its
+    ``try_cast`` turns into NULL, else NULL.  Plain strings, so the
+    cache holds no JVM object."""
+    typed = [
+        (i, f, f"try_cast(nullif(get(_f, {i}), '') AS {f.dataType.simpleString()})")
         for i, f in enumerate(schema.fields)
+    ]
+    bad = "".join(
+        f" WHEN get(_f, {i}) <> '' AND {e} IS NULL THEN 'bad_value:{f.name}'"
+        for i, f, e in typed
+        if f.dataType != T.StringType()
+    )
+    return (
+        *(f"{e} AS `{f.name.replace('`', '``')}`" for _, f, e in typed),
+        f"CASE WHEN size(_f) <> {len(schema)} THEN 'field_count'{bad} END AS _reject",
+        "line",
     )
 
 
+def _parse(lines: DataFrame, schema: T.StructType) -> DataFrame:
+    """Every GDELT line source (plain files, zips, the stream) goes
+    through this one parse: blank and whitespace-only lines drop, the
+    rest split on tabs (GDELT TSV has no quoting) into the typed
+    fields, ``_reject`` and ``line`` (``_field_exprs``)."""
+    return (
+        lines.filter(F.col("line").rlike(r"\S"))
+        .select("line", F.split("line", "\t", -1).alias("_f"))
+        .selectExpr(*_field_exprs(schema))
+    )
+
+
+def _where(parsed: DataFrame, cond: str) -> DataFrame:
+    """The ``parsed`` rows where ``cond`` holds.  A generator, not a
+    filter: Spark pushes a filter below the split, re-splitting once
+    per field it checks (5x the parse time of a 200k-line v2 export)."""
+    keep = f"explode(CASE WHEN {cond} THEN array(0) END) AS _keep"
+    return parsed.selectExpr("*", keep).drop("_keep")
+
+
+def _clean(parsed: DataFrame) -> DataFrame:
+    return _where(parsed, "_reject IS NULL").drop("_reject", "line")
+
+
 def _zip_lines(spark: SparkSession, path: str) -> DataFrame:
-    """One ``line`` string row per non-blank line of every member of
-    the zips ``path`` matches, unzipped and decoded executor-side."""
+    """One ``line`` string row per line of every member of the zips
+    ``path`` matches, unzipped and decoded executor-side."""
 
     def unzip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -524,7 +555,7 @@ def _zip_lines(spark: SparkSession, path: str) -> DataFrame:
                 with zipfile.ZipFile(io.BytesIO(content)) as zf:
                     for member in zf.namelist():
                         text = zf.read(member).decode("utf-8", errors="replace")
-                        lines = [line for line in _LINE_END.split(text) if line.strip()]
+                        lines = _LINE_END.split(text)
                         yield pd.DataFrame({"line": pd.Series(lines, dtype=object)})
 
     return (
@@ -541,13 +572,12 @@ def read_gdelt_zip(
     """Read zipped GDELT TSVs, decompressing executor-side.
 
     ``binaryFile`` scans the zips (each file one row); mapInPandas
-    only unzips, decodes and emits the non-blank lines as one string
-    column, splitting lines on CRLF, CR or LF as the CSV reader does.
-    Fields are split in the JVM: a row with too few fields gets NULL
-    for the missing ones, extra fields are dropped, and empty fields
-    become NULL before the cast to the typed schema.  Unlike the
-    reference's driver temp-dir flow, this parallelizes across however
-    many zip files the glob matches.
+    only unzips, decodes and emits the lines as one string column,
+    split on CRLF, CR or LF as ``spark.read.text`` does.  The rest is
+    the parse every GDELT reader shares (``_parse``): a bad row is
+    quarantined (``read_gdelt_rejects``), never padded, truncated,
+    read as NULL or allowed to fail the job.  Unlike the reference's
+    driver temp-dir flow, this parallelizes across the zips.
 
     The typed projection is one ``selectExpr`` whose strings are
     derived from the schema (``_field_exprs``, computed once per
@@ -558,11 +588,15 @@ def read_gdelt_zip(
     strings' list conversion).  The optimized plan is the same either
     way.
     """
-    return (
-        _zip_lines(spark, path)
-        .select(F.split("line", "\t", -1).alias("_f"))
-        .selectExpr(*_field_exprs(schema))
-    )
+    return _clean(_parse(_zip_lines(spark, path), schema))
+
+
+def read_gdelt_rejects(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """(line, reason) for every line of ``path`` — zips when it ends in
+    '.zip', plain TSV otherwise — that the GDELT readers quarantine
+    under ``schema``: reason 'field_count' or 'bad_value:<Field>'."""
+    lines = _zip_lines(spark, path) if path.endswith(".zip") else spark.read.text(path).toDF("line")
+    return _where(_parse(lines, schema), "_reject IS NOT NULL").selectExpr("line", "_reject AS reason")
 
 
 def process_gdelt_events(df: DataFrame) -> DataFrame:
@@ -698,7 +732,7 @@ def gkg_theme_daily(gkg: DataFrame, min_records: int = 1) -> DataFrame:
     staged = gkg.select(
         (F.col("DATE").cast("long") / 1_000_000).cast("long").alias("day"),
         "SourceCommonName",
-        F.split(F.col("V2Tone"), ",").getItem(0).cast("double").alias("tone"),
+        F.split(F.col("V2Tone"), ",").getItem(0).try_cast("double").alias("tone"),
         F.explode(_theme_array(distinct=True)).alias("theme"),
     )
     return (

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.gdelt import TSV_OPTIONS, V2_EVENTS_SCHEMA
+from ..sources.gdelt import V2_EVENTS_SCHEMA, _clean, _parse
 
 
 def stream_gdelt_dir(
@@ -30,14 +30,19 @@ def stream_gdelt_dir(
     schema: T.StructType = V2_EVENTS_SCHEMA,
     max_files_per_trigger: int = 8,
 ) -> DataFrame:
-    """File-source stream of GDELT TSV drops."""
-    return (
-        spark.readStream.format("csv")
-        .options(**TSV_OPTIONS)
+    """File-source stream of GDELT TSV drops through the batch readers'
+    parser (``sources.gdelt._parse``): clean rows flow on; each batch's
+    progress counts the rest in ``observedMetrics[f"gdelt_rejects:
+    {landing_dir}"]["rejects"]`` (per directory: Spark refuses two
+    observations of one name in a query, e.g. events ⋈ mentions)."""
+    lines = (
+        spark.readStream.format("text")
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .schema(schema)
         .load(landing_dir)
+        .toDF("line")
     )
+    rejects = F.count_if(F.col("_reject").isNotNull()).alias("rejects")
+    return _clean(_parse(lines, schema).observe(f"gdelt_rejects:{landing_dir}", rejects))
 
 
 def with_event_time(df: DataFrame, col: str = "DATEADDED") -> DataFrame:

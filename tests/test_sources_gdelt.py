@@ -93,12 +93,13 @@ def test_read_zip_roundtrip(spark, v2_tsv, tmp_path):
     assert sorted(df.collect()) == sorted(plain.collect())
 
 
-def _twin_read_zip(path: str, n_fields: int) -> list[tuple]:
-    """Pure-Python reference for read_gdelt_zip's line handling:
-    decode with replacement, split on \\r\\n, \\r or \\n, drop blank
-    lines, split on tabs, pad with NULL / truncate to ``n_fields``,
-    "" -> NULL."""
-    rows = []
+def _twin_read_zip(path: str, n_fields: int) -> tuple[list[tuple], list[tuple]]:
+    """Pure-Python reference for read_gdelt_zip's line handling on a
+    string schema: decode with replacement, split on \\r\\n, \\r or
+    \\n, drop blank lines, split on tabs, "" -> NULL; a row without
+    exactly ``n_fields`` fields is a (line, 'field_count') reject.
+    Returns (clean rows, rejects)."""
+    rows, rejects = [], []
     with zipfile.ZipFile(path) as zf:
         for member in zf.namelist():
             text = zf.read(member).decode("utf-8", errors="replace")
@@ -106,16 +107,19 @@ def _twin_read_zip(path: str, n_fields: int) -> list[tuple]:
                 if not line.strip():
                     continue
                 r = line.split("\t")
-                r = r[:n_fields] + [None] * max(0, n_fields - len(r))
+                if len(r) != n_fields:
+                    rejects.append((line, "field_count"))
+                    continue
                 rows.append(tuple(None if v == "" else v for v in r))
-    return rows
+    return rows, rejects
 
 
 def test_read_zip_matches_python_twin(spark, tmp_path):
     """Ragged rows, blank/whitespace/tab-only lines, CRLF, invalid
     UTF-8, an empty member and several members per zip: the reader
     (fields split in the JVM) matches the Python twin field for
-    field, as strings and after the typed cast."""
+    field, as strings and after the typed cast, and the ragged rows
+    are quarantined with reason 'field_count'."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -140,13 +144,18 @@ def test_read_zip_matches_python_twin(spark, tmp_path):
         for name, data in members.items():
             zf.writestr(name, data)
 
-    want = _twin_read_zip(str(zpath), N_V2)
-    assert len(want) == 7
+    want, want_rejects = _twin_read_zip(str(zpath), N_V2)
+    assert len(want) == 4
+    assert want_rejects == [(short, "field_count"), (long_, "field_count"),
+                            (very_short, "field_count")]
     str_schema = T.StructType(
         [T.StructField(f.name, T.StringType()) for f in G.V2_EVENTS_SCHEMA.fields]
     )
     got = G.read_gdelt_zip(spark, str(zpath), str_schema).collect()
     assert sorted(map(tuple, got), key=repr) == sorted(want, key=repr)
+    for schema in (str_schema, G.V2_EVENTS_SCHEMA):
+        rejects = G.read_gdelt_rejects(spark, str(zpath), schema).collect()
+        assert sorted(map(tuple, rejects)) == sorted(want_rejects)
 
     typed = G.read_gdelt_zip(spark, str(zpath))
     twin_typed = spark.createDataFrame(want, str_schema).select(
@@ -155,8 +164,7 @@ def test_read_zip_matches_python_twin(spark, tmp_path):
     assert typed.schema == twin_typed.schema == G.read_gdelt_v2(spark, str(zpath)).schema
     assert sorted(typed.collect(), key=repr) == sorted(twin_typed.collect(), key=repr)
     by_id = {r.GLOBALEVENTID: r for r in typed.collect()}
-    assert by_id[2].SOURCEURL is None and by_id[3].SOURCEURL == "http://example.com/long"
-    assert by_id[4].SQLDATE == 20240101 and by_id[4].DATEADDED is None
+    assert set(by_id) == {1, 5, 6, 7}
     assert by_id[5].SOURCEURL == "http://example.com/crlf"
     assert by_id[7].Actor1Name == "GOV\ufffd\ufffdX"
 
@@ -164,7 +172,7 @@ def test_read_zip_matches_python_twin(spark, tmp_path):
 def test_tsv_readers_agree_on_quotes_and_line_ends(spark, tmp_path):
     """GDELT TSV has no quoting: a field starting with '"' keeps its
     quote and ends at the next tab, so no tab is swallowed and no
-    column shifts.  The batch TSV reader, the streaming file source
+    column shifts.  The plain TSV reader, the streaming file source
     and the zip reader read the same fields, and all three end lines
     at CRLF, a lone CR or LF."""
     from gdelt_extractor_spark.streaming import updates as U
@@ -180,12 +188,62 @@ def test_tsv_readers_agree_on_quotes_and_line_ends(spark, tmp_path):
     with zipfile.ZipFile(zpath, "w") as zf:
         zf.writestr("q.export.CSV", data)
 
-    batch = G._read_tsv(spark, str(landing), schema).collect()
+    batch = G._read_text(spark, str(landing), schema).collect()
     U.run_to_memory_sink(U.stream_gdelt_dir(spark, str(landing), schema), "tsv_quotes")
     stream = spark.sql("SELECT * FROM tsv_quotes").collect()
     zipped = G.read_gdelt_zip(spark, str(zpath), schema).collect()
     for rows in (batch, stream, zipped):
         assert sorted(map(tuple, rows)) == want
+
+
+def test_malformed_rows_quarantined_on_every_input_kind(spark, tmp_path):
+    """A quoted field, a short row, a long row, bad numbers in a
+    bigint and an int column, and CRLF / lone-CR line ends read the
+    same way as plain TSV, zipped and streamed: the clean rows are
+    identical, each bad line comes back from read_gdelt_rejects with
+    its reason, and keep-first dedup keeps the valid row of a URL a
+    bad-id row shares (a NULL id would sort first and win)."""
+    from gdelt_extractor_spark.streaming import updates as U
+
+    # a '"' opens no quote: the tab after it still ends the field
+    quoted = _v2_row(3, "http://example.com/q").replace("GOVERNMENT\t", '"GOV\tERN', 1)
+    bad_id = _v2_row(0, "http://example.com/b").replace("0", "notanumber", 1)
+    bad_int = _v2_row(8, "http://example.com/i").replace("\t3\t-2.0\t", "\tthree\t-2.0\t")
+    short = "\t".join(_v2_row(4, "http://example.com/s").split("\t")[:60])
+    long_ = _v2_row(6, "http://example.com/l") + "\tEXTRA"
+    data = (
+        "\n".join([_v2_row(1, "http://example.com/a"), bad_id, short, "  "])
+        + "\r\n" + "\r\n".join([quoted, long_, _v2_row(5, "http://example.com/b")])
+        + "\r" + bad_int + "\r"
+    ).encode()
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "m.export.CSV").write_bytes(data)
+    zpath = tmp_path / "m.export.CSV.zip"
+    with zipfile.ZipFile(zpath, "w") as zf:
+        zf.writestr("m.export.CSV", data)
+
+    plain = G.read_gdelt_v2(spark, str(landing))
+    U.run_to_memory_sink(U.stream_gdelt_dir(spark, str(landing)), "malformed_out")
+    stream = spark.table("malformed_out").collect()
+    zipped = G.read_gdelt_zip(spark, str(zpath)).collect()
+    assert sorted(plain.collect()) == sorted(zipped) == sorted(stream)
+    by_id = {r.GLOBALEVENTID: r for r in zipped}
+    assert set(by_id) == {1, 3, 5}
+    assert by_id[3].Actor1Name == '"GOV' and by_id[3].Actor1CountryCode == "ERN"
+
+    want = {
+        (bad_id, "bad_value:GLOBALEVENTID"),
+        (bad_int, "bad_value:QuadClass"),
+        (short, "field_count"),
+        (long_, "field_count"),
+    }
+    for path in (str(landing), str(zpath)):
+        got = G.read_gdelt_rejects(spark, path, G.V2_EVENTS_SCHEMA).collect()
+        assert sorted(map(tuple, got)) == sorted(want)
+
+    kept = G.process_gdelt_events(plain).collect()
+    assert {r.sourceurl: r.globaleventid for r in kept}["http://example.com/b"] == 5
 
 
 def test_read_zip_projection_is_one_call(spark, tmp_path, round_trips):
@@ -194,6 +252,7 @@ def test_read_zip_projection_is_one_call(spark, tmp_path, round_trips):
     (the per-column ``F.*`` form cost ~55), and its optimized plan is
     the per-column form's, expression ids aside."""
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     zpath = tmp_path / "one.export.CSV.zip"
     with zipfile.ZipFile(zpath, "w") as zf:
@@ -215,15 +274,26 @@ def test_read_zip_projection_is_one_call(spark, tmp_path, round_trips):
         return re.sub(r"#\d+L?", "#", text)
 
     for schema, df in zip(schemas, built):
+        fields = [
+            F.nullif(F.get("_f", i), F.lit("")).try_cast(f.dataType)
+            for i, f in enumerate(schema.fields)
+        ]
+        reject = F.when(F.size("_f") != len(schema), F.lit("field_count"))
+        for i, (f, c) in enumerate(zip(schema.fields, fields)):
+            if f.dataType != T.StringType():
+                bad = (F.get("_f", i) != F.lit("")) & c.isNull()
+                reject = reject.when(bad, F.lit(f"bad_value:{f.name}"))
         per_column = (
             G._zip_lines(spark, str(zpath))
-            .select(F.split("line", "\t", -1).alias("_f"))
+            .filter(F.col("line").rlike(r"\S"))
+            .select("line", F.split("line", "\t", -1).alias("_f"))
             .select(
-                *[
-                    F.nullif(F.get("_f", i), F.lit("")).cast(f.dataType).alias(f.name)
-                    for i, f in enumerate(schema.fields)
-                ]
+                *[c.alias(f.name) for f, c in zip(schema.fields, fields)],
+                reject.alias("_reject"),
+                "line",
             )
+            .select("*", F.explode(F.when(F.col("_reject").isNull(), F.array(F.lit(0)))).alias("_keep"))
+            .drop("_keep", "_reject", "line")
         )
         assert df.schema == per_column.schema
         assert plan(df) == plan(per_column)
@@ -499,8 +569,8 @@ def test_gdelt_fixtures_integrity():
 
 def test_readers_permissive_on_malformed_rows(spark, tmp_path):
     """A 100 TB backfill WILL contain truncated and corrupt TSV
-    lines; the typed readers must degrade per-field to NULL
-    (PERMISSIVE), never fail the job or skew the schema."""
+    lines; the typed readers must quarantine them with a reason,
+    never fail the job, skew the schema or read a bad field as NULL."""
     good = "\t".join(["1", "20240101083000", "20240101090000", "1",
                       "a.com", "http://a.com/x", "0", "1", "2", "3",
                       "1", "80", "500", "-2.50", "eng", "-"])
@@ -510,15 +580,15 @@ def test_readers_permissive_on_malformed_rows(spark, tmp_path):
                            "t", "NaNish", "500", "tone", "i", "-"])
     p = tmp_path / "m.mentions.CSV"
     p.write_text("\n".join([good, short, bad_types]) + "\n")
-    rows = G.read_gdelt_mentions(spark, str(p)).collect()
-    assert len(rows) == 3
-    by_url = {r.MentionIdentifier: r for r in rows}
-    assert by_url["http://a.com/x"].Confidence == 80
-    assert by_url["u"].GLOBALEVENTID is None      # unparseable long
-    assert by_url["u"].Confidence is None
-    assert by_url["u"].MentionSourceName == "a.com"  # strings survive
-    short_row = next(r for r in rows if r.GLOBALEVENTID == 2)
-    assert short_row.MentionType is None          # missing tail -> NULL
+    df = G.read_gdelt_mentions(spark, str(p))
+    assert df.schema == G.MENTIONS_SCHEMA
+    (row,) = df.collect()
+    assert row.MentionIdentifier == "http://a.com/x" and row.Confidence == 80
+    rejects = G.read_gdelt_rejects(spark, str(p), G.MENTIONS_SCHEMA).collect()
+    assert sorted(map(tuple, rejects)) == [
+        (short, "field_count"),                      # truncated line
+        (bad_types, "bad_value:GLOBALEVENTID"),      # first unparseable field
+    ]
 
 
 def test_mention_stats_latency_is_timezone_independent(spark):
@@ -554,7 +624,7 @@ def _gkg_v2_row(rid: str, **fields: str) -> str:
     idx = {"V2Locations": 10, "V2Persons": 12, "V2Organizations": 14,
            "V2Tone": 15, "GCAM": 17, "SharingImage": 18,
            "RelatedImages": 19, "Quotations": 22, "Amounts": 24,
-           "Counts": 5, "V2Counts": 6, "TranslationInfo": 25}
+           "Counts": 5, "V2Counts": 6, "Themes": 7, "TranslationInfo": 25}
     cols = [""] * 27
     cols[0] = rid
     cols[1] = "20240101083000"
@@ -806,6 +876,45 @@ def test_gkg_translation_parse(spark, tmp_path):
     got = {(r.GKGRECORDID, r.src_lang, r.engine)
            for r in G.gkg_translation(gkg).collect()}
     assert got == {("r1", "fra", "Moses 2.1.1")}
+
+
+def test_gkg_block_bad_subfields_read_null(spark, tmp_path):
+    """One non-numeric sub-field per block kind reads NULL: the other
+    fields of that block and every other row are kept, and the job
+    does not fail (a plain cast raises CAST_INVALID_INPUT under ANSI)."""
+    p = tmp_path / "g.gkg.csv"
+    p.write_text(
+        _gkg_v2_row(
+            "r1",
+            V2Persons="Jane Doe,abc;John Smith,300",
+            V2Locations="1#France#FR#FR00#abc#2.0#FR#150",
+            V2Counts="KILL#lots#people#1#France#FR#FR00#46.0#2.0#FR#210",
+            Quotations="x#45#said#We will act",
+            Amounts="many,protesters,103",
+            GCAM="wc:abc,c2.1:3",
+            V2Tone="calm,1.0",
+            Themes="ENV_CLIMATE",
+        )
+        + "\n"
+        + _gkg_v2_row("r2", V2Persons="Ann Lee,7")
+        + "\n"
+    )
+    gkg = G.read_gdelt_gkg(spark, str(p))
+    assert {(r.GKGRECORDID, r.name, r.char_offset)
+            for r in G.gkg_v2_names(gkg).collect()} == {
+        ("r1", "Jane Doe", None), ("r1", "John Smith", 300), ("r2", "Ann Lee", 7)}
+    (loc,) = G.gkg_v2_locations(gkg).collect()
+    assert (loc.full_name, loc.lat, loc.lon, loc.char_offset) == ("France", None, 2.0, 150)
+    (cnt,) = G.gkg_counts(gkg).collect()
+    assert (cnt.count_type, cnt["count"], cnt.lat) == ("KILL", None, 46.0)
+    (q,) = G.gkg_quotations(gkg).collect()
+    assert (q.char_offset, q.length, q.quote) == (None, 45, "We will act")
+    (a,) = G.gkg_amounts(gkg).collect()
+    assert (a.amount, a.object, a.char_offset) == (None, "protesters", 103)
+    assert {(r.dim, r.value) for r in G.gkg_gcam(gkg).collect()} == {
+        ("wc", None), ("c2.1", 3.0)}
+    (d,) = G.gkg_theme_daily(gkg).collect()
+    assert (d.theme, d.n_records, d.avg_tone) == ("ENV_CLIMATE", 1, None)
 
 
 def test_v2_fixture_known_values(spark):

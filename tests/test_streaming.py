@@ -44,6 +44,39 @@ def test_stream_dedup_keep_first(spark, landing):
     assert len(rows) == 3
 
 
+def test_stream_counts_rejects(spark, tmp_path):
+    """A drop with one good and one bad row: the good row flows on and
+    the micro-batch's progress reports the quarantined one through the
+    stream's named observation, with no extra job.  Two GDELT streams
+    still join: each observation is named after its directory."""
+    from gdelt_extractor_spark.sources.gdelt import MENTIONS_SCHEMA
+
+    d = tmp_path / "landing"
+    d.mkdir()
+    (tmp_path / "mentions").mkdir()
+    U.stream_gdelt_dir(spark, str(d)).join(
+        U.stream_gdelt_dir(spark, str(tmp_path / "mentions"), MENTIONS_SCHEMA),
+        "GLOBALEVENTID",
+    ).schema  # analysis fails on a duplicated observation name
+    bad = _v2_row(9, "http://example.com/z").replace("9", "nine", 1)
+    (d / "t.export.CSV").write_text(_v2_row(1, "http://example.com/a") + "\n" + bad + "\n")
+    q = (
+        U.stream_gdelt_dir(spark, str(d)).select("GLOBALEVENTID")
+        .writeStream.format("memory").queryName("rejects_out").start()
+    )
+    try:
+        q.processAllAvailable()
+        counts = [
+            p["observedMetrics"][f"gdelt_rejects:{d}"]["rejects"]
+            for p in q.recentProgress
+            if p.get("observedMetrics")
+        ]
+    finally:
+        q.stop()
+    assert sum(counts) == 1
+    assert [r.GLOBALEVENTID for r in spark.table("rejects_out").collect()] == [1]
+
+
 def test_stream_windowed_counts(spark, landing):
     stream = U.with_event_time(U.stream_gdelt_dir(spark, landing))
     agg = U.windowed_counts(stream)
