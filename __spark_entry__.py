@@ -40,10 +40,11 @@ from gdelt_extractor_spark.operators import curation as C
 from gdelt_extractor_spark.operators import dedup as D
 from gdelt_extractor_spark.operators import similarity as S
 from gdelt_extractor_spark.operators import textstats as TS
-from gdelt_extractor_spark.functions.text import tokens
+from gdelt_extractor_spark.operators import temporal as TM
+from gdelt_extractor_spark.functions.text import _md5_int, tokens
 from gdelt_extractor_spark.operators.enrich import enrich_articles
 from gdelt_extractor_spark.operators.geo import geo_project
-from gdelt_extractor_spark.operators.keywords import keyword_freq
+from gdelt_extractor_spark.operators.keywords import KEYWORD_IGNORE, keyword_freq
 from gdelt_extractor_spark.operators.sketches import approx_topk
 from gdelt_extractor_spark.plans import queries as Q
 from gdelt_extractor_spark.sources.tables import load_table, parallelized
@@ -574,17 +575,7 @@ def _record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one core (measured 6.7s at sf0.1); a 15k-row repartition is
     # free and a no-op at real scale where the scan is already wide
     cust = load_table(spark, sf_dir, "customer").repartition(32)
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("link:"), F.col("c_custkey").cast("string"))),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("long")
-    )
+    h = _md5_int("link", 6, F.col("c_custkey").cast("string")).cast("long")
     dirty = cust.select(
         (F.col("c_custkey") + 1000000).alias("d_custkey"),
         F.col("c_nationkey"),
@@ -710,17 +701,7 @@ def _golden_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdelt_extractor_spark.operators.linkage import golden_record
 
     cust = load_table(spark, sf_dir, "customer")
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("gold:"), F.col("c_custkey").cast("string"))),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("long")
-    )
+    h = _md5_int("gold", 6, F.col("c_custkey").cast("string")).cast("long")
     t = cust.select(
         "c_custkey",
         (F.col("c_custkey") % 500).alias("cl"),
@@ -1297,7 +1278,7 @@ def _dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit-tested in tests/test_dedup.py."""
     docs = _docs(spark, sf_dir, width=0).select("doc_id", "text", "source")
     hist = docs.filter(F.col("doc_id") < 250)
-    idx = D.minhash_band_index(hist, bands=16)
+    idx = D.minhash_band_index(hist)
     mutated = hist.filter(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zz yy xx")).alias("text"),
@@ -1305,7 +1286,7 @@ def _dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     batch = docs.filter(F.col("doc_id") >= 250).unionByName(mutated)
     return (
-        D.dedup_incremental_minhash(batch, idx, bands=16, threshold=0.5)
+        D.dedup_incremental_minhash(batch, idx, threshold=0.5)
         .select("doc_id", "source")
         .orderBy("doc_id")
     )
@@ -2871,21 +2852,9 @@ def _rater_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(spark.range(3).select(F.col("id").alias("rater_id")))
     )
     noise = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("rater:"),
-                        F.col("rater_id").cast("string"),
-                        F.lit(":"),
-                        F.col("doc_id").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
+        _md5_int(
+            "rater", 8, F.col("rater_id").cast("string"), F.lit(":"),
+            F.col("doc_id").cast("string"),
         ).cast("long"),
         F.lit(10),
     )
@@ -3200,21 +3169,13 @@ def _nearest_capital(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    def _h(prefix: str) -> F.Column:
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(prefix), F.col("c_custkey").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+    def _h(salt: str) -> F.Column:
+        return _md5_int(salt, 8, F.col("c_custkey").cast("string")).cast("long")
 
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("pid"),
-        ((_h("lat:") % 16000) / F.lit(100.0) - 80).alias("lat"),
-        ((_h("lon:") % 36000) / F.lit(100.0) - 180).alias("lon"),
+        ((_h("lat") % 16000) / F.lit(100.0) - 80).alias("lat"),
+        ((_h("lon") % 36000) / F.lit(100.0) - 180).alias("lon"),
     )
     return nearest_join(c, n, "pid", "aid", k=1, cell_deg=120.0)
 
@@ -4071,11 +4032,12 @@ def _pagerank_micro_sql(
     delta, so the iteration COUNT matches too.  Output (node,
     rank_micro) in HALF_UP micro-units; ``positive_only`` appends
     the related_actors reachability filter."""
-    scale = 10**12
+    from gdelt_extractor_spark.operators.graph import MICRO_SCALE
+
     if seeds_values is None:
         rv_ctes = f"""
             rvt AS (SELECT list_transform(range(1, n + 1),
-                      x -> CAST({scale} // n AS BIGINT)) AS rv
+                      x -> CAST({MICRO_SCALE} // n AS BIGINT)) AS rv
                     FROM cnt)"""
     else:
         rv_ctes = f"""
@@ -4086,13 +4048,13 @@ def _pagerank_micro_sql(
                    FROM nd LEFT JOIN sd ON sd.node = nd.node),
             twt AS (SELECT CAST(SUM(w) AS BIGINT) AS tw FROM sj),
             rvt AS (SELECT list(CAST(CASE WHEN sj.w IS NULL THEN 0
-                      ELSE (CAST({scale} AS HUGEINT) * sj.w) // twt.tw
+                      ELSE (CAST({MICRO_SCALE} AS HUGEINT) * sj.w) // twt.tw
                       END AS BIGINT) ORDER BY sj.idx) AS rv
                     FROM sj, twt)"""
     sel = f"""
             SELECT nd.node,
               CAST((CAST(vals[nd.idx] AS HUGEINT) * 1000000
-                    + {scale // 2}) // {scale} AS BIGINT) AS rank_micro
+                    + {MICRO_SCALE // 2}) // {MICRO_SCALE} AS BIGINT) AS rank_micro
             FROM nd, fin"""
     if positive_only:
         sel = f"SELECT * FROM ({sel}) WHERE rank_micro > 0"
@@ -4138,7 +4100,7 @@ def _pagerank_micro_sql(
                            y -> CASE WHEN h.ho[y] = 0
                                 THEN CAST(s.vals[y] AS HUGEINT)
                                 ELSE CAST(0 AS HUGEINT) END)), 0)
-                         * CAST(r.rv[x] AS HUGEINT)) // {scale}
+                         * CAST(r.rv[x] AS HUGEINT)) // {MICRO_SCALE}
                     )) // {den}
                 AS BIGINT)) AS nv
             FROM state s, ajt a, hot h, rvt r) t
@@ -4177,6 +4139,9 @@ def oracle_sql() -> dict[str, str]:
         f"({j}, {_q(c)}, {_q(l)})" for j, (c, l) in enumerate(_t_rows)
     )
 
+    from gdelt_extractor_spark.operators.chat import CHATML_END, CHATML_START
+    from gdelt_extractor_spark.operators.linkage import FS_MATCH, FS_NON_MATCH
+    from gdelt_extractor_spark.sources.gdelt import GOLDSTEIN_WINDOW_DAYS
     from gdelt_extractor_spark.operators.textstats import (
         EN_STOPWORDS,
         GOPHER_RULES,
@@ -4377,7 +4342,7 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY n_name
             ORDER BY revenue DESC, n_name ASC
         """,
-        "topk_per_group": """
+        "topk_per_group": f"""
             SELECT o_orderpriority, CAST(rank AS BIGINT) AS rank, o_orderkey, o_totalprice
             FROM (
               SELECT o_orderpriority, o_orderkey, o_totalprice,
@@ -4385,7 +4350,7 @@ def oracle_sql() -> dict[str, str]:
                   PARTITION BY o_orderpriority
                   ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank
               FROM orders)
-            WHERE rank <= 3
+            WHERE rank <= {Q.TOPK_PER_GROUP}
         """,
         "events_hourly": f"""
             SELECT date_trunc('hour', ts) AS hour, event_type,
@@ -4401,7 +4366,7 @@ def oracle_sql() -> dict[str, str]:
                   PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS prev
               FROM events),
             y AS (
-              SELECT *, CASE WHEN prev IS NULL OR ts_s - prev > 1800
+              SELECT *, CASE WHEN prev IS NULL OR ts_s - prev > {Q.SESSION_GAP_S}
                              THEN 1 ELSE 0 END AS is_new FROM x),
             z AS (
               SELECT *, SUM(is_new) OVER (
@@ -4794,7 +4759,7 @@ def oracle_sql() -> dict[str, str]:
                 / sqrt((n*sxx - sx*sx) * (n*syy - sy*sy)), 6) AS r
             FROM stats ORDER BY event_type
         """,
-        "session_paths": """
+        "session_paths": f"""
             WITH ranked AS (
               SELECT user_id, event_type,
                 row_number() OVER (
@@ -4803,10 +4768,10 @@ def oracle_sql() -> dict[str, str]:
             paths AS (
               SELECT user_id,
                 string_agg(event_type, '>' ORDER BY rn) AS path
-              FROM ranked WHERE rn <= 5 GROUP BY user_id)
+              FROM ranked WHERE rn <= {Q.PATH_DEPTH} GROUP BY user_id)
             SELECT path, CAST(COUNT(*) AS BIGINT) AS n_users
             FROM paths GROUP BY path
-            ORDER BY n_users DESC, path ASC LIMIT 20
+            ORDER BY n_users DESC, path ASC LIMIT {Q.PATH_TOP}
         """,
         "event_funnel": """
             WITH s1 AS (
@@ -5103,9 +5068,9 @@ def oracle_sql() -> dict[str, str]:
         "dedup_editdist": f"""
             WITH base AS (
               SELECT doc_id AS id,
-                substring(norm, 1, 64) AS pref,
-                substring(norm, 1, 12) || '#' ||
-                  CAST(CAST(floor(length(norm) / 64) AS BIGINT)
+                substring(norm, 1, {D.EDIT_COMPARE_PREFIX}) AS pref,
+                substring(norm, 1, {D.EDIT_BLOCK_PREFIX}) || '#' ||
+                  CAST(CAST(floor(length(norm) / {D.EDIT_LENGTH_BUCKET}) AS BIGINT)
                        AS VARCHAR) AS block
               FROM (
                 SELECT doc_id, {_NORM.format(c='text')} AS norm
@@ -5114,7 +5079,7 @@ def oracle_sql() -> dict[str, str]:
               CAST(levenshtein(a.pref, b.pref) AS BIGINT) AS edit_distance
             FROM base a
             JOIN base b ON a.block = b.block AND a.id < b.id
-            WHERE levenshtein(a.pref, b.pref) <= 16
+            WHERE levenshtein(a.pref, b.pref) <= {D.EDIT_MAX_DIST}
         """,
         "event_spikes": """
             WITH daily AS (
@@ -5244,7 +5209,7 @@ def oracle_sql() -> dict[str, str]:
             WITH kw AS (
               SELECT unnest({kw_list}) AS keyword FROM documents)
             SELECT keyword, COUNT(*) AS freq
-            FROM kw WHERE keyword <> 'state'
+            FROM kw WHERE {" AND ".join(f"keyword <> '{w}'" for w in KEYWORD_IGNORE)}
             GROUP BY keyword
         """,
         "lookup_country_rollup": f"""
@@ -5308,7 +5273,7 @@ def oracle_sql() -> dict[str, str]:
                 / COUNT(*) AS avg_tone
             FROM g GROUP BY 1
         """,
-        "goldstein_daily": """
+        "goldstein_daily": f"""
             WITH daily AS (
               SELECT 'C' || CAST(user_id % 10 AS VARCHAR) AS grp,
                 date_trunc('day', ts) AS day,
@@ -5323,7 +5288,7 @@ def oracle_sql() -> dict[str, str]:
             WINDOW w AS (
               PARTITION BY grp
               ORDER BY CAST(CAST(day AS DATE) - DATE '1970-01-01' AS BIGINT)
-              RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
+              RANGE BETWEEN {GOLDSTEIN_WINDOW_DAYS - 1} PRECEDING AND CURRENT ROW)
         """,
         "geo_project": f"""
             SELECT event_id,
@@ -5679,7 +5644,7 @@ def oracle_sql() -> dict[str, str]:
             scored AS (
               SELECT tf.doc_id,
                 ((n - df + 0.5) / (df + 0.5)) * tf
-                  / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl / (total_toks / n)))
+                  / (tf + {TS.BM25_K1} * (1.0 - {TS.BM25_B} + {TS.BM25_B} * dl / (total_toks / n)))
                   AS contrib
               FROM tf JOIN dfreq USING (t) CROSS JOIN stats)
             SELECT doc_id,
@@ -5710,7 +5675,7 @@ def oracle_sql() -> dict[str, str]:
             bscored AS (
               SELECT tf.doc_id,
                 ((n - df + 0.5) / (df + 0.5)) * tf
-                  / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl / (total_toks / n)))
+                  / (tf + {TS.BM25_K1} * (1.0 - {TS.BM25_B} + {TS.BM25_B} * dl / (total_toks / n)))
                   AS contrib
               FROM tf JOIN dfreq USING (t) CROSS JOIN stats),
             lexs AS (
@@ -5729,7 +5694,7 @@ def oracle_sql() -> dict[str, str]:
             hb AS (
               SELECT doc_id,
                 CAST(CAST(('0x' || substring(md5('{TS.HASH_EMB_SALT}:' || t),
-                  1, 12)) AS BIGINT) % 64 AS INT) AS b,
+                  1, 12)) AS BIGINT) % {TS.HASH_EMB_DIM} AS INT) AS b,
                 CASE WHEN CAST(('0x' || substring(md5('{TS.HASH_EMB_SALT}:'
                   || t), 13, 1)) AS BIGINT) % 2 = 0
                   THEN -1.0 ELSE 1.0 END AS s
@@ -5745,7 +5710,7 @@ def oracle_sql() -> dict[str, str]:
             qhb AS (
               SELECT
                 CAST(CAST(('0x' || substring(md5('{TS.HASH_EMB_SALT}:' || t),
-                  1, 12)) AS BIGINT) % 64 AS INT) AS b,
+                  1, 12)) AS BIGINT) % {TS.HASH_EMB_DIM} AS INT) AS b,
                 CASE WHEN CAST(('0x' || substring(md5('{TS.HASH_EMB_SALT}:'
                   || t), 13, 1)) AS BIGINT) % 2 = 0
                   THEN -1.0 ELSE 1.0 END AS s
@@ -5773,8 +5738,8 @@ def oracle_sql() -> dict[str, str]:
             fused AS (
               SELECT COALESCE(l.doc_id, d.doc_id) AS doc_id,
                 l.r_lex, d.r_dense,
-                round(COALESCE(1.0 / (60 + l.r_lex), 0.0)
-                  + COALESCE(1.0 / (60 + d.r_dense), 0.0), 6) AS rrf
+                round(COALESCE(1.0 / ({TS.RRF_K} + l.r_lex), 0.0)
+                  + COALESCE(1.0 / ({TS.RRF_K} + d.r_dense), 0.0), 6) AS rrf
               FROM lex_r l FULL OUTER JOIN dense_r d
                 ON l.doc_id = d.doc_id
               ORDER BY rrf DESC, COALESCE(l.doc_id, d.doc_id) ASC
@@ -5932,14 +5897,14 @@ def oracle_sql() -> dict[str, str]:
                   AS BIGINT) AS h0
               FROM b, unnest(range(1, n - 1)) AS u(i)
               WHERE n >= 3),
-            p AS (SELECT * FROM (VALUES {_perm_values(D.MINHASH_SALT, 32)})
+            p AS (SELECT * FROM (VALUES {_perm_values(D.MINHASH_SALT, D.NUM_HASHES)})
                   AS t(slot, a, bb)),
             sig AS (
               SELECT id, p.slot,
                 MIN((sh.h0 * p.a + p.bb) % 281474976710656) AS mh
               FROM sh CROSS JOIN p GROUP BY 1, 2),
             bands AS (
-              SELECT id, slot // 4 AS band,
+              SELECT id, slot // {D.NUM_HASHES // D.PAIR_BANDS} AS band,
                 md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY slot))
                   AS bucket
               FROM sig GROUP BY 1, 2),
@@ -5996,14 +5961,14 @@ def oracle_sql() -> dict[str, str]:
                   AS BIGINT) AS h0
               FROM b, unnest(range(1, n - 1)) AS u(i)
               WHERE n >= 3),
-            p AS (SELECT * FROM (VALUES {_perm_values(D.MINHASH_SALT, 32)})
+            p AS (SELECT * FROM (VALUES {_perm_values(D.MINHASH_SALT, D.NUM_HASHES)})
                   AS t(slot, a, bb)),
             sig AS (
               SELECT id, p.slot,
                 MIN((sh.h0 * p.a + p.bb) % 281474976710656) AS mh
               FROM sh CROSS JOIN p GROUP BY 1, 2),
             bands AS (
-              SELECT id, slot // 2 AS band,
+              SELECT id, slot // {D.NUM_HASHES // D.INDEX_BANDS} AS band,
                 md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY slot))
                   AS bucket
               FROM sig GROUP BY 1, 2),
@@ -6015,7 +5980,7 @@ def oracle_sql() -> dict[str, str]:
               WHERE a.id >= 250 AND b2.id >= 250),
             best AS (
               SELECT c.id_a, c.id_b,
-                SUM(CASE WHEN x.mh = y.mh THEN 1 ELSE 0 END) / 32.0 AS est
+                SUM(CASE WHEN x.mh = y.mh THEN 1 ELSE 0 END) / {float(D.NUM_HASHES)} AS est
               FROM bcand c JOIN sig x ON x.id = c.id_a
               JOIN sig y ON y.id = c.id_b AND y.slot = x.slot
               GROUP BY 1, 2),
@@ -6029,7 +5994,7 @@ def oracle_sql() -> dict[str, str]:
                 AND nb.id NOT IN (SELECT id FROM intdrop)),
             hest AS (
               SELECT c.id_b, c.id_h,
-                SUM(CASE WHEN x.mh = y.mh THEN 1 ELSE 0 END) / 32.0 AS est
+                SUM(CASE WHEN x.mh = y.mh THEN 1 ELSE 0 END) / {float(D.NUM_HASHES)} AS est
               FROM hcand c JOIN sig x ON x.id = c.id_b
               JOIN sig y ON y.id = c.id_h AND y.slot = x.slot
               GROUP BY 1, 2),
@@ -6055,14 +6020,14 @@ def oracle_sql() -> dict[str, str]:
                   AS BIGINT) AS h0
               FROM mb, unnest(range(1, n - 1)) AS u(i)
               WHERE n >= 3),
-            mp AS (SELECT * FROM (VALUES {_perm_values(D.MINHASH_SALT, 32)})
+            mp AS (SELECT * FROM (VALUES {_perm_values(D.MINHASH_SALT, D.NUM_HASHES)})
                   AS t(slot, a, bb)),
             msig AS (
               SELECT id, mp.slot,
                 MIN((msh.h0 * mp.a + mp.bb) % 281474976710656) AS mh
               FROM msh CROSS JOIN mp GROUP BY 1, 2),
             mbands AS (
-              SELECT id, slot // 4 AS band,
+              SELECT id, slot // {D.NUM_HASHES // D.PAIR_BANDS} AS band,
                 md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY slot))
                   AS bucket
               FROM msig GROUP BY 1, 2),
@@ -6121,21 +6086,21 @@ def oracle_sql() -> dict[str, str]:
             g AS (
               SELECT id, i AS pos,
                 CAST(('0x' || substring(md5('{D.WINNOW_SALT}:'
-                  || array_to_string(toks[i+1:i+5], ' ')), 1, 12))
+                  || array_to_string(toks[i+1:i+{D.WINNOW_K}], ' ')), 1, 12))
                   AS BIGINT) AS h
-              FROM b, unnest(range(0, n - 4)) AS u(i)
-              WHERE n >= 8),
+              FROM b, unnest(range(0, n - {D.WINNOW_K - 1})) AS u(i)
+              WHERE n >= {D.WINNOW_K + D.WINNOW_W - 1}),
             mins AS (
               SELECT id, pos, MIN(h) OVER (
                 PARTITION BY id ORDER BY pos
-                ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS minh
+                ROWS BETWEEN {D.WINNOW_W - 1} PRECEDING AND CURRENT ROW) AS minh
               FROM g),
             fps AS (
-              SELECT DISTINCT id, minh AS fp FROM mins WHERE pos >= 3),
+              SELECT DISTINCT id, minh AS fp FROM mins WHERE pos >= {D.WINNOW_W - 1}),
             hot AS (
               SELECT fp FROM (
                 SELECT fp, COUNT(DISTINCT id) AS df FROM fps GROUP BY 1)
-              WHERE df > 100),
+              WHERE df > {D.WINNOW_MAX_FP_DF}),
             fpc AS (
               SELECT fps.* FROM fps LEFT JOIN hot USING (fp)
               WHERE hot.fp IS NULL)
@@ -6655,7 +6620,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT key, day, CAST(n AS DOUBLE) AS value,
                 round(AVG(CAST(n AS DOUBLE)) OVER (
                   PARTITION BY key ORDER BY day
-                  ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING), 6) AS trend
+                  ROWS BETWEEN {TM.SEASONAL_HALF_WINDOW} PRECEDING AND {TM.SEASONAL_HALF_WINDOW} FOLLOWING), 6) AS trend
               FROM d),
             dt AS (
               SELECT *, CAST(round((value - trend) * 1e6) AS BIGINT) AS du,
@@ -6734,7 +6699,7 @@ def oracle_sql() -> dict[str, str]:
             hb AS (
               SELECT doc_id,
                 CAST(CAST(('0x' || substring(md5('{TS.HASH_EMB_SALT}:' || t),
-                  1, 12)) AS BIGINT) % 64 AS INT) AS b,
+                  1, 12)) AS BIGINT) % {TS.HASH_EMB_DIM} AS INT) AS b,
                 CASE WHEN CAST(('0x' || substring(md5('{TS.HASH_EMB_SALT}:'
                   || t), 13, 1)) AS BIGINT) % 2 = 0
                   THEN -1.0 ELSE 1.0 END AS s
@@ -6989,8 +6954,8 @@ def oracle_sql() -> dict[str, str]:
             SELECT * FROM (
               SELECT id_a, id_b, agree_name, agree_segment, agree_balance,
                 fs_score,
-                CASE WHEN fs_score >= 4.0 THEN 'match'
-                     WHEN fs_score <= 0.0 THEN 'non_match'
+                CASE WHEN fs_score >= {FS_MATCH} THEN 'match'
+                     WHEN fs_score <= {FS_NON_MATCH} THEN 'non_match'
                      ELSE 'possible' END AS decision
               FROM s)
             WHERE decision <> 'non_match'
@@ -7205,7 +7170,7 @@ def oracle_sql() -> dict[str, str]:
             WHERE TranslationInfo IS NOT NULL AND TranslationInfo <> ''
               AND TranslationInfo <> '-'
         """,
-        "c4_line_filter": """
+        "c4_line_filter": f"""
             WITH b AS (
               SELECT doc_id, coalesce(text, '') AS t FROM documents),
             l0 AS (SELECT doc_id, string_split(t, chr(10)) AS parts FROM b),
@@ -7215,7 +7180,7 @@ def oracle_sql() -> dict[str, str]:
             k AS (
               SELECT doc_id, pos, lt FROM l
               WHERE regexp_matches(lt, '[.!?\"]$')
-                AND len(string_split_regex(lt, '\\s+')) >= 3
+                AND len(string_split_regex(lt, '\\s+')) >= {C.C4_MIN_WORDS}
                 AND NOT contains(lower(lt), 'javascript')),
             a AS (
               SELECT doc_id,
@@ -7225,12 +7190,12 @@ def oracle_sql() -> dict[str, str]:
             f AS (
               SELECT doc_id,
                 CAST(len(string_split(t, chr(10))) AS BIGINT) AS n_lines,
-                (contains(lower(t), 'lorem ipsum') OR contains(t, '{'))
+                (contains(lower(t), 'lorem ipsum') OR contains(t, '{{'))
                   AS pk
               FROM b)
             SELECT f.doc_id, coalesce(a.clean_text, '') AS clean_text,
               f.n_lines, CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_kept,
-              (f.pk OR coalesce(a.n_kept, 0) < 1) AS doc_dropped
+              (f.pk OR coalesce(a.n_kept, 0) < {C.C4_MIN_KEPT_LINES}) AS doc_dropped
             FROM f LEFT JOIN a USING (doc_id)
         """,
         "byte_stats": f"""
@@ -7444,12 +7409,12 @@ def oracle_sql() -> dict[str, str]:
               SELECT doc_id, nb, has_sys, conts,
                 list_concat(
                   CASE WHEN has_sys THEN
-                    ['<|im_start|>system' || chr(10) ||
-                     'You are a helpful assistant.<|im_end|>']
+                    ['{CHATML_START}system' || chr(10) ||
+                     'You are a helpful assistant.{CHATML_END}']
                   ELSE [] END,
                   list_transform(range(0, nb), j ->
-                    '<|im_start|>' || roles[CAST(j+1 AS INT)] || chr(10)
-                    || conts[CAST(j+1 AS INT)] || '<|im_end|>')
+                    '{CHATML_START}' || roles[CAST(j+1 AS INT)] || chr(10)
+                    || conts[CAST(j+1 AS INT)] || '{CHATML_END}')
                 ) AS turns
               FROM t)
             SELECT doc_id,
@@ -7550,7 +7515,7 @@ def oracle_sql() -> dict[str, str]:
         # chain), per-dim decimal-summed centroid, q' = q + 0.75·m,
         # second-pass cosine rerank (index-order dot folds both
         # engines share)
-        "prf_search": """
+        "prf_search": f"""
             WITH nn AS (
               SELECT vec_id,
                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv
@@ -7579,7 +7544,7 @@ def oracle_sql() -> dict[str, str]:
               WHERE vec_id < 8),
             q2 AS (
               SELECT qx.query_id,
-                list(1.0 * qx.qx + 0.75 * COALESCE(fbm.m, 0.0)
+                list({S.ROCCHIO_ALPHA} * qx.qx + {S.ROCCHIO_BETA} * COALESCE(fbm.m, 0.0)
                   ORDER BY qx.dim) AS qv
               FROM qx LEFT JOIN fbm
                 ON fbm.query_id = qx.query_id AND fbm.dim = qx.dim
@@ -7605,7 +7570,7 @@ def oracle_sql() -> dict[str, str]:
         # 6-rounded cosine matrix ride as lists; each round scores
         # unselected positions (NULL-masked), picks list_max with
         # lowest-position (== lowest-id) tie-break
-        "mmr_rerank": """
+        "mmr_rerank": f"""
             WITH RECURSIVE nn AS (
               SELECT vec_id,
                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vv
@@ -7656,8 +7621,8 @@ def oracle_sql() -> dict[str, str]:
                   SELECT s.query_id, s.it, s.sel, s.scs,
                     list_transform(range(1, len(c.ids) + 1), i ->
                       CASE WHEN list_contains(s.sel, i) THEN NULL
-                        ELSE 0.5 * c.rels[i]
-                          - 0.5 * (CASE WHEN len(s.sel) = 0 THEN 0.0
+                        ELSE {S.MMR_LAMBDA} * c.rels[i]
+                          - {1.0 - S.MMR_LAMBDA} * (CASE WHEN len(s.sel) = 0 THEN 0.0
                             ELSE list_max(list_transform(s.sel,
                               j -> m.sim[i][j])) END)
                       END) AS scores
@@ -7939,7 +7904,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT doc_id, lang AS lang_true,
                 CASE WHEN CAST(('0x' || substring(
                     md5('{TS.LANGNB_SALT}:' || CAST(doc_id AS VARCHAR)), 1, 4))
-                    AS BIGINT) % 100 < 80
+                    AS BIGINT) % 100 < {TS.LANGNB_TRAIN_PCT}
                   THEN 'train' ELSE 'val' END AS split,
                 trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
               FROM docs0),
@@ -7950,8 +7915,8 @@ def oracle_sql() -> dict[str, str]:
             g AS (
               SELECT doc_id, lang_true, split,
                 CAST(('0x' || substring(
-                  md5('{TS.LANGNB_SALT}:' || substr(norm, i, 3)), 1, 8))
-                  AS BIGINT) % 4096 AS bucket
+                  md5('{TS.LANGNB_SALT}:' || substr(norm, i, {TS.LANGNB_N})), 1, 8))
+                  AS BIGINT) % {TS.LANGNB_BUCKETS} AS bucket
               FROM base2, unnest(range(1, t + 1)) AS u(i)),
             c AS (
               SELECT bucket, lang_true AS lang, COUNT(*) AS c
@@ -7961,7 +7926,7 @@ def oracle_sql() -> dict[str, str]:
               FROM c GROUP BY lang),
             w AS (
               SELECT bucket, lang,
-                ln((c + 1) / CAST(n_lang + 4096 AS DOUBLE)) AS w
+                ln((c + 1) / CAST(n_lang + {TS.LANGNB_BUCKETS} AS DOUBLE)) AS w
               FROM c JOIN lt USING (lang)),
             dt AS (
               SELECT COUNT(*) AS d, COUNT(DISTINCT lang_true) AS k
@@ -7969,7 +7934,7 @@ def oracle_sql() -> dict[str, str]:
             lm AS (
               SELECT p.lang,
                 ln((p.d_lang + 1) / CAST(dt.d + dt.k AS DOUBLE)) AS prior,
-                ln(1.0 / CAST(lt.n_lang + 4096 AS DOUBLE)) AS dflt
+                ln(1.0 / CAST(lt.n_lang + {TS.LANGNB_BUCKETS} AS DOUBLE)) AS dflt
               FROM (SELECT lang_true AS lang, COUNT(*) AS d_lang
                     FROM base WHERE split = 'train' GROUP BY 1) p
               JOIN lt USING (lang) CROSS JOIN dt),
@@ -8225,13 +8190,13 @@ def oracle_sql() -> dict[str, str]:
                 AS n_chars_clean
             FROM c CROSS JOIN inv
         """,
-        "decayed_engagement": """
+        "decayed_engagement": f"""
             SELECT user_id,
               CAST(COUNT(*) AS BIGINT) AS n_events,
               MAX(ts) AS last_seen,
               round(CAST(SUM(CAST(floor(value * round(pow(2.0,
-                -((epoch_us(TIMESTAMP '2024-02-01 00:00:00')
-                   - epoch_us(ts)) / 86400000000.0) / 7.0), 6)
+                -((epoch_us(TIMESTAMP '{TM.DECAY_REF_TS}')
+                   - epoch_us(ts)) / 86400000000.0) / {TM.DECAY_HALF_LIFE_DAYS}), 6)
                 * 1000000.0 + 0.5) AS DECIMAL(25,0))) AS DOUBLE)
                 / 1000000.0, 6) AS decayed_score,
               round(CAST(SUM(CAST(value AS DECIMAL(25,6)))
@@ -8450,7 +8415,7 @@ def oracle_sql() -> dict[str, str]:
               CAST(SUM(c) AS BIGINT) AS n_total,
               MIN(doc_id) AS first_doc
             FROM per_doc GROUP BY span
-            HAVING SUM(c) >= 2
+            HAVING SUM(c) >= {D.SPAN_MIN_COUNT}
         """,
         "weighted_sample": """
             WITH scored AS (
@@ -8492,7 +8457,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT span, doc_id, COUNT(*) AS c
               FROM win GROUP BY span, doc_id),
             dup AS (
-              SELECT span FROM per_doc GROUP BY span HAVING SUM(c) >= 2),
+              SELECT span FROM per_doc GROUP BY span HAVING SUM(c) >= {D.SPAN_MIN_COUNT}),
             dp AS (
               SELECT w.doc_id, list(DISTINCT w.pos) AS P
               FROM win w JOIN dup USING (span) GROUP BY w.doc_id),
@@ -8525,7 +8490,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT span, doc_id, COUNT(*) AS c
               FROM win GROUP BY span, doc_id),
             dup AS (
-              SELECT span FROM per_doc GROUP BY span HAVING SUM(c) >= 2),
+              SELECT span FROM per_doc GROUP BY span HAVING SUM(c) >= {D.SPAN_MIN_COUNT}),
             scored AS (
               SELECT w.doc_id, COUNT(*) AS n_windows,
                 SUM(CASE WHEN d.span IS NOT NULL THEN 1 ELSE 0 END) AS n_dup

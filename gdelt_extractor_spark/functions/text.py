@@ -34,6 +34,15 @@ def normalize_text(col: Column | str) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
+def _md5_int(salt: str, n_hex: int, *parts: Column) -> Column:
+    """The first ``n_hex`` hex digits of md5(``salt``:parts...) as a
+    decimal string column (cast it to long or double) — the repo's
+    engine-portable salted hash, which DuckDB replays as
+    ``CAST('0x' || substring(md5(...), 1, n_hex) AS BIGINT)``."""
+    salted = F.md5(F.concat(F.lit(salt + ":"), *parts))
+    return F.conv(F.substring(salted, 1, n_hex), 16, 10)
+
+
 def tokens(col: Column | str) -> Column:
     """Whitespace tokens of the normalized text (array<string>)."""
     return F.split(normalize_text(col), " ")

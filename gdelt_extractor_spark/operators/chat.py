@@ -73,23 +73,24 @@ def chat_valid_flags(chat: Column) -> Column:
     )
 
 
-def render_chat(
-    chat: Column,
-    start_tag: str = "<|im_start|>",
-    end_tag: str = "<|im_end|>",
-) -> Column:
-    """Flatten a conversation through the ChatML-style template:
-    ``{start}role\\ncontent{end}`` per turn, newline-joined — the
-    training-text string an SFT loader consumes."""
+# ChatML turn delimiters; the DuckDB oracle interpolates them.
+CHATML_START = "<|im_start|>"
+CHATML_END = "<|im_end|>"
+
+
+def render_chat(chat: Column) -> Column:
+    """Flatten a conversation through the ChatML template:
+    ``<|im_start|>role\\ncontent<|im_end|>`` per turn, newline-joined —
+    the training-text string an SFT loader consumes."""
     return F.array_join(
         F.transform(
             chat,
             lambda t: F.concat(
-                F.lit(start_tag),
+                F.lit(CHATML_START),
                 t["role"],
                 F.lit("\n"),
                 F.coalesce(t["content"], F.lit("")),
-                F.lit(end_tag),
+                F.lit(CHATML_END),
             ),
         ),
         "\n",

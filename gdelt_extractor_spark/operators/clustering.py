@@ -88,13 +88,16 @@ def _greedy_init(
     return np.vstack(cents)
 
 
+# Lloyd stops early once no centroid moves more than this.
+KMEANS_TOL = 1e-6
+
+
 def kmeans_fit(
     vectors: DataFrame,
     k: int = 8,
     n_iter: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    tol: float = 1e-6,
 ) -> np.ndarray:
     """Full-corpus Lloyd: returns the (k, dim) centroid matrix.
 
@@ -103,7 +106,7 @@ def kmeans_fit(
     each round is one corpus scan + one tiny partial-sum shuffle +
     a k×(dim+1)-long driver collect.  Empty clusters keep their
     previous centroid; the loop stops early once the max per-element
-    centroid shift drops below ``tol``.
+    centroid shift drops below ``KMEANS_TOL``.
     """
     v = vectors.select(_as_double(vec_col).alias("v")).persist()
     try:
@@ -174,7 +177,7 @@ def kmeans_fit(
                     shift = max(shift, float(np.abs(cand - nxt[c]).max()))
                     nxt[c] = cand
             cents = nxt
-            if shift < tol:
+            if shift < KMEANS_TOL:
                 break
         return cents
     finally:
@@ -187,7 +190,6 @@ def kmeans_cluster(
     n_iter: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    tol: float = 1e-6,
 ) -> DataFrame:
     """Fit on the full corpus, then tag every vector with its
     cluster: (id, cluster).  The tagging pass is one scan with the
@@ -200,7 +202,6 @@ def kmeans_cluster(
         n_iter=n_iter,
         id_col=id_col,
         vec_col=vec_col,
-        tol=tol,
     )
     assign = _ivf_assign_udf(cents)
     return vectors.select(
@@ -243,7 +244,6 @@ def cluster_prune(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     drop: str = "prototypes",
-    tol: float = 1e-6,
 ) -> DataFrame:
     """Diversity pruning over embedding clusters — the D4 /
     SSL-prototypes recipe (Tirumala et al. 2023; Sorscher et al.
@@ -270,7 +270,6 @@ def cluster_prune(
         n_iter=n_iter,
         id_col=id_col,
         vec_col=vec_col,
-        tol=tol,
     )
     ad = _assign_dist_udf(cents)
     tagged = (
@@ -305,7 +304,6 @@ def contrastive_triplets(
     n_iter: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    tol: float = 1e-6,
 ) -> DataFrame:
     """Deterministic contrastive-training triplets mined from the
     embedding clusters: each anchor pairs with a POSITIVE from its
@@ -335,7 +333,6 @@ def contrastive_triplets(
             n_iter=n_iter,
             id_col=id_col,
             vec_col=vec_col,
-            tol=tol,
         )
         .select(F.col(id_col).alias("anchor_id"), "cluster")
         # r12: the tagging scan (full corpus through the assignment

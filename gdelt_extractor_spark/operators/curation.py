@@ -11,7 +11,7 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import _md5_int, tokens
 from ._finish import collect_if_small
 from .dedup import shingle_hashes_from_tokens
 
@@ -22,15 +22,18 @@ def _shingle_hash_frame(df: DataFrame, id_col: str, text_col: str, n: int) -> Da
     ).select("doc_id", shingle_hashes_from_tokens(F.col("_toks"), n).alias("sh"))
 
 
+# Shingle width (tokens) of ``decontaminate`` and ``contamination_links``.
+DECONTAM_N = 3
+
+
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
     max_overlap: float = 0.1,
 ) -> DataFrame:
-    """Benchmark decontamination: per-document fraction of n-gram
+    """Benchmark decontamination: per-document fraction of ``DECONTAM_N``-gram
     shingles that appear anywhere in the benchmark corpus, plus a
     keep flag (overlap ≤ max_overlap).  The standard eval-
     contamination filter (GPT-3 Appendix C style n-gram overlap);
@@ -54,9 +57,9 @@ def decontaminate(
 
     Both routes return identical values and schema.
     """
-    doc_sh = _shingle_hash_frame(docs, id_col, text_col, n)
+    doc_sh = _shingle_hash_frame(docs, id_col, text_col, DECONTAM_N)
     bench_distinct = (
-        _shingle_hash_frame(benchmark, id_col, text_col, n)
+        _shingle_hash_frame(benchmark, id_col, text_col, DECONTAM_N)
         .select(F.explode("sh").alias("h"))
         .distinct()
     )
@@ -106,14 +109,7 @@ def sample_split(
     split.  Pure expression; splits at 100 TB are a scan, not a
     shuffle.
     """
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))), 1, 4),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    bucket = _md5_int(salt, 4, F.col(id_col).cast("string")).cast("long") % 100
     return df.select(
         "*",
         bucket.alias("bucket"),
@@ -235,13 +231,13 @@ def mix_sources(
     source_col: str = "source",
     id_col: str = "doc_id",
     salt: str = "mix-v1",
-    default_weight: float = 1.0,
 ) -> DataFrame:
     """Deterministic source-weighted mixture resampling — the step
     that turns a raw corpus into a training MIXTURE (Pile/C4 style):
     weight w < 1 keeps a w-fraction of the stratum, w > 1 replicates
     every doc floor(w) times plus one more for a frac(w) fraction,
-    w = 0 drops the stratum.  Expected stratum size = w × |stratum|.
+    w = 0 drops the stratum; a source without a weight keeps weight 1.
+    Expected stratum size = w × |stratum|.
 
     Same content-stable hash-threshold discipline as ``sample_split``
     (salted md5 → uniform millionths), with the fractional part
@@ -254,24 +250,12 @@ def mix_sources(
     """
     floors = {s: int(w) for s, w in weights.items()}
     thrs = {s: round((w - int(w)) * 1_000_000) for s, w in weights.items()}
-    d_floor, d_thr = int(default_weight), round(
-        (default_weight - int(default_weight)) * 1_000_000
-    )
-    fw: F.Column = F.lit(d_floor)
-    thr: F.Column = F.lit(d_thr)
+    fw: F.Column = F.lit(1)
+    thr: F.Column = F.lit(0)
     for s in sorted(weights):
         fw = F.when(F.col(source_col) == s, F.lit(floors[s])).otherwise(fw)
         thr = F.when(F.col(source_col) == s, F.lit(thrs[s])).otherwise(thr)
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1_000_000
-    )
+    u = _md5_int(salt, 8, F.col(id_col).cast("string")).cast("long") % 1_000_000
     n = (fw + F.when(u < thr, F.lit(1)).otherwise(F.lit(0))).alias("_n")
     copies = F.when(n > 0, F.sequence(F.lit(1), n))  # NULL (dropped) when n = 0
     return df.select("*", F.explode(copies).alias("copy_id"))
@@ -322,11 +306,10 @@ def url_filter(
     url_col: str,
     blocked_hosts: list[str],
     id_col: str = "doc_id",
-    dedup: bool = True,
 ) -> DataFrame:
     """URL-based corpus curation (the C4 recipe's URL stage):
     normalize each document's URL, drop documents whose host is on a
-    blocklist, and (optionally) keep one document per normalized URL
+    blocklist, and keep one document per normalized URL
     — the same page fetched twice (http/https, with/without www,
     tracking params) must not enter the corpus twice.
 
@@ -338,8 +321,7 @@ def url_filter(
     anti join (no corpus shuffle); URL dedup is one shuffle on
     ``url_norm`` (window keep-first by ``id_col``), content-derived
     and near-uniform by construction.  At 100 TB the only exchange
-    is the dedup's, and callers that already partition by URL can
-    pass dedup=False and use their own layout.
+    is the dedup's.
     """
     from .dedup import dedup_keep_first
 
@@ -354,9 +336,7 @@ def url_filter(
         [(_normalize_blocklist_host(h),) for h in blocked_hosts], "host string"
     )
     kept = staged.join(F.broadcast(block), "host", "left_anti")
-    if dedup:
-        kept = dedup_keep_first(kept, key="url_norm", order=id_col)
-    return kept
+    return dedup_keep_first(kept, key="url_norm", order=id_col)
 
 
 def dedup_lines_global(
@@ -461,13 +441,7 @@ def weighted_sample(
     The exposed ``sample_key`` makes the draw auditable: re-ranking
     the corpus by the same formula must reproduce the sample.
     """
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))), 1, 12
-        ),
-        16,
-        10,
-    ).cast("double")
+    h = _md5_int(salt, 12, F.col(id_col).cast("string")).cast("double")
     # (h + 0.5) / 16^12: exact doubles (h < 2^48), u strictly in (0,1)
     u = (h + F.lit(0.5)) / F.lit(float(16**12))
     key = F.round(-F.log(u) / F.col(weight_col).cast("double"), 6)
@@ -899,22 +873,7 @@ def cluster_split(
     keyed = df.join(c, id_col, "left").withColumn(
         "_split_key", F.coalesce(F.col("_rep"), F.col(id_col))
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(salt + ":"), F.col("_split_key").cast("string")
-                    )
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    bucket = _md5_int(salt, 4, F.col("_split_key").cast("string")).cast("long") % 100
     return keyed.select(
         *[F.col(c) for c in df.columns],
         bucket.alias("bucket"),
@@ -986,14 +945,7 @@ NBCLF_SALT = "nbclf-v1"
 def _term_bucket(salt: str, n_buckets: int) -> Column:
     """Bucket of the ``term`` column: the first 8 hex digits of
     md5(salt:term) mod ``n_buckets``."""
-    return F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(salt + ":"), F.col("term"))), 1, 8),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(n_buckets),
-    )
+    return F.pmod(_md5_int(salt, 8, F.col("term")).cast("long"), F.lit(n_buckets))
 
 
 def dsir_importance(
@@ -1136,20 +1088,7 @@ def nb_domain_classifier(
     same 100 TB shape as DSIR, with the prior folded in driver-free.
     """
     split_bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(NBCLF_SALT + ":"), F.col(id_col).cast("string")
-                    )
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
+        _md5_int(NBCLF_SALT, 4, F.col(id_col).cast("string")).cast("long") % 100
     )
     base = docs.select(
         F.col(id_col),
@@ -1364,13 +1303,12 @@ def contamination_links(
     benchmark: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
     min_shared: int = 1,
 ) -> DataFrame:
     """The audit trail behind ``decontaminate``'s aggregate: WHICH
     benchmark item leaked into WHICH document.  One row per
     (doc, benchmark item) pair sharing ≥ ``min_shared`` distinct
-    n-gram shingles, with the containment fraction — the share of
+    ``DECONTAM_N``-gram shingles, with the containment fraction — the share of
     the benchmark item's shingles found in the doc, the direction
     that measures eval leakage.  ``decontaminate`` answers "is this
     doc dirty"; this answers "dirty WITH WHAT", which is what a
@@ -1390,10 +1328,10 @@ def contamination_links(
     """
     from .dedup import _shingle_rows
 
-    d = _shingle_rows(docs, text_col, id_col, n).select(
+    d = _shingle_rows(docs, text_col, id_col, DECONTAM_N).select(
         F.col("id").alias("doc_id"), F.col("shingle").alias("h")
     )
-    b_rows = _shingle_rows(benchmark, text_col, id_col, n).select(
+    b_rows = _shingle_rows(benchmark, text_col, id_col, DECONTAM_N).select(
         F.col("id").alias("bench_id"), F.col("shingle").alias("h")
     )
     b = b_rows
@@ -1463,20 +1401,22 @@ def prefix_clusters(
         .filter(F.col("n_docs") >= min_docs)
     )
 
+# C4's fewest words per kept line and fewest kept lines per kept page
+# (Raffel et al. 2020, §2.2).  The DuckDB oracle interpolates them.
+C4_MIN_WORDS = 3
+C4_MIN_KEPT_LINES = 1
+
+
 def c4_line_filter(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 3,
-    min_kept_lines: int = 1,
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """C4 line-level cleaning (Raffel et al. 2020, §2.2 heuristics):
     keep only lines that END in a terminal punctuation mark
-    (. ! ? ") and contain at least ``min_words`` words; drop any
+    (. ! ? ") and contain at least ``C4_MIN_WORDS`` words; drop any
     line containing the word "javascript" (case-insensitive); flag
     whole documents containing "lorem ipsum" or a "{" (code) — the
     published recipe's page-level kill rules — and documents left
-    with fewer than ``min_kept_lines`` lines.
+    with fewer than ``C4_MIN_KEPT_LINES`` lines.
 
     Returns every input doc: (doc_id, clean_text, n_lines, n_kept,
     doc_dropped) where ``doc_dropped`` marks page-level kills (their
@@ -1503,7 +1443,7 @@ def c4_line_filter(
     word_count = F.size(F.split(F.col("_trim"), "\\s+"))
     kept = lines.filter(
         (F.col("_trim").rlike('[.!?"]$'))
-        & (word_count >= min_words)
+        & (word_count >= C4_MIN_WORDS)
         & (~F.lower(F.col("_trim")).contains("javascript"))
     )
     agg = kept.groupBy("doc_id").agg(
@@ -1531,7 +1471,7 @@ def c4_line_filter(
         F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
         (
             F.col("_page_kill")
-            | (F.coalesce("n_kept", F.lit(0)) < min_kept_lines)
+            | (F.coalesce("n_kept", F.lit(0)) < C4_MIN_KEPT_LINES)
         ).alias("doc_dropped"),
     )
 
@@ -1596,13 +1536,12 @@ def blocklist_filter(
     terms: list[str],
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_hits: int = 0,
 ) -> DataFrame:
     """Word-boundary blocklist screening — the unsophisticated but
     universal first toxicity/brand-safety pass (C4 dropped any page
-    hitting the "List of Dirty, Naughty ..." list; max_hits=0 is that
+    hitting the "List of Dirty, Naughty ..." list; ``keep`` is that
     rule).  Returns every doc with (n_blocked_hits, n_blocked_terms,
-    first_blocked, keep = hits ≤ max_hits) — flag-don't-delete, so
+    first_blocked, keep = no hit) — flag-don't-delete, so
     the audit trail survives.
 
     Matching is case-insensitive on word boundaries (``\\b``), the
@@ -1649,7 +1588,7 @@ def blocklist_filter(
         .cast("long")
         .alias("n_blocked_terms"),
         F.lower(first).alias("first_blocked"),
-        (hits <= max_hits).alias("keep"),
+        (hits <= 0).alias("keep"),
     )
 
 

@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ..functions.text import normalize_text, tokens
+from ..functions.text import _md5_int, normalize_text, tokens
 from ._finish import collect_if_small, none_means_large
 
 
@@ -335,6 +335,21 @@ MINHASH_SALT = "mhlsh-v1"
 WINNOW_SALT = "winnow-v1"
 SIMHASH_SALT = "simhash-v1"
 
+# MinHash signature length and shingle width.  One constant each, not
+# a per-call option: signatures of different lengths or widths share
+# no band bucket and no estimate.  The band counts are two constants
+# because two values are in use: the pairwise operators
+# (``dedup_minhash_lsh``, ``dedup_eval``) band 32 slots as 8 bands of
+# 4 rows; the persisted-index family (``minhash_band_index``,
+# ``dedup_incremental_minhash``, ``updated_band_index`` and the
+# incremental pipeline) as 16 bands of 2, and an index and a batch
+# banded differently would silently share no bucket.  The DuckDB
+# oracles interpolate these values.
+NUM_HASHES = 32
+MINHASH_N = 3
+PAIR_BANDS = 8
+INDEX_BANDS = 16
+
 
 def _md5_perm_consts(salt: str, m: int) -> list[tuple[int, int]]:
     """Per-slot universal-family permutation constants (a_i odd in
@@ -350,40 +365,38 @@ def _md5_perm_consts(salt: str, m: int) -> list[tuple[int, int]]:
     return out
 
 
-def _slot_minima(num_hashes: int) -> list[Column]:
-    """The ``num_hashes`` MinHash slot aggregates over 48-bit ``h0``
+def _slot_minima() -> list[Column]:
+    """The ``NUM_HASHES`` MinHash slot aggregates over 48-bit ``h0``
     shingle-hash rows: slot i is min((h0·a_i + b_i) mod 2^48) under
     the ``_md5_perm_consts`` permutations, aliased ``_s{i}``.  Min is
     duplicate-insensitive, so multiset rows give set signatures."""
     mod = 1 << 48
     return [
         F.min((F.col("h0") * F.lit(a) + F.lit(b)) % F.lit(mod)).alias(f"_s{i}")
-        for i, (a, b) in enumerate(_md5_perm_consts(MINHASH_SALT, num_hashes))
+        for i, (a, b) in enumerate(_md5_perm_consts(MINHASH_SALT, NUM_HASHES))
     ]
 
 
-def _sig_array(num_hashes: int) -> Column:
+def _sig_array() -> Column:
     """The ``_slot_minima`` columns assembled into ``sig``."""
-    return F.array(*[F.col(f"_s{i}") for i in range(num_hashes)]).alias("sig")
+    return F.array(*[F.col(f"_s{i}") for i in range(NUM_HASHES)]).alias("sig")
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int = 32, n: int = 3
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, sig array<bigint>) MinHash signatures, one per distinct
     id: one salted md5 per shingle occurrence truncated to 48 bits
     (``_md5_shingle_rows``), then ONE partial-aggregated groupBy(id)
-    with ``num_hashes`` codegen min-aggregates (``_slot_minima``) —
+    with ``NUM_HASHES`` codegen min-aggregates (``_slot_minima``) —
     map-side mins collapse each document's shingles before the wire,
     so at 100 TB the exchange is output-sized, not corpus-sized.
     Every value is DuckDB-replayable.  Rows sharing an id pool their
-    shingles into one signature; docs shorter than ``n`` tokens get
-    none (no full window exists)."""
+    shingles into one signature; docs shorter than ``MINHASH_N``
+    tokens get none (no full window exists)."""
     return (
-        _md5_shingle_rows(df, text_col, id_col, n)
+        _md5_shingle_rows(df, text_col, id_col, MINHASH_N)
         .groupBy("id")
-        .agg(*_slot_minima(num_hashes))
-        .select("id", _sig_array(num_hashes))
+        .agg(*_slot_minima())
+        .select("id", _sig_array())
     )
 
 
@@ -391,18 +404,15 @@ def dedup_minhash_lsh(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
     threshold: float = 0.6,
 ) -> DataFrame:
     """MinHash+LSH near-dup: band signatures, bucket-join candidates,
     verify candidates with exact Jaccard, emit pairs ≥ threshold.
 
-    With r = num_hashes/bands rows per band, P(candidate) =
+    With r = NUM_HASHES/PAIR_BANDS rows per band, P(candidate) =
     1-(1-s^r)^bands — the standard S-curve.  The corpus-sized work is
     one shingle scan + one partial-aggregated groupBy(id) with
-    ``num_hashes`` codegen min-aggregates; the band join and the
+    ``NUM_HASHES`` codegen min-aggregates; the band join and the
     verification joins run on hash-uniform keys over frames bounded
     by the signature table and the candidate set respectively.
 
@@ -412,8 +422,8 @@ def dedup_minhash_lsh(
     of ``_md5_perm_consts``, band buckets as md5 of the comma-joined
     slot minima (``_expand_bands``), and exact-Jaccard verification
     over the distinct 48-bit shingle-hash sets.  Shingle SET
-    semantics; docs shorter than ``n`` tokens drop (no full window
-    exists).
+    semantics over ``MINHASH_N``-token windows; shorter docs drop (no
+    full window exists).
     """
     # (id, 48-bit salted shingle hash) MULTISET rows — NO distinct:
     # min-aggregates are duplicate-insensitive and the set-semantics
@@ -428,14 +438,12 @@ def dedup_minhash_lsh(
     # per doc map-side, while collect_list ships every shingle
     # occurrence into the exchange — strictly more shuffle bytes at
     # scale for no local gain.
-    sh0 = _md5_shingle_rows(df, text_col, id_col, n).localCheckpoint(eager=True)
+    sh0 = _md5_shingle_rows(df, text_col, id_col, MINHASH_N).localCheckpoint(
+        eager=True
+    )
     # one shuffle: slot minima + the distinct-shingle count together
-    sig = sh0.groupBy("id").agg(
-        F.countDistinct("h0").alias("n_sh"), *_slot_minima(num_hashes)
-    )
-    band_rows = _expand_bands(
-        sig.select("id", _sig_array(num_hashes)), num_hashes, bands
-    )
+    sig = sh0.groupBy("id").agg(F.countDistinct("h0").alias("n_sh"), *_slot_minima())
+    band_rows = _expand_bands(sig.select("id", _sig_array()), PAIR_BANDS)
     a, b_ = band_rows.alias("a"), band_rows.alias("b")
     candidates = (
         a.join(
@@ -545,21 +553,10 @@ def _md5_shingle_rows(
     else:
         base = base.filter(F.col("_n") >= n)
         hi = (F.col("_n") - n).cast("int")
-    h0 = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit(MINHASH_SALT + ":"),
-                    F.concat_ws(
-                        " ", F.slice("_t", (F.col("pos") + 1).cast("int"), n)
-                    ),
-                )
-            ),
-            1,
-            12,
-        ),
-        16,
-        10,
+    h0 = _md5_int(
+        MINHASH_SALT,
+        12,
+        F.concat_ws(" ", F.slice("_t", (F.col("pos") + 1).cast("int"), n)),
     ).cast("long")
     keep = ["id"] + (["_n"] if keep_len else [])
     return base.select(
@@ -573,8 +570,6 @@ def dedup_eval(
     id_col: str,
     n: int = 3,
     threshold: float = 0.6,
-    num_hashes: int = 32,
-    bands: int = 8,
     max_shingle_df: int | None = 100,
 ) -> DataFrame:
     """End-to-end dedup-quality audit: pair precision/recall/F1 of
@@ -635,15 +630,13 @@ def dedup_eval(
         sh_all.select("id", "_n", "h0").distinct(),
         "h0",
         F.min("_n").alias("_n"),
-        *_slot_minima(num_hashes),
+        *_slot_minima(),
     )
 
     # --- pred candidates: MinHash+LSH, the dedup_minhash_lsh plan
     # from its signature onward (full windows only: docs >= n tokens)
     band_rows = _expand_bands(
-        docs.filter(F.col("_n") >= n).select("id", _sig_array(num_hashes)),
-        num_hashes,
-        bands,
+        docs.filter(F.col("_n") >= n).select("id", _sig_array()), PAIR_BANDS
     )
     ba, bb_ = band_rows.alias("a"), band_rows.alias("b")
     candidates = (
@@ -679,17 +672,18 @@ def dedup_eval(
     return dedup_pair_eval(pred, truth)
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 5,
-    w: int = 4,
-) -> DataFrame:
+# Winnowing's k-gram width, hash-window width and hot-fingerprint cap.
+# The DuckDB oracle interpolates them.
+WINNOW_K = 5
+WINNOW_W = 4
+WINNOW_MAX_FP_DF = 100
+
+
+def winnow_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken
     2003, "Winnowing: local algorithms for document fingerprinting" —
-    the MOSS algorithm): hash every k-token window, slide a w-hash
-    window over the hash sequence, and SELECT each window's minimum —
+    the MOSS algorithm): hash every k-token window (k = ``WINNOW_K``),
+    slide a w-hash window (w = ``WINNOW_W``) over the hash sequence, and SELECT each window's minimum —
     a ~2/(w+1)-density sample that still GUARANTEES any shared run of
     ≥ w+k-1 tokens yields at least one shared fingerprint.  The
     sampled complement of ``duplicate_spans`` (which keeps every
@@ -714,24 +708,14 @@ def winnow_fingerprints(
     array form (same md5 over the same k-gram strings).  All shuffles
     key on (id) or (id, fp) — uniform, bounded, corpus-scan
     dominated."""
+    k, w = WINNOW_K, WINNOW_W
     base = (
         df.select(F.col(id_col).alias("id"), tokens(text_col).alias("_t"))
         .withColumn("_n", F.size("_t"))
         .filter(F.col("_n") >= k + w - 1)
     )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit(WINNOW_SALT + ":"),
-                    F.concat_ws(" ", F.slice("_t", F.col("pos") + 1, k)),
-                )
-            ),
-            1,
-            12,
-        ),
-        16,
-        10,
+    h = _md5_int(
+        WINNOW_SALT, 12, F.concat_ws(" ", F.slice("_t", F.col("pos") + 1, k))
     ).cast("long")
     rows = base.select(
         "id",
@@ -755,36 +739,30 @@ def winnow_dup_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    k: int = 5,
-    w: int = 4,
     min_shared: int = 2,
-    max_fp_df: int | None = 100,
 ) -> DataFrame:
     """Document pairs sharing ≥ ``min_shared`` winnowing fingerprints
     (id_a < id_b, n_shared) — the corpus-level near-copy report over
-    the sampled index of ``winnow_fingerprints``.  ``max_fp_df``
-    drops fingerprints occurring in more than that many documents
-    before the pair join (the dedup_ngram_jaccard hot-shingle guard:
-    a boilerplate fingerprint shared by k docs costs O(k²) pair rows;
+    the sampled index of ``winnow_fingerprints``.  Fingerprints
+    occurring in more than ``WINNOW_MAX_FP_DF`` documents drop before
+    the pair join (the dedup_ngram_jaccard hot-shingle guard: a
+    boilerplate fingerprint shared by k docs costs O(k²) pair rows;
     the cap bounds the join without touching genuine pair evidence on
-    bounded corpora — pass None to disable)."""
+    bounded corpora)."""
     # The fingerprint lineage (tokenize + rolling-min window + distinct)
     # feeds the hot-fp aggregate, the anti join, AND both sides of the
     # pair self-join — four static evaluations of the corpus-scale
     # subtree.  The sampled index is tiny next to the corpus, so
     # materializing it once is the cheaper side of the trade at any
     # scale (same discipline as triangle_count's canon/deg split).
-    fps = winnow_fingerprints(df, text_col, id_col, k=k, w=w).localCheckpoint(
-        eager=True
+    fps = winnow_fingerprints(df, text_col, id_col).localCheckpoint(eager=True)
+    hot = (
+        fps.groupBy("fp")
+        .agg(F.countDistinct("id").alias("_df"))
+        .filter(F.col("_df") > WINNOW_MAX_FP_DF)
+        .select("fp")
     )
-    if max_fp_df is not None:
-        hot = (
-            fps.groupBy("fp")
-            .agg(F.countDistinct("id").alias("_df"))
-            .filter(F.col("_df") > max_fp_df)
-            .select("fp")
-        )
-        fps = fps.join(hot, "fp", "left_anti")
+    fps = fps.join(hot, "fp", "left_anti")
     a, b = fps.alias("a"), fps.alias("b")
     return (
         a.join(
@@ -865,19 +843,23 @@ def simhash(
     return arr.select("id", _simhash_fp_udf()("th").alias("simhash"))
 
 
+# Fewest pigeonhole chunks of ``hamming_pairs``; the SimHash oracle's
+# 4-hex-char chunks assume it.
+HAMMING_CHUNKS = 4
+
+
 def hamming_pairs(
     fp: DataFrame,
     id_col: str,
     hash_col: str,
     max_hamming: int = 3,
-    n_chunks: int = 4,
 ) -> DataFrame:
     """Pairs (id_a < id_b, hamming) of 64-bit fingerprints with
     hamming distance ≤ max_hamming.
 
     Candidate generation by pigeonhole: split the fingerprint into
-    ``n_chunks`` equal bit chunks; hamming ≤ n_chunks-1 ⇒ at least
-    one chunk matches exactly, so the join key is
+    n_chunks = max(``HAMMING_CHUNKS``, max_hamming + 1) equal bit
+    chunks; hamming ≤ n_chunks-1 ⇒ at least one chunk matches exactly, so the join key is
     (chunk_idx, chunk_value) — an equi-join on uniform hash-derived
     keys, never a cross product.  Shared by SimHash text dedup and
     perceptual image-hash dedup.
@@ -895,12 +877,12 @@ def hamming_pairs(
     cluster, three orders below the corpus it summarizes.
     """
     # pigeonhole needs > max_hamming disjoint chunks; widen if the
-    # caller's max_hamming outgrows the default 4.  Boundaries spread
+    # caller's max_hamming outgrows HAMMING_CHUNKS.  Boundaries spread
     # the remainder across leading chunks (ADVICE r9 sibling of the
     # hex-form fix: the old ceil width made chunk 8 of a 9-chunk
     # split start at bit 64 — a constant-0 key, all-pairs join) so
     # every chunk is non-empty for any max_hamming <= 63.
-    n_chunks = max(n_chunks, max_hamming + 1)
+    n_chunks = max(HAMMING_CHUNKS, max_hamming + 1)
     if n_chunks > 64:
         raise ValueError(
             "hamming_pairs: pigeonhole on 64 bits supports "
@@ -1478,12 +1460,16 @@ def _span_window_rows(
     return rows.select(*cols)
 
 
+# Occurrences that make a k-token span a duplicate (Lee et al. count a
+# doc repeating itself).  The span oracles interpolate it.
+SPAN_MIN_COUNT = 2
+
+
 def duplicate_spans(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 12,
-    min_count: int = 2,
     exact_strings: bool = False,
 ) -> DataFrame:
     """Exact repeated k-token span detection — the corpus-level
@@ -1491,7 +1477,7 @@ def duplicate_spans(
     Training Data Makes Language Models Better"), re-expressed for
     Spark: instead of a monolithic suffix array, every k-token
     window of the normalized text becomes a shingle row, and a
-    corpus-wide aggregate finds windows that occur ``min_count``+
+    corpus-wide aggregate finds windows that occur ``SPAN_MIN_COUNT``+
     times (within OR across documents — a doc repeating itself
     counts, as in the paper).
 
@@ -1534,7 +1520,7 @@ def duplicate_spans(
                 F.sum("_c").alias("n_total"),
                 F.min("doc_id").alias("first_doc"),
             )
-            .filter(F.col("n_total") >= min_count)
+            .filter(F.col("n_total") >= SPAN_MIN_COUNT)
         )
     per_doc = (
         _span_window_rows(base, k, hashed=True, with_text=True)
@@ -1549,7 +1535,7 @@ def duplicate_spans(
             F.min("doc_id").alias("first_doc"),
             F.min("_s").alias("_span_text"),
         )
-        .filter(F.col("n_total") >= min_count)
+        .filter(F.col("n_total") >= SPAN_MIN_COUNT)
         .select(
             F.col("_span_text").alias("span"), "n_docs", "n_total", "first_doc"
         )
@@ -1561,7 +1547,6 @@ def span_dup_fraction(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 12,
-    min_count: int = 2,
     exact_strings: bool = False,
 ) -> DataFrame:
     """Score side of the Lee et al. exact-substring recipe: for each
@@ -1613,7 +1598,7 @@ def span_dup_fraction(
     dup = (
         per_doc.groupBy("span")
         .agg(F.sum("_c").alias("_tot"))
-        .filter(F.col("_tot") >= min_count)
+        .filter(F.col("_tot") >= SPAN_MIN_COUNT)
         .select("span", F.lit(1).alias("_is_dup"))
     )
     scored = (
@@ -1677,7 +1662,6 @@ def cut_duplicate_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 12,
-    min_count: int = 2,
     exact_strings: bool = False,
 ) -> DataFrame:
     """The APPLY step of the Lee et al. exact-substring recipe: cut
@@ -1714,7 +1698,7 @@ def cut_duplicate_spans(
         .agg(F.count(F.lit(1)).alias("_c"))
         .groupBy("span")
         .agg(F.sum("_c").alias("_tot"))
-        .filter(F.col("_tot") >= min_count)
+        .filter(F.col("_tot") >= SPAN_MIN_COUNT)
         .select("span")
     )
     dup_pos = (
@@ -1808,14 +1792,14 @@ def updated_index(
     return seen.select(hash_col).unionByName(survivors.select(hash_col))
 
 
-def _expand_bands(sig_df: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+def _expand_bands(sig_df: DataFrame, bands: int) -> DataFrame:
     """(id, sig) → (id, sig, band, bucket) LSH band rows: bucket = md5
     of the band's r comma-joined slot values (the engine-portable form
     DuckDB replays), factored so the batch side, the persistent index
     and the pairwise LSH compute buckets identically.  NULL signatures
     (docs shorter than a shingle) emit no band rows — they would all
     share one md5 bucket per band."""
-    r = num_hashes // bands
+    r = NUM_HASHES // bands
 
     def bucket(b: int) -> Column:
         return F.md5(
@@ -1842,9 +1826,6 @@ def minhash_band_index(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
 ) -> DataFrame:
     """Persistent LSH index rows for a corpus: (id, sig, band,
     bucket) — what ``dedup_incremental_minhash`` joins tomorrow's
@@ -1853,13 +1834,11 @@ def minhash_band_index(
     shuffles only the day's batch; the signature column rides along
     so candidate verification needs no second index.  Every value
     (``minhash_signatures``, md5 band buckets) is one a DuckDB oracle
-    regenerates."""
-    return _expand_bands(
-        minhash_signatures(df, text_col, id_col, num_hashes, n), num_hashes, bands
-    )
+    regenerates.  Banded as ``INDEX_BANDS`` bands."""
+    return _expand_bands(minhash_signatures(df, text_col, id_col), INDEX_BANDS)
 
 
-def _est_jaccard(a, b, num_hashes: int):
+def _est_jaccard(a, b):
     """MinHash Jaccard estimate: fraction of equal signature slots.
 
     Deliberately the ``zip_with``/``aggregate`` fold even though it
@@ -1875,7 +1854,7 @@ def _est_jaccard(a, b, num_hashes: int):
         F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
         F.lit(0),
         lambda s, x: s + x,
-    ) / F.lit(float(num_hashes))
+    ) / F.lit(float(NUM_HASHES))
 
 
 def dedup_incremental_minhash(
@@ -1883,9 +1862,6 @@ def dedup_incremental_minhash(
     index: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
     threshold: float = 0.6,
 ) -> DataFrame:
     """Incremental NEAR-dup dedup — ``dedup_incremental``'s exact
@@ -1894,20 +1870,20 @@ def dedup_incremental_minhash(
     re-reading historical text.  The index stores signatures, so
     candidates verify by the MinHash Jaccard estimate (fraction of
     equal slots) — the standard production trade: no second pass
-    over history, estimator error bounded by 1/√num_hashes.
+    over history, estimator error bounded by 1/√NUM_HASHES.
 
     Semantics are greedy keep-first (a batch doc matching ANY
     lower-id batch doc, or ANY indexed doc, is dropped — matching a
     doc that is itself dropped still drops you: conservative, never
     re-admits a near-dup).  Returns the surviving new rows with the
     ``sig`` they were verified with (NULL for docs shorter than
-    ``n`` tokens: they have no signature, never match and always
+    ``MINHASH_N`` tokens: they have no signature, never match and always
     survive); extend the index afterwards with ``updated_band_index``.
 
     The whole batch (drop decisions included) is DuckDB-replayable
     (``minhash_signatures``, md5 band buckets), so the registry entry
-    is value-hash gated.  The estimate is a fraction k/num_hashes
-    (exact in binary for power-of-two num_hashes), so the
+    is value-hash gated.  The estimate is a fraction k/NUM_HASHES
+    (exact in binary for power-of-two NUM_HASHES), so the
     ≥ threshold comparison is engine-exact.
 
     Plan: batch band rows materialize once (eager localCheckpoint —
@@ -1916,10 +1892,10 @@ def dedup_incremental_minhash(
     the index stored bucketed on (band, bucket), only the day's
     batch shuffles.  Verification runs on the bounded candidate set.
     """
-    sig_new = minhash_signatures(new_docs, text_col, id_col, num_hashes, n)
+    sig_new = minhash_signatures(new_docs, text_col, id_col)
     # r13 slim bands (guide §2.3 "shuffle keys and metadata instead of
     # payloads", §8's decide-with-small-rows rule; the r12 carried
-    # lead): the batch's band rows no longer carry the num_hashes-long
+    # lead): the batch's band rows no longer carry the NUM_HASHES-long
     # signature array through the checkpoint and both candidate joins
     # — they slim to (id, band, bucket) (~0.4 KB/doc at 16 bands vs
     # ~4.5 KB/doc with a 32-slot sig on every band row), and the
@@ -1935,7 +1911,7 @@ def dedup_incremental_minhash(
     # the internal estimate now runs once per DISTINCT candidate pair
     # instead of once per colliding band row — the same pairs pass.
     sig_new = sig_new.localCheckpoint(eager=True)
-    nb = _expand_bands(sig_new, num_hashes, bands).select(
+    nb = _expand_bands(sig_new, INDEX_BANDS).select(
         "id", "band", "bucket"
     )
 
@@ -1962,7 +1938,7 @@ def dedup_incremental_minhash(
             sig_new.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")),
             "id_b",
         )
-        .filter(_est_jaccard(F.col("sig_a"), F.col("sig_b"), num_hashes) >= threshold)
+        .filter(_est_jaccard(F.col("sig_a"), F.col("sig_b")) >= threshold)
         .select(F.col("id_b").alias("id"))
     )
     hist_drop = (
@@ -1974,7 +1950,7 @@ def dedup_incremental_minhash(
         )
         .select("id", "sig_h")
         .join(sig_new, "id")
-        .filter(_est_jaccard(F.col("sig"), F.col("sig_h"), num_hashes) >= threshold)
+        .filter(_est_jaccard(F.col("sig"), F.col("sig_h")) >= threshold)
         .select("id")
     )
     drops = internal_drop.unionByName(hist_drop).distinct()
@@ -1994,8 +1970,6 @@ def updated_band_index(
     index: DataFrame,
     survivors: DataFrame,
     id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
 ) -> DataFrame:
     """The band index after a ``dedup_incremental_minhash`` batch:
     old index ∪ the survivors' band rows, expanded from the ``sig``
@@ -2004,38 +1978,36 @@ def updated_band_index(
     index by construction — UNION ALL, no distinct shuffle; write
     back bucketed on (band, bucket)."""
     return index.unionByName(
-        _expand_bands(
-            survivors.select(F.col(id_col).alias("id"), "sig"), num_hashes, bands
-        )
+        _expand_bands(survivors.select(F.col(id_col).alias("id"), "sig"), INDEX_BANDS)
     )
 
 
-def dedup_editdistance(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    block_prefix: int = 12,
-    length_bucket: int = 64,
-    compare_prefix: int = 64,
-    max_dist: int = 16,
-) -> DataFrame:
+# ``dedup_editdistance``'s blocking prefix, length band, compared
+# prefix (chars) and edit bound.  The DuckDB oracle interpolates them.
+EDIT_BLOCK_PREFIX = 12
+EDIT_LENGTH_BUCKET = 64
+EDIT_COMPARE_PREFIX = 64
+EDIT_MAX_DIST = 16
+
+
+def dedup_editdistance(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Pairs (id_a < id_b) whose normalized-text prefixes are within
-    ``max_dist`` Levenshtein edits — the character-level near-dup
+    ``EDIT_MAX_DIST`` Levenshtein edits — the character-level near-dup
     verifier that catches small in-place mutations (typo injection,
     template slot swaps) which shingle-set Jaccard scores leniently
     and embedding cosine misses entirely.
 
     Candidate generation is standard blocking: documents sharing BOTH
-    a ``block_prefix``-char normalized prefix and a
-    ``length_bucket``-char length band ever meet, so the self-join is
-    an equi-join on the block key (shuffle hash join — never a
+    an ``EDIT_BLOCK_PREFIX``-char normalized prefix and an
+    ``EDIT_LENGTH_BUCKET``-char length band ever meet, so the self-join
+    is an equi-join on the block key (shuffle hash join — never a
     cartesian), and the O(b²) blow-up is bounded by the block sizes.
     Verification runs built-in ``levenshtein`` (JVM codegen, exact
-    DP) on ``compare_prefix``-char prefixes — constant work per pair.
-    Recall boundary (documented, standard for blocking): a pair whose
-    edits fall inside the first ``block_prefix`` chars or straddle a
-    length-band boundary is missed; run with a rotated prefix (e.g.
-    suffix blocking) for the union if that matters.
+    DP) on ``EDIT_COMPARE_PREFIX``-char prefixes — constant work per
+    pair.  Recall boundary (documented, standard for blocking): a pair
+    whose edits fall inside the first ``EDIT_BLOCK_PREFIX`` chars or
+    straddle a length-band boundary is missed; run with a rotated
+    prefix (e.g. suffix blocking) for the union if that matters.
 
     Scale shape: one projection pass (normalize + block key), one
     shuffle equi-join on the block key, per-pair constant-cost
@@ -2047,11 +2019,11 @@ def dedup_editdistance(
     norm = normalize_text(text_col)
     base = df.select(
         F.col(id_col).alias("id"),
-        F.substring(norm, 1, compare_prefix).alias("pref"),
+        F.substring(norm, 1, EDIT_COMPARE_PREFIX).alias("pref"),
         F.concat_ws(
             "#",
-            F.substring(norm, 1, block_prefix),
-            F.floor(F.length(norm) / length_bucket).cast("string"),
+            F.substring(norm, 1, EDIT_BLOCK_PREFIX),
+            F.floor(F.length(norm) / EDIT_LENGTH_BUCKET).cast("string"),
         ).alias("block"),
     )
     a, b = base.alias("a"), base.alias("b")
@@ -2067,5 +2039,5 @@ def dedup_editdistance(
             F.col("b.id").alias("id_b"),
             dist.cast("long").alias("edit_distance"),
         )
-        .filter(F.col("edit_distance") <= max_dist)
+        .filter(F.col("edit_distance") <= EDIT_MAX_DIST)
     )

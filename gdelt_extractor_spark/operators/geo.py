@@ -28,13 +28,14 @@ def valid_coords(lat: Column, lon: Column) -> Column:
     )
 
 
-def point_wkt(lat: Column, lon: Column, precision: int = 6) -> Column:
-    """WKT POINT(lon lat) string (SRID 4326 implied, as reference)."""
+def point_wkt(lat: Column, lon: Column) -> Column:
+    """WKT POINT(lon lat) string (SRID 4326 implied, as reference),
+    coordinates at 6 decimals."""
     return F.concat(
         F.lit("POINT("),
-        F.round(lon, precision).cast("decimal(10,6)").cast("string"),
+        F.round(lon, 6).cast("decimal(10,6)").cast("string"),
         F.lit(" "),
-        F.round(lat, precision).cast("decimal(10,6)").cast("string"),
+        F.round(lat, 6).cast("decimal(10,6)").cast("string"),
         F.lit(")"),
     )
 

@@ -289,6 +289,11 @@ def _pagerank_driver(
     return spark.createDataFrame(pd.DataFrame({"node": nodes, "rank": rounded}), schema)
 
 
+# Fixed-point unit of ``pagerank_micro``'s integer arithmetic (1e-12);
+# the DuckDB replay interpolates it.
+MICRO_SCALE = 10**12
+
+
 def pagerank_micro(
     edges: DataFrame,
     src: str = "src",
@@ -299,7 +304,6 @@ def pagerank_micro(
     max_iter: int = 30,
     tol_units: int = 10**6,
     reset: DataFrame | None = None,
-    scale: int = 10**12,
 ) -> DataFrame:
     """EXACT fixed-point PageRank — the oracle-replayable sibling of
     ``pagerank`` (r12, VERDICT r11 #2): every arithmetic step runs in
@@ -308,8 +312,8 @@ def pagerank_micro(
     (the ``unigram_subwords``/``actor_cores`` int64-DP discipline).
     Returns (node, rank_micro) with ``rank_micro`` = the converged
     rank in HALF_UP-rounded micro-units (1e-6); internal precision is
-    1/``scale`` (default 1e-12), so quantization error vs the float
-    operator is ~max_iter/scale — far below the emitted resolution
+    1/``MICRO_SCALE`` (1e-12), so quantization error vs the float
+    operator is ~max_iter/MICRO_SCALE — far below the emitted resolution
     (equivalence to ``pagerank`` within 1e-5 is property-tested).
 
     Exact update rule, with damping the rational
@@ -319,14 +323,14 @@ def pagerank_micro(
 
         contrib[v] = Σ_{u→v} (rank[u]·w_uv) // outw[u]
         rank'[i]   = ((den−num)·rv[i]) // den
-                     + (num·(contrib[i] + (dang·rv[i]) // scale)) // den
+                     + (num·(contrib[i] + (dang·rv[i]) // MICRO_SCALE)) // den
 
     where ``rv`` is the (integer) reset vector — uniform
-    ``scale // n``, or personalized ``(scale·w_i) // Σw`` over the
+    ``MICRO_SCALE // n``, or personalized ``(MICRO_SCALE·w_i) // Σw`` over the
     graph-resident seeds (``pagerank``'s reset semantics; seed
     weights are cast to BIGINT, so the exact contract requires
     integer seed weights) — ``dang`` the dangling-rank sum, and the
-    loop stops when Σ|Δ| < ``tol_units`` (in ``scale`` units) or
+    loop stops when Σ|Δ| < ``tol_units`` (in ``MICRO_SCALE`` units) or
     after ``max_iter`` rounds.  Integer addition is associative, so
     unlike the float operator NO term is partition-order-sensitive —
     which is exactly what makes the value-hash gate possible.
@@ -368,7 +372,7 @@ def pagerank_micro(
     for node, wt in zip(srcs, ws):
         outw[idx[node]] += wt
     if reset is None:
-        rv = [scale // n] * n
+        rv = [MICRO_SCALE // n] * n
     else:
         # bound the collect by the (small, by this path's contract)
         # node set — a corpus-sized reset frame must not ship whole
@@ -391,7 +395,7 @@ def pagerank_micro(
                 "pagerank_micro(reset=...): no seed with positive weight "
                 "is present in the graph's node set"
             )
-        rv = [(scale * x) // tw for x in sw]
+        rv = [(MICRO_SCALE * x) // tw for x in sw]
     num, den = damping_num, damping_den
     src_i = [idx[v] for v in srcs]
     dst_i = [idx[v] for v in dsts]
@@ -403,7 +407,7 @@ def pagerank_micro(
             contrib[di] += (ranks[si] * wi) // outw[si]
         new = [
             ((den - num) * r_i) // den
-            + (num * (c + (dang * r_i) // scale)) // den
+            + (num * (c + (dang * r_i) // MICRO_SCALE)) // den
             for r_i, c in zip(rv, contrib)
         ]
         delta = sum(abs(a - b) for a, b in zip(new, ranks))
@@ -411,7 +415,7 @@ def pagerank_micro(
         if delta < tol_units:
             break
     # HALF_UP to micro-units (non-negative, so +half then floor)
-    micro = [(x * 1_000_000 + scale // 2) // scale for x in ranks]
+    micro = [(x * 1_000_000 + MICRO_SCALE // 2) // MICRO_SCALE for x in ranks]
     return spark.createDataFrame(
         [(nodes[i], micro[i]) for i in range(n)],
         "node string, rank_micro bigint",

@@ -10,35 +10,30 @@ aggregation; the reference pulls every keyword row to the driver.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def keyword_freq(
-    enriched: DataFrame,
-    keywords_col: str = "keywords",
-    sep: str = "; ",
-    ignore: Sequence[str] = ("state",),
-    min_count: int = 1,
-) -> DataFrame:
-    """(keyword, freq) from a '; '-joined keywords column.
+# The reference's ignore list (the_words.py:11).  The DuckDB oracle
+# interpolates it.
+KEYWORD_IGNORE = ("state",)
 
-    ``ignore`` mirrors the_words.py:11 (the reference drops
-    "state").  Empty strings (docs with no keywords) are dropped as
-    the reference's ``if r[0]`` does.
+
+def keyword_freq(enriched: DataFrame, keywords_col: str = "keywords") -> DataFrame:
+    """(keyword, freq) from a ';'-separated keywords column.
+
+    Each keyword is split on ';' and stripped, as the reference's
+    ``get_keywords`` does, so "a;b" and "a; b" count the same keywords.
+    ``KEYWORD_IGNORE`` drops "state" as the_words.py:11 does.  Empty
+    strings (docs with no keywords) are dropped as the reference's
+    ``if r[0]`` does.
     """
     kw = (
-        enriched.select(F.explode(F.split(F.col(keywords_col), sep)).alias("keyword"))
+        enriched.select(F.explode(F.split(F.col(keywords_col), ";")).alias("keyword"))
         .withColumn("keyword", F.trim("keyword"))
-        .filter((F.col("keyword") != "") & ~F.col("keyword").isin(*ignore))
+        .filter((F.col("keyword") != "") & ~F.col("keyword").isin(*KEYWORD_IGNORE))
     )
-    return (
-        kw.groupBy("keyword")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .filter(F.col("freq") >= min_count)
-    )
+    return kw.groupBy("keyword").agg(F.count(F.lit(1)).alias("freq"))
 
 
 def kwic(

@@ -22,6 +22,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+# Fellegi-Sunter score cuts: at or above FS_MATCH a pair is a match,
+# at or below FS_NON_MATCH a non-match.  The DuckDB oracle
+# interpolates them.
+FS_MATCH = 4.0
+FS_NON_MATCH = 0.0
+
+
 def linkage_score(
     a: DataFrame,
     b: DataFrame,
@@ -31,8 +38,6 @@ def linkage_score(
     comparators: dict[str, Column],
     m: dict[str, float],
     u: dict[str, float],
-    match_threshold: float = 4.0,
-    non_match_threshold: float = 0.0,
 ) -> DataFrame:
     """Fellegi-Sunter linkage over blocked pairs.
 
@@ -53,8 +58,9 @@ def linkage_score(
     agreement flag, ``fs_score`` (rounded 6, decimal-exact: the
     per-field weights are CONSTANTS folded at plan time, so the sum
     is a fixed-length chain — engine-portable) and ``decision`` ∈
-    {'match', 'possible', 'non_match'} by the two thresholds (the
-    Fellegi-Sunter upper/lower cut).
+    {'match', 'possible', 'non_match'} by the two thresholds
+    ``FS_MATCH``/``FS_NON_MATCH`` (the Fellegi-Sunter upper/lower
+    cut).
 
     Scale shape: ONE equi-join shuffle on the block key; every weight
     is a literal, so scoring is pure codegen projection; output is
@@ -86,8 +92,8 @@ def linkage_score(
         F.round(score, 6).alias("fs_score"),
     ).withColumn(
         "decision",
-        F.when(F.col("fs_score") >= match_threshold, F.lit("match"))
-        .when(F.col("fs_score") <= non_match_threshold, F.lit("non_match"))
+        F.when(F.col("fs_score") >= FS_MATCH, F.lit("match"))
+        .when(F.col("fs_score") <= FS_NON_MATCH, F.lit("non_match"))
         .otherwise(F.lit("possible")),
     )
 

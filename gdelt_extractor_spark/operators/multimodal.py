@@ -185,10 +185,10 @@ def audio_features(media: DataFrame, window: int = 256) -> DataFrame:
 AHASH_SCHEMA = "media_id bigint, ahash bigint"
 
 
-def image_ahash(media: DataFrame, hash_w: int = 8, hash_h: int = 8) -> DataFrame:
+def image_ahash(media: DataFrame) -> DataFrame:
     """64-bit perceptual average-hash per image.
 
-    Classic aHash: downsample to hash_w×hash_h (real nearest-neighbor
+    Classic aHash: downsample to 8×8 (real nearest-neighbor
     resize, same index-grid math as ``resize_images``), threshold each
     cell at the mean, pack the bits.  Only the pixel source is the
     deterministic fake decode.  Output is one long per image — the
@@ -206,8 +206,8 @@ def image_ahash(media: DataFrame, hash_w: int = 8, hash_h: int = 8) -> DataFrame
             ):
                 w, h = int(w), int(h)
                 px = np.asarray(_fake_decode(bytes(content), w, h)).reshape(h, w)
-                ys = np.minimum((np.arange(hash_h) * h) // hash_h, h - 1)
-                xs = np.minimum((np.arange(hash_w) * w) // hash_w, w - 1)
+                ys = np.minimum((np.arange(8) * h) // 8, h - 1)
+                xs = np.minimum((np.arange(8) * w) // 8, w - 1)
                 small = px[np.ix_(ys, xs)].ravel()
                 bits = small > small.mean()
                 val = np.packbits(bits, bitorder="little")[:8].view(np.int64)[0]
@@ -264,10 +264,14 @@ def _dct_matrix(n: int):
     return D
 
 
-def phash_bits(px, dct_size: int = 32, hash_size: int = 8) -> int:
+# pHash's DCT grid (pixels per side): the image is resized to it.
+PHASH_DCT_SIZE = 32
+
+
+def phash_bits(px) -> int:
     """64-bit pHash of a 2-D pixel array: downsample to
-    dct_size×dct_size (same index-grid resize as aHash), 2-D DCT-II,
-    keep the top-left hash_size×hash_size low-frequency block, DROP
+    ``PHASH_DCT_SIZE``² (same index-grid resize as aHash), 2-D DCT-II,
+    keep the top-left 8×8 low-frequency block, DROP
     THE DC COEFFICIENT (this is what makes pHash invariant to
     uniform brightness shifts, unlike aHash), threshold the
     remaining 63 coefficients at their median, pack little-endian.
@@ -275,13 +279,13 @@ def phash_bits(px, dct_size: int = 32, hash_size: int = 8) -> int:
     import numpy as np
 
     h, w = px.shape
-    n = dct_size
+    n = PHASH_DCT_SIZE
     ys = np.minimum((np.arange(n) * h) // n, h - 1)
     xs = np.minimum((np.arange(n) * w) // n, w - 1)
     small = px[np.ix_(ys, xs)]
     D = _dct_matrix(n)
     dct = D @ small @ D.T
-    block = dct[:hash_size, :hash_size].ravel()
+    block = dct[:8, :8].ravel()
     vals = block[1:]  # drop DC
     bits = vals > np.median(vals)
     padded = np.concatenate([bits, [False]])  # 63 → 64 bits
@@ -291,7 +295,7 @@ def phash_bits(px, dct_size: int = 32, hash_size: int = 8) -> int:
 PHASH_SCHEMA = "media_id bigint, phash bigint"
 
 
-def image_phash(media: DataFrame, dct_size: int = 32, hash_size: int = 8) -> DataFrame:
+def image_phash(media: DataFrame) -> DataFrame:
     """64-bit perceptual DCT hash (pHash) per image — the robust
     sibling of ``image_ahash``: comparing low-frequency DCT signs
     instead of raw pixel means makes the fingerprint stable under
@@ -311,7 +315,7 @@ def image_phash(media: DataFrame, dct_size: int = 32, hash_size: int = 8) -> Dat
             ):
                 w, h = int(w), int(h)
                 px = np.asarray(_fake_decode(bytes(content), w, h)).reshape(h, w)
-                rows.append((mid, phash_bits(px, dct_size, hash_size)))
+                rows.append((mid, phash_bits(px)))
             yield pd.DataFrame(rows, columns=["media_id", "phash"])
 
     return src.mapInPandas(run, PHASH_SCHEMA)
@@ -320,11 +324,14 @@ def image_phash(media: DataFrame, dct_size: int = 32, hash_size: int = 8) -> Dat
 VIDEO_FP_SCHEMA = "media_id bigint, frame_idx int, fhash bigint"
 
 
-def video_fingerprint(
-    media: DataFrame, frame_w: int = 32, frame_h: int = 32, every_n: int = 1
-) -> DataFrame:
-    """Per-video ordered frame-hash sequence: sample frames
-    (``frame_sample``), aHash each frame's pixels, assemble
+# Decoded frame size (pixels) of ``video_fingerprint``.
+FRAME_W = 32
+FRAME_H = 32
+
+
+def video_fingerprint(media: DataFrame) -> DataFrame:
+    """Per-video ordered frame-hash sequence: every frame
+    (``frame_sample``), aHash each ``FRAME_W``×``FRAME_H`` frame's pixels, assemble
     (media_id, frame_hashes array<long>) with
     sort_array(collect_list(struct)) so the sequence is deterministic
     under any partition order.  Only the frame decode is the fake;
@@ -332,7 +339,7 @@ def video_fingerprint(
     one media_id shuffle) are the production pipeline's."""
     import numpy as np
 
-    frames = frame_sample(media, every_n)
+    frames = frame_sample(media, 1)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -341,10 +348,10 @@ def video_fingerprint(
                 pdf["media_id"], pdf["frame_idx"], pdf["frame_bytes"]
             ):
                 px = np.asarray(
-                    _fake_decode(bytes(fb), frame_w, frame_h)
-                ).reshape(frame_h, frame_w)
-                ys = np.minimum((np.arange(8) * frame_h) // 8, frame_h - 1)
-                xs = np.minimum((np.arange(8) * frame_w) // 8, frame_w - 1)
+                    _fake_decode(bytes(fb), FRAME_W, FRAME_H)
+                ).reshape(FRAME_H, FRAME_W)
+                ys = np.minimum((np.arange(8) * FRAME_H) // 8, FRAME_H - 1)
+                xs = np.minimum((np.arange(8) * FRAME_W) // 8, FRAME_W - 1)
                 small = px[np.ix_(ys, xs)].ravel()
                 bits = small > small.mean()
                 val = np.packbits(bits, bitorder="little")[:8].view(np.int64)[0]
@@ -360,9 +367,7 @@ def video_fingerprint(
     )
 
 
-def dedup_videos(
-    media: DataFrame, threshold: float = 0.5, every_n: int = 1
-) -> DataFrame:
+def dedup_videos(media: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Video near-dup pairs — trimmed / re-cut copy detection: two
     videos are candidates when they SHARE ANY frame hash (equi-join
     on the exploded hash — content-derived blocking, never
@@ -370,7 +375,7 @@ def dedup_videos(
     sets.  A trimmed copy keeps most frames → high Jaccard; unrelated
     videos share no frames and never meet.  Same join discipline as
     the text shingle family, with frames as the shingles."""
-    fp = video_fingerprint(media, every_n=every_n).localCheckpoint(eager=True)
+    fp = video_fingerprint(media).localCheckpoint(eager=True)
     ex = fp.select(
         "media_id", F.explode(F.array_distinct("frame_hashes")).alias("fh")
     )
@@ -484,9 +489,14 @@ def audio_subfingerprints(sig, window: int = 256, hop: int = 128, n_bands: int =
     return vals
 
 
-def audio_fingerprint(
-    media: DataFrame, window: int = 256, hop: int = 128, n_bands: int = 33
-) -> DataFrame:
+# ``audio_subfingerprints``' window, hop (samples) and band count as
+# the audio operators use them.
+AUDIO_WINDOW = 256
+AUDIO_HOP = 128
+AUDIO_BANDS = 33
+
+
+def audio_fingerprint(media: DataFrame) -> DataFrame:
     """Per-audio ordered sub-fingerprint sequence: one Arrow pass
     over the bytes (decode + the full DSP per item, executor-side),
     one media_id shuffle to assemble — the audio sibling of
@@ -500,9 +510,12 @@ def audio_fingerprint(
             for mid, content, dur, fmt in zip(
                 pdf["media_id"], pdf["content"], pdf["duration_s"], pdf["format"]
             ):
-                sig = _decode_audio(content, dur, str(fmt), window)
+                sig = _decode_audio(content, dur, str(fmt), AUDIO_WINDOW)
                 rows.append(
-                    (mid, audio_subfingerprints(sig, window, hop, n_bands))
+                    (
+                        mid,
+                        audio_subfingerprints(sig, AUDIO_WINDOW, AUDIO_HOP, AUDIO_BANDS),
+                    )
                 )
             yield pd.DataFrame(rows, columns=["media_id", "sub_fps"])
 
@@ -512,14 +525,12 @@ def audio_fingerprint(
 def dedup_audio(
     media: DataFrame,
     threshold: float = 0.35,
-    window: int = 256,
-    hop: int = 128,
 ) -> DataFrame:
     """Audio near-dup pairs — trimmed/padded copy detection: two
     clips are candidates when they SHARE ANY sub-fingerprint
     (equi-join on the exploded 32-bit words — content-derived
     blocking, never all-pairs), verified by Jaccard over their
-    distinct sub-fingerprint sets.  A ``hop``-aligned trim keeps the
+    distinct sub-fingerprint sets.  An ``AUDIO_HOP``-aligned trim keeps the
     interior windows bit-identical → high Jaccard; unrelated audio
     shares no words and never meets.  Same join discipline as
     ``dedup_videos`` (frames→windows) and the text shingle family.
@@ -528,9 +539,7 @@ def dedup_audio(
     window; all-zero words are dropped from BLOCKING (silence must
     not join every clip to every clip) but kept in the Jaccard sets,
     so padding with silence still lowers similarity honestly."""
-    fp = audio_fingerprint(media, window=window, hop=hop).localCheckpoint(
-        eager=True
-    )
+    fp = audio_fingerprint(media).localCheckpoint(eager=True)
     ex = fp.select(
         "media_id", F.explode(F.array_distinct("sub_fps")).alias("w")
     ).filter(F.col("w") != 0)

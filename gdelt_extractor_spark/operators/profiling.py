@@ -160,6 +160,10 @@ def check_expectations(
     )
 
 
+# Smoothing that keeps an empty PSI bin's log finite.
+PSI_EPS = 1e-6
+
+
 def psi_drift(
     old: DataFrame,
     new: DataFrame,
@@ -167,7 +171,6 @@ def psi_drift(
     n_bins: int = 10,
     lo: float | None = None,
     hi: float | None = None,
-    eps: float = 1e-6,
 ) -> DataFrame:
     """Population Stability Index between two snapshots of a numeric
     column — the distribution-shape drift gate that complements
@@ -177,7 +180,7 @@ def psi_drift(
         psi_term_i = (q_i − p_i) · ln((q_i + ε) / (p_i + ε))
         psi        = Σ_i psi_term_i
 
-    (ε keeps empty bins finite; the classic reading: psi < 0.1
+    (ε = ``PSI_EPS`` keeps empty bins finite; the classic reading: psi < 0.1
     stable, 0.1–0.25 drifting, > 0.25 shifted).  Values outside
     [lo, hi) clamp into the edge bins so both snapshots always
     account for their full mass.
@@ -236,7 +239,7 @@ def psi_drift(
         .withColumn(
             "_term",
             (F.col("_q") - F.col("_p"))
-            * F.log((F.col("_q") + eps) / (F.col("_p") + eps)),
+            * F.log((F.col("_q") + PSI_EPS) / (F.col("_p") + PSI_EPS)),
         )
     )
     total = per.agg(
@@ -803,12 +806,15 @@ def poisson1_thresholds_hex() -> list[str]:
     return [format(t, "012x") for t in poisson1_thresholds_48()]
 
 
+# ``bootstrap_ci`` reports the (1 − BOOT_ALPHA) = 95% interval.
+BOOT_ALPHA = 0.05
+
+
 def bootstrap_ci(
     df: DataFrame,
     value_col: str,
     id_col: str,
     n_resamples: int = 200,
-    alpha: float = 0.05,
     salt: str = "boot-v1",
 ) -> DataFrame:
     """Deterministic bootstrap confidence interval for the MEAN of a
@@ -911,8 +917,8 @@ def bootstrap_ci(
         .cast("long")
     )
     means = per_b.select(m_u.alias("mu"))
-    lo_rank = int((alpha / 2) * (n_resamples - 1)) + 1
-    hi_rank = int((1 - alpha / 2) * (n_resamples - 1)) + 1
+    lo_rank = int((BOOT_ALPHA / 2) * (n_resamples - 1)) + 1
+    hi_rank = int((1 - BOOT_ALPHA / 2) * (n_resamples - 1)) + 1
     from pyspark.sql import Window as _W
 
     ranked = means.withColumn(

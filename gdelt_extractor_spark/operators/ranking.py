@@ -46,14 +46,10 @@ def _ranked_with_total(
     df: DataFrame,
     order_by: list[str | Column],
     rank_col: str,
-    num_partitions: int | None,
 ) -> tuple[DataFrame, int]:
     cols = _order_cols(order_by)
-    if num_partitions is not None:
-        ranged = df.repartitionByRange(num_partitions, *cols)
-    else:  # default parallelism: spark.sql.shuffle.partitions
-        ranged = df.repartitionByRange(*cols)
-    tagged = ranged.withColumn(_PID, F.spark_partition_id())
+    # default parallelism: spark.sql.shuffle.partitions
+    tagged = df.repartitionByRange(*cols).withColumn(_PID, F.spark_partition_id())
 
     # Bounded collect: one row per partition.  This job writes the
     # range-shuffle map outputs; the rank job below reuses them.
@@ -82,7 +78,6 @@ def global_row_number(
     df: DataFrame,
     order_by: list[str | Column],
     rank_col: str = "rank",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Add ``rank_col`` = 1-based global row number under
     ``order_by``, with no single-partition stage.
@@ -92,7 +87,7 @@ def global_row_number(
     (partition_id, count) pair per shuffle partition — bounded by the
     partition count, independent of data size.
     """
-    ranked, _ = _ranked_with_total(df, order_by, rank_col, num_partitions)
+    ranked, _ = _ranked_with_total(df, order_by, rank_col)
     return ranked
 
 
@@ -117,7 +112,6 @@ def global_ntile(
     n_buckets: int,
     order_by: list[str | Column],
     bucket_col: str = "bucket",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """``F.ntile(n_buckets)`` over a GLOBAL order, computed without a
     single-partition window: two-phase global rank + arithmetic
@@ -125,9 +119,7 @@ def global_ntile(
     per-partition counts the rank pass already collects (via an
     internal rank column, dropped on return)."""
     tmp = "__gr_rank"
-    ranked, n_rows = _ranked_with_total(
-        df, order_by, tmp, num_partitions
-    )
+    ranked, n_rows = _ranked_with_total(df, order_by, tmp)
     if n_rows == 0:
         return df.withColumn(bucket_col, F.lit(None).cast("int"))
     return ranked.withColumn(
@@ -141,7 +133,6 @@ def global_running_sum(
     weight_col: str | list[str],
     out_col: str | list[str] = "running_sum",
     exclusive: bool = False,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Weighted generalization of ``global_row_number``: add
     ``out_col`` = cumulative sum of ``weight_col`` under the global
@@ -174,11 +165,7 @@ def global_running_sum(
                 f"for {wc!r} — scale fractional weights to integer units first"
             )
     cols = _order_cols(order_by)
-    if num_partitions is not None:
-        ranged = df.repartitionByRange(num_partitions, *cols)
-    else:
-        ranged = df.repartitionByRange(*cols)
-    tagged = ranged.withColumn(_PID, F.spark_partition_id())
+    tagged = df.repartitionByRange(*cols).withColumn(_PID, F.spark_partition_id())
 
     totals = sorted(
         tagged.groupBy(_PID)

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import _md5_int
+
 
 def _as_double(vec_col: str | Column) -> Column:
     return F.transform(vec_col, lambda x: x.cast("double"))
@@ -132,13 +134,17 @@ def ann_bruteforce(
     )
 
 
+# Rocchio weights of the original query and of the feedback centroid
+# (q' = α·q + β·mean); the DuckDB oracle interpolates them.
+ROCCHIO_ALPHA = 1.0
+ROCCHIO_BETA = 0.75
+
+
 def prf_expand_search(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 10,
     k_fb: int = 5,
-    alpha: float = 1.0,
-    beta: float = 0.75,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
@@ -149,7 +155,8 @@ def prf_expand_search(
     """Pseudo-relevance feedback by Rocchio query expansion (Rocchio
     1971, the classic PRF loop): retrieve each query's top ``k_fb``
     neighbors, move the query toward their centroid — q' = α·q +
-    β·mean(feedback vectors) — and re-rank the corpus against the
+    β·mean(feedback vectors), α = ``ROCCHIO_ALPHA``, β =
+    ``ROCCHIO_BETA`` — and re-rank the corpus against the
     expanded query.  The zero-model recall lever that closes the
     retrieval family (bm25 → ann → hybrid fusion → PRF → MMR →
     retrieval_eval).
@@ -207,8 +214,8 @@ def prf_expand_search(
             "query_id",
             "dim",
             (
-                F.lit(alpha) * F.col("qx")
-                + F.lit(beta) * F.coalesce(F.col("m"), F.lit(0.0))
+                F.lit(ROCCHIO_ALPHA) * F.col("qx")
+                + F.lit(ROCCHIO_BETA) * F.coalesce(F.col("m"), F.lit(0.0))
             ).alias("val"),
         )
         .groupBy("query_id")
@@ -257,17 +264,21 @@ def prf_expand_search(
     )
 
 
+# MMR's relevance weight λ (1 − λ weighs redundancy); the DuckDB
+# oracle interpolates it.
+MMR_LAMBDA = 0.5
+
+
 def mmr_rerank(
     results: DataFrame,
     vectors: DataFrame,
     k: int = 10,
-    lam: float = 0.5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Maximal Marginal Relevance diversification (Carbonell &
     Goldstein, SIGIR 1998): greedily re-rank a first-stage candidate
-    list so each pick maximizes ``lam·relevance − (1−lam)·max
+    list so each pick maximizes ``λ·relevance − (1−λ)·max
     similarity to the already-picked set`` — the standard
     redundancy-removal pass between retrieval and the context window.
 
@@ -321,7 +332,7 @@ def mmr_rerank(
                 if i in sel:
                     continue
                 ms = max(sims[i][j] for j in sel) if sel else 0.0
-                s = lam * rel[i] - (1.0 - lam) * ms
+                s = MMR_LAMBDA * rel[i] - (1.0 - MMR_LAMBDA) * ms
                 if best_s is None or s > best_s:
                     best, best_s = i, s
             sel.append(best)
@@ -384,14 +395,13 @@ def ivf_fit_centroids(
     n_iter: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sample_size: int | None = None,
 ) -> np.ndarray:
     """Deterministic Lloyd k-means coarse quantizer for IVF,
     trained on a bounded sample (the standard IVF recipe — e.g.
     FAISS trains its quantizer on ~(tens of)·m vectors, not the
     corpus).
 
-    The sample is the top ``sample_size`` rows by a salted content
+    The sample is the top max(64·m, 1024) rows by a salted content
     hash with the id as tiebreak — an unbiased, reproducible choice
     that is independent of partitioning (TakeOrdered), and the ONE
     Spark job this fit runs regardless of ``n_iter``.  Lloyd then
@@ -404,7 +414,7 @@ def ivf_fit_centroids(
     numpy reductions over a fixed-order array are bit-stable — so
     centroids never depend on cluster layout.
     """
-    S = sample_size or max(64 * m, 1024)
+    S = max(64 * m, 1024)
     v = vectors.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
     sample = (
         v.orderBy(
@@ -464,13 +474,17 @@ def _ivf_probe_udf(centroids: np.ndarray, nprobe: int):
     return probe
 
 
+# Lloyd iterations of ``ann_ivf``'s quantizer (the pinned centroids
+# of ``_kmeans_pins`` are fit with it).
+IVF_N_ITER = 2
+
+
 def ann_ivf(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 5,
     m: int = 16,
     nprobe: int = 4,
-    n_iter: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
@@ -485,7 +499,9 @@ def ann_ivf(
     the classic IVF cost model (scan fraction ≈ nprobe/m).  Size m ≈
     √N so cells stay executor-memory friendly.  Recall is tested
     against ann_bruteforce (tests/test_similarity.py)."""
-    cents = ivf_fit_centroids(vectors, m=m, n_iter=n_iter, id_col=id_col, vec_col=vec_col)
+    cents = ivf_fit_centroids(
+        vectors, m=m, n_iter=IVF_N_ITER, id_col=id_col, vec_col=vec_col
+    )
     assign = _ivf_assign_udf(cents)
     probe = _ivf_probe_udf(cents, nprobe)
     v = _with_norm(
@@ -548,13 +564,16 @@ def lsh_query_probes_udf(dim: int, n_planes: int, n_tables: int, multiprobe: int
     return probes
 
 
+# Hyperplanes per table and tables of ``ann_lsh``.
+LSH_PLANES = 8
+LSH_TABLES = 6
+
+
 def ann_lsh(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 5,
     dim: int = 64,
-    n_planes: int = 8,
-    n_tables: int = 6,
     multiprobe: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -567,10 +586,10 @@ def ann_lsh(
     table buckets in a single Arrow pass, posexplode to
     (table, bucket) rows, equi-join with the (broadcast) query
     buckets, distinct candidate pairs, rerank.  No full scan per
-    query, no cartesian product; recall tuned by (n_planes,
-    n_tables, multiprobe) and tested against ann_bruteforce."""
-    buckets = lsh_multitable_udf(dim, n_planes, n_tables)
-    probes = lsh_query_probes_udf(dim, n_planes, n_tables, multiprobe)
+    query, no cartesian product; recall tuned by (``LSH_PLANES``,
+    ``LSH_TABLES``, multiprobe) and tested against ann_bruteforce."""
+    buckets = lsh_multitable_udf(dim, LSH_PLANES, LSH_TABLES)
+    probes = lsh_query_probes_udf(dim, LSH_PLANES, LSH_TABLES, multiprobe)
     v = (
         vectors.select(F.col(id_col).alias("nbr_id"), _as_double(vec_col).alias("v"))
         .withColumn("bks", buckets("v"))
@@ -769,7 +788,6 @@ def pq_fit_codebooks(
     n_iter: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sample_size: int | None = None,
 ) -> np.ndarray:
     """Product-quantization codebooks (Jégou et al. 2011): the vector
     splits into ``m`` contiguous subspaces and each subspace gets its
@@ -778,13 +796,13 @@ def pq_fit_codebooks(
     bytes at m=4, ksub=16: a 64× cut vs int8's 4×).
 
     Same determinism recipe as ``ivf_fit_centroids``: one bounded
-    TakeOrdered sample job (salted content-hash order), all Lloyd
+    TakeOrdered sample job (the top max(64·ksub, 1024) rows) (salted content-hash order), all Lloyd
     iterations driver-side on the (S, dim) sample.  Init per subspace
     is the first ksub rows IN SAMPLE (hash) ORDER — deterministic and
     hash-scattered, so the seeds don't all land in one id-adjacent
     cluster.  Returns (m, ksub, dim//m).
     """
-    S = sample_size or max(64 * ksub, 1024)
+    S = max(64 * ksub, 1024)
     v = vectors.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
     sample = (
         v.orderBy(
@@ -858,13 +876,17 @@ def pq_encode(
     )
 
 
+# Subspaces and Lloyd iterations of ``ann_pq``'s codebooks (the pinned
+# codebooks of ``_kmeans_pins`` are fit with them).
+PQ_M = 4
+PQ_N_ITER = 3
+
+
 def ann_pq(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    m: int = 4,
     ksub: int = 16,
-    n_iter: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
@@ -887,7 +909,7 @@ def ann_pq(
     decimal-sum so ranking is partition-independent.
     """
     books = pq_fit_codebooks(
-        vectors, m=m, ksub=ksub, n_iter=n_iter, id_col=id_col, vec_col=vec_col
+        vectors, m=PQ_M, ksub=ksub, n_iter=PQ_N_ITER, id_col=id_col, vec_col=vec_col
     )
     codes = pq_encode(vectors, books, id_col=id_col, vec_col=vec_col)
     q_rows = queries.select(
@@ -898,7 +920,7 @@ def ann_pq(
     partial_rows = []
     for r in q_rows:
         qv = np.asarray(r.qv)
-        for j in range(m):
+        for j in range(PQ_M):
             qj = qv[j * dsub : (j + 1) * dsub]
             d = ((books[j] - qj[None, :]) ** 2).sum(axis=1)
             for c in range(ksub):
@@ -1528,15 +1550,7 @@ def source_similarity(
     )
     h0 = shingles.select(
         "source",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(SRCSIM_SALT + ":"), F.col("shingle"))), 1, 12
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("_h0"),
+        _md5_int(SRCSIM_SALT, 12, F.col("shingle")).cast("long").alias("_h0"),
     )
     mask = (1 << 48) - 1
     # the m slot minima are m wide aggregate expressions over the

@@ -79,18 +79,18 @@ def approx_topk(
     )
 
 
-def hll_sketch_table(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    lg_k: int = 12,
-) -> DataFrame:
+# log2 of the HLL register count: one value, so every stored sketch
+# has the same size and precision.
+HLL_LG_K = 12
+
+
+def hll_sketch_table(df: DataFrame, key_cols: list[str], value_col: str) -> DataFrame:
     """Materialize a MERGEABLE distinct-count sketch table: one
     Apache DataSketches HLL sketch (binary) per key group.
 
     This is the pre-aggregation pattern that makes 100 TB distinct
     counting cheap: build (key, sketch) once per ingest partition
-    (e.g. per day), persist the ≤ 2^lg_k-byte sketches, and answer
+    (e.g. per day), persist the ≤ 2^HLL_LG_K-byte sketches, and answer
     any coarser rollup later by UNIONING sketches instead of
     re-scanning raw data — ``approx_count_distinct`` alone can't do
     that because its result is a scalar, not a reusable summary.
@@ -99,7 +99,7 @@ def hll_sketch_table(
     pre-aggregation grouping (property-tested).
     """
     return df.groupBy(*key_cols).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("hll_sketch")
+        F.hll_sketch_agg(F.col(value_col), F.lit(HLL_LG_K)).alias("hll_sketch")
     )
 
 
@@ -111,7 +111,7 @@ def hll_rollup(
     """Roll a sketch table up to coarser keys: union the HLL sketches
     per group and estimate.  Returns (group_cols..., n_sketches,
     approx_distinct).  Never touches raw data — the whole rollup
-    moves only ≤ 2^lg_k-byte summaries through the shuffle.
+    moves only ≤ 2^HLL_LG_K-byte summaries through the shuffle.
     """
     return sketches.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n_sketches"),

@@ -394,7 +394,6 @@ def interval_overlap_join(
     end_col: str,
     bin_width: int,
     by: list[str] | None = None,
-    suffix: str = "_r",
 ) -> DataFrame:
     """Interval×interval OVERLAP join (half-open: ``l.start <
     r.end AND r.start < l.end``) as a distributed equi-join — the
@@ -413,7 +412,7 @@ def interval_overlap_join(
 
     Columns must be numeric (callers convert timestamps via
     ``unix_micros``).  ``by`` adds equi-keys.  Right columns keep
-    their names with ``suffix`` appended on collision.
+    their names with ``_r`` appended on collision.
     """
     by = list(by or [])
     w = int(bin_width)
@@ -428,7 +427,7 @@ def interval_overlap_join(
     lb = binned(left, "_lbin")
     rb = binned(right, "_rbin")
     renames = {
-        c: c + suffix
+        c: c + "_r"
         for c in right.columns
         if c in left.columns and c not in by
     }
@@ -453,28 +452,31 @@ def interval_overlap_join(
     return out
 
 
+# ``decayed_engagement``'s frozen reference time (the events fixture
+# ends before it) and half-life in days.  The DuckDB oracle
+# interpolates them.
+DECAY_REF_TS = "2024-02-01 00:00:00"
+DECAY_HALF_LIFE_DAYS = 7.0
+
+
 def decayed_engagement(
     events: DataFrame,
     key_col: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
-    ref_ts: str = "2024-02-01 00:00:00",
-    half_life_days: float = 7.0,
-    round_weights: int = 6,
 ) -> DataFrame:
     """Recency-weighted engagement features — the exponential
     time-decay aggregate behind "active lately" user scores and
     freshness-weighted source budgets: every event contributes
-    ``value · 2^(−Δdays / half_life)`` toward its key, measured back
-    from a FIXED reference timestamp (frozen like psi_drift's bins —
+    ``value · 2^(−Δdays / DECAY_HALF_LIFE_DAYS)`` toward its key,
+    measured back from a FIXED reference timestamp (``DECAY_REF_TS``) (frozen like psi_drift's bins —
     a moving now() would make the feature unreproducible).
 
     Per key: (key, n_events, last_seen, decayed_score, plus the
     undecayed raw_sum for comparison — the decayed/raw ratio is a
     recency profile in itself).
 
-    Engine portability: the per-event weight rounds to
-    ``round_weights`` decimals (pow ulp differences die there), and
+    Engine portability: the per-event weight rounds to 6 decimals (pow ulp differences die there), and
     the value·weight product is summed as exact integer MICRO-UNITS
     — ``floor(x·1e6 + 0.5)`` is the identical IEEE sequence in any
     engine, where a direct decimal cast hits its rounding mode
@@ -487,11 +489,11 @@ def decayed_engagement(
     100 TB is a scan, exactly like corpus_stats.
     """
     dt_days = (
-        F.unix_micros(F.lit(ref_ts).cast("timestamp"))
+        F.unix_micros(F.lit(DECAY_REF_TS).cast("timestamp"))
         - F.unix_micros(F.col(ts_col))
     ) / F.lit(86400.0 * 1e6)
     w = F.round(
-        F.pow(F.lit(2.0), -dt_days / half_life_days), round_weights
+        F.pow(F.lit(2.0), -dt_days / DECAY_HALF_LIFE_DAYS), 6
     )
     contrib_micro = F.floor(
         F.col(value_col) * w * F.lit(1e6) + F.lit(0.5)
@@ -762,12 +764,16 @@ def autocorrelation(
     )
 
 
+# Half-width (rows) of ``seasonal_decompose``'s centered trend window;
+# the DuckDB oracle interpolates it.
+SEASONAL_HALF_WINDOW = 3
+
+
 def seasonal_decompose(
     df: DataFrame,
     key_col: str,
     date_col: str,
     value_col: str,
-    period_window: int = 3,
 ) -> DataFrame:
     """Classical additive seasonal decomposition of a per-key daily
     series: value = trend + seasonal + residual — the triage step
@@ -776,8 +782,8 @@ def seasonal_decompose(
     decomposing first lets it score the RESIDUAL).
 
     Per (key, date):
-      trend    = centered moving average over ±``period_window`` rows
-                 in date order (7-day window by default — the weekly
+      trend    = centered moving average over ±``SEASONAL_HALF_WINDOW``
+                 rows in date order (a 7-day window — the weekly
                  cycle; edges average over what exists, the standard
                  convention),
       seasonal = per-(key, weekday) mean of the detrended values
@@ -815,7 +821,7 @@ def seasonal_decompose(
     w = (
         Window.partitionBy("key")
         .orderBy(F.col("day").asc())
-        .rowsBetween(-period_window, period_window)
+        .rowsBetween(-SEASONAL_HALF_WINDOW, SEASONAL_HALF_WINDOW)
     )
     with_trend = base.withColumn("trend", F.round(F.avg("value").over(w), 6))
     detr = with_trend.withColumn(

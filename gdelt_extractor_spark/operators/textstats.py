@@ -11,7 +11,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import normalize_text, tokens
+from ..functions.text import _md5_int, normalize_text, tokens
 
 # Tiny per-language marker lexicons for the n-gram/stopword heuristic
 # language id.  Deterministic argmax with fixed priority order.
@@ -68,6 +68,11 @@ def lang_id(
 # Salt of lang_id_ngram's train/val split and n-gram buckets; the
 # DuckDB oracle interpolates this value.
 LANGNB_SALT = "langnb-v1"
+# ``lang_id_ngram``'s char n-gram width, hashed vocabulary size and
+# train share (percent).  The DuckDB oracle interpolates them.
+LANGNB_N = 3
+LANGNB_BUCKETS = 4096
+LANGNB_TRAIN_PCT = 80
 
 
 def lang_id_ngram(
@@ -75,9 +80,6 @@ def lang_id_ngram(
     id_col: str = "doc_id",
     text_col: str = "text",
     label_col: str = "lang",
-    n: int = 3,
-    n_buckets: int = 4096,
-    train_pct: int = 80,
 ) -> DataFrame:
     """Trained language ID: multiclass Naive Bayes over hashed char
     n-grams — the fastText/langid.py recipe re-expressed as one
@@ -101,7 +103,7 @@ def lang_id_ngram(
     with b = md5-hashed n-gram bucket (engine-portable, the DSIR/NB
     scheme), c the train (bucket, lang) counts, N_L the lang's train
     gram total, t_d the doc's gram count, m the matched count —
-    i.e. add-one smoothing over the ``n_buckets`` vocabulary with
+    i.e. add-one smoothing over the ``LANGNB_BUCKETS`` vocabulary with
     unseen buckets folded in arithmetically instead of densifying
     the weight table to every (bucket, lang) pair.
 
@@ -117,28 +119,17 @@ def lang_id_ngram(
     from pyspark.sql import Window
 
     split_bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit(LANGNB_SALT + ":"), F.col(id_col).cast("string"))
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
+        _md5_int(LANGNB_SALT, 4, F.col(id_col).cast("string")).cast("long") % 100
     )
     norm = normalize_text(text_col)
     base = docs.select(
         F.col(id_col).alias("doc_id"),
         F.col(label_col).alias("lang_true"),
-        F.when(split_bucket < train_pct, F.lit("train"))
+        F.when(split_bucket < LANGNB_TRAIN_PCT, F.lit("train"))
         .otherwise(F.lit("val"))
         .alias("split"),
         norm.alias("_norm"),
-        F.greatest(F.length(norm) - (n - 1), F.lit(1)).alias("_t"),
+        F.greatest(F.length(norm) - (LANGNB_N - 1), F.lit(1)).alias("_t"),
     )
     grams = base.select(
         "doc_id",
@@ -151,21 +142,10 @@ def lang_id_ngram(
         "lang_true",
         "split",
         F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(LANGNB_SALT + ":"),
-                            F.substring("_norm", F.col("_pos"), n),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
+            _md5_int(
+                LANGNB_SALT, 8, F.substring("_norm", F.col("_pos"), LANGNB_N)
             ).cast("long"),
-            F.lit(n_buckets),
+            F.lit(LANGNB_BUCKETS),
         ).alias("bucket"),
     )
     train = grams.filter(F.col("split") == "train")
@@ -177,7 +157,7 @@ def lang_id_ngram(
         .agg(F.count(F.lit(1)).alias("_c"))
         .localCheckpoint(eager=True)
     )
-    b = F.lit(n_buckets).cast("long")
+    b = F.lit(LANGNB_BUCKETS).cast("long")
     lang_tot = counts.groupBy("lang").agg(F.sum("_c").alias("_n_lang"))
     weights = counts.join(F.broadcast(lang_tot), "lang").select(
         "bucket",
@@ -552,12 +532,7 @@ def compression_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 _BIGRAM_SEP = "\x1f"
 
 
-def lm_score(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    round_to: int = 6,
-) -> DataFrame:
+def lm_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Corpus-trained bigram language-model quality score (the CCNet
     recipe shape: score documents under an n-gram LM and filter or
     bucket on the result — here the LM is trained on the corpus
@@ -584,7 +559,7 @@ def lm_score(
     full-token-stream shuffle with almost no partial reduction,
     1.67s → 2.30s).  The model is never collected or broadcast:
     vocab² does not fit a driver; a join scales.  log-probs are
-    rounded to ``round_to`` decimals before the decimal-sum mean so
+    rounded to 6 decimals before the decimal-sum mean so
     the value gate is engine-stable (the same ln convention tfidf
     uses).
     """
@@ -620,7 +595,7 @@ def lm_score(
         .select(
             "bigram",
             F.round(
-                F.log((F.col("c2") + 1) / (F.col("c1") + F.col("v"))), round_to
+                F.log((F.col("c2") + 1) / (F.col("c1") + F.col("v"))), 6
             ).alias("logp"),
         )
     )
@@ -818,10 +793,8 @@ def vocab_divergence(
     )
 
 
-def bpe_pair_counts(
-    df: DataFrame, id_col: str, text_col: str, top_k: int = 100
-) -> DataFrame:
-    """First BPE merge-step statistics: corpus-wide counts of
+def bpe_pair_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """First BPE merge-step statistics: the 100 most frequent
     adjacent character pairs inside words, weighted by word
     frequency — what a tokenizer trainer computes before every merge
     (Sennrich et al. 2016).
@@ -849,7 +822,7 @@ def bpe_pair_counts(
         pairs.groupBy("pair")
         .agg(F.sum("f").alias("n"))
         .orderBy(F.col("n").desc(), F.col("pair").asc())
-        .limit(top_k)
+        .limit(100)
     )
 
 
@@ -857,9 +830,11 @@ def bpe_pair_counts(
 # ``hashed_embedding`` and ``hybrid_search``'s dense tower (whose query
 # side hashes on the driver); the DuckDB oracles interpolate this value.
 HASH_EMB_SALT = "hash-emb-v1"
+# Buckets of that space: the embedding's dimension.
+HASH_EMB_DIM = 64
 
 
-def _feature_hash_counts(toks: DataFrame, dim: int) -> DataFrame:
+def _feature_hash_counts(toks: DataFrame) -> DataFrame:
     """(id, t) non-empty token rows → (id, b, c) signed bucket
     counts — the Weinberger hashing-trick core shared by
     ``hashed_embedding`` and ``hybrid_search``'s dense tower (r11:
@@ -874,7 +849,7 @@ def _feature_hash_counts(toks: DataFrame, dim: int) -> DataFrame:
     )
     bucketed = toks.select(
         "id",
-        F.pmod(h, F.lit(dim)).cast("int").alias("b"),
+        F.pmod(h, F.lit(HASH_EMB_DIM)).cast("int").alias("b"),
         F.when(sign_even, -1.0).otherwise(1.0).alias("s"),
     )
     return bucketed.groupBy("id", "b").agg(F.sum("s").alias("c"))
@@ -884,11 +859,10 @@ def hashed_embedding(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    dim: int = 64,
     layout: str = "dense",
 ) -> DataFrame:
     """Feature-hashed document embeddings (Weinberger et al. 2009):
-    every token hashes to one of ``dim`` buckets with a ±1 sign from
+    every token hashes to one of ``HASH_EMB_DIM`` buckets with a ±1 sign from
     a second hash bit; the L2-normalized bucket-count vector is a
     cheap, deterministic, model-free embedding — the bridge that
     lets the TEXT corpus flow into the embedding machinery
@@ -922,13 +896,13 @@ def hashed_embedding(
     toks = df.select(
         F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("t")
     ).filter(F.col("t") != "")
-    counts = _feature_hash_counts(toks, dim)
+    counts = _feature_hash_counts(toks)
     if layout == "long":
         # the bucket aggregate feeds BOTH the (id, bucket) grid join
         # and the nrm_l rollup — two static evaluations of the
         # tokenize+hash corpus lineage (different exchange keys, so
         # no ReuseExchange).  The frame is narrow and bounded
-        # (n_docs × ≤dim rows of (id, int, double)); one eager
+        # (n_docs × ≤HASH_EMB_DIM rows of (id, int, double)); one eager
         # materialization runs the corpus scan once (r12, guide §5).
         counts = counts.localCheckpoint(eager=True)
         # codegen path: ids × bucket grid → left-join counts + norms;
@@ -937,7 +911,7 @@ def hashed_embedding(
         # order-independent addition)
         # norm via window-over-the-grid was A/B'd flat-to-negative
         # (r13: 2.13s vs 2.17s, 3/7 pairwise) and is structurally
-        # WORSE at scale: the window sorts the full n_docs×dim grid
+        # WORSE at scale: the window sorts the full n_docs×HASH_EMB_DIM grid
         # while this aggregate runs on the smaller nonzero-counts
         # frame (contrast hybrid_search's dense tower, where the
         # window input IS the counts frame and the swap won 7/7).
@@ -949,7 +923,7 @@ def hashed_embedding(
             .distinct()
             .select(
                 "id",
-                F.explode(F.sequence(F.lit(0), F.lit(dim - 1))).alias("_bk"),
+                F.explode(F.sequence(F.lit(0), F.lit(HASH_EMB_DIM - 1))).alias("_bk"),
             )
             .select("id", F.col("_bk").cast("int").alias("bucket"))
         )
@@ -990,7 +964,7 @@ def hashed_embedding(
         ),
     )
     dense = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
+        F.sequence(F.lit(0), F.lit(HASH_EMB_DIM - 1)),
         lambda i: F.coalesce(F.col("m")[i.cast("int")], F.lit(0.0)),
     )
     nrm = F.sqrt(
@@ -1015,13 +989,19 @@ def hashed_embedding(
     )
 
 
+# BM25 term-frequency saturation and length normalization (Robertson
+# and Zaragoza's usual values), shared by ``bm25_search`` and
+# ``hybrid_search``'s lexical tower; the DuckDB oracles interpolate
+# them.
+BM25_K1 = 1.2
+BM25_B = 0.75
+
+
 def bm25_search(
     df: DataFrame,
     id_col: str,
     text_col: str,
     query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
     top_k: int = 20,
 ) -> DataFrame:
     """Okapi BM25 ranking of the corpus against a fixed term query —
@@ -1051,15 +1031,13 @@ def bm25_search(
     )
     n_docs = df.select(F.count(F.lit(1)).alias("_n"),
                        (F.sum(F.size(tokens(text_col)))).alias("_toks"))
-    return _bm25_scored(toks, n_docs, terms, k1, b, top_k, id_col)
+    return _bm25_scored(toks, n_docs, terms, top_k, id_col)
 
 
 def _bm25_scored(
     toks: DataFrame,
     n_docs: DataFrame,
     terms: list[str],
-    k1: float,
-    b: float,
     top_k: int,
     id_col: str,
 ) -> DataFrame:
@@ -1094,7 +1072,7 @@ def _bm25_scored(
             * F.col("_tf")
             / (
                 F.col("_tf")
-                + k1 * (1.0 - b + b * F.col("_dl") / F.col("_avgdl"))
+                + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("_dl") / F.col("_avgdl"))
             ),
         )
     )
@@ -1108,29 +1086,30 @@ def _bm25_scored(
     )
 
 
+# Reciprocal-rank fusion constant (Cormack et al. use 60).
+RRF_K = 60
+
+
 def hybrid_search(
     df: DataFrame,
     id_col: str,
     text_col: str,
     query_terms: list[str],
     top_k: int = 20,
-    rrf_k: int = 60,
     final_k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Hybrid retrieval by reciprocal-rank fusion (Cormack, Clarke &
     Büttcher, SIGIR 2009: "Reciprocal rank fusion outperforms Condorcet
     and individual rank learning methods"): fuse the LEXICAL ranker
     (``bm25_search``) with the DENSE ranker (cosine between the
     query's and each document's md5 feature-hashed embedding) as
-    score(d) = Σ_r 1/(rrf_k + rank_r(d)) over the rankers that
+    score(d) = Σ_r 1/(RRF_K + rank_r(d)) over the rankers that
     retrieved d in their top-``top_k``.  The standard two-tower
     fusion shape with zero trained components — both towers are
     already engine-portable, so the WHOLE hybrid is value-hash
     oracle-gated.
 
-    Determinism/portability: ranks are integers; 1/(rrf_k + r) is the
+    Determinism/portability: ranks are integers; 1/(RRF_K + r) is the
     same IEEE double in any engine; each fused score is a sum of at
     most two such terms (one add — order-free).  The dense cosine
     decimal-sums its per-bucket products (both embeddings unit-L2
@@ -1159,7 +1138,7 @@ def hybrid_search(
     n_docs = base.agg(
         F.count(F.lit(1)).alias("_n"), F.sum("_dl").alias("_toks")
     )
-    lex = _bm25_scored(toks, n_docs, terms, k1, b, top_k, id_col)
+    lex = _bm25_scored(toks, n_docs, terms, top_k, id_col)
     from pyspark.sql import Window
 
     w_lex = Window.orderBy(F.col("score").desc(), F.col(id_col).asc())
@@ -1171,8 +1150,7 @@ def hybrid_search(
     counts = _feature_hash_counts(
         toks.filter(F.col("_t") != "").select(
             F.col("_id").alias("id"), F.col("_t").alias("t")
-        ),
-        dim=64,
+        )
     )
     # unit-L2 normalization per hashed_embedding's long-layout
     # contract (value = c / sqrt(Σc²), zero-norm → 0.0): keep this
@@ -1219,7 +1197,7 @@ def hybrid_search(
         if _t == "":
             continue
         _hx = _hl.md5(f"{HASH_EMB_SALT}:{_t}".encode()).hexdigest()
-        _b = int(_hx[:12], 16) % 64
+        _b = int(_hx[:12], 16) % HASH_EMB_DIM
         _s = -1.0 if int(_hx[12], 16) % 2 == 0 else 1.0
         _cnt[_b] = _cnt.get(_b, 0.0) + _s
     _nrm = _math.sqrt(sum(_c * _c for _c in _cnt.values()))
@@ -1267,9 +1245,9 @@ def hybrid_search(
         .withColumn(
             "rrf",
             F.round(
-                F.coalesce(F.lit(1.0) / (F.lit(rrf_k) + F.col("r_lex")), F.lit(0.0))
+                F.coalesce(F.lit(1.0) / (F.lit(RRF_K) + F.col("r_lex")), F.lit(0.0))
                 + F.coalesce(
-                    F.lit(1.0) / (F.lit(rrf_k) + F.col("r_dense")), F.lit(0.0)
+                    F.lit(1.0) / (F.lit(RRF_K) + F.col("r_dense")), F.lit(0.0)
                 ),
                 6,
             ),
@@ -1337,9 +1315,11 @@ def vocab_coverage(
     )
 
 
-def zipf_fit(
-    df: DataFrame, text_col: str = "text", min_freq: int = 1
-) -> DataFrame:
+# Tokens rarer than this stay out of ``zipf_fit``'s frequency table.
+ZIPF_MIN_FREQ = 1
+
+
+def zipf_fit(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Zipf's-law fit over the corpus token distribution: OLS of
     ln(freq) on ln(rank) — slope ≈ -1 for natural text, and the
     deviation is a fast corpus-health signal (synthetic/templated
@@ -1349,7 +1329,7 @@ def zipf_fit(
     then ln/rank and the five OLS sufficient statistics over the
     VOCABULARY-sized frequency table — like ``vocab_coverage``, the
     global rank window's input is |vocab|, orders of magnitude below
-    the corpus; raise ``min_freq`` to shrink it further at scale.
+    the corpus; raise ``ZIPF_MIN_FREQ`` to shrink it further at scale.
     x = ln(rank), y = ln(freq) as doubles; the sufficient statistics
     use the decimal-sum convention (plans/queries.py) so both
     engines round each term to 6 dp before summing — partition-order
@@ -1362,7 +1342,7 @@ def zipf_fit(
         .filter(F.col("token") != "")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .filter(F.col("freq") >= min_freq)
+        .filter(F.col("freq") >= ZIPF_MIN_FREQ)
     )
     w = Window.orderBy(F.col("freq").desc(), F.col("token").asc())
     xy = freq.withColumn("rank", F.row_number().over(w)).select(

@@ -14,8 +14,9 @@ Scale decomposition (the part that matters at 100 TB):
    driver memory.  Running it distributed would pay a full shuffle
    per merge for work a laptop does in seconds — the same
    bounded-driver trade as the IVF/PQ quantizer fits, with
-   ``max_vocab_rows`` as the explicit cap (most-frequent rows kept,
-   deterministic (freq desc, word asc) order).
+   ``word_frequencies``' ``max_vocab_rows`` as the explicit cap
+   (most-frequent rows kept, deterministic (freq desc, word asc)
+   order).
 3. **Encode — distributed.** Learned merges broadcast to an Arrow
    UDF that applies them in rank order per word; one scan, no
    shuffle.  A word-level LRU memoizes within each batch (Zipf again:
@@ -75,12 +76,11 @@ def bpe_train(
     df: DataFrame,
     text_col: str,
     n_merges: int = 100,
-    max_vocab_rows: int = 200_000,
 ) -> list[tuple[str, str]]:
-    """Learn ``n_merges`` BPE merges from the corpus.  Returns the
-    ordered merge list [(left, right), ...]; stops early when no pair
-    occurs twice."""
-    vocab_rows = word_frequencies(df, text_col, max_vocab_rows).collect()
+    """Learn ``n_merges`` BPE merges from the corpus's 200,000 most
+    frequent words.  Returns the ordered merge list [(left, right),
+    ...]; stops early when no pair occurs twice."""
+    vocab_rows = word_frequencies(df, text_col).collect()
     vocab: dict[tuple, int] = {
         tuple(r.w) + (_EOW,): r.f for r in vocab_rows
     }
@@ -224,14 +224,18 @@ def _ug_viterbi(w: str, scores: dict[str, int], maxlen: int) -> int:
     return dp[n]
 
 
+# ``unigram_train``'s training vocabulary (most frequent words), its
+# seed pieces (the most frequent multi-char substrings up to the seed
+# length) and its hard-EM rounds.  The pinned tables of
+# ``_unigram_pins`` were fit with these values.
+UNIGRAM_VOCAB_ROWS = 20_000
+UNIGRAM_SEED_MAX_LEN = 5
+UNIGRAM_SEED_SIZE = 1024
+UNIGRAM_EM_ROUNDS = 2
+
+
 def unigram_train(
-    df: DataFrame,
-    text_col: str,
-    vocab_size: int = 96,
-    seed_max_len: int = 5,
-    seed_size: int = 1024,
-    n_em: int = 2,
-    max_vocab_rows: int = 20_000,
+    df: DataFrame, text_col: str, vocab_size: int = 96
 ) -> list[tuple[str, int]]:
     """Learn a unigram-LM piece vocabulary; returns the sorted piece
     table [(piece, score_u)] with score_u = HALF_UP(ln p · 1e6).
@@ -247,7 +251,7 @@ def unigram_train(
 
     words = [
         (r.w, r.f)
-        for r in word_frequencies(df, text_col, max_vocab_rows).collect()
+        for r in word_frequencies(df, text_col, UNIGRAM_VOCAB_ROWS).collect()
     ]
     cnt: Counter = Counter()
     chars: set[str] = set()
@@ -255,9 +259,9 @@ def unigram_train(
         lw = len(w)
         for i in range(lw):
             chars.add(w[i])
-            for j in range(i + 2, min(i + seed_max_len, lw) + 1):
+            for j in range(i + 2, min(i + UNIGRAM_SEED_MAX_LEN, lw) + 1):
                 cnt[w[i:j]] += f
-    multis = sorted(cnt, key=lambda p: (-cnt[p], p))[:seed_size]
+    multis = sorted(cnt, key=lambda p: (-cnt[p], p))[:UNIGRAM_SEED_SIZE]
     char_counts = Counter()
     for w, f in words:
         for c in w:
@@ -269,8 +273,8 @@ def unigram_train(
 
     probs = estimate({**char_counts, **{p: cnt[p] for p in multis}})
     n_multi = max(0, vocab_size - len(chars))
-    maxlen = max(seed_max_len, 1)
-    for _ in range(n_em):
+    maxlen = UNIGRAM_SEED_MAX_LEN
+    for _ in range(UNIGRAM_EM_ROUNDS):
         # E-step: hard-Viterbi usage counts (float scores are fine
         # here — the trainer is driver-only and deterministic; only
         # the FINAL emitted table must be integer)

@@ -30,12 +30,18 @@ from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
 from ..operators.dedup import (
+    INDEX_BANDS,
     _expand_bands,
     dedup_incremental,
     dedup_incremental_minhash,
 )
 from ..sinks.files import upsert_partitions
 from ..streaming.updates import run_foreach_batch
+
+# Schema of the JSONL document drops both streams read.
+DROP_SCHEMA = "doc_id LONG, text STRING, source STRING"
+# MinHash-estimate threshold of the near-dup epoch.
+NEAR_DUP_THRESHOLD = 0.5
 
 
 def _committed(
@@ -117,7 +123,6 @@ def _run_stream(
     spark: SparkSession,
     landing_dir: str,
     checkpoint_dir: str,
-    schema: str,
     max_files_per_trigger: int,
     ingest: Callable[[DataFrame, int], None],
 ) -> None:
@@ -125,7 +130,7 @@ def _run_stream(
     ``ingest(batch, epoch)`` until the directory is drained."""
     stream = (
         spark.readStream.format("json")
-        .schema(schema)
+        .schema(DROP_SCHEMA)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .load(landing_dir)
     )
@@ -137,7 +142,6 @@ def run_incremental_dedup_stream(
     landing_dir: str,
     corpus_dir: str,
     checkpoint_dir: str,
-    schema: str = "doc_id LONG, text STRING, source STRING",
     max_files_per_trigger: int = 8,
     metrics_dir: str | None = None,
 ) -> None:
@@ -145,18 +149,13 @@ def run_incremental_dedup_stream(
     production drops ``processAllAvailable`` for a continuous
     trigger).  JSONL drops → per-epoch ``ingest_batch``."""
     _run_stream(
-        spark, landing_dir, checkpoint_dir, schema, max_files_per_trigger,
+        spark, landing_dir, checkpoint_dir, max_files_per_trigger,
         lambda b, i: ingest_batch(b, i, corpus_dir, metrics_dir=metrics_dir),
     )
 
 
 def _seen_band_index(
-    spark: SparkSession,
-    corpus_dir: str,
-    before_batch: int,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
+    spark: SparkSession, corpus_dir: str, before_batch: int, id_col: str
 ) -> DataFrame:
     """LSH band rows of everything committed by EARLIER epochs.
 
@@ -172,7 +171,7 @@ def _seen_band_index(
         spark, corpus_dir, before_batch, [F.col(id_col).alias("id"), "sig"],
         "id long, sig array<bigint>",
     )
-    return _expand_bands(prior, num_hashes, bands)
+    return _expand_bands(prior, INDEX_BANDS)
 
 
 def ingest_batch_near_dup(
@@ -181,9 +180,6 @@ def ingest_batch_near_dup(
     corpus_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.5,
     metrics_dir: str | None = None,
 ) -> None:
     """One epoch of NEAR-dup incremental ingestion: the exact
@@ -195,15 +191,14 @@ def ingest_batch_near_dup(
     converge bytewise exactly as in the exact pipeline (the replayed
     epoch's own partial partition is pruned out of its index).
 
-    Banding default (16 bands × 2 rows over 32 hashes) puts the LSH
-    S-curve midpoint at (1/16)^(1/2) = 0.25 — comfortably below the
-    0.5 verification threshold, so candidate recall is not the
+    The index family's banding (``INDEX_BANDS`` = 16 bands × 2 rows
+    over 32 hashes) puts the LSH S-curve midpoint at (1/16)^(1/2) =
+    0.25 — comfortably below the ``NEAR_DUP_THRESHOLD`` = 0.5
+    verification threshold, so candidate recall is not the
     bottleneck."""
-    idx = _seen_band_index(
-        batch.sparkSession, corpus_dir, batch_id, id_col, num_hashes, bands
-    )
+    idx = _seen_band_index(batch.sparkSession, corpus_dir, batch_id, id_col)
     survivors = dedup_incremental_minhash(
-        batch, idx, text_col, id_col, num_hashes, bands, threshold=threshold
+        batch, idx, text_col, id_col, threshold=NEAR_DUP_THRESHOLD
     )
     _land(batch, survivors, batch_id, corpus_dir, metrics_dir)
 
@@ -213,13 +208,12 @@ def run_incremental_near_dedup_stream(
     landing_dir: str,
     corpus_dir: str,
     checkpoint_dir: str,
-    schema: str = "doc_id LONG, text STRING, source STRING",
     max_files_per_trigger: int = 8,
     metrics_dir: str | None = None,
 ) -> None:
     """Near-dup twin of ``run_incremental_dedup_stream``: JSONL
     drops → per-epoch ``ingest_batch_near_dup``."""
     _run_stream(
-        spark, landing_dir, checkpoint_dir, schema, max_files_per_trigger,
+        spark, landing_dir, checkpoint_dir, max_files_per_trigger,
         lambda b, i: ingest_batch_near_dup(b, i, corpus_dir, metrics_dir=metrics_dir),
     )

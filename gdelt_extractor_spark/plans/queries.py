@@ -120,15 +120,21 @@ def q5_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def topk_per_group(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    """Top-k orders by totalprice within each priority (window)."""
+# Orders kept per priority by ``topk_per_group``; the DuckDB oracle
+# interpolates it.
+TOPK_PER_GROUP = 3
+
+
+def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-``TOPK_PER_GROUP`` orders by totalprice within each priority
+    (window)."""
     o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
     )
     return (
         o.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK_PER_GROUP)
         .select("o_orderpriority", "rank", "o_orderkey", "o_totalprice")
     )
 
@@ -149,8 +155,14 @@ def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sessionize(spark: SparkSession, sf_dir: str, gap_s: int = 1800) -> DataFrame:
-    """Sessionization: per-user sessions split at >gap_s idle gaps.
+# Idle seconds that split two sessions; the DuckDB oracle interpolates
+# it.
+SESSION_GAP_S = 1800
+
+
+def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sessionization: per-user sessions split at >``SESSION_GAP_S``
+    idle gaps.
 
     lag + running-sum-of-boundaries windows; one shuffle on user_id
     reused by both windows and the final aggregate (same key).
@@ -159,7 +171,7 @@ def sessionize(spark: SparkSession, sf_dir: str, gap_s: int = 1800) -> DataFrame
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     ts_s = F.col("ts").cast("double")
     prev = F.lag(ts_s).over(w)
-    is_new = F.when(prev.isNull() | ((ts_s - prev) > gap_s), 1).otherwise(0)
+    is_new = F.when(prev.isNull() | ((ts_s - prev) > SESSION_GAP_S), 1).otherwise(0)
     sess = (
         e.withColumn("is_new", is_new)
         .withColumn(
@@ -1505,9 +1517,15 @@ def event_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-def session_paths(spark: SparkSession, sf_dir: str, depth: int = 5, k: int = 20) -> DataFrame:
-    """Top-k user journey prefixes: each user's first ``depth``
-    events (by time) joined into a path string, counted corpus-wide
+# Events per journey prefix and prefixes reported by
+# ``session_paths``; the DuckDB oracle interpolates them.
+PATH_DEPTH = 5
+PATH_TOP = 20
+
+
+def session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-``PATH_TOP`` user journey prefixes: each user's first
+    ``PATH_DEPTH`` events (by time) joined into a path string, counted corpus-wide
     — the 'what do users do first' product query.
 
     One user shuffle for the ranking window; the path assembles from
@@ -1518,7 +1536,7 @@ def session_paths(spark: SparkSession, sf_dir: str, depth: int = 5, k: int = 20)
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     ranked = (
         e.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= depth)
+        .filter(F.col("rn") <= PATH_DEPTH)
         .groupBy("user_id")
         .agg(
             F.array_join(
@@ -1534,7 +1552,7 @@ def session_paths(spark: SparkSession, sf_dir: str, depth: int = 5, k: int = 20)
         ranked.groupBy("path")
         .agg(F.count(F.lit(1)).alias("n_users"))
         .orderBy(F.col("n_users").desc(), F.col("path").asc())
-        .limit(k)
+        .limit(PATH_TOP)
     )
 
 

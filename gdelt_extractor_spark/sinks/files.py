@@ -10,34 +10,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import _md5_int
+
 
 def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    max_records_per_file: int | None = None,
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", str(max_records_per_file))
     w.parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite", sep: str = "\t") -> None:
-    df.write.mode(mode).option("sep", sep).option("header", "true").csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    """Tab-separated csv with a header, overwriting ``path``."""
+    df.write.mode("overwrite").option("sep", "\t").option("header", "true").csv(path)
+
+
+# Target size of a file written by ``compact_parquet``.
+COMPACT_TARGET_MB = 256
 
 
 def compact_parquet(
-    spark,
-    path: str,
-    target_file_mb: int = 256,
-    partition_by: list[str] | None = None,
+    spark, path: str, partition_by: list[str] | None = None
 ) -> int:
     """Small-file compaction: rewrite a parquet dataset into files of
-    ~``target_file_mb`` based on its current on-disk size.
+    ~``COMPACT_TARGET_MB`` based on its current on-disk size.
 
     Streaming sinks and 15-minute ticks accrete thousands of small
     files; at 100 TB unmanaged small files dominate scan cost
@@ -82,7 +80,7 @@ def compact_parquet(
         for f in fs
         if f.endswith(".parquet")
     )
-    n_files = max(1, math.ceil(size_b / (target_file_mb * 1024 * 1024)))
+    n_files = max(1, math.ceil(size_b / (COMPACT_TARGET_MB * 1024 * 1024)))
     if partition_by:
         out = df.repartition(n_files, *[F.col(c) for c in partition_by])
         out.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
@@ -120,7 +118,6 @@ def write_clustered(
     path: str,
     cluster_col: str,
     n_files: int,
-    mode: str = "overwrite",
 ) -> None:
     """Range-clustered parquet write: ``repartitionByRange`` +
     ``sortWithinPartitions`` on ``cluster_col`` so each output file
@@ -137,23 +134,28 @@ def write_clustered(
     (
         df.repartitionByRange(n_files, F.col(cluster_col))
         .sortWithinPartitions(cluster_col)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
 
-def _zorder_key(df: DataFrame, cols: list[str], bits: int) -> F.Column:
-    """Z-value column: interleave the ``bits``-bit rank-bucket ids of
+# Rank-bucket bits per column of the Morton code (256 buckets).
+ZORDER_BITS = 8
+
+
+def _zorder_key(df: DataFrame, cols: list[str]) -> F.Column:
+    """Z-value column: interleave the ``ZORDER_BITS``-bit rank-bucket ids of
     each clustering column (Morton code).  Buckets come from
     approxQuantile boundaries so skewed columns still fill the code
     space evenly; the per-row assignment is a bounded JVM ``aggregate``
-    over the (2^bits − 1)-element boundary array — no UDF, no window.
+    over the (2^ZORDER_BITS − 1)-element boundary array — no UDF, no
+    window.
     """
-    n_buckets = 1 << bits
+    n_buckets = 1 << ZORDER_BITS
     probs = [i / n_buckets for i in range(1, n_buckets)]
     z = F.lit(0).cast("long")
     for ci, c in enumerate(cols):
-        # driver-side, bounded: (2^bits − 1) doubles per column
+        # driver-side, bounded: (2^ZORDER_BITS − 1) doubles per column
         bounds = df.approxQuantile(c, probs, 0.001)
         bucket = F.aggregate(
             F.array(*[F.lit(b) for b in bounds]),
@@ -163,7 +165,7 @@ def _zorder_key(df: DataFrame, cols: list[str], bits: int) -> F.Column:
         )
         # spread column ci's bit j to interleaved position j*d + ci
         d = len(cols)
-        for j in range(bits):
+        for j in range(ZORDER_BITS):
             bit = F.shiftright(bucket, j).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, j * d + ci))
     return z
@@ -174,8 +176,6 @@ def write_zordered(
     path: str,
     cols: list[str],
     n_files: int,
-    bits: int = 8,
-    mode: str = "overwrite",
 ) -> None:
     """Z-order (Morton-curve) clustered parquet write: multi-column
     generalization of ``write_clustered``.
@@ -190,7 +190,7 @@ def write_zordered(
     Iceberg OPTIMIZE ZORDER recipe, done with plain DataFrame ops).
 
     Driver-side state is one bounded approxQuantile boundary array
-    per column (2^bits − 1 doubles); everything else is a per-row
+    per column (2^ZORDER_BITS − 1 doubles); everything else is a per-row
     codegen expression, one range exchange, and a within-partition
     sort — the identical shuffle shape as ``write_clustered``.
     Columns must be numeric (cast to double for bucketing); hash
@@ -199,7 +199,7 @@ def write_zordered(
     """
     if len(cols) < 2:
         raise ValueError("z-ordering needs ≥2 columns; use write_clustered")
-    z = _zorder_key(df, cols, bits)
+    z = _zorder_key(df, cols)
     # Partition on the ALIGNED Morton block (the top ⌈log2 n_files⌉
     # bits of z), not the raw z-value: range boundaries sampled from
     # raw z land mid-block, and an unaligned chunk of the curve spans
@@ -209,7 +209,7 @@ def write_zordered(
     # balanced because quantile bucketing already equalizes block
     # populations.
     block_bits = max(1, (n_files - 1).bit_length())
-    shift = max(0, len(cols) * bits - block_bits)
+    shift = max(0, len(cols) * ZORDER_BITS - block_bits)
     (
         df.withColumn("_z", z)
         .withColumn("_zblock", F.shiftright(F.col("_z"), shift))
@@ -220,7 +220,7 @@ def write_zordered(
         .repartitionByRange(n_files, F.col("_zblock"))
         .sortWithinPartitions("_z")
         .drop("_z", "_zblock")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -256,11 +256,9 @@ def write_bucketed(
     bucket_by: list[str],
     n_buckets: int,
     sort_by: list[str] | None = None,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
 ) -> None:
     """Persist as a bucketed (and optionally sort-within-bucket)
-    table.
+    parquet table, overwriting ``table``.
 
     Bucketing is THE shuffle-elimination lever for repeated big-big
     joins: two tables bucketed on the join key with the same bucket
@@ -270,7 +268,7 @@ def write_bucketed(
     order key turns every subsequent join into a zip of co-located
     files.
     """
-    w = df.write.mode(mode).format(fmt).bucketBy(n_buckets, *bucket_by)
+    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, *bucket_by)
     if sort_by:
         w = w.sortBy(*sort_by)
     w.saveAsTable(table)
@@ -289,18 +287,8 @@ def shard_assignment(id_col: str, n_shards: int) -> F.Column:
     across runs, engines, partitionings — unlike round-robin
     repartition) and uniform by construction.  Pure expression —
     usable in queries (manifests) and writes alike."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(SHARD_SALT + ":"), F.col(id_col).cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % n_shards
-    ).cast("int")
+    h = _md5_int(SHARD_SALT, 8, F.col(id_col).cast("string")).cast("long")
+    return (h % n_shards).cast("int")
 
 
 def shard_manifest(
@@ -336,7 +324,6 @@ def write_training_shards(
     path: str,
     id_col: str = "doc_id",
     n_shards: int = 16,
-    mode: str = "overwrite",
 ) -> None:
     """Deterministic sharded export — the last step of a curation
     pipeline: rows land in shard=<k>/ directories keyed by
@@ -352,7 +339,7 @@ def write_training_shards(
     out = df.withColumn("shard", shard_assignment(id_col, n_shards))
     (
         out.repartition(n_shards, F.col("shard"))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("shard")
         .parquet(path)
     )
@@ -365,10 +352,8 @@ def export_table(
     df: DataFrame,
     path: str,
     fmt: str = "parquet",
-    mode: str = "overwrite",
     partition_by: list[str] | None = None,
     compression: str | None = None,
-    options: dict[str, str] | None = None,
 ) -> None:
     """Uniform export across the columnar/row formats Spark ships
     natively — parquet and ORC (columnar, splittable, predicate-
@@ -398,13 +383,11 @@ def export_table(
                 "export_table: csv cannot represent complex columns "
                 f"{complex_cols}; export as parquet/orc/json or flatten first"
             )
-    w = df.write.mode(mode).format(fmt)
+    w = df.write.mode("overwrite").format(fmt)
     if partition_by:
         w = w.partitionBy(*partition_by)
     if compression:
         w = w.option("compression", compression)
     if fmt == "csv":
         w = w.option("header", "true").option("escape", '"')
-    for k, v in (options or {}).items():
-        w = w.option(k, v)
     w.save(path)

@@ -40,7 +40,6 @@ def write_jdbc(
     df: DataFrame,
     table: str,
     config: dict[str, Any],
-    mode: str = "overwrite",
     num_partitions: int | None = None,
 ) -> None:
     """Replace-mode load mirroring ``to_sql(if_exists='replace')``.
@@ -51,7 +50,7 @@ def write_jdbc(
     """
     if num_partitions is not None:
         df = df.coalesce(num_partitions)
-    writer = df.write.format("jdbc").mode(mode)
+    writer = df.write.format("jdbc").mode("overwrite")
     for k, v in jdbc_options(config, table).items():
         writer = writer.option(k, v)
     try:

@@ -717,7 +717,11 @@ def actor_dyad_rollup(events: DataFrame) -> DataFrame:
     )
 
 
-def gkg_theme_daily(gkg: DataFrame, min_records: int = 1) -> DataFrame:
+# Fewest records a (theme, day) row of ``gkg_theme_daily`` needs.
+THEME_MIN_RECORDS = 1
+
+
+def gkg_theme_daily(gkg: DataFrame) -> DataFrame:
     """Daily theme rollup straight off the 27-col GKG feed: per
     (theme, yyyymmdd day) record count, distinct-source count, and
     mean document tone (first field of V2Tone, per the public
@@ -745,7 +749,7 @@ def gkg_theme_daily(gkg: DataFrame, min_records: int = 1) -> DataFrame:
                 / F.count(F.lit(1))
             ).alias("avg_tone"),
         )
-        .filter(F.col("n_records") >= min_records)
+        .filter(F.col("n_records") >= THEME_MIN_RECORDS)
     )
 
 
@@ -791,11 +795,14 @@ def quad_class_rollup(events: DataFrame) -> DataFrame:
     )
 
 
-def goldstein_daily(
-    events: DataFrame, by: str = "Actor1CountryCode", window_days: int = 7
-) -> DataFrame:
+# Days in ``goldstein_daily``'s trailing mean; the DuckDB oracle
+# interpolates it.
+GOLDSTEIN_WINDOW_DAYS = 7
+
+
+def goldstein_daily(events: DataFrame, by: str = "Actor1CountryCode") -> DataFrame:
     """Daily Goldstein stability index per actor group with a
-    trailing ``window_days`` rolling mean.
+    trailing ``GOLDSTEIN_WINDOW_DAYS`` rolling mean.
 
     Two-level plan: the daily aggregate shuffles once on
     (group, day) with map-side partial agg; the rolling mean is a
@@ -830,7 +837,7 @@ def goldstein_daily(
     w = (
         Window.partitionBy("grp")
         .orderBy(F.unix_date(F.col("day")))
-        .rangeBetween(-(window_days - 1), 0)
+        .rangeBetween(-(GOLDSTEIN_WINDOW_DAYS - 1), 0)
     )
     return daily.select(
         "grp",

@@ -22,23 +22,15 @@ TESTDATA_TABLES = (
 )
 
 
-def register_tables(
-    spark: SparkSession,
-    sf_dir: str,
-    tables: tuple[str, ...] = TESTDATA_TABLES,
-    prefix: str = "",
-) -> list[str]:
-    """Register each parquet table under ``sf_dir`` as a temp view
-    named ``<prefix><table>``; returns the view names.  Views are
-    lazy — registration costs nothing until a query scans one, and
+def register_tables(spark: SparkSession, sf_dir: str) -> list[str]:
+    """Register each ``TESTDATA_TABLES`` parquet table under ``sf_dir``
+    as a temp view of the same name; returns the view names.  Views
+    are lazy — registration costs nothing until a query scans one, and
     every scan gets the loaders' type normalization (timestamp
     quirks etc.), not a raw parquet read."""
-    names = []
-    for t in tables:
-        name = f"{prefix}{t}"
-        load_table(spark, sf_dir, t).createOrReplaceTempView(name)
-        names.append(name)
-    return names
+    for t in TESTDATA_TABLES:
+        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+    return list(TESTDATA_TABLES)
 
 
 def run_sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:

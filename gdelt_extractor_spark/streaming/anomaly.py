@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .updates import WATERMARK
+
 OUT_SCHEMA = (
     "user_id long, event_time timestamp, value double, "
     "z double, is_anomaly boolean"
@@ -88,24 +90,28 @@ def _anomaly_fn(alpha: float, z_thresh: float, warmup: int,
     return fn
 
 
+# Events a key must see before it can be flagged, and the idle time
+# (ms) after which a key's state is dropped.
+WARMUP = 5
+IDLE_TIMEOUT_MS = 3_600_000
+
+
 def streaming_anomaly(
     events: DataFrame,
     alpha: float = 0.1,
     z_thresh: float = 3.0,
-    warmup: int = 5,
-    watermark: str = "30 minutes",
-    idle_timeout_ms: int = 3_600_000,
     time_col: str = "event_time",
 ) -> DataFrame:
     """Score a stream of (user_id, event_time, value) rows: emits
-    every event with its pre-update z-score and anomaly flag."""
+    every event with its pre-update z-score and anomaly flag (no flag
+    before a key's ``WARMUP``-th event)."""
     if time_col != "event_time":
         events = events.withColumnRenamed(time_col, "event_time")
     return (
-        events.withWatermark("event_time", watermark)
+        events.withWatermark("event_time", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
-            _anomaly_fn(alpha, z_thresh, warmup, idle_timeout_ms),
+            _anomaly_fn(alpha, z_thresh, WARMUP, IDLE_TIMEOUT_MS),
             outputStructType=OUT_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",

@@ -21,6 +21,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
+from ..plans.queries import SESSION_GAP_S
+from .updates import WATERMARK
+
 SESSION_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -98,27 +101,22 @@ def _emit(user_id: int, sessions: list[tuple]) -> pd.DataFrame:
     )
 
 
-def streaming_sessionize(
-    events: DataFrame,
-    gap_s: int = 1800,
-    watermark: str = "30 minutes",
-    time_col: str = "event_time",
-) -> DataFrame:
+def streaming_sessionize(events: DataFrame, time_col: str = "event_time") -> DataFrame:
     """Incremental sessionization of a stream with columns
     (user_id long, event_time timestamp, value double).
 
-    Sessions close (and emit) when a gap > ``gap_s`` appears within
-    the data, or when the event-time watermark passes the open
+    Sessions close (and emit) when a gap > ``SESSION_GAP_S`` (the batch
+    ``sessionize``'s) appears within the data, or when the event-time watermark passes the open
     session's last event + gap (state timeout).  Mirrors the batch
     ``sessionize`` semantics, incrementally and with bounded state.
     """
     if time_col != "event_time":
         events = events.withColumnRenamed(time_col, "event_time")
     return (
-        events.withWatermark("event_time", watermark)
+        events.withWatermark("event_time", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
-            _sessionize_fn(gap_s),
+            _sessionize_fn(SESSION_GAP_S),
             outputStructType=SESSION_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
@@ -192,16 +190,16 @@ def _rate_cap_fn(window_s: int, max_per_window: int):
     return fn
 
 
-def streaming_rate_cap(
-    events: DataFrame,
-    window_s: int = 60,
-    max_per_window: int = 5,
-    watermark: str = "30 minutes",
-    time_col: str = "event_time",
-) -> DataFrame:
+# The rate cap's tumbling window (seconds) and events admitted per
+# key and window.
+RATE_WINDOW_S = 60
+RATE_MAX_PER_WINDOW = 5
+
+
+def streaming_rate_cap(events: DataFrame, time_col: str = "event_time") -> DataFrame:
     """Per-key event-time frequency cap — the ingestion rate limiter:
-    each key admits at most ``max_per_window`` events per tumbling
-    ``window_s`` window; every event emits with an ``admitted`` flag
+    each key admits at most ``RATE_MAX_PER_WINDOW`` events per tumbling
+    ``RATE_WINDOW_S`` window; every event emits with an ``admitted`` flag
     so the caller can route rejects to a spill/sample path instead of
     silently dropping.
 
@@ -218,10 +216,10 @@ def streaming_rate_cap(
     if time_col != "event_time":
         events = events.withColumnRenamed(time_col, "event_time")
     return (
-        events.withWatermark("event_time", watermark)
+        events.withWatermark("event_time", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
-            _rate_cap_fn(window_s, max_per_window),
+            _rate_cap_fn(RATE_WINDOW_S, RATE_MAX_PER_WINDOW),
             outputStructType=CAP_SCHEMA,
             stateStructType=_CAP_STATE_SCHEMA,
             outputMode="append",

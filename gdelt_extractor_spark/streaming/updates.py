@@ -23,12 +23,22 @@ from pyspark.sql import types as T
 
 from ..sources.gdelt import V2_EVENTS_SCHEMA, _clean, _parse
 
+# Late-data tolerance of the event streams (two 15-minute GDELT drops),
+# the rollup window, and the files one micro-batch takes.
+WATERMARK = "30 minutes"
+WINDOW = "15 minutes"
+FILES_PER_TRIGGER = 8
+# How long after an event a mention still joins it.
+JOIN_MAX_DELAY = "15 minutes"
+# Inactivity that closes a native session window, and its watermark.
+SESSION_GAP = "30 minutes"
+SESSION_WATERMARK = "1 hour"
+
 
 def stream_gdelt_dir(
     spark: SparkSession,
     landing_dir: str,
     schema: T.StructType = V2_EVENTS_SCHEMA,
-    max_files_per_trigger: int = 8,
 ) -> DataFrame:
     """File-source stream of GDELT TSV drops through the batch readers'
     parser (``sources.gdelt._parse``): clean rows flow on; each batch's
@@ -37,7 +47,7 @@ def stream_gdelt_dir(
     observations of one name in a query, e.g. events ⋈ mentions)."""
     lines = (
         spark.readStream.format("text")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .option("maxFilesPerTrigger", str(FILES_PER_TRIGGER))
         .load(landing_dir)
         .toDF("line")
     )
@@ -52,9 +62,7 @@ def with_event_time(df: DataFrame, col: str = "DATEADDED") -> DataFrame:
     )
 
 
-def dedup_stream(
-    df: DataFrame, key: str = "SOURCEURL", watermark: str = "30 minutes"
-) -> DataFrame:
+def dedup_stream(df: DataFrame, key: str = "SOURCEURL") -> DataFrame:
     """Streaming keep-first on ``key`` (the reference's
     drop_duplicates, made incremental and late-data-safe).
 
@@ -67,22 +75,18 @@ def dedup_stream(
     (documented, reference-matching) cost that re-posts of a URL
     farther apart than the watermark count as new.
     """
-    return df.withWatermark("event_time", watermark).dropDuplicatesWithinWatermark(
+    return df.withWatermark("event_time", WATERMARK).dropDuplicatesWithinWatermark(
         [key]
     )
 
 
-def windowed_counts(
-    df: DataFrame,
-    window: str = "15 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Per-window event counts by root code — the live rollup the
+def windowed_counts(df: DataFrame) -> DataFrame:
+    """Per-``WINDOW`` event counts by root code — the live rollup the
     reference approximates by re-running its keyword/geom queries
     each tick."""
     return (
-        df.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", window), F.col("EventRootCode"))
+        df.withWatermark("event_time", WATERMARK)
+        .groupBy(F.window("event_time", WINDOW), F.col("EventRootCode"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("NumArticles").cast("long")).alias("n_articles"),
@@ -96,12 +100,10 @@ def stream_stream_join(
     on: str,
     left_time: str,
     right_time: str,
-    max_delay: str = "15 minutes",
-    watermark: str = "30 minutes",
 ) -> DataFrame:
     """Watermarked stream-stream inner join: right rows match left
     rows with the same key whose event time lies in
-    [left_time, left_time + max_delay].
+    [left_time, left_time + ``JOIN_MAX_DELAY``].
 
     Both sides are watermarked so the join state is bounded — Spark
     drops buffered rows once the watermark passes the time-range
@@ -109,12 +111,12 @@ def stream_stream_join(
     mention (right) joins its event (left) only while the event is
     recent, with O(watermark window) state instead of O(stream).
     """
-    l = left.withWatermark(left_time, watermark)
-    r = right.withWatermark(right_time, watermark)
+    l = left.withWatermark(left_time, WATERMARK)
+    r = right.withWatermark(right_time, WATERMARK)
     cond = (
         (l[on] == r[on])
         & (r[right_time] >= l[left_time])
-        & (r[right_time] <= l[left_time] + F.expr(f"INTERVAL {max_delay}"))
+        & (r[right_time] <= l[left_time] + F.expr(f"INTERVAL {JOIN_MAX_DELAY}"))
     )
     return l.join(r, cond, "inner").drop(r[on])
 
@@ -192,8 +194,6 @@ def run_trending_topk(
     sink: "Callable[[DataFrame, int], None]",
     checkpoint_dir: str,
     k: int = 3,
-    window: str = "15 minutes",
-    watermark: str = "30 minutes",
 ) -> None:
     """Live trending top-k pipeline: watermarked windowed counts
     (state bounded — evicted once the watermark passes the window),
@@ -201,7 +201,7 @@ def run_trending_topk(
     before reaching the caller's sink.  Composes ``windowed_counts``
     → ``rank_windows`` → ``run_foreach_batch``; state stays bounded
     no matter how long the stream runs."""
-    agg = windowed_counts(stream_df, window=window, watermark=watermark)
+    agg = windowed_counts(stream_df)
     run_foreach_batch(
         agg, lambda b, i: sink(rank_windows(b, k), i), checkpoint_dir
     )
@@ -283,7 +283,6 @@ def run_sketch_maintenance(
     checkpoint_dir: str,
     key_cols: list[str],
     value_col: str,
-    lg_k: int = 12,
 ) -> None:
     """Streaming maintenance of a mergeable HLL sketch table: each
     micro-batch's (key, value) rows become per-key sketches
@@ -301,7 +300,7 @@ def run_sketch_maintenance(
 
     Scale note: per batch the stored table pays one groupBy shuffle
     over (stored ∪ batch) SKETCH rows — bounded by key cardinality ×
-    2^lg_k bytes, independent of the batch's raw row count.
+    2^``sketches.HLL_LG_K`` bytes, independent of the batch's raw row count.
     """
     import os
     import shutil
@@ -327,7 +326,7 @@ def run_sketch_maintenance(
             else:
                 shutil.rmtree(backup)
         spark = batch.sparkSession
-        batch_sk = hll_sketch_table(batch, key_cols, value_col, lg_k=lg_k)
+        batch_sk = hll_sketch_table(batch, key_cols, value_col)
         if os.path.exists(table_path):
             stored = spark.read.parquet(table_path)
             merged = (
@@ -352,8 +351,6 @@ def session_window_counts(
     df: DataFrame,
     key_col: str,
     time_col: str = "event_time",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """Per-key session aggregation via Spark's NATIVE
     ``session_window`` (dynamic gap-closed windows) — the engine-
@@ -365,13 +362,13 @@ def session_window_counts(
     start/end/count-per-session is enough; reach for the custom
     stateful operator only when the session carries bespoke state.
 
-    Output per closed session: (key, session_start, session_end,
-    n_events).  Watermark bounds state exactly as the windowed
-    rollups do.
+    Output per closed session (``SESSION_GAP`` of inactivity): (key,
+    session_start, session_end, n_events).  ``SESSION_WATERMARK``
+    bounds state exactly as the windowed rollups do.
     """
     return (
-        df.withWatermark(time_col, watermark)
-        .groupBy(F.session_window(F.col(time_col), gap), F.col(key_col))
+        df.withWatermark(time_col, SESSION_WATERMARK)
+        .groupBy(F.session_window(F.col(time_col), SESSION_GAP), F.col(key_col))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col(key_col),
@@ -388,13 +385,12 @@ def run_drift_monitor(
     value_col: str,
     metrics_dir: str,
     checkpoint_dir: str,
-    n_bins: int = 10,
     lo: float | None = None,
     hi: float | None = None,
 ) -> "StreamingQuery":
     """Live distribution-drift monitoring: every micro-batch's
     ``value_col`` is scored against a FROZEN baseline with the PSI
-    gate (``profiling.psi_drift`` — same bins, same ε, same
+    gate (``profiling.psi_drift`` — its default 10 bins, same ε, same
     reading: <0.1 stable, >0.25 shifted) and one
     (epoch, n_rows, psi) row lands in ``metrics_dir`` — the
     streaming sibling of the batch drift audits, and the alarm feed
@@ -405,7 +401,7 @@ def run_drift_monitor(
     posture: freeze edges with the baseline) and the per-bin
     baseline fractions are precomputed and reused, so each epoch
     pays ONE aggregate over its own batch plus a tiny join of two
-    ≤ n_bins count tables.  Append-only metrics keyed by epoch id:
+    ≤ 10-row count tables.  Append-only metrics keyed by epoch id:
     a replayed batch overwrites its own epoch row idempotently
     (same last-write-wins discipline as the incremental pipelines'
     dedup-rate metrics)."""
@@ -426,7 +422,7 @@ def run_drift_monitor(
             return
         spark = batch.sparkSession
         b = batch.select(F.col(value_col).cast("double").alias("v"))
-        out = psi_drift(frozen, b, "v", n_bins=n_bins, lo=lo, hi=hi)
+        out = psi_drift(frozen, b, "v", lo=lo, hi=hi)
         psi = out.select(F.max("psi")).first()[0]
         n = batch.count()
         row = spark.createDataFrame(

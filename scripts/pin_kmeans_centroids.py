@@ -73,6 +73,9 @@ def main() -> None:
         "pq4x16": {},  # ann_pq_topk: PQ codebooks m=4, ksub=16, n_iter=3
     }
     from gdelt_extractor_spark.operators.similarity import (
+        IVF_N_ITER,
+        PQ_M,
+        PQ_N_ITER,
         ivf_fit_centroids,
         pq_fit_codebooks,
     )
@@ -93,12 +96,12 @@ def main() -> None:
         # the bounded-sample Lloyd fit is deterministic, so the oracle
         # replays assignment/probe/rerank from these literals
         for key, m_cells in (("ivf16", 16), ("ivfsem8", 8)):
-            c = ivf_fit_centroids(emb, m=m_cells, n_iter=2)
+            c = ivf_fit_centroids(emb, m=m_cells, n_iter=IVF_N_ITER)
             pins[key][fp] = {
                 "cents": [[float(x) for x in row] for row in c],
                 "csq": [float(x) for x in (c * c).sum(axis=1)],
             }
-        books = pq_fit_codebooks(emb, m=4, ksub=16, n_iter=3)
+        books = pq_fit_codebooks(emb, m=PQ_M, ksub=16, n_iter=PQ_N_ITER)
         pins["pq4x16"][fp] = {
             "books": [
                 [[float(x) for x in cent] for cent in book] for book in books

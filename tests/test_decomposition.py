@@ -17,7 +17,7 @@ from gdelt_extractor_spark.operators.decomposition import (
     pca_project,
     pca_project_quantized,
 )
-from gdelt_extractor_spark.operators.sketches import hll_rollup, hll_sketch_table
+from gdelt_extractor_spark.operators.sketches import HLL_LG_K, hll_rollup, hll_sketch_table
 
 
 def _vecs(spark, mat, ids=None):
@@ -194,9 +194,9 @@ class TestHLLSketchTable:
 
     def test_sketch_size_bounded(self, spark):
         sk = hll_sketch_table(
-            self._events(spark, n=20000, users=20000), ["etype"], "user_id", lg_k=12
+            self._events(spark, n=20000, users=20000), ["etype"], "user_id"
         ).collect()
-        assert all(len(r.hll_sketch) <= 2 ** 12 + 64 for r in sk)
+        assert all(len(r.hll_sketch) <= 2 ** HLL_LG_K + 64 for r in sk)
 
 
 class TestRandomProjection:

@@ -70,10 +70,10 @@ def test_minhash_lsh_recall_vs_exact(docs):
 
 
 def test_minhash_signature_determinism_and_shape(docs):
-    s1 = {r.id: r.sig for r in D.minhash_signatures(docs, "text", "doc_id", 16).collect()}
-    s2 = {r.id: r.sig for r in D.minhash_signatures(docs, "text", "doc_id", 16).collect()}
+    s1 = {r.id: r.sig for r in D.minhash_signatures(docs, "text", "doc_id").collect()}
+    s2 = {r.id: r.sig for r in D.minhash_signatures(docs, "text", "doc_id").collect()}
     assert s1 == s2
-    assert all(len(sig) == 16 for sig in s1.values())
+    assert all(len(sig) == D.NUM_HASHES for sig in s1.values())
     # identical docs → identical signatures; distinct docs → not all equal
     assert s1[0] == s1[1]
     assert s1[0] != s1[3]
@@ -628,7 +628,7 @@ class TestIncrementalMinhash:
         )
 
         hist = self._mk(spark, [(1, self.BASE)])
-        idx = minhash_band_index(hist, bands=16)
+        idx = minhash_band_index(hist)
         batch = self._mk(
             spark,
             [
@@ -640,7 +640,7 @@ class TestIncrementalMinhash:
                      "partition pruning and broadcast joins everywhere"),
             ],
         )
-        got = dedup_incremental_minhash(batch, idx, bands=16, threshold=0.5).collect()
+        got = dedup_incremental_minhash(batch, idx, threshold=0.5).collect()
         assert {r.doc_id for r in got} == {11}
 
     def test_batch_internal_keep_first(self, spark):
@@ -649,7 +649,7 @@ class TestIncrementalMinhash:
             minhash_band_index,
         )
 
-        empty = minhash_band_index(self._mk(spark, []).limit(0), bands=16)
+        empty = minhash_band_index(self._mk(spark, []).limit(0))
         batch = self._mk(
             spark,
             [
@@ -660,7 +660,7 @@ class TestIncrementalMinhash:
                      "with watermarks and stateful session windows"),
             ],
         )
-        got = dedup_incremental_minhash(batch, empty, bands=16, threshold=0.5).collect()
+        got = dedup_incremental_minhash(batch, empty, threshold=0.5).collect()
         assert {r.doc_id for r in got} == {20, 22}
 
     def test_replay_converges(self, spark):
@@ -673,7 +673,7 @@ class TestIncrementalMinhash:
         )
 
         hist = self._mk(spark, [(1, self.BASE)])
-        idx = minhash_band_index(hist, bands=16)
+        idx = minhash_band_index(hist)
         batch = self._mk(
             spark,
             [(30, self.BASE.replace("fox", "wolf")),
@@ -681,10 +681,10 @@ class TestIncrementalMinhash:
                   "and order independent aggregation over doubles in "
                   "distributed query engines with adaptive execution")],
         )
-        s1 = dedup_incremental_minhash(batch, idx, bands=16, threshold=0.5)
+        s1 = dedup_incremental_minhash(batch, idx, threshold=0.5)
         assert {r.doc_id for r in s1.collect()} == {31}
-        idx2 = updated_band_index(idx, s1, bands=16)
-        s2 = dedup_incremental_minhash(batch, idx2, bands=16, threshold=0.5).collect()
+        idx2 = updated_band_index(idx, s1)
+        s2 = dedup_incremental_minhash(batch, idx2, threshold=0.5).collect()
         assert s2 == []
 
 
@@ -850,7 +850,7 @@ def test_dedup_incremental_minhash_md5_portable(spark, docs):
     arriving in the batch drops, genuinely new docs survive, and
     results are deterministic."""
     hist = docs.filter(F.col("doc_id") <= 2)
-    idx = D.minhash_band_index(hist, bands=16)
+    idx = D.minhash_band_index(hist)
     batch = spark.createDataFrame(
         [
             # near-dup of history doc 0 (tail appended) → must drop
@@ -865,13 +865,13 @@ def test_dedup_incremental_minhash_md5_portable(spark, docs):
     out1 = sorted(
         r.doc_id
         for r in D.dedup_incremental_minhash(
-            batch, idx, bands=16, threshold=0.5
+            batch, idx, threshold=0.5
         ).collect()
     )
     out2 = sorted(
         r.doc_id
         for r in D.dedup_incremental_minhash(
-            batch, idx, bands=16, threshold=0.5
+            batch, idx, threshold=0.5
         ).collect()
     )
     assert out1 == out2 == [12]
@@ -882,19 +882,19 @@ def test_updated_band_index_md5_roundtrip(spark, docs):
     sig column so the same survivor re-submitted tomorrow is
     dropped."""
     hist = docs.filter(F.col("doc_id") <= 2)
-    idx = D.minhash_band_index(hist, bands=16)
+    idx = D.minhash_band_index(hist)
     batch = spark.createDataFrame(
         [(20, "completely different tokens about streaming watermark state eviction policies")],
         "doc_id long, text string",
     )
-    surv = D.dedup_incremental_minhash(batch, idx, bands=16, threshold=0.5)
+    surv = D.dedup_incremental_minhash(batch, idx, threshold=0.5)
     assert [r.doc_id for r in surv.collect()] == [20]
-    idx2 = D.updated_band_index(idx, surv, bands=16)
+    idx2 = D.updated_band_index(idx, surv)
     resubmit = spark.createDataFrame(
         [(30, "completely different tokens about streaming watermark state eviction policies")],
         "doc_id long, text string",
     )
-    again = D.dedup_incremental_minhash(resubmit, idx2, bands=16, threshold=0.5)
+    again = D.dedup_incremental_minhash(resubmit, idx2, threshold=0.5)
     assert again.count() == 0
 
 

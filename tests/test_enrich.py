@@ -60,3 +60,16 @@ def test_stub_failures_yield_null_rows(spark, monkeypatch):
 def test_bad_spec_raises():
     with pytest.raises(ValueError, match="module:function"):
         E._resolve_fetcher("nocolon")
+
+
+def test_keyword_freq_splits_on_semicolon_like_the_reference(spark):
+    """The reference's ``get_keywords`` splits on ';' and strips, so
+    "alpha;beta" and "alpha; gamma" give alpha twice; the ignore list
+    drops "state"."""
+    from gdelt_extractor_spark.operators.keywords import keyword_freq
+
+    df = spark.createDataFrame(
+        [("alpha;beta",), ("alpha; gamma",), ("state; ",), ("",)], "keywords string"
+    )
+    got = sorted(tuple(r) for r in keyword_freq(df).collect())
+    assert got == [("alpha", 2), ("beta", 1), ("gamma", 1)]

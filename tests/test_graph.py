@@ -62,31 +62,95 @@ def test_empty_graph(spark, driver_cap):
     assert drv.schema == dist.schema
 
 
-def test_driver_finish_equals_distributed(spark, driver_cap, spy):
+# One weighted graph for the route-equality tests: weights, a dangling
+# node (e) and, through ``_RESETS``, uniform, personalized and
+# duplicate-seed teleport vectors.
+_ROUTE_EDGES = [
+    ("a", "b", 9.0), ("a", "c", 1.0), ("b", "a", 1.0),
+    ("c", "d", 2.0), ("d", "a", 1.0), ("a", "e", 3.0),
+]
+_RESETS = {"one": [("a", 1.0)], "dup": [("a", 0.5), ("a", 0.5)]}
+_ROUTE_KWS = {
+    "plain": {},
+    "weighted": {"weight": "w"},
+    "personalized": {"weight": "w", "reset": "one", "damping": 0.5, "tol": 1e-4},
+    "dup_seeds": {"weight": "w", "reset": "dup", "damping": 0.5, "tol": 1e-4},
+}
+
+
+def _route_ranks(spark, e, kw):
+    if "reset" in kw:
+        seeds = spark.createDataFrame(_RESETS[kw["reset"]], "node string, w double")
+        kw = dict(kw, reset=seeds)
+    return {r.node: r.rank for r in pagerank(e, **kw).collect()}
+
+
+def _schema_frames(spark):
+    """Non-null ``spark.range`` edges (empty and a 5-edge chain) and
+    nullable ids."""
+    from pyspark.sql import functions as F
+
+    return [
+        spark.range(n).select(
+            F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+        )
+        for n in (0, 5)
+    ] + [spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")]
+
+
+@pytest.fixture(scope="module")
+def distributed_routes(spark):
+    """The distributed route's results for the route-equality tests,
+    computed once per module: ranks for every ``_ROUTE_KWS`` entry and
+    the pagerank / label_propagation schemas of ``_schema_frames``.
+    A cap of -1 admits no frame; ``driver_calls`` lists the driver
+    finishes that ran anyway (none).  The loops run concurrently: each
+    Spark round of a tiny graph is scheduling-bound, not CPU-bound."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from gdelt_extractor_spark.operators import _finish
+
+    e = _edges(spark, _ROUTE_EDGES, "src string, dst string, w double")
+    jobs = {
+        k: (lambda kw=kw: _route_ranks(spark, e, kw)) for k, kw in _ROUTE_KWS.items()
+    }
+    for i, f in enumerate(_schema_frames(spark)):
+        jobs["pagerank", i] = lambda f=f: G.pagerank(f).schema
+        jobs["label_propagation", i] = lambda f=f: G.label_propagation(f).schema
+    driver_calls = []
+
+    def counted(real):
+        def wrapper(*args, **kwargs):
+            driver_calls.append(real.__name__)
+            return real(*args, **kwargs)
+
+        return wrapper
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(_finish, "DRIVER_FINISH_ROWS", -1)
+        for name in ("_pagerank_driver", "_label_propagation_driver"):
+            mp.setattr(G, name, counted(getattr(G, name)))
+        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+            futures = {k: pool.submit(fn) for k, fn in jobs.items()}
+            results = {k: f.result(timeout=600) for k, f in futures.items()}
+    return results, driver_calls
+
+
+def test_driver_finish_equals_distributed(spark, driver_cap, spy, distributed_routes):
     """The below-cap vectorized driver finish (r11) must match the
     distributed power iteration to within summation-order float noise
     on a graph exercising weights, dangling nodes and a personalized
     reset — and the cap must actually route: a cap of -1 forces the
     distributed loop, a cap below the edge count too."""
     calls = spy(G, "_pagerank_driver")
-    rows = [
-        ("a", "b", 9.0), ("a", "c", 1.0), ("b", "a", 1.0),
-        ("c", "d", 2.0), ("d", "a", 1.0), ("a", "e", 3.0),
-        # e dangling (no out-edges)
-    ]
-    e = _edges(spark, rows, "src string, dst string, w double")
-    seeds = spark.createDataFrame([("a", 1.0)], "node string, w double")
-    kws = (
-        {},
-        {"weight": "w"},
-        {"weight": "w", "reset": seeds, "damping": 0.5, "tol": 1e-4},
-    )
-    fast = [{r.node: r.rank for r in pagerank(e, **kw).collect()} for kw in kws]
+    e = _edges(spark, _ROUTE_EDGES, "src string, dst string, w double")
+    kws = ("plain", "weighted", "personalized")
+    fast = [_route_ranks(spark, e, _ROUTE_KWS[k]) for k in kws]
     assert len(calls) == 3
-    driver_cap(-1)
-    slow = [{r.node: r.rank for r in pagerank(e, **kw).collect()} for kw in kws]
-    assert len(calls) == 3
-    for kw, f, s in zip(kws, fast, slow):
+    slow, dist_calls = distributed_routes
+    assert dist_calls == []
+    for kw, f in zip(kws, fast):
+        s = slow[kw]
         assert f.keys() == s.keys(), kw
         for node in f:
             assert abs(f[node] - s[node]) < 1e-7, (kw, node)
@@ -95,33 +159,26 @@ def test_driver_finish_equals_distributed(spark, driver_cap, spy):
     driver_cap(3)
     mid = {r.node: r.rank for r in pagerank(e, weight="w").collect()}
     assert len(calls) == 3
-    assert mid == slow[1]
+    assert mid == slow["weighted"]
 
 
-def test_duplicate_reset_seeds_sum_on_both_paths(spark, driver_cap):
+def test_duplicate_reset_seeds_sum_on_both_paths(spark, driver_cap, distributed_routes):
     """Duplicate seed rows sum into one teleport entry on BOTH the
     driver finish and the distributed loop (r11 review: the
     distributed join used to duplicate the node's rank rows and
     double-count its mass)."""
-    rows = [("a", "b", 1.0), ("b", "a", 1.0), ("b", "c", 1.0)]
-    e = _edges(spark, rows, "src string, dst string, w double")
-    dup = spark.createDataFrame(
-        [("a", 0.5), ("a", 0.5)], "node string, w double"
-    )
-    single = spark.createDataFrame([("a", 1.0)], "node string, w double")
-    for cap in (100_000, -1):
-        driver_cap(cap)
-        got_dup = {
-            r.node: r.rank
-            for r in pagerank(e, weight="w", reset=dup).collect()
-        }
-        got_one = {
-            r.node: r.rank
-            for r in pagerank(e, weight="w", reset=single).collect()
-        }
-        assert len(got_dup) == 3, cap  # one row per node, no dups
+    e = _edges(spark, _ROUTE_EDGES, "src string, dst string, w double")
+    driver_cap(100_000)
+    driver = {
+        k: _route_ranks(spark, e, _ROUTE_KWS[k]) for k in ("dup_seeds", "personalized")
+    }
+    slow, dist_calls = distributed_routes
+    assert dist_calls == []
+    for route, ranks in (("driver", driver), ("distributed", slow)):
+        got_dup, got_one = ranks["dup_seeds"], ranks["personalized"]
+        assert len(got_dup) == len({n for r in _ROUTE_EDGES for n in r[:2]}), route
         for n in got_one:
-            assert abs(got_dup[n] - got_one[n]) < 1e-7, (cap, n)
+            assert abs(got_dup[n] - got_one[n]) < 1e-7, (route, n)
 
 
 def test_driver_finish_seed_outside_graph_raises(spark):
@@ -270,32 +327,21 @@ class TestGraphDriverFinishEquality:
         assert len(out) == 4 and set(out.values()) == {1.0}
 
 
-def test_driver_and_distributed_schemas_match(spark, driver_cap, spy):
+def test_driver_and_distributed_schemas_match(spark, spy, distributed_routes):
     """Both routes of pagerank and label_propagation return the same
     schema, nullability included — on non-null ``spark.range`` edges
     (the distributed loops keep the ids non-null), nullable ids, and
     empty input."""
-    from pyspark.sql import functions as F
-
     pr_calls = spy(G, "_pagerank_driver")
     lp_calls = spy(G, "_label_propagation_driver")
-    frames = [
-        spark.range(n).select(
-            F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-        )
-        for n in (0, 5)
-    ] + [spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")]
-
-    def schemas():
-        return [
-            (G.pagerank(e).schema, G.label_propagation(e).schema) for e in frames
-        ]
-
-    drv = schemas()
+    frames = _schema_frames(spark)
+    drv = [(G.pagerank(e).schema, G.label_propagation(e).schema) for e in frames]
     assert len(pr_calls) == len(lp_calls) == len(frames)
-    driver_cap(-1)
-    assert schemas() == drv
-    assert len(pr_calls) == len(lp_calls) == len(frames)
+    dist, dist_calls = distributed_routes
+    assert dist_calls == []
+    assert [
+        (dist["pagerank", i], dist["label_propagation", i]) for i in range(len(frames))
+    ] == drv
     assert [f.nullable for f in drv[1][0]] == [False, True]
     assert [f.nullable for f in drv[1][1]] == [False, False]
 

@@ -195,8 +195,6 @@ class TestLinkageScore:
              "tag": F.col("a.tag") == F.col("b.tag")},
             m={"name": 0.9, "tag": 0.8},
             u={"name": 0.01, "tag": 0.25},
-            match_threshold=4.0,
-            non_match_threshold=0.0,
         ).collect()
         w = {
             ("name", True): math.log(0.9 / 0.01),

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pathlib
 
+from gdelt_extractor_spark.operators.dedup import INDEX_BANDS, NUM_HASHES
 from gdelt_extractor_spark.pipelines.live import run_live_rollup
 from tests.test_sources_gdelt import _v2_row
 
@@ -384,8 +385,8 @@ def test_near_dup_short_docs_land_once_without_signature(spark, tmp_path):
     assert sorted(r.doc_id for r in rows) == [1, 3, 4]
     sig = {r.doc_id: r.sig for r in rows}
     assert sig[3] is None and sig[4] is None
-    assert sig[1] is not None and len(sig[1]) == 32
-    idx = _seen_band_index(spark, corpus_dir, 1, "doc_id", 32, 16)
+    assert sig[1] is not None and len(sig[1]) == NUM_HASHES
+    idx = _seen_band_index(spark, corpus_dir, 1, "doc_id")
     assert {r.id for r in idx.select("id").distinct().collect()} == {1}
 
 
@@ -398,14 +399,14 @@ def test_near_dup_first_batch_index_has_the_real_schema(spark, tmp_path):
     )
 
     corpus_dir = str(tmp_path / "corpus")
-    empty = _seen_band_index(spark, corpus_dir, 0, "doc_id", 32, 16)
+    empty = _seen_band_index(spark, corpus_dir, 0, "doc_id")
     assert empty.count() == 0
     batch = spark.createDataFrame(
         [(1, _NEAR_BASE, "s1")], "doc_id long, text string, source string"
     )
     ingest_batch_near_dup(batch, 0, corpus_dir)
-    real = _seen_band_index(spark, corpus_dir, 1, "doc_id", 32, 16)
-    assert real.count() == 16
+    real = _seen_band_index(spark, corpus_dir, 1, "doc_id")
+    assert real.count() == INDEX_BANDS
     assert empty.schema == real.schema
 
 

@@ -46,7 +46,7 @@ def test_lsh_recall_on_clustered_vectors(spark):
     exact = {(r.query_id, r.nbr_id) for r in S.ann_bruteforce(emb, q, k=5).collect()}
     approx = {
         (r.query_id, r.nbr_id)
-        for r in S.ann_lsh(emb, q, k=5, dim=16, n_planes=8, n_tables=6).collect()
+        for r in S.ann_lsh(emb, q, k=5, dim=16).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.9, f"LSH recall on clustered data: {recall}"
@@ -62,7 +62,7 @@ def test_lsh_sanity_on_diffuse_vectors(spark, sf_dir):
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = S.ann_lsh(emb, q, k=5, n_planes=8, n_tables=6).collect()
+    out = S.ann_lsh(emb, q, k=5).collect()
     assert len(out) > 0
     assert all(r.rank <= 5 and r.query_id < 5 and -1.0 <= r.cosine <= 1.0 for r in out)
 
@@ -79,11 +79,11 @@ def test_lsh_multiprobe_recall_dominates(spark, sf_dir):
     exact = {(r.query_id, r.nbr_id) for r in S.ann_bruteforce(emb, q, k=5).collect()}
     single = {
         (r.query_id, r.nbr_id)
-        for r in S.ann_lsh(emb, q, k=5, n_planes=8, n_tables=6, multiprobe=0).collect()
+        for r in S.ann_lsh(emb, q, k=5, multiprobe=0).collect()
     }
     multi = {
         (r.query_id, r.nbr_id)
-        for r in S.ann_lsh(emb, q, k=5, n_planes=8, n_tables=6, multiprobe=1).collect()
+        for r in S.ann_lsh(emb, q, k=5, multiprobe=1).collect()
     }
     r_single = len(exact & single) / len(exact)
     r_multi = len(exact & multi) / len(exact)
@@ -111,7 +111,7 @@ def test_ivf_recall_on_clustered_vectors(spark):
     exact = {(r.query_id, r.nbr_id) for r in S.ann_bruteforce(emb, q, k=5).collect()}
     approx = {
         (r.query_id, r.nbr_id)
-        for r in S.ann_ivf(emb, q, k=5, m=8, nprobe=2, n_iter=2).collect()
+        for r in S.ann_ivf(emb, q, k=5, m=8, nprobe=2).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.9, f"IVF recall on clustered data: {recall}"
@@ -209,7 +209,7 @@ def test_pq_recall_on_clustered_vectors(spark):
     q = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    got = S.ann_pq(emb, q, k=5, m=4, ksub=8, n_iter=3).collect()
+    got = S.ann_pq(emb, q, k=5, ksub=8).collect()
     assert len(got) == 5 * 8
     # PQ cannot rank WITHIN a cell (same-cluster vectors share codes,
     # ties break by id — inherent to the method), so the correctness
@@ -605,7 +605,7 @@ def test_mmr_rerank_string_ids(spark):
         [("qA", "d1", 0.99), ("qA", "d2", 0.98), ("qA", "d3", 0.5)],
         "query_id string, nbr_id string, cosine double",
     )
-    got = S.mmr_rerank(results, vecs, k=2, lam=0.5).collect()
+    got = S.mmr_rerank(results, vecs, k=2).collect()
     assert {r.query_id for r in got} == {"qA"}
     assert [r.nbr_id for r in sorted(got, key=lambda r: r.mmr_rank)] == [
         "d1",

@@ -55,7 +55,7 @@ def test_compact_parquet_small_files(spark, sf_dir, tmp_path):
     e.repartition(40).write.parquet(out)  # fragment: 40 small files
     before = len(glob.glob(out + "/*.parquet"))
     assert before >= 40
-    n = FS.compact_parquet(spark, out, target_file_mb=256)
+    n = FS.compact_parquet(spark, out)
     after = len(glob.glob(out + "/*.parquet"))
     assert after == n < before
     assert spark.read.parquet(out).count() == e.count()

@@ -125,8 +125,7 @@ def test_stream_stream_time_bounded_join(spark, tmp_path):
         .load(str(mn_dir))
     )
     joined = U.stream_stream_join(
-        ev, mn, on="eid", left_time="ev_time", right_time="mn_time",
-        max_delay="15 minutes",
+        ev, mn, on="eid", left_time="ev_time", right_time="mn_time"
     )
     U.run_to_memory_sink(joined.select("eid", "tag"), "ss_join_out")
     rows = spark.sql("SELECT * FROM ss_join_out").collect()
@@ -433,7 +432,7 @@ def test_native_session_window_counts(spark, tmp_path):
         .load(str(landing))
     )
     U.run_to_memory_sink(
-        U.session_window_counts(stream, "user_id", gap="30 minutes"),
+        U.session_window_counts(stream, "user_id"),
         "native_sessions",
         output_mode="complete",
     )

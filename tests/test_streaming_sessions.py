@@ -46,7 +46,7 @@ def test_streaming_sessionize(spark, landing):
         .schema(SCHEMA)
         .load(landing)
     )
-    out = streaming_sessionize(stream, gap_s=1800, watermark="30 minutes")
+    out = streaming_sessionize(stream)
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
@@ -116,7 +116,7 @@ def test_streaming_rate_cap(spark, cap_landing):
         .schema(SCHEMA)
         .load(cap_landing)
     )
-    out = streaming_rate_cap(stream, window_s=60, max_per_window=5)
+    out = streaming_rate_cap(stream)
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
@@ -159,7 +159,7 @@ def test_streaming_rate_cap_rows_spanning_arrow_chunks(spark, tmp_path):
         stream = (
             spark.readStream.format("csv").schema(SCHEMA).load(str(d))
         )
-        out = streaming_rate_cap(stream, window_s=60, max_per_window=5)
+        out = streaming_rate_cap(stream)
         q = (
             out.writeStream.outputMode("append")
             .format("memory")
@@ -213,7 +213,7 @@ def test_streaming_anomaly_transform_with_state(spark, tmp_path):
         .schema(SCHEMA)
         .load(str(d))
     )
-    out = streaming_anomaly(stream, alpha=0.2, z_thresh=4.0, warmup=5)
+    out = streaming_anomaly(stream, alpha=0.2, z_thresh=4.0)
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
