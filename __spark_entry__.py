@@ -41,7 +41,8 @@ from gdelt_extractor_spark.operators import dedup as D
 from gdelt_extractor_spark.operators import similarity as S
 from gdelt_extractor_spark.operators import textstats as TS
 from gdelt_extractor_spark.operators import temporal as TM
-from gdelt_extractor_spark.functions.text import _md5_int, tokens
+from gdelt_extractor_spark.functions.sql import where
+from gdelt_extractor_spark.functions.text import _md5_int, tokens, tokens_sql
 from gdelt_extractor_spark.operators.enrich import enrich_articles
 from gdelt_extractor_spark.operators.geo import geo_project
 from gdelt_extractor_spark.operators.keywords import KEYWORD_IGNORE, keyword_freq
@@ -1493,14 +1494,13 @@ def _curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hashed into text_md5 so the value gate covers it) →
     deterministic train/val split.  Every stage is the same operator
     the standalone entries exercise; the oracle chains their SQL
-    twins in the same order."""
+    twins in the same order.  One corpus scan: the Gopher verdict
+    (``gopher_keep``) filters the scanned rows through the ``where``
+    generator barrier, so each document is tokenized once."""
     from gdelt_extractor_spark.operators.pii import redact_expr
 
-    docs = _docs(spark, sf_dir)
-    keep_ids = (
-        TS.gopher_rules(docs, "doc_id", "text").filter("keep").select("doc_id")
-    )
-    kept = docs.join(keep_ids, "doc_id")
+    toks = _docs(spark, sf_dir).selectExpr("*", f"{tokens_sql('text')} AS _toks")
+    kept = where(toks, TS.gopher_keep("_toks", "text")).drop("_toks")
     hashed = D.with_content_hash(kept, "text")
     deduped = D.dedup_keep_first(hashed, key="content_hash", order="doc_id")
     red = deduped.select(

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .sql import lit
+
 # Matches urlparse().netloc for the http(s) URLs GDELT carries:
 # optional scheme, optional userinfo, then host[:port] up to / ? #.
 _NETLOC_RE = r"^(?:[a-zA-Z][a-zA-Z0-9+.-]*:\/\/)?(?:[^\/@?#]*@)?([^\/?#]+)"
@@ -34,6 +36,11 @@ def normalize_text(col: Column | str) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
+def normalize_sql(c: str) -> str:
+    """``normalize_text`` as SQL over the column expression ``c``."""
+    return f"trim(regexp_replace(lower({c}), r'\\s+', ' '))"
+
+
 def _md5_int(salt: str, n_hex: int, *parts: Column) -> Column:
     """The first ``n_hex`` hex digits of md5(``salt``:parts...) as a
     decimal string column (cast it to long or double) — the repo's
@@ -43,9 +50,20 @@ def _md5_int(salt: str, n_hex: int, *parts: Column) -> Column:
     return F.conv(F.substring(salted, 1, n_hex), 16, 10)
 
 
+def _md5_int_sql(salt: str, n_hex: int, *parts: str) -> str:
+    """``_md5_int`` as SQL over the column expressions ``parts``."""
+    salted = f"md5(concat({lit(salt + ':')}, {', '.join(parts)}))"
+    return f"conv(substring({salted}, 1, {n_hex}), 16, 10)"
+
+
 def tokens(col: Column | str) -> Column:
     """Whitespace tokens of the normalized text (array<string>)."""
     return F.split(normalize_text(col), " ")
+
+
+def tokens_sql(c: str) -> str:
+    """``tokens`` as SQL over the column expression ``c``."""
+    return f"split({normalize_sql(c)}, ' ')"
 
 
 def strip_markup(col: Column | str) -> Column:

@@ -11,7 +11,8 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import _md5_int, tokens
+from ..functions.sql import name
+from ..functions.text import _md5_int, _md5_int_sql, tokens
 from ._finish import collect_if_small
 from .dedup import shingle_hashes_from_tokens
 
@@ -109,11 +110,11 @@ def sample_split(
     split.  Pure expression; splits at 100 TB are a scan, not a
     shuffle.
     """
-    bucket = _md5_int(salt, 4, F.col(id_col).cast("string")).cast("long") % 100
-    return df.select(
+    bucket = f"CAST({_md5_int_sql(salt, 4, f'CAST({name(id_col)} AS STRING)')} AS BIGINT) % 100"
+    return df.selectExpr(
         "*",
-        bucket.alias("bucket"),
-        F.when(bucket < train_pct, F.lit("train")).otherwise(F.lit("val")).alias("split"),
+        f"{bucket} AS bucket",
+        f"CASE WHEN {bucket} < {train_pct} THEN 'train' ELSE 'val' END AS split",
     )
 
 

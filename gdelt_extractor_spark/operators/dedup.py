@@ -38,7 +38,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ..functions.text import _md5_int, normalize_text, tokens
+from ..functions.sql import lit, name
+from ..functions.text import _md5_int, normalize_sql, tokens, tokens_sql
 from ._finish import collect_if_small, none_means_large
 
 
@@ -48,17 +49,13 @@ def dedup_keep_first(df: DataFrame, key: str, order: str) -> DataFrame:
     The reference relies on pandas file order; a distributed engine
     needs an explicit deterministic order column.
     """
-    w = Window.partitionBy(key).orderBy(F.col(order).asc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    rn = f"row_number() OVER (PARTITION BY {name(key)} ORDER BY {name(order)} ASC) AS _rn"
+    return df.selectExpr("*", rn).where("_rn = 1").drop("_rn")
 
 
 def with_content_hash(df: DataFrame, text_col: str, out: str = "content_hash") -> DataFrame:
     """md5 of whitespace-normalized lowercase text (JVM-side)."""
-    return df.withColumn(out, F.md5(normalize_text(text_col)))
+    return df.withColumn(out, F.expr(f"md5({normalize_sql(name(text_col))})"))
 
 
 def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -112,20 +109,14 @@ def shingle_hash_rows(
     so the array form is only worth it when the consumer genuinely
     needs the per-doc ARRAY (verification array_intersect); every
     rows-shaped consumer belongs here."""
-    toks = tokens(F.col(text_col))
-    staged = df.select(
-        *keep_cols, toks.alias("_toks"), F.size(toks).alias("_n")
+    keep = [name(c) for c in keep_cols]
+    toks = tokens_sql(name(text_col))
+    fp = ", ".join(f"get(_toks, CAST(_i + {k} AS INT))" for k in range(n))
+    return (
+        df.selectExpr(*keep, f"{toks} AS _toks", f"size({toks}) AS _n")
+        .selectExpr(*keep, f"explode(sequence(0, greatest(_n - {n}, 0))) AS _i", "_toks")
+        .selectExpr(*keep, f"xxhash64({fp}) AS shingle")
     )
-    fp = F.xxhash64(
-        *[F.get(F.col("_toks"), (F.col("_i") + k).cast("int")) for k in range(n)]
-    )
-    return staged.select(
-        *keep_cols,
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("_n") - n, F.lit(0)))
-        ).alias("_i"),
-        "_toks",
-    ).select(*keep_cols, fp.alias("shingle"))
 
 
 def _shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
@@ -140,7 +131,7 @@ def _shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFram
     shingle rows is far cheaper than the per-row O(len²) dedup, and
     at 100 TB that shuffle is partial-aggregated map-side first."""
     return shingle_hash_rows(
-        df.select(F.col(id_col).alias("id"), text_col), text_col, n, ["id"]
+        df.selectExpr(f"{name(id_col)} AS id", name(text_col)), text_col, n, ["id"]
     ).distinct()
 
 
@@ -162,11 +153,10 @@ def _set_docs(rows: DataFrame, key: str, *extra: Column) -> DataFrame:
     localCheckpoint stores MEMORY_AND_DISK, so overflow spills to
     executor-local disk instead of OOM; pinned by
     tests/test_dedup.py::test_hot_shingle_checkpoint_bound."""
-    sk = F.sort_array(F.collect_list(F.struct("nd", F.col(key).alias("k"))))
     return (
-        rows.withColumn("nd", F.count(F.lit(1)).over(Window.partitionBy(key)))
+        rows.selectExpr("*", f"count(1) OVER (PARTITION BY {key}) AS nd")
         .groupBy("id")
-        .agg(sk.alias("_sk"), *extra)
+        .agg(F.expr(f"sort_array(collect_list(struct(nd, {key} AS k))) AS _sk"), *extra)
         .localCheckpoint(eager=True)
     )
 
@@ -203,41 +193,28 @@ def _set_candidates(
     The 1e-6 slack keeps every filter lossless under the verify's
     round(value, 6) ≥ threshold acceptance: a pair with true value
     ≥ threshold − 5e-7 rounds up into the output."""
-    t = threshold - 1e-6
-    rows = docs.select(
-        "id", F.size("_sk").alias("sz"), F.posexplode("_sk").alias("pos", "e")
-    ).select("id", "sz", "pos", "e.nd", "e.k")
-    rows = rows.filter(F.coalesce(F.col("nd") <= F.lit(cap), F.lit(True)))
-    prefix = rows.filter(F.col("pos") <= F.col("sz") - F.ceil(F.col("sz") * t))
-    a, b = prefix.alias("a"), (rows if containment else prefix).alias("b")
-    sz_a, sz_b = F.col("a.sz"), F.col("b.sz")
-    if containment:
-        on = (sz_a < sz_b) | ((sz_a == sz_b) & (F.col("a.id") < F.col("b.id")))
-    else:
-        on = (F.col("a.id") < F.col("b.id")) & (
-            F.least(sz_a, sz_b) >= F.lit(t) * F.greatest(sz_a, sz_b)
-        )
-    pairs = (
-        a.join(b, (F.col("a.k") == F.col("b.k")) & on)
-        .groupBy(
-            F.col("a.id").alias("_ia"),
-            F.col("b.id").alias("_ib"),
-            sz_a.alias("sz_a"),
-            sz_b.alias("sz_b"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.max("a.pos").alias("i_a"),
-            F.max("b.pos").alias("i_b"),
-        )
+    t = lit(threshold - 1e-6)
+    rows = docs.selectExpr("id", "size(_sk) AS sz", "posexplode(_sk) AS (pos, e)").selectExpr(
+        "id", "sz", "pos", "e.nd", "e.k"
     )
-    ub = F.col("c") + F.least(
-        F.col("sz_a") - F.col("i_a"), F.col("sz_b") - F.col("i_b")
-    ) - 1
+    if cap is not None:
+        rows = rows.where(f"nd <= {lit(cap)}")
+    prefix = rows.where(f"pos <= sz - ceil(sz * {t})")
+    a, b = prefix.alias("a"), (rows if containment else prefix).alias("b")
+    if containment:
+        on = "(a.sz < b.sz OR (a.sz = b.sz AND a.id < b.id))"
+    else:
+        on = f"(a.id < b.id AND least(a.sz, b.sz) >= {t} * greatest(a.sz, b.sz))"
+    pairs = (
+        a.join(b, F.expr(f"a.k = b.k AND {on}"))
+        .groupBy(*map(F.expr, ("a.id AS _ia", "b.id AS _ib", "a.sz AS sz_a", "b.sz AS sz_b")))
+        .agg(*map(F.expr, ("count(1) AS c", "max(a.pos) AS i_a", "max(b.pos) AS i_b")))
+    )
+    ub = "(c + least(sz_a - i_a, sz_b - i_b) - 1)"
     # containment's probe side a is the smaller doc
-    den = F.col("sz_a") if containment else F.col("sz_a") + F.col("sz_b") - ub
-    return pairs.filter(ub / den >= t).select(
-        F.least("_ia", "_ib").alias("id_a"), F.greatest("_ia", "_ib").alias("id_b")
+    den = "sz_a" if containment else f"(sz_a + sz_b - {ub})"
+    return pairs.where(f"{ub} / {den} >= {t}").selectExpr(
+        "least(_ia, _ib) AS id_a", "greatest(_ia, _ib) AS id_b"
     )
 
 
@@ -251,19 +228,17 @@ def _verify_pairs(
     one row per candidate, never a per-key re-join."""
 
     def keys(side: str) -> DataFrame:
-        return docs.select(
-            F.col("id").alias(f"id_{side}"), F.col("_sk.k").alias(f"_k{side}")
-        )
+        return docs.selectExpr(f"id AS id_{side}", f"_sk.k AS _k{side}")
 
-    inter = F.size(F.array_intersect("_ka", "_kb"))
-    sa, sb = F.size("_ka"), F.size("_kb")
-    name = "containment" if containment else "jaccard"
-    val = inter / (F.least(sa, sb) if containment else sa + sb - inter)
+    inter = "size(array_intersect(_ka, _kb))"
+    sa, sb = "size(_ka)", "size(_kb)"
+    out = "containment" if containment else "jaccard"
+    val = f"{inter} / " + (f"least({sa}, {sb})" if containment else f"({sa} + {sb} - {inter})")
     return (
         cand.join(keys("a"), "id_a")
         .join(keys("b"), "id_b")
-        .withColumn(name, F.round(val, 6))
-        .filter(F.col(name) >= threshold)
+        .withColumn(out, F.expr(f"round({val}, 6)"))
+        .where(f"{out} >= {lit(threshold)}")
         .drop("_ka", "_kb")
     )
 
@@ -279,7 +254,7 @@ def _set_similarity_pairs(
 ) -> DataFrame:
     """The shared body of the two public shingle-pair operators."""
     docs = _set_docs(_shingle_rows(df, text_col, id_col, n), "shingle")
-    name = "containment" if containment else "jaccard"
+    out = "containment" if containment else "jaccard"
     return (
         _verify_pairs(
             _set_candidates(docs, threshold, cap, containment),
@@ -287,7 +262,7 @@ def _set_similarity_pairs(
             threshold,
             containment,
         )
-        .select("id_a", "id_b", name)
+        .selectExpr("id_a", "id_b", out)
         .localCheckpoint(eager=True)  # bounded result; lets the index go
     )
 
@@ -1000,8 +975,8 @@ def keep_canonical(
     rates (10-40%) the join side is a fraction of the corpus and the
     kept rows stream through a single shuffle (or broadcast, when the
     dup list is small enough for AQE to promote)."""
-    drop = clusters.filter(F.col(node_col) != F.col(cluster_col)).select(
-        F.col(node_col).alias(id_col)
+    drop = clusters.where(f"{name(node_col)} <> {name(cluster_col)}").selectExpr(
+        f"{name(node_col)} AS {name(id_col)}"
     )
     return df.join(drop, id_col, "left_anti")
 
@@ -1259,14 +1234,12 @@ def connected_components(
     the measurement).  Either route returns the input's id type and
     the same schema, nullability included.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    e = edges.selectExpr(f"{name(src)} AS u", f"{name(dst)} AS v")
     # checkpoint the symmetrized edge list ONCE: its lineage contains
     # the (expensive) upstream pair-generation join, and the loop
     # touches it every round — without the cut, each round re-runs
     # the whole dedup pair join
-    ecur = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
+    ecur = e.unionByName(e.selectExpr("v AS u", "u AS v")).localCheckpoint(eager=True)
     # per-round node→super-node steps; composed ONCE at the end.
     # Each step's lineage is one groupBy over that round's
     # checkpointed edge set, so deferring composition is safe and
@@ -1291,22 +1264,22 @@ def connected_components(
         # representative = closed-neighborhood minimum under the
         # (xxhash64, id) priority order; struct min is lexicographic,
         # so ties on the hash break by node id — fully deterministic
-        pv = F.struct(F.xxhash64("v").alias("h"), F.col("v").alias("n"))
-        pu = F.struct(F.xxhash64("u").alias("h"), F.col("u").alias("n"))
         m = (
             ecur.groupBy("u")
-            .agg(F.min(pv).alias("mv"))
-            .select("u", F.when(pu <= F.col("mv"), F.col("u")).otherwise(F.col("mv.n")).alias("m"))
+            .agg(F.expr("min(struct(xxhash64(v) AS h, v AS n)) AS mv"))
+            .selectExpr(
+                "u", "CASE WHEN struct(xxhash64(u) AS h, u AS n) <= mv THEN u ELSE mv.n END AS m"
+            )
         )
         contracted = (
             ecur.join(m, "u")
-            .select(F.col("m").alias("nu"), "v")
-            .join(m.select(F.col("u").alias("v"), F.col("m").alias("nv")), "v")
-            .select(F.col("nu").alias("u"), F.col("nv").alias("v"))
-            .filter(F.col("u") != F.col("v"))
+            .selectExpr("m AS nu", "v")
+            .join(m.selectExpr("u AS v", "m AS nv"), "v")
+            .selectExpr("nu AS u", "nv AS v")
+            .where("u <> v")
             .distinct()
         )
-        steps.append(m.select(F.col("u").alias("node"), F.col("m").alias("label")))
+        steps.append(m.selectExpr("u AS node", "m AS label"))
         ecur = contracted.localCheckpoint(eager=True)
         # emptiness is re-checked at the top of the loop
     if not converged:
@@ -1321,18 +1294,16 @@ def connected_components(
         # left join: nodes whose super-node already collapsed out of
         # the edge set keep their final label
         mapping = mapping.join(
-            step.select(F.col("node").alias("ln"), F.col("label").alias("nl")),
-            mapping["label"] == F.col("ln"),
-            "left",
-        ).select("node", F.coalesce("nl", "label").alias("label"))
+            step.selectExpr("node AS ln", "label AS nl"), F.expr("label = ln"), "left"
+        ).selectExpr("node", "coalesce(nl, label) AS label")
     # Normalize representatives to the component's MINIMUM NODE ID:
     # contraction converged on hash-min representatives (and the
     # driver finish on contracted-subgraph minima), but the public
     # contract is min-of-component.  One groupBy + join over the
     # mapping — node-count sized, far smaller than the corpus, and
     # the canon side is duplicate-cluster sized (broadcastable).
-    canon = mapping.groupBy("label").agg(F.min("node").alias("cluster_id"))
-    return mapping.join(canon, "label").select("node", "cluster_id")
+    canon = mapping.groupBy("label").agg(F.expr("min(node) AS cluster_id"))
+    return mapping.join(canon, "label").selectExpr("node", "cluster_id")
 
 
 def dedup_embedding(

@@ -5,13 +5,15 @@ All pure JVM expressions — these run at scan speed on 100 TB.
 
 from __future__ import annotations
 
+import functools
 import os
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import _md5_int, normalize_text, tokens
+from ..functions.sql import lit, name
+from ..functions.text import _md5_int, normalize_text, tokens, tokens_sql
 
 # Tiny per-language marker lexicons for the n-gram/stopword heuristic
 # language id.  Deterministic argmax with fixed priority order.
@@ -433,54 +435,76 @@ GOPHER_RULES = {
 }
 
 
+# The Gopher measurements as SQL over a document's token array {t}
+# and text {x}: ``gopher_rules`` reports them, ``gopher_keep`` tests
+# them, so the verdict a report shows and the one a filter applies are
+# one expression.
+_GOPHER_N = "size({t})"
+_GOPHER_SQL = {
+    "n_words": _GOPHER_N,
+    "mean_word_len": (
+        f"aggregate({{t}}, CAST(0 AS BIGINT), (acc, w) -> acc + length(w)) / {_GOPHER_N}"
+    ),
+    "alpha_word_frac": f"size(filter({{t}}, w -> w RLIKE '[a-z]')) / {_GOPHER_N}",
+    "symbol_ratio": (
+        rf"(regexp_count({{x}}, '#') + regexp_count({{x}}, r'\.\.\.')) / {_GOPHER_N}"
+    ),
+    "n_stopwords": (
+        f"size(array_intersect(array_distinct({{t}}), "
+        f"array({', '.join(map(lit, EN_STOPWORDS))})))"
+    ),
+}
+
+
+def gopher_keep(toks: str, text: str) -> str:
+    """The Gopher verdict (every rule in ``GOPHER_RULES`` passes) as a
+    SQL condition over a token-array column ``toks`` (``tokens`` of
+    the text) and the text column ``text``."""
+    m = {k: f"({v.format(t=toks, x=text)})" for k, v in _GOPHER_SQL.items()}
+    R = {k: lit(v) for k, v in GOPHER_RULES.items()}
+    rules = [
+        f"{m['n_words']} >= {R['min_words']} AND {m['n_words']} <= {R['max_words']}",
+        f"{m['mean_word_len']} >= {R['min_mean_word_len']}"
+        f" AND {m['mean_word_len']} <= {R['max_mean_word_len']}",
+        f"{m['alpha_word_frac']} >= {R['min_alpha_word_frac']}",
+        f"{m['symbol_ratio']} <= {R['max_symbol_ratio']}",
+        f"{m['n_stopwords']} >= {R['min_stopwords']}",
+    ]
+    # nested left to right as written: the SQL parser would balance a
+    # flat AND chain into a different (equal-valued) tree
+    return functools.reduce(lambda acc, r: f"({acc}) AND ({r})", rules)
+
+
 def gopher_rules(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Gopher-style rule FILTER: per-document rule measurements plus a
-    ``keep`` verdict (every rule passes).  Unlike ``quality_score``
-    (a soft composite), this is the hard-threshold baseline most
-    pipelines run first.  Pure per-row JVM expressions — one
-    projection, no shuffle, scan-speed at 100 TB.
+    ``keep`` verdict (every rule passes, ``gopher_keep``).  Unlike
+    ``quality_score`` (a soft composite), this is the hard-threshold
+    baseline most pipelines run first.  Pure per-row JVM expressions —
+    one projection, no shuffle, scan-speed at 100 TB.
 
     Rules: word count within bounds, mean word length within bounds,
     ≥80% of words contain a letter, symbol-to-word ratio (``#`` and
     ``...``) ≤ 0.1, and ≥2 distinct English stopwords present.
+
+    To drop the failing documents, filter through ``functions.sql.
+    where`` on ``gopher_keep`` rather than ``.filter("keep")`` here: a
+    filter is pushed below the tokenizing projection and re-tokenizes
+    the text once per reference to the token array.
     """
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("_txt"),
-        tokens(text_col).alias("_toks"),  # materialized: tokenize once
+    base = df.selectExpr(
+        f"{name(id_col)} AS doc_id",
+        f"{name(text_col)} AS _txt",
+        f"{tokens_sql(name(text_col))} AS _toks",  # materialized: tokenize once
     )
-    toks = F.col("_toks")
-    n_words = F.size(toks)
-    sum_len = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
-    mean_wl = sum_len / n_words
-    alpha_frac = F.size(F.filter(toks, lambda t: t.rlike("[a-z]"))) / n_words
-    symbols = F.regexp_count(F.col("_txt"), F.lit("#")) + F.regexp_count(
-        F.col("_txt"), F.lit(r"\.\.\.")
-    )
-    sym_ratio = symbols / n_words
-    n_stop = F.size(
-        F.array_intersect(
-            F.array_distinct(toks), F.lit(list(EN_STOPWORDS))
-        )
-    )
-    R = GOPHER_RULES
-    keep = (
-        n_words.between(R["min_words"], R["max_words"])
-        & mean_wl.between(R["min_mean_word_len"], R["max_mean_word_len"])
-        & (alpha_frac >= R["min_alpha_word_frac"])
-        & (sym_ratio <= R["max_symbol_ratio"])
-        & (n_stop >= R["min_stopwords"])
-    )
-    return base.select(
+    m = {k: v.format(t="_toks", x="_txt") for k, v in _GOPHER_SQL.items()}
+    return base.selectExpr(
         "doc_id",
-        n_words.cast("long").alias("n_words"),
-        mean_wl.alias("mean_word_len"),
-        alpha_frac.alias("alpha_word_frac"),
-        sym_ratio.alias("symbol_ratio"),
-        n_stop.cast("long").alias("n_stopwords"),
-        keep.alias("keep"),
+        f"CAST({m['n_words']} AS BIGINT) AS n_words",
+        f"{m['mean_word_len']} AS mean_word_len",
+        f"{m['alpha_word_frac']} AS alpha_word_frac",
+        f"{m['symbol_ratio']} AS symbol_ratio",
+        f"CAST({m['n_stopwords']} AS BIGINT) AS n_stopwords",
+        f"{gopher_keep('_toks', '_txt')} AS keep",
     )
 
 
@@ -1315,10 +1339,6 @@ def vocab_coverage(
     )
 
 
-# Tokens rarer than this stay out of ``zipf_fit``'s frequency table.
-ZIPF_MIN_FREQ = 1
-
-
 def zipf_fit(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Zipf's-law fit over the corpus token distribution: OLS of
     ln(freq) on ln(rank) — slope ≈ -1 for natural text, and the
@@ -1329,7 +1349,7 @@ def zipf_fit(df: DataFrame, text_col: str = "text") -> DataFrame:
     then ln/rank and the five OLS sufficient statistics over the
     VOCABULARY-sized frequency table — like ``vocab_coverage``, the
     global rank window's input is |vocab|, orders of magnitude below
-    the corpus; raise ``ZIPF_MIN_FREQ`` to shrink it further at scale.
+    the corpus.
     x = ln(rank), y = ln(freq) as doubles; the sufficient statistics
     use the decimal-sum convention (plans/queries.py) so both
     engines round each term to 6 dp before summing — partition-order
@@ -1342,7 +1362,6 @@ def zipf_fit(df: DataFrame, text_col: str = "text") -> DataFrame:
         .filter(F.col("token") != "")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .filter(F.col("freq") >= ZIPF_MIN_FREQ)
     )
     w = Window.orderBy(F.col("freq").desc(), F.col("token").asc())
     xy = freq.withColumn("rank", F.row_number().over(w)).select(

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.sql import where
 from ..operators.dedup import dedup_keep_first
 
 # ---- column name lists (order matters; mirrors reference schema.py)
@@ -533,16 +534,8 @@ def _parse(lines: DataFrame, schema: T.StructType) -> DataFrame:
     )
 
 
-def _where(parsed: DataFrame, cond: str) -> DataFrame:
-    """The ``parsed`` rows where ``cond`` holds.  A generator, not a
-    filter: Spark pushes a filter below the split, re-splitting once
-    per field it checks (5x the parse time of a 200k-line v2 export)."""
-    keep = f"explode(CASE WHEN {cond} THEN array(0) END) AS _keep"
-    return parsed.selectExpr("*", keep).drop("_keep")
-
-
 def _clean(parsed: DataFrame) -> DataFrame:
-    return _where(parsed, "_reject IS NULL").drop("_reject", "line")
+    return where(parsed, "_reject IS NULL").drop("_reject", "line")
 
 
 def _zip_lines(spark: SparkSession, path: str) -> DataFrame:
@@ -596,7 +589,7 @@ def read_gdelt_rejects(spark: SparkSession, path: str, schema: T.StructType) -> 
     '.zip', plain TSV otherwise — that the GDELT readers quarantine
     under ``schema``: reason 'field_count' or 'bad_value:<Field>'."""
     lines = _zip_lines(spark, path) if path.endswith(".zip") else spark.read.text(path).toDF("line")
-    return _where(_parse(lines, schema), "_reject IS NOT NULL").selectExpr("line", "_reject AS reason")
+    return where(_parse(lines, schema), "_reject IS NOT NULL").selectExpr("line", "_reject AS reason")
 
 
 def process_gdelt_events(df: DataFrame) -> DataFrame:
@@ -717,10 +710,6 @@ def actor_dyad_rollup(events: DataFrame) -> DataFrame:
     )
 
 
-# Fewest records a (theme, day) row of ``gkg_theme_daily`` needs.
-THEME_MIN_RECORDS = 1
-
-
 def gkg_theme_daily(gkg: DataFrame) -> DataFrame:
     """Daily theme rollup straight off the 27-col GKG feed: per
     (theme, yyyymmdd day) record count, distinct-source count, and
@@ -749,7 +738,6 @@ def gkg_theme_daily(gkg: DataFrame) -> DataFrame:
                 / F.count(F.lit(1))
             ).alias("avg_tone"),
         )
-        .filter(F.col("n_records") >= THEME_MIN_RECORDS)
     )
 
 

@@ -959,3 +959,17 @@ class TestBalanceClasses:
         out = balance_classes(df, "lang", per_class=3).collect()
         from collections import Counter
         assert Counter(r.lang for r in out) == {"a": 3, "b": 3}
+
+
+def test_flow_build_round_trip_budget(spark, sf_dir, round_trips):
+    """Building the curation and near-dup flows costs at most 1,200
+    driver-JVM round trips (the dedup flow's eager checkpoints and
+    driver finish run while it is built).  Built one ``F.*`` call at
+    a time, the two cost ~2,700, about 1 s of a 4-core flow."""
+    import __spark_entry__ as E
+
+    for _ in range(2):  # the first build pays the session's one-time setup
+        with round_trips() as calls:
+            E._curation_pipeline(spark, sf_dir)
+            E._dedup_pipeline(spark, sf_dir)
+    assert len(calls) <= 1200, len(calls)

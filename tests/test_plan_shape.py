@@ -1025,3 +1025,28 @@ def test_prf_two_scans_broadcast_expanded_query(spark, sf_dir):
     plan = plan_of(spark, "prf_search", sf_dir)
     assert "BroadcastExchange" in plan
     assert "BatchEvalPython" not in plan  # no row-at-a-time python
+
+
+def test_curation_pipeline_one_scan_one_tokenize(spark, sf_dir):
+    """The curation flow scans documents once and joins nothing: the
+    Gopher verdict filters the scanned rows themselves, behind the
+    ``where`` generator barrier, so each document is tokenized once
+    (a plain filter on the verdict is pushed below the tokenizing
+    projection and inlines the tokenizer once per reference)."""
+    df = entry_mod.queries()["curation_pipeline"](spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bRelation \[", plan)) == 1, plan
+    assert "Join" not in plan, plan
+    assert plan.count("split(") == 1, plan
+
+
+def test_small_shuffle_keeps_one_partition_per_core(spark):
+    """A shuffle of a few KB still ends in one partition per core:
+    partition coalescing would fold it into one task."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    df = spark.range(1000).groupBy((F.col("id") % 97).alias("k")).count()
+    assert df.rdd.getNumPartitions() == cores

@@ -1036,3 +1036,30 @@ def test_class_tfidf_discriminates(spark):
     # partition invariance
     out2 = class_tfidf(df.repartition(5), "source", "text", top_k=2).collect()
     assert {tuple(r) for r in out} == {tuple(r) for r in out2}
+
+
+def test_sql_twins_plan_as_their_column_forms(spark):
+    """The SQL-string builders the hot flows use plan exactly as the
+    Column functions they mirror, expression ids aside."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from gdelt_extractor_spark.functions import text as T
+
+    df = spark.createDataFrame([(1, "A  b\tC")], "doc_id long, text string")
+
+    def plan(d):
+        return re.sub(r"#\d+L?", "#", d._jdf.queryExecution().optimizedPlan().toString())
+
+    by_column = df.select(
+        T.tokens("text").alias("t"),
+        T.normalize_text("text").alias("n"),
+        T._md5_int("s", 4, F.col("doc_id").cast("string")).alias("m"),
+    )
+    by_sql = df.selectExpr(
+        f"{T.tokens_sql('text')} AS t",
+        f"{T.normalize_sql('text')} AS n",
+        f"{T._md5_int_sql('s', 4, 'CAST(doc_id AS STRING)')} AS m",
+    )
+    assert plan(by_sql) == plan(by_column)
