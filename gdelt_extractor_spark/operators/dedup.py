@@ -22,9 +22,14 @@ Scale posture (100 TB):
   in more docs than the cap out of the join, so a pair is missed
   only when every shingle it shares is hot; at 100 TB use
   ``dedup_minhash_lsh`` whose candidate set is bounded by LSH bands.
-- ``dedup_minhash_lsh``: signatures from one map-side-combined
-  groupBy(id), candidates from a (band, bucket) equi-join, then
-  exact-Jaccard verification only on candidates.
+- The MinHash family (``dedup_minhash_lsh``, ``dedup_eval``'s pred
+  side, ``dedup_incremental_minhash``) shares one band join
+  (``_band_pairs``): docs meet only in a shared (band, bucket).
+  ``dedup_minhash_lsh`` and ``dedup_eval`` score its candidates with
+  the shingle-pair operators' exact verify (``_verify_pairs``) over
+  one ``_set_docs`` row per doc, whose groupBy(id) also computes the
+  signature's slot minima; ``dedup_incremental_minhash`` keeps no
+  text of the indexed docs, so it accepts by the signature estimate.
 - ``dedup_embedding`` uses a blocking key (``label``) so the pair
   join is per-block, mirroring production blocked-dedup.
 """
@@ -135,17 +140,23 @@ def _shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFram
     ).distinct()
 
 
-def _set_docs(rows: DataFrame, key: str, *extra: Column) -> DataFrame:
+def _set_docs(rows: DataFrame, key: str, *extra: Column, ranked: bool = True) -> DataFrame:
     """(id, _sk[, extra...]) — one row per doc, checkpointed: the
     query's one corpus-scale materialization.
 
-    ``rows`` holds one row per DISTINCT (id, ``key``).  ``_sk`` is the
-    doc's key set as (nd, k) structs sorted ascending, where nd is the
-    key's document frequency (a window count over the key partition).
-    nd is a function of k, so (nd, k) is one GLOBAL total order,
-    rarest first — the token order of the prefix filter — and
-    ``size(_sk)`` is the set size.  ``extra`` aggregates ride the same
-    groupBy(id) (``dedup_eval``'s token count and slot minima).
+    ``ranked`` (the prefix-filter callers): ``rows`` holds one row per
+    DISTINCT (id, ``key``), and ``_sk`` is the doc's key set as (nd, k)
+    structs sorted ascending, where nd is the key's document frequency
+    (a window count over the key partition).  nd is a function of k,
+    so (nd, k) is one GLOBAL total order, rarest first — the token
+    order of the prefix filter.  Unranked (``dedup_minhash_lsh``,
+    whose candidates come from band buckets): ``rows`` may repeat a
+    key, and ``_sk`` is the ``collect_set`` of (k) structs, deduped
+    map-side — no distinct shuffle and no window, which sorts every
+    key partition (~0.6 s of a ~3 s query at sf0.1).  Either way
+    ``size(_sk)`` is the set size and ``_sk.k`` is what
+    ``_verify_pairs`` intersects.  ``extra`` aggregates ride the same
+    groupBy(id) (the token count, the slot minima).
 
     Memory bound: the checkpoint holds every distinct key of every
     doc, hot keys included (the verify counts full intersections), so
@@ -153,6 +164,12 @@ def _set_docs(rows: DataFrame, key: str, *extra: Column) -> DataFrame:
     localCheckpoint stores MEMORY_AND_DISK, so overflow spills to
     executor-local disk instead of OOM; pinned by
     tests/test_dedup.py::test_hot_shingle_checkpoint_bound."""
+    if not ranked:
+        return (
+            rows.groupBy("id")
+            .agg(F.expr(f"collect_set(struct({key} AS k)) AS _sk"), *extra)
+            .localCheckpoint(eager=True)
+        )
     return (
         rows.selectExpr("*", f"count(1) OVER (PARTITION BY {key}) AS nd")
         .groupBy("id")
@@ -386,10 +403,11 @@ def dedup_minhash_lsh(
 
     With r = NUM_HASHES/PAIR_BANDS rows per band, P(candidate) =
     1-(1-s^r)^bands — the standard S-curve.  The corpus-sized work is
-    one shingle scan + one partial-aggregated groupBy(id) with
-    ``NUM_HASHES`` codegen min-aggregates; the band join and the
-    verification joins run on hash-uniform keys over frames bounded
-    by the signature table and the candidate set respectively.
+    one shingle scan + one partial-aggregated groupBy(id)
+    (``_set_docs``, unranked) that collects each doc's shingle set and
+    its ``NUM_HASHES`` codegen slot minima together; the band join
+    (``_band_pairs``) and the verify (``_verify_pairs``) run on
+    frames bounded by the per-doc table and the candidate set.
 
     Every step is DuckDB-replicable (the registry entry is value-hash
     oracle-gated): ONE salted md5 per shingle occurrence truncated to
@@ -400,64 +418,13 @@ def dedup_minhash_lsh(
     semantics over ``MINHASH_N``-token windows; shorter docs drop (no
     full window exists).
     """
-    # (id, 48-bit salted shingle hash) MULTISET rows — NO distinct:
-    # min-aggregates are duplicate-insensitive and the set-semantics
-    # consumers below use countDistinct, so skipping the distinct
-    # saves a full shuffle of the shingle frame (measured 4.6s → ~2s
-    # cold at sf0.1).  The eager checkpoint feeds signatures AND both
-    # verify sides (A/B'd vs persist(): one write barrier beats
-    # re-reading the cache through the countDistinct expand, 2.7s vs
-    # 3.7s at sf0.1).  A collect_list + numpy signature kernel (the
-    # simhash r12 move) was A/B'd FLAT here (3.09s vs 3.00s, 9 reps)
-    # and rejected: the min-aggregates partial-aggregate to 33 longs
-    # per doc map-side, while collect_list ships every shingle
-    # occurrence into the exchange — strictly more shuffle bytes at
-    # scale for no local gain.
-    sh0 = _md5_shingle_rows(df, text_col, id_col, MINHASH_N).localCheckpoint(
-        eager=True
+    # multiset rows, no distinct: the slot minima are
+    # duplicate-insensitive and collect_set dedups map-side
+    docs = _set_docs(
+        _md5_shingle_rows(df, text_col, id_col, MINHASH_N), "h0", *_slot_minima(), ranked=False
     )
-    # one shuffle: slot minima + the distinct-shingle count together
-    sig = sh0.groupBy("id").agg(F.countDistinct("h0").alias("n_sh"), *_slot_minima())
-    band_rows = _expand_bands(sig.select("id", _sig_array()), PAIR_BANDS)
-    a, b_ = band_rows.alias("a"), band_rows.alias("b")
-    candidates = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    counts = sig.select("id", "n_sh")
-    # intersection size per candidate pair: join each side's shingle
-    # rows and count DISTINCT matches (multiset rows → set count) —
-    # an equi-join on (id, h0), never wider than (pairs × per-doc
-    # shingle occurrences)
-    inter = (
-        candidates.join(sh0.select(F.col("id").alias("id_a"), "h0"), "id_a")
-        .join(
-            sh0.select(F.col("id").alias("id_b"), "h0"),
-            ["id_b", "h0"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.countDistinct("h0").alias("n_inter"))
-    )
-    verified = (
-        inter.join(counts.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(counts.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return verified
+    cand = _band_pairs(_expand_bands(docs.select("id", _sig_array()), PAIR_BANDS))
+    return _verify_pairs(cand, docs, threshold).selectExpr("id_a", "id_b", "jaccard")
 
 
 def dedup_pair_eval(pred: DataFrame, truth: DataFrame) -> DataFrame:
@@ -550,11 +517,9 @@ def dedup_eval(
     """End-to-end dedup-quality audit: pair precision/recall/F1 of
     md5-portable MinHash+LSH against the exact-Jaccard baseline at
     the same ``threshold`` — over ONE shared tokenize→shingle→md5
-    corpus pass (r9 verdict item 4: composing ``dedup_minhash_lsh``
-    and ``dedup_ngram_jaccard`` independently tokenized and shingled
-    the same corpus twice and re-tokenized candidate texts a third
-    time in the verify join; the audit was the suite's most
-    expensive isolated query at 10.5s).
+    corpus pass, where composing ``dedup_minhash_lsh`` and
+    ``dedup_ngram_jaccard`` would tokenize and shingle the corpus
+    twice.
 
     The shared frame is (id, n_tokens, 48-bit salted-md5 shingle
     hash) with the partial-window tail (docs shorter than ``n``
@@ -564,9 +529,8 @@ def dedup_eval(
     checkpointed:
 
     - PRED candidates come from the full-window subset (docs ≥ n
-      tokens — the MinHash contract) through the exact
-      ``dedup_minhash_lsh`` plan: slot minima + band buckets →
-      bucket-join pairs.
+      tokens — the MinHash contract) through ``dedup_minhash_lsh``'s
+      band join: slot minima + band buckets → ``_band_pairs``.
     - TRUTH candidates come from ``dedup_ngram_jaccard``'s join
       (``_set_candidates``: prefix filter, length filter, positional
       bound, the same ``max_shingle_df`` cap and 1e-6 slack) on the
@@ -608,23 +572,11 @@ def dedup_eval(
         *_slot_minima(),
     )
 
-    # --- pred candidates: MinHash+LSH, the dedup_minhash_lsh plan
-    # from its signature onward (full windows only: docs >= n tokens)
-    band_rows = _expand_bands(
-        docs.filter(F.col("_n") >= n).select("id", _sig_array()), PAIR_BANDS
-    )
-    ba, bb_ = band_rows.alias("a"), band_rows.alias("b")
-    candidates = (
-        ba.join(
-            bb_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-        .select("id_a", "id_b", F.lit(1).alias("_p"), F.lit(0).alias("_t"))
-    )
+    # --- pred candidates: MinHash+LSH, the dedup_minhash_lsh band join
+    # (full windows only: docs >= n tokens)
+    candidates = _band_pairs(
+        _expand_bands(docs.filter(F.col("_n") >= n).select("id", _sig_array()), PAIR_BANDS)
+    ).select("id_a", "id_b", F.lit(1).alias("_p"), F.lit(0).alias("_t"))
     # --- truth candidates: dedup_ngram_jaccard's join on the same docs
     cand_t = _set_candidates(docs, threshold, max_shingle_df).select(
         "id_a", "id_b", F.lit(0).alias("_p"), F.lit(1).alias("_t")
@@ -1793,6 +1745,17 @@ def _expand_bands(sig_df: DataFrame, bands: int) -> DataFrame:
     ).select("id", "sig", "bb.band", "bb.bucket")
 
 
+def _band_pairs(band_rows: DataFrame) -> DataFrame:
+    """(id_a < id_b) distinct pairs of ``_expand_bands`` rows that share
+    a (band, bucket): the one LSH band self-join."""
+    a, b = band_rows.alias("a"), band_rows.alias("b")
+    return (
+        a.join(b, F.expr("a.band = b.band AND a.bucket = b.bucket AND a.id < b.id"))
+        .selectExpr("a.id AS id_a", "b.id AS id_b")
+        .distinct()
+    )
+
+
 def minhash_band_index(
     df: DataFrame,
     text_col: str = "text",
@@ -1857,49 +1820,18 @@ def dedup_incremental_minhash(
     (exact in binary for power-of-two NUM_HASHES), so the
     ≥ threshold comparison is engine-exact.
 
-    Plan: batch band rows materialize once (eager localCheckpoint —
-    they feed both sides of the self-join and the index join); the
-    self-join and the index join are (band, bucket) equi-joins; with
-    the index stored bucketed on (band, bucket), only the day's
-    batch shuffles.  Verification runs on the bounded candidate set.
+    Plan: the batch's signatures materialize once (eager
+    localCheckpoint — they feed both band-join sides, the index join
+    and the estimator); the self-join (``_band_pairs``) and the index
+    join are (band, bucket) equi-joins; with the index stored bucketed
+    on (band, bucket), only the day's batch shuffles.  Verification
+    runs on the bounded candidate set.
     """
-    sig_new = minhash_signatures(new_docs, text_col, id_col)
-    # r13 slim bands (guide §2.3 "shuffle keys and metadata instead of
-    # payloads", §8's decide-with-small-rows rule; the r12 carried
-    # lead): the batch's band rows no longer carry the NUM_HASHES-long
-    # signature array through the checkpoint and both candidate joins
-    # — they slim to (id, band, bucket) (~0.4 KB/doc at 16 bands vs
-    # ~4.5 KB/doc with a 32-slot sig on every band row), and the
-    # signatures join back BY ID from the one-row-per-doc checkpointed
-    # signature frame only where the estimator actually needs them:
-    # on the band-collision candidates (a bounded set by the LSH
-    # contract).  At 100 TB this cuts the batch-side shuffle bytes of
-    # the self-join and the index join ~10×; the index side is
-    # untouched (its rows still carry sig, so historical candidates
-    # verify with no index join-back — the index contract of
-    # ``minhash_band_index`` stands).  Estimator inputs, values and
-    # the drop set are identical (asserted row-for-row in the A/B);
-    # the internal estimate now runs once per DISTINCT candidate pair
-    # instead of once per colliding band row — the same pairs pass.
-    sig_new = sig_new.localCheckpoint(eager=True)
-    nb = _expand_bands(sig_new, INDEX_BANDS).select(
-        "id", "band", "bucket"
-    )
-
-    a, b = nb.alias("a"), nb.alias("b")
-    # r12 (guide §2.4): the two drop lists anti-join the batch as ONE
-    # deduplicated union — set algebra identical (batch ∖ (internal ∪
-    # hist) == (batch ∖ internal) ∖ hist); survivors value-identical.
-    cand_pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    # the batch's band rows drop the 32-slot sig (~10x fewer shuffle
+    # bytes); the estimator joins it back by id on candidates only
+    sig_new = minhash_signatures(new_docs, text_col, id_col).localCheckpoint(eager=True)
+    nb = _expand_bands(sig_new, INDEX_BANDS).select("id", "band", "bucket")
+    cand_pairs = _band_pairs(nb)
     internal_drop = (
         cand_pairs.join(
             sig_new.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")),

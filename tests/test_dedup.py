@@ -79,7 +79,32 @@ def test_minhash_signature_determinism_and_shape(docs):
     assert s1[0] != s1[3]
 
 
-def test_minhash_lsh_md5_matches_exact_and_is_deterministic(docs):
+# docs that repeat a shingle (6/7 and 8/9: equal shingle SETS, unequal
+# multisets) and docs shorter than MINHASH_N tokens (10/11 identical,
+# 12/13 NULL, 14 empty): no signature, never paired
+REPEATS_AND_SHORT = [
+    (6, "la la la la la la la la"),
+    (7, "la la la la la la la la la la la"),
+    (8, "one two three one two three one two three four"),
+    (9, "one two three one two three four"),
+    (10, "hi there"),
+    (11, "hi there"),
+    (12, None),
+    (13, None),
+    (14, ""),
+]
+
+
+def _py_jaccard(a: str, b: str) -> float:
+    """Exact Jaccard of the two texts' MINHASH_N-token shingle SETS."""
+    n = D.MINHASH_N
+    sa, sb = ({tuple(t[i : i + n]) for i in range(len(t) - n + 1)} for t in (a.split(), b.split()))
+    return round(len(sa & sb) / len(sa | sb), 6)
+
+
+def test_minhash_lsh_md5_matches_exact_and_is_deterministic(docs, spark):
+    docs = docs.unionByName(spark.createDataFrame(REPEATS_AND_SHORT, docs.schema))
+    texts = {i: (t or "").lower() for i, t in DOCS + REPEATS_AND_SHORT}
     exact = {
         (r.id_a, r.id_b): r.jaccard
         for r in D.dedup_ngram_jaccard(docs, "text", "doc_id", threshold=0.6).collect()
@@ -96,8 +121,23 @@ def test_minhash_lsh_md5_matches_exact_and_is_deterministic(docs):
     # verification is exact jaccard → surviving pairs carry the exact
     # values; LSH banding can only LOSE candidates, never invent them
     assert set(m1) <= set(exact)
-    assert all(m1[p] == exact[p] for p in m1)
-    assert (0, 1) in m1
+    assert all(m1[p] == exact[p] == _py_jaccard(texts[p[0]], texts[p[1]]) for p in m1)
+    assert {(0, 1), (6, 7), (8, 9)} <= set(m1)
+    assert m1[(6, 7)] == m1[(8, 9)] == 1.0
+    short = {10, 11, 12, 13, 14}
+    assert not any(set(p) & short for p in m1)
+    signed = {r.id for r in D.minhash_signatures(docs, "text", "doc_id").collect()}
+    assert signed == set(texts) - short
+
+
+def test_minhash_family_shares_one_band_join_and_one_verify(docs, spy):
+    bands, verify = spy(D, "_band_pairs"), spy(D, "_verify_pairs")
+    D.dedup_minhash_lsh(docs, "text", "doc_id").collect()
+    assert (len(bands), len(verify)) == (1, 1)
+    D.dedup_eval(docs, "text", "doc_id").collect()
+    assert len(bands) == 2
+    D.dedup_incremental_minhash(docs, D.minhash_band_index(docs)).collect()
+    assert len(bands) == 3
 
 
 def _ham64(a: int, b: int) -> int:

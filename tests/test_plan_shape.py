@@ -98,6 +98,18 @@ def test_no_cartesian_in_pair_generators(spark, sf_dir):
         assert "CartesianProduct" not in plan, f"{name} must never cross-join"
 
 
+def test_minhash_lsh_verifies_by_array_intersect(spark, sf_dir):
+    """The exact verify is ``_verify_pairs``' array intersection of
+    the per-doc shingle sets: no distinct count and no join keyed on
+    the shingle hash ``h0``."""
+    df = entry_mod.queries()["dedup_minhash_lsh"](spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    joins = [l for l in plan.splitlines() if "Join " in l]
+    assert "count(distinct" not in plan
+    assert joins and not any(re.search(r"\bh0#\d+L? = ", l) for l in joins)
+    assert "array_intersect" in plan
+
+
 def test_q17_broadcasts_brand_dim(spark, sf_dir):
     plan = plan_of(spark, "q17_small_qty_revenue", sf_dir)
     assert "BroadcastHashJoin" in plan
