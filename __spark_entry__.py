@@ -1521,10 +1521,6 @@ def _dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     member).  Composes dedup.py's three stages end-to-end — the
     oracle re-derives the same pairs, closes them with a recursive
     CTE, and anti-joins the same drop list."""
-    # width=0 (parallelized scan) A/B'd SLOWER here (r13: 4.33s →
-    # 5.78s median) — the pipeline is candidate-join-dominated, not
-    # scan-dominated, and the repartition charges an extra stage to
-    # BOTH consumers of docs (the pairs build and keep_canonical).
     docs = _docs(spark, sf_dir)
     pairs = D.dedup_ngram_jaccard(
         docs, "text", "doc_id", n=3, threshold=0.6, max_shingle_df=100

@@ -49,6 +49,22 @@ def collect_if_small(df: DataFrame, keys: list[str]) -> pd.DataFrame | None:
     return pdf if len(pdf) <= DRIVER_FINISH_ROWS else None
 
 
+def collect_pairs_if_small(
+    pairs: DataFrame, sym: DataFrame, keys: list[str]
+) -> pd.DataFrame | None:
+    """``collect_if_small(sym, keys)``'s decision for a symmetrized
+    edge set ``sym`` (two rows per row of ``pairs``), taken on
+    ``pairs`` without building ``sym``: one ``limit(cap // 2 + 1)`` job
+    that admits when 2·rows ≤ cap, the same rule on every cap (odd, 0
+    and -1 included).  The type rule reads ``sym``, so ids the union
+    widens (int beside bigint) are admitted as they are there.  Returns
+    the collected ``pairs`` rows."""
+    if not admits(sym, keys):
+        return None
+    pdf = pairs.limit(DRIVER_FINISH_ROWS // 2 + 1).toPandas()
+    return pdf if 2 * len(pdf) <= DRIVER_FINISH_ROWS else None
+
+
 def none_means_large(df: DataFrame, keys: list[str]) -> bool:
     """True when ``collect_if_small(df, keys)`` returning ``None`` can
     only mean "more than the cap rows" (so ``df`` is non-empty): the

@@ -1329,10 +1329,10 @@ def contamination_links(
     """
     from .dedup import _shingle_rows
 
-    d = _shingle_rows(docs, text_col, id_col, DECONTAM_N).select(
+    d = _shingle_rows(docs, text_col, id_col, DECONTAM_N).distinct().select(
         F.col("id").alias("doc_id"), F.col("shingle").alias("h")
     )
-    b_rows = _shingle_rows(benchmark, text_col, id_col, DECONTAM_N).select(
+    b_rows = _shingle_rows(benchmark, text_col, id_col, DECONTAM_N).distinct().select(
         F.col("id").alias("bench_id"), F.col("shingle").alias("h")
     )
     b = b_rows

@@ -45,7 +45,7 @@ from pyspark.sql.types import StructField, StructType
 
 from ..functions.sql import lit, name
 from ..functions.text import _md5_int, normalize_sql, tokens, tokens_sql
-from ._finish import collect_if_small, none_means_large
+from ._finish import collect_if_small, collect_pairs_if_small, none_means_large
 
 
 def dedup_keep_first(df: DataFrame, key: str, order: str) -> DataFrame:
@@ -125,35 +125,42 @@ def shingle_hash_rows(
 
 
 def _shingle_rows(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """(id, shingle-hash) — one row per DISTINCT shingle per doc.
+    """(id, shingle-hash) — one row per shingle OCCURRENCE per doc.
 
     Shingles are xxhash64'd so the self-join shuffles fixed-width
     longs, not n-gram strings; the build is the codegen explode-form
-    (see shingle_hash_rows).  Dedup happens at ROW level (explode,
-    then ``distinct()``): the per-row ``array_distinct`` alternative
-    was measured 5× slower than the raw build at sf0.1 (3.9s vs 0.7s
-    for 5k docs) — one extra shuffle of the (uniformly keyed)
-    shingle rows is far cheaper than the per-row O(len²) dedup, and
-    at 100 TB that shuffle is partial-aggregated map-side first."""
+    (see shingle_hash_rows).  Callers dedupe at ROW level: ranked
+    ``_set_docs`` on its key exchange, ``contamination_links`` with a
+    ``distinct()``.  The per-row ``array_distinct`` alternative was
+    measured 5× slower than the raw build at sf0.1 (3.9s vs 0.7s for
+    5k docs) — one shuffle of the (uniformly keyed) shingle rows is
+    far cheaper than the per-row O(len²) dedup."""
     return shingle_hash_rows(
         df.selectExpr(f"{name(id_col)} AS id", name(text_col)), text_col, n, ["id"]
-    ).distinct()
+    )
 
 
 def _set_docs(rows: DataFrame, key: str, *extra: Column, ranked: bool = True) -> DataFrame:
     """(id, _sk[, extra...]) — one row per doc, checkpointed: the
     query's one corpus-scale materialization.
 
-    ``ranked`` (the prefix-filter callers): ``rows`` holds one row per
-    DISTINCT (id, ``key``), and ``_sk`` is the doc's key set as (nd, k)
-    structs sorted ascending, where nd is the key's document frequency
-    (a window count over the key partition).  nd is a function of k,
-    so (nd, k) is one GLOBAL total order, rarest first — the token
-    order of the prefix filter.  Unranked (``dedup_minhash_lsh``,
-    whose candidates come from band buckets): ``rows`` may repeat a
-    key, and ``_sk`` is the ``collect_set`` of (k) structs, deduped
-    map-side — no distinct shuffle and no window, which sorts every
-    key partition (~0.6 s of a ~3 s query at sf0.1).  Either way
+    ``ranked`` (the prefix-filter callers): ``rows`` are (id, ``key``)
+    occurrence rows, repeats allowed, and ``_sk`` is the doc's key set
+    as (nd, k) structs sorted ascending, where nd is the key's document
+    frequency.  nd is a function of k, so (nd, k) is one GLOBAL total
+    order, rarest first — the token order of the prefix filter.  The
+    rows are repartitioned on the key ONCE: hash partitioning on the
+    key alone satisfies both the distinct's grouping (every column,
+    the key among them) and the nd window's, so the ranked build pays
+    two exchanges (key, then id), not three.  The window beat
+    ``groupBy(key).count()`` joined back over the same partitioning
+    (``dedup_ngram_jaccard`` median 0.63 vs 0.69 s at sf0.01 and
+    1.10 vs 1.20 s at sf0.1, 8 alternating pairs each, 4 cores).
+    Unranked (``dedup_minhash_lsh``, whose candidates come from band
+    buckets): ``rows`` may repeat a key, and ``_sk`` is the
+    ``collect_set`` of (k) structs, deduped map-side — no distinct
+    shuffle and no window, which sorts every key partition (~0.6 s of
+    a ~3 s query at sf0.1).  Either way
     ``size(_sk)`` is the set size and ``_sk.k`` is what
     ``_verify_pairs`` intersects.  ``extra`` aggregates ride the same
     groupBy(id) (the token count, the slot minima).
@@ -171,7 +178,9 @@ def _set_docs(rows: DataFrame, key: str, *extra: Column, ranked: bool = True) ->
             .localCheckpoint(eager=True)
         )
     return (
-        rows.selectExpr("*", f"count(1) OVER (PARTITION BY {key}) AS nd")
+        rows.repartition(key)
+        .distinct()
+        .selectExpr("*", f"count(1) OVER (PARTITION BY {key}) AS nd")
         .groupBy("id")
         .agg(F.expr(f"sort_array(collect_list(struct(nd, {key} AS k))) AS _sk"), *extra)
         .localCheckpoint(eager=True)
@@ -560,13 +569,14 @@ def dedup_eval(
     sh_all = _md5_shingle_rows(
         df, text_col, id_col, n, keep_len=True, partial_tail=True
     )
-    # ONE per-doc aggregate over the distinct set rows: the sorted
-    # key array (truth candidates and the verify), the token length
-    # and the 32 slot minima (pred signatures).  Short docs (_n < n)
+    # ONE per-doc aggregate over the set rows (``_set_docs`` dedupes
+    # them on its key exchange): the sorted key array (truth
+    # candidates and the verify), the token length and the 32 slot
+    # minima (pred signatures).  Short docs (_n < n)
     # compute minima they never use (the band build filters them) —
     # 32 integer ops per row, cheaper than a second aggregate pass.
     docs = _set_docs(
-        sh_all.select("id", "_n", "h0").distinct(),
+        sh_all.select("id", "_n", "h0"),
         "h0",
         F.min("_n").alias("_n"),
         *_slot_minima(),
@@ -1074,11 +1084,12 @@ def dedup_semantic(
     return pairs
 
 
-def _driver_union_find(sym_edges: DataFrame, pdf: pd.DataFrame) -> DataFrame:
+def _driver_union_find(sym_edges: DataFrame, pdf: pd.DataFrame, label: str = "label") -> DataFrame:
     """Finish a (contracted) component graph driver-side: classic
     union-find with path compression and min-root union over the
-    collected symmetrized edges ``pdf``, back out as a (node, label)
-    mapping frame typed like ``sym_edges``' node columns.
+    collected edges ``pdf`` (one orientation is enough), back out as a
+    (node, ``label``) mapping frame typed like ``sym_edges``' node
+    columns.
     Deterministic: the merged root is always the min of the two
     roots, so the final root is the minimum node of the contracted
     subgraph regardless of edge order — on the integral and string
@@ -1104,10 +1115,8 @@ def _driver_union_find(sym_edges: DataFrame, pdf: pd.DataFrame) -> DataFrame:
         ra, rb = find(u), find(v)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    out = pd.DataFrame(
-        sorted((n, find(n)) for n in parent), columns=["node", "label"]
-    )
-    return sym_edges.sparkSession.createDataFrame(out, _mapping_schema(sym_edges, "label"))
+    out = pd.DataFrame(sorted((n, find(n)) for n in parent), columns=["node", label])
+    return sym_edges.sparkSession.createDataFrame(out, _mapping_schema(sym_edges, label))
 
 
 def _mapping_schema(sym_edges: DataFrame, label: str) -> StructType:
@@ -1174,24 +1183,39 @@ def connected_components(
     pathological non-shrink into a loud error instead of a
     silently-partial clustering.
 
-    Bounded driver finish: once ``_finish.collect_if_small`` admits
-    the (geometrically shrinking) symmetrized edge set — at most
-    ``DRIVER_FINISH_ROWS`` rows of integral or binary-collated string
-    ids — the remaining rounds collapse into a driver union-find over
-    the rows that probe already collected.  Each saved distributed round is ~3
-    tiny-data Spark jobs of pure scheduling overhead; at 100 TB the
-    first rounds still run distributed and only the contracted tail
-    ever reaches the driver (3.2 MB of Arrow buffers + 21.4 MB of
-    union-find dict at the 100k cap — see ``_driver_union_find`` for
-    the measurement).  Either route returns the input's id type and
-    the same schema, nullability included.
+    Bounded driver finish: once the (geometrically shrinking)
+    symmetrized edge set has at most ``DRIVER_FINISH_ROWS`` rows of
+    integral or binary-collated string ids, the remaining rounds
+    collapse into a driver union-find over the rows the size probe
+    already collected.  Each saved distributed round is ~3 tiny-data
+    Spark jobs of pure scheduling overhead; at 100 TB the first rounds
+    still run distributed and only the contracted tail ever reaches
+    the driver (3.2 MB of Arrow buffers + 21.4 MB of union-find dict
+    at the 100k cap — see ``_driver_union_find`` for the measurement).
+    Round 0 probes the pairs themselves
+    (``_finish.collect_pairs_if_small``: admitted when 2·pairs fits
+    the cap), so an admitted edge set costs ONE Spark job: no
+    symmetrize checkpoint, and no relabelling, since the union-find
+    roots already are the component minima.  An edge set too large
+    for that probe goes straight to the distributed rounds, which skip
+    their own round-0 probe.  Either route returns the input's id type
+    and the same schema, nullability included.
     """
     e = edges.selectExpr(f"{name(src)} AS u", f"{name(dst)} AS v")
+    sym = e.unionByName(e.selectExpr("v AS u", "u AS v"))
+    # round 0 on the pairs themselves: an admitted edge set is the
+    # whole answer in one job, since the union-find roots already are
+    # the component minima
+    pdf = collect_pairs_if_small(e, sym, ["u", "v"])
+    if pdf is not None:
+        if not len(pdf):
+            return edges.sparkSession.createDataFrame([], _mapping_schema(sym, "cluster_id"))
+        return _driver_union_find(sym, pdf, "cluster_id")
     # checkpoint the symmetrized edge list ONCE: its lineage contains
     # the (expensive) upstream pair-generation join, and the loop
     # touches it every round — without the cut, each round re-runs
     # the whole dedup pair join
-    ecur = e.unionByName(e.selectExpr("v AS u", "u AS v")).localCheckpoint(eager=True)
+    ecur = sym.localCheckpoint(eager=True)
     # per-round node→super-node steps; composed ONCE at the end.
     # Each step's lineage is one groupBy over that round's
     # checkpointed edge set, so deferring composition is safe and
@@ -1203,8 +1227,9 @@ def connected_components(
     # already proves the edge set non-empty, a distributed round costs
     # the one probe job, with no separate emptiness job
     probe_decides = none_means_large(ecur, ["u", "v"])
-    for _ in range(max_iter):
-        pdf = collect_if_small(ecur, ["u", "v"])
+    for i in range(max_iter):
+        # round 0's probe ran on the pairs above
+        pdf = collect_if_small(ecur, ["u", "v"]) if i else None
         if pdf is not None:
             if len(pdf):
                 steps.append(_driver_union_find(ecur, pdf))

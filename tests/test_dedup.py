@@ -496,6 +496,43 @@ def test_connected_components_round_pays_one_probe(spark, driver_cap, spy):
     assert empties
 
 
+def test_connected_components_driver_finish_is_one_job(spark, driver_cap):
+    """On admitted ids the whole answer is one probe job over the
+    pairs: no symmetrize checkpoint and no relabelling join, since the
+    union-find roots already are the component minima.  Rows and
+    schema equal the distributed loop's."""
+    edges = spark.range(12).selectExpr("id AS id_a", "(id DIV 3) * 3 AS id_b")
+    edges = edges.where("id_a <> id_b")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    drv = D.connected_components(edges)
+    assert len(set(tracker.getJobIdsForGroup(None)) - before) == 1
+    driver_cap(-1)
+    dist = D.connected_components(edges)
+    assert drv.schema == dist.schema
+    assert sorted(map(tuple, drv.collect())) == sorted(map(tuple, dist.collect()))
+
+
+def test_connected_components_driver_route_counts_symmetrized_edges(
+    spark, driver_cap, spy
+):
+    """The probe runs on the pairs but admits by the symmetrized count
+    (two rows per pair): at a cap of 3 one edge takes the driver
+    finish and two do not."""
+    calls = spy(D, "_driver_union_find")
+    driver_cap(3)
+    one = spark.createDataFrame([(5, 2)], "id_a long, id_b long")
+    assert sorted(map(tuple, D.connected_components(one).collect())) == [(2, 2), (5, 2)]
+    assert len(calls) == 1
+    # disjoint, so the contracted graph is empty after one round and
+    # no later round reaches the driver either
+    two = spark.createDataFrame([(5, 2), (7, 9)], "id_a long, id_b long")
+    assert sorted(map(tuple, D.connected_components(two).collect())) == [
+        (2, 2), (5, 2), (7, 7), (9, 7)
+    ]
+    assert len(calls) == 1
+
+
 def test_connected_components_collated_ids_route_distributed(spark, spy):
     """Collated strings compare unlike Python's ``str`` (UTF8_LCASE
     makes "A" == "a"), so the driver finish must not take them."""

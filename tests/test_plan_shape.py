@@ -1062,3 +1062,31 @@ def test_small_shuffle_keeps_one_partition_per_core(spark):
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     df = spark.range(1000).groupBy((F.col("id") % 97).alias("k")).count()
     assert df.rdd.getNumPartitions() == cores
+
+
+def test_ranked_set_docs_one_key_exchange(spark, sf_dir, monkeypatch):
+    """Ranked ``_set_docs``, fed as ``dedup_ngram_jaccard`` feeds it,
+    shuffles the shingle occurrence rows once, on the key: the
+    distinct and the document-frequency window both reuse that
+    partitioning, so the plan holds exactly two exchanges, one hashed
+    on the key and one on ``id`` for the per-doc aggregate."""
+    from gdelt_extractor_spark.operators import dedup as D
+    from gdelt_extractor_spark.sources.tables import load_table
+
+    built, set_docs = [], D._set_docs
+
+    def capture(*args, **kwargs):
+        built.append(set_docs(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(D, "_set_docs", capture)
+    # plans only: every checkpoint stays lazy
+    docs = load_table(spark, sf_dir, "documents")
+    monkeypatch.setattr(type(docs), "localCheckpoint", lambda self, eager=True: self)
+    D.dedup_ngram_jaccard(docs, "text", "doc_id")
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        built[0].explain("formatted")
+    plan = buf.getvalue()
+    keys = re.findall(r"Arguments: hashpartitioning\((\w+)#", plan)
+    assert n_exchanges(plan) == 2 and keys == ["shingle", "id"], plan

@@ -1,8 +1,13 @@
 """Unit tests for sources/tables.py helpers."""
 
-import pytest
+import os
 
-from gdelt_extractor_spark.sources.tables import _parse_byte_string
+import pytest
+from pyspark.errors import AnalysisException
+
+from gdelt_extractor_spark.sources.tables import TABLES, _parse_byte_string, load_table
+
+FOOTER_TABLES = [t for t in TABLES if t != "events"]
 
 
 def test_parse_byte_string_all_spark_forms():
@@ -23,6 +28,29 @@ def test_parse_byte_string_rejects_garbage():
     for bad in ("12x", "m128", "", "1.5g", "-1g"):
         with pytest.raises(ValueError):
             _parse_byte_string(bad)
+
+
+@pytest.mark.parametrize("name", FOOTER_TABLES)
+def test_load_table_schema_is_sparks_inference(spark, sf_dir, name):
+    """The schema read from the parquet footer on the driver is the
+    one Spark's own inference gives, nullability included."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    assert load_table(spark, sf_dir, name).schema == spark.read.parquet(path).schema
+
+
+def test_load_table_launches_no_job(spark, sf_dir):
+    """A read without a schema is a one-task schema-inference job;
+    ``load_table`` hands Spark the footer's schema instead."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    for name in FOOTER_TABLES:
+        load_table(spark, sf_dir, name)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
+def test_load_table_missing_path_is_sparks_error(spark, tmp_path):
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        load_table(spark, str(tmp_path), "documents")
 
 
 def test_jsonl_reader_permissive_and_audit(spark):
