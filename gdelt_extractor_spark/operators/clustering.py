@@ -1,20 +1,21 @@
 """Distributed k-means clustering over embedding columns.
 
-Complements the IVF coarse quantizer (``similarity.ivf_fit_centroids``
-— a bounded-SAMPLE Lloyd that iterates driver-side): here Lloyd
-iterates over the FULL corpus, the shape used when the clusters
-themselves are the product — SemDeDup-style pruning budgets, domain
-discovery, curriculum buckets — rather than just an ANN routing
-table.
+Shares the vector-quantization core of ``similarity``: the bounded
+fit sample (``_fit_sample``) and the nearest-centroid kernel
+(``_nearest``).  IVF and PQ iterate Lloyd driver-side on that sample
+(``_lloyd``); here Lloyd iterates over the FULL corpus, the shape
+used when the clusters themselves are the product — SemDeDup-style
+pruning budgets, domain discovery, curriculum buckets — rather than
+just an ANN routing table.
 
 Scale shape (per round, the classic map-side-combine k-means):
 
-1. assignment is a broadcast of the (k, dim) centroid matrix into a
-   vectorized pandas UDF — one corpus scan, no shuffle;
-2. per-partition PARTIAL sums accumulate in ``mapInPandas`` — each
-   partition emits at most k rows of (cell, int64 sum vector +
-   count), so the only shuffle is over n_partitions × k tiny rows;
-3. the final per-cell reduce is a posexplode + groupBy(cell, pos)
+1. one ``mapInPandas`` pass over the corpus with the (k, dim)
+   centroid matrix in its closure assigns each row (``_nearest``)
+   and accumulates per-partition PARTIAL sums — each partition emits
+   at most k rows of (cell, int64 sum vector + count), so the only
+   shuffle is over n_partitions × k tiny rows;
+2. the final per-cell reduce is a posexplode + groupBy(cell, pos)
    SUM over those partials, and the driver collects exactly
    k × (dim+1) longs to form the next centroid matrix.
 
@@ -42,41 +43,25 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _as_double, _ivf_assign_udf
+from .similarity import _as_double, _fit_sample, _ivf_assign_udf, _nearest
 
 _SCALE = float(1 << 20)
 
+# Salt of the k-means init sample's hash order.
+KMEANS_FIT_SALT = "kmeans-fit"
 
-def _greedy_init(
-    vectors: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    sample_size: int | None = None,
-) -> np.ndarray:
-    """Deterministic farthest-point init on a bounded sample.
 
-    Sample selection mirrors ``ivf_fit_centroids`` (top-S rows by a
-    salted content hash — reproducible, partition-independent, one
-    TakeOrdered job), but seeding is greedy MAX-MIN distance instead
-    of lowest-id: lowest-id seeding can drop all k seeds into one
-    dense region, and Lloyd never recovers well-separated clusters
-    from that (measured: 3 distant blobs collapsed to 2).  Greedy
-    farthest-point is the standard fix and is fully deterministic
-    (np.argmax returns the first index on ties; the sample order is
-    fixed by the (hash, id) sort)."""
-    S = sample_size or max(64 * k, 1024)
-    v = vectors.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
-    sample = (
-        v.orderBy(
-            F.xxhash64(F.col("id").cast("string"), F.lit("kmeans-fit")).asc(),
-            F.col("id").asc(),
-        )
-        .limit(S)
-        .collect()
-    )
-    ids = np.array([r.id for r in sample])
-    X = np.vstack([r.v for r in sample])[np.argsort(ids, kind="stable")]
+def _greedy_init(vectors: DataFrame, k: int, id_col: str, vec_col: str) -> np.ndarray:
+    """Deterministic farthest-point init on the bounded fit sample
+    (``_fit_sample``, rows put in id order).  Seeding is greedy
+    MAX-MIN distance instead of IVF's lowest-id: lowest-id seeding
+    can drop all k seeds into one dense region, and Lloyd never
+    recovers well-separated clusters from that (measured: 3 distant
+    blobs collapsed to 2).  Greedy farthest-point is the standard fix
+    and is fully deterministic (np.argmax returns the first index on
+    ties; the sample order is fixed by the (hash, id) sort)."""
+    ids, X = _fit_sample(vectors, k, KMEANS_FIT_SALT, id_col, vec_col)
+    X = X[np.argsort(ids, kind="stable")]
     cents = [X[0]]
     d = ((X - X[0]) ** 2).sum(axis=1)
     for _ in range(1, min(k, X.shape[0])):
@@ -114,28 +99,22 @@ def kmeans_fit(
         dim = cents.shape[1]
 
         for _ in range(n_iter):
-            # r12 (guide §4.1): assignment is FUSED into the
-            # partial-sum mapInPandas — the old shape ran a separate
-            # _ivf_assign_udf first (ArrowEvalPython), so every round
-            # shipped the vector column JVM→Python for the argmin,
-            # back, then JVM→Python AGAIN for the partial sums.  One
-            # crossing per round now; the argmin is the identical
-            # float64 expression (||c||² − 2 v·c, np.argmin), so
-            # cells — and therefore centroids — are bit-identical
-            # (pinned-centroid gates + partition-independence tests
-            # unchanged).  Same-session A/B, 4-query kmeans family:
-            # 11.75s → 9.66s total.
-            c_now = cents
-            c_sq_now = (c_now * c_now).sum(axis=1)
-
-            def partials(batches, _c=c_now, _c_sq=c_sq_now):
+            # Assignment is FUSED into the partial-sum mapInPandas:
+            # an assignment UDF ahead of it (ArrowEvalPython) would
+            # ship the vector column JVM→Python for the argmin, back,
+            # then JVM→Python AGAIN for the partial sums (measured on
+            # the 4-query kmeans family: 11.75s → 9.66s total with
+            # the fusion).  One crossing per round;
+            # tests/test_plan_shape.py pins it.  The argmin is the
+            # shared ``_nearest`` kernel, so cells are bit-identical
+            # to the assignment UDF's.
+            def partials(batches, _c=cents):
                 acc: dict[int, list] = {}
                 for pdf in batches:
                     if not len(pdf):
                         continue
                     mat = np.vstack(pdf["v"].to_numpy())
-                    d = _c_sq[None, :] - 2.0 * (mat @ _c.T)
-                    cells = np.argmin(d, axis=1).astype(np.int32)
+                    cells = _nearest(mat, _c).astype(np.int32)
                     quant = np.floor(mat * _SCALE + 0.5).astype(np.int64)
                     for c in np.unique(cells):
                         mask = cells == c
@@ -212,20 +191,17 @@ def kmeans_cluster(
 
 def _assign_dist_udf(centroids: np.ndarray):
     """Pandas UDF: vector → (nearest cell, EXACT L2 distance to that
-    centroid).  argmin uses the expanded form (fast); the reported
-    distance recomputes ||v-c|| directly against the winning
+    centroid).  The cell is ``_nearest``'s expanded-form argmin; the
+    reported distance recomputes ||v-c|| directly against the winning
     centroid — the expanded form loses precision to cancellation
     exactly where pruning needs it (near-prototype rows, small
     distances)."""
-    c = centroids
-    c_sq = (c * c).sum(axis=1)
 
     @F.pandas_udf("struct<cell:int,dist:double>")
     def assign(vecs: pd.Series) -> pd.DataFrame:
         mat = np.vstack(vecs.to_numpy())
-        d = c_sq[None, :] - 2.0 * (mat @ c.T)
-        a = np.argmin(d, axis=1)
-        diff = mat - c[a]
+        a = _nearest(mat, centroids)
+        diff = mat - centroids[a]
         return pd.DataFrame(
             {
                 "cell": a.astype(np.int32),

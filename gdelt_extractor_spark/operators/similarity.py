@@ -10,6 +10,11 @@
   from seeded pseudo-random hyperplanes (deterministic: numpy
   RandomState(LSH_SEED), Arrow-batched pandas UDF); queries probe their
   bucket only, turning the scan into an equi-join on bucket id.
+- One vector-quantization core serves IVF, PQ and ``clustering``:
+  ``_fit_sample`` (the bounded hash-ordered training sample),
+  ``_lloyd`` (driver-side rounds on it) and ``_nearest`` (the one
+  nearest-centroid kernel); ``_lsh_probes`` is the one LSH bucket
+  kernel of both ``ann_lsh`` UDFs.
 """
 
 from __future__ import annotations
@@ -367,6 +372,17 @@ def _lsh_planes(dim: int, n_planes: int, n_tables: int) -> np.ndarray:
     )
 
 
+def _lsh_probes(mat: np.ndarray, planes: np.ndarray, flips: bool = False) -> np.ndarray:
+    """The (batch, L, P) per-table probe buckets of the rows of
+    ``mat`` under the (L, dim, n_planes) ``planes``: column 0 of each
+    table is the row's sign-bit bucket; with ``flips`` the n_planes
+    buckets at Hamming distance 1 follow it, one per flipped bit (so
+    P = 1 + n_planes, else P = 1)."""
+    weights = 1 << np.arange(planes.shape[2], dtype=np.int64)
+    base = np.stack([((mat @ pl) > 0) @ weights for pl in planes], axis=1)[:, :, None]
+    return np.concatenate([base, base ^ weights], axis=2) if flips else base
+
+
 def lsh_multitable_udf(dim: int, n_planes: int, n_tables: int):
     """Pandas UDF: vector → array of one bucket id per hash table.
 
@@ -377,16 +393,73 @@ def lsh_multitable_udf(dim: int, n_planes: int, n_tables: int):
     planes matrix rides the closure, shipped once per executor.
     """
     planes = _lsh_planes(dim, n_planes, n_tables)  # (L, d, k)
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
 
     @F.pandas_udf("array<long>")
     def buckets(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy())  # (batch, dim)
-        per_table = [((m @ planes[t]) > 0) @ weights for t in range(n_tables)]
-        stacked = np.stack(per_table, axis=1)  # (batch, L)
-        return pd.Series(list(stacked))
+        return pd.Series(list(_lsh_probes(np.vstack(vecs.to_numpy()), planes)[:, :, 0]))
 
     return buckets
+
+
+# Salts of the bounded fit samples, one hash space per quantizer.
+IVF_FIT_SALT = "ivf-fit"
+PQ_FIT_SALT = "pq-fit"
+
+
+def _fit_sample(
+    vectors: DataFrame, n_cents: int, salt: str, id_col: str, vec_col: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """The bounded training sample of a quantizer with ``n_cents``
+    centroids (IVF cells, PQ codewords, k-means clusters): the top
+    max(64·n_cents, 1024) rows by (xxhash64(id, ``salt``), id) — an
+    unbiased, reproducible choice that is independent of partitioning
+    (TakeOrdered), and the ONE Spark job a fit runs regardless of its
+    round count.  Returns (ids, X) in that hash order; the fit then
+    iterates driver-side on the (S, dim) matrix, a few MB at any
+    corpus size."""
+    v = vectors.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
+    sample = (
+        v.orderBy(
+            F.xxhash64(F.col("id").cast("string"), F.lit(salt)).asc(),
+            F.col("id").asc(),
+        )
+        .limit(max(64 * n_cents, 1024))
+        .collect()
+    )
+    return np.array([r.id for r in sample]), np.vstack([r.v for r in sample])
+
+
+def _nearest(X: np.ndarray, C: np.ndarray, k: int | None = None) -> np.ndarray:
+    """Nearest centroids (rows of ``C``) of each row of ``X`` by L2,
+    ranked on the expanded form ‖c‖² − 2x·c (‖x‖² is constant per
+    row).  ``k=None``: the (n,) nearest ids by argmin — ties and NaN
+    rows go to the lowest id.  An int ``k``: the (n, k) nearest ids
+    in ascending distance by stable argsort — ties keep id order.
+    The one distance kernel of every fit, assignment, probe and PQ
+    code in this module and ``clustering``."""
+    d = (C * C).sum(axis=1)[None, :] - 2.0 * (X @ C.T)
+    if k is None:
+        return np.argmin(d, axis=1)
+    return np.argsort(d, axis=1, kind="stable")[:, :k]
+
+
+def _lloyd(X: np.ndarray, init: np.ndarray, n_iter: int) -> np.ndarray:
+    """``n_iter`` driver-side Lloyd rounds over the fixed-order rows
+    of ``X`` from the ``init`` centroids: each row joins its nearest
+    centroid (``_nearest``), each centroid moves to its cell's mean,
+    and an empty cell keeps its centroid.  numpy reductions over a
+    fixed-order array are bit-stable, so the result never depends on
+    cluster layout."""
+    cents = init.copy()
+    for _ in range(n_iter):
+        a = _nearest(X, cents)
+        nxt = cents.copy()
+        for c in range(cents.shape[0]):
+            mask = a == c
+            if mask.any():
+                nxt[c] = X[mask].mean(axis=0)
+        cents = nxt
+    return cents
 
 
 def ivf_fit_centroids(
@@ -399,59 +472,22 @@ def ivf_fit_centroids(
     """Deterministic Lloyd k-means coarse quantizer for IVF,
     trained on a bounded sample (the standard IVF recipe — e.g.
     FAISS trains its quantizer on ~(tens of)·m vectors, not the
-    corpus).
-
-    The sample is the top max(64·m, 1024) rows by a salted content
-    hash with the id as tiebreak — an unbiased, reproducible choice
-    that is independent of partitioning (TakeOrdered), and the ONE
-    Spark job this fit runs regardless of ``n_iter``.  Lloyd then
-    iterates driver-side on the (S, dim) numpy matrix: at 100 TB the
-    driver holds S·dim doubles (a few MB), while assignment of the
-    full table stays distributed (`_ivf_assign_udf`).
-
-    Determinism: sample membership and order are fixed by the
-    (hash, id) total order, init is the m lowest-id sample rows, and
-    numpy reductions over a fixed-order array are bit-stable — so
-    centroids never depend on cluster layout.
+    corpus): ``_fit_sample`` then ``_lloyd``, while assignment of the
+    full table stays distributed (`_ivf_assign_udf`).  Init is the m
+    lowest-id sample rows.
     """
-    S = max(64 * m, 1024)
-    v = vectors.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
-    sample = (
-        v.orderBy(
-            F.xxhash64(F.col("id").cast("string"), F.lit("ivf-fit")).asc(),
-            F.col("id").asc(),
-        )
-        .limit(S)
-        .collect()
-    )
-    ids = np.array([r.id for r in sample])
-    X = np.vstack([r.v for r in sample])  # (S, dim)
-    cents = X[np.argsort(ids, kind="stable")[:m]].copy()
-    for _ in range(n_iter):
-        d = (cents * cents).sum(axis=1)[None, :] - 2.0 * (X @ cents.T)
-        a = np.argmin(d, axis=1)  # ties -> lowest centroid id
-        nxt = cents.copy()  # empty clusters keep their old centroid
-        for c in range(cents.shape[0]):
-            mask = a == c
-            if mask.any():
-                nxt[c] = X[mask].mean(axis=0)
-        cents = nxt
-    return cents
+    ids, X = _fit_sample(vectors, m, IVF_FIT_SALT, id_col, vec_col)
+    return _lloyd(X, X[np.argsort(ids, kind="stable")[:m]], n_iter)
 
 
 def _ivf_assign_udf(centroids: np.ndarray):
     """Pandas UDF: vector → nearest centroid id by L2 (ties → lowest
-    id via argmin).  Centroid matrix rides the closure to executors
-    once per task set."""
-    c = centroids  # (m, dim)
-    c_sq = (c * c).sum(axis=1)  # (m,)
+    id).  Centroid matrix rides the closure to executors once per
+    task set."""
 
     @F.pandas_udf("int")
     def assign(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy())  # (batch, dim)
-        # argmin over ||v-c||^2 = ||c||^2 - 2 v·c (+ ||v||^2 const)
-        d = c_sq[None, :] - 2.0 * (mat @ c.T)
-        return pd.Series(np.argmin(d, axis=1).astype(np.int32))
+        return pd.Series(_nearest(np.vstack(vecs.to_numpy()), centroids).astype(np.int32))
 
     return assign
 
@@ -459,17 +495,12 @@ def _ivf_assign_udf(centroids: np.ndarray):
 def _ivf_probe_udf(centroids: np.ndarray, nprobe: int):
     """Pandas UDF: query vector → the ``nprobe`` nearest centroid ids
     (ascending distance, deterministic tie-break by id)."""
-    c = centroids
-    c_sq = (c * c).sum(axis=1)
-    npb = min(nprobe, c.shape[0])
+    npb = min(nprobe, centroids.shape[0])
 
     @F.pandas_udf("array<int>")
     def probe(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy())
-        d = c_sq[None, :] - 2.0 * (mat @ c.T)
-        # stable argsort → deterministic on ties
-        order = np.argsort(d, axis=1, kind="stable")[:, :npb].astype(np.int32)
-        return pd.Series(list(order))
+        near = _nearest(np.vstack(vecs.to_numpy()), centroids, npb)
+        return pd.Series(list(near.astype(np.int32)))
 
     return probe
 
@@ -543,23 +574,12 @@ def lsh_query_probes_udf(dim: int, n_planes: int, n_tables: int, multiprobe: int
     projection was closest to zero, so probing adjacent buckets
     recovers them without more tables (Lv et al., VLDB'07)."""
     planes = _lsh_planes(dim, n_planes, n_tables)
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
 
     @F.pandas_udf("array<array<long>>")
     def probes(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy())
-        out = []
-        per_table = []
-        for t in range(n_tables):
-            base = ((m @ planes[t]) > 0) @ weights  # (batch,)
-            if multiprobe >= 1:
-                flips = base[:, None] ^ weights[None, :]  # (batch, n_planes)
-                per_table.append(np.concatenate([base[:, None], flips], axis=1))
-            else:
-                per_table.append(base[:, None])
-        for i in range(m.shape[0]):
-            out.append([pt[i].tolist() for pt in per_table])
-        return pd.Series(out)
+        return pd.Series(
+            _lsh_probes(np.vstack(vecs.to_numpy()), planes, multiprobe >= 1).tolist()
+        )
 
     return probes
 
@@ -795,24 +815,14 @@ def pq_fit_codebooks(
     m·log2(ksub) bits per vector vs dim·32 raw (64-dim float → 4
     bytes at m=4, ksub=16: a 64× cut vs int8's 4×).
 
-    Same determinism recipe as ``ivf_fit_centroids``: one bounded
-    TakeOrdered sample job (the top max(64·ksub, 1024) rows) (salted content-hash order), all Lloyd
-    iterations driver-side on the (S, dim) sample.  Init per subspace
-    is the first ksub rows IN SAMPLE (hash) ORDER — deterministic and
+    One bounded sample (``_fit_sample``: the top max(64·ksub, 1024)
+    rows in salted content-hash order), then one ``_lloyd`` per
+    subspace on its column slice.  Init per subspace is the first
+    ksub rows IN SAMPLE (hash) ORDER — deterministic and
     hash-scattered, so the seeds don't all land in one id-adjacent
     cluster.  Returns (m, ksub, dim//m).
     """
-    S = max(64 * ksub, 1024)
-    v = vectors.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
-    sample = (
-        v.orderBy(
-            F.xxhash64(F.col("id").cast("string"), F.lit("pq-fit")).asc(),
-            F.col("id").asc(),
-        )
-        .limit(S)
-        .collect()
-    )
-    X = np.vstack([r.v for r in sample])
+    _, X = _fit_sample(vectors, ksub, PQ_FIT_SALT, id_col, vec_col)
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -821,42 +831,20 @@ def pq_fit_codebooks(
             f"PQ needs >= ksub={ksub} sample vectors, got {X.shape[0]}; "
             "lower ksub or provide more data"
         )
-    dsub = dim // m
-    init_rows = np.arange(ksub)
-    books = np.empty((m, ksub, dsub))
-    for j in range(m):
-        Xj = X[:, j * dsub : (j + 1) * dsub]
-        cents = Xj[init_rows].copy()
-        for _ in range(n_iter):
-            d = (cents * cents).sum(axis=1)[None, :] - 2.0 * (Xj @ cents.T)
-            a = d.argmin(axis=1)
-            nxt = cents.copy()  # empty cells keep their centroid
-            for c in range(ksub):
-                mask = a == c
-                if mask.any():
-                    nxt[c] = Xj[mask].mean(axis=0)
-            cents = nxt
-        books[j] = cents
-    return books
+    subspaces = np.split(X, m, axis=1)
+    return np.stack([_lloyd(Xj, Xj[:ksub], n_iter) for Xj in subspaces])
 
 
 def _pq_encode_udf(books: np.ndarray):
     """Arrow UDF: vector → array<int> of per-subspace nearest-centroid
-    codes (ties → lowest code, matching every argmin in this module)."""
-    from pyspark.sql.functions import pandas_udf
+    codes (ties → lowest code, ``_nearest`` on each column slice)."""
+    m, _, dsub = books.shape
 
-    m, ksub, dsub = books.shape
-
-    @pandas_udf("array<int>")
+    @F.pandas_udf("array<int>")
     def encode(vecs: pd.Series) -> pd.Series:
         X = np.vstack(vecs.to_numpy())
-        out = np.empty((X.shape[0], m), dtype=np.int32)
-        for j in range(m):
-            Xj = X[:, j * dsub : (j + 1) * dsub]
-            cents = books[j]
-            d = (cents * cents).sum(axis=1)[None, :] - 2.0 * (Xj @ cents.T)
-            out[:, j] = d.argmin(axis=1)
-        return pd.Series(list(out))
+        codes = [_nearest(X[:, j * dsub : (j + 1) * dsub], books[j]) for j in range(m)]
+        return pd.Series(list(np.stack(codes, axis=1).astype(np.int32)))
 
     return encode
 

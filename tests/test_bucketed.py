@@ -222,8 +222,9 @@ def test_export_formats_share_the_shard_layout(spark, tmp_path):
 def test_format_constants_pinned():
     """Each salted hash space's committed value.  A new value
     re-lays out data already on disk (shards, packed sequences,
-    fingerprints, feature-hash and projection spaces, LSH buckets),
-    so changing one must take a deliberate edit here."""
+    fingerprints, feature-hash and projection spaces, LSH buckets)
+    or moves a pinned quantizer fit (the IVF, PQ and k-means sample
+    salts), so changing one must take a deliberate edit here."""
     from gdelt_extractor_spark.operators import (
         clustering,
         curation,
@@ -249,6 +250,9 @@ def test_format_constants_pinned():
         "LSH_SEED": similarity.LSH_SEED,
         "RPROJ_SALT": decomposition.RPROJ_SALT,
         "TRIPLETS_SALT": clustering.TRIPLETS_SALT,
+        "IVF_FIT_SALT": similarity.IVF_FIT_SALT,
+        "PQ_FIT_SALT": similarity.PQ_FIT_SALT,
+        "KMEANS_FIT_SALT": clustering.KMEANS_FIT_SALT,
     } == {
         "SHARD_SALT": "shards-v1",
         "PACK_SALT": "pack-v1",
@@ -263,6 +267,9 @@ def test_format_constants_pinned():
         "LSH_SEED": 42,
         "RPROJ_SALT": "rproj-v1",
         "TRIPLETS_SALT": "triplets-v1",
+        "IVF_FIT_SALT": "ivf-fit",
+        "PQ_FIT_SALT": "pq-fit",
+        "KMEANS_FIT_SALT": "kmeans-fit",
     }
 
 

@@ -1090,3 +1090,27 @@ def test_ranked_set_docs_one_key_exchange(spark, sf_dir, monkeypatch):
     plan = buf.getvalue()
     keys = re.findall(r"Arguments: hashpartitioning\((\w+)#", plan)
     assert n_exchanges(plan) == 2 and keys == ["shingle", "id"], plan
+
+
+def test_kmeans_fit_one_python_crossing_per_round(spark, sf_dir, monkeypatch):
+    """Each ``kmeans_fit`` round assigns and sums partials in ONE
+    ``mapInPandas``: its collected plan holds exactly one MapInPandas
+    and no ArrowEvalPython.  An assignment UDF ahead of the partials
+    would ship the vectors JVM→Python twice per round, and every
+    Python crossing pays the per-task worker fixed cost."""
+    from gdelt_extractor_spark.operators.clustering import kmeans_fit
+    from gdelt_extractor_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    plans, collect = [], type(emb).collect
+
+    def capture(self):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(type(emb), "collect", capture)
+    kmeans_fit(emb, k=4, n_iter=2)
+    sample, *rounds = plans  # the first collect is the init sample
+    assert "MapInPandas" not in sample and 1 <= len(rounds) <= 2, plans
+    for plan in rounds:
+        assert plan.count("MapInPandas") == 1 and "ArrowEvalPython" not in plan, plan
